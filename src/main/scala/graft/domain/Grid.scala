@@ -143,15 +143,24 @@ object GridQuery {
     * "Query-level composition"). The bbox (polygon envelope) predicate goes
     * first so it can push down to the scan; the exact polygon mask runs as a
     * codegen'd expression on the survivors.
+    *
+    * F1's file pruning follows the input. A cell table with a `file` column
+    * (the generator) joins the (file, variable) catalog. A DSv2 grid scan
+    * has no such column and prunes files and time steps itself from the
+    * pushed `variable IN (…)` and ts bounds, so it gets the plain filter —
+    * no catalog aggregate, no join, no broadcast job.
     */
   def select(cellsDf: DataFrame, req: QueryRequest): DataFrame = {
     val lons = req.polygon.map(_._1); val lats = req.polygon.map(_._2)
-    val keep = catalog(cellsDf)
-      .filter(col("variable").isin(req.variables: _*) &&
-        col("ts_max") >= tsStart(req) && col("ts_min") <= tsEnd(req))
-      .select("file", "variable")
-    cellsDf
-      .join(broadcast(keep), Seq("file", "variable")) // prune: catalog is dim-sized
+    val pruned =
+      if (cellsDf.columns.contains("file")) {
+        val keep = catalog(cellsDf)
+          .filter(col("variable").isin(req.variables: _*) &&
+            col("ts_max") >= tsStart(req) && col("ts_min") <= tsEnd(req))
+          .select("file", "variable")
+        cellsDf.join(broadcast(keep), Seq("file", "variable")) // prune: catalog is dim-sized
+      } else cellsDf.filter(col("variable").isin(req.variables: _*))
+    pruned
       .filter(col("ts").between(tsStart(req), tsEnd(req)))
       .filter(col("lat").between(lats.min, lats.max) &&
         col("lon").between(lons.min, lons.max))
@@ -171,6 +180,14 @@ object GridQuery {
   /** R1: color binning with fixed breaks (value → bin index). */
   def colorBin(value: Column, lo: Double, step: Double, nbins: Int): Column =
     least(greatest(floor((value - lo) / step), lit(0L)), lit(nbins - 1L)).cast("int")
+
+  /** [[colorBin]] on one non-NULL value, with Spark's arithmetic: `floor` of
+    * a double is `(long) Math.floor` (NaN → 0, saturating), then the clamp.
+    * `step` is never 0 (callers floor it at 1e-9), so the division cannot
+    * take Spark's divide-by-zero NULL branch.
+    */
+  def binOf(value: Double, lo: Double, step: Double, nbins: Int): Int =
+    math.min(math.max(math.floor((value - lo) / step).toLong, 0L), nbins - 1L).toInt
 
   /** Per-timestep bin histogram — the relational form of "render one PNG per
     * time step" (`Gddp.scala:232-236`): everything up to the pixel write.

@@ -1,18 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-
 /** Ben-Haim/Tom-Yossef streaming histogram ("A Streaming Parallel Decision
   * Tree Algorithm", JMLR 2010) — the sketch GeoTrellis `StreamingHistogram`
   * implements and the reference uses for quantile color breaks
-  * (`Gddp.scala:230-232`). Re-implemented from the paper as a typed Spark
-  * `Aggregator` (UDAF surface): mergeable, bounded-size state, so Spark runs
-  * it partial+final like any built-in aggregate.
-  *
-  * `percentile_approx` is the production path (see Aggregates); this exists
-  * for API parity with the reference's break computation and as the declared
-  * UDAF demonstration.
+  * (`Gddp.scala:230-232`). Re-implemented from the paper: mergeable,
+  * bounded-size state. [[graft.functions.HistogramBreaks]] runs it as a
+  * native aggregate (partial+final like any built-in one).
   */
 object StreamingHistogram {
 
@@ -81,25 +74,4 @@ object StreamingHistogram {
     def quantileBreaks(n: Int): Seq[Double] =
       (1 until n).map(i => quantile(i.toDouble / n))
   }
-
-  /** Typed Aggregator: Double in, Hist buffer, break array out. Kept as the
-    * declared typed-`Aggregator` API surface; the production query path is
-    * [[graft.functions.HistogramBreaks]] (TypedImperativeAggregate), because
-    * `udaf()` round-trips the buffer through its encoder on every update.
-    * The flat product encoder here is still far cheaper than Kryo was.
-    */
-  class QuantileBreaksAgg(numBreaks: Int, maxBins: Int = 64)
-      extends Aggregator[Double, Hist, Seq[Double]] {
-    override def zero: Hist = Hist(Vector.empty, maxBins)
-    override def reduce(h: Hist, v: Double): Hist = h.add(v)
-    override def merge(a: Hist, b: Hist): Hist = a.merge(b)
-    override def finish(h: Hist): Seq[Double] = h.quantileBreaks(numBreaks)
-    override def bufferEncoder: Encoder[Hist] = Encoders.product[Hist]
-    override def outputEncoder: Encoder[Seq[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-  }
-
-  /** Untyped (DataFrame) column form, usable in groupBy().agg(...). */
-  def quantile_breaks(c: Column, numBreaks: Int, maxBins: Int = 64): Column =
-    org.apache.spark.sql.functions.udaf(new QuantileBreaksAgg(numBreaks, maxBins)).apply(c)
 }

@@ -334,18 +334,14 @@ object Snapshots {
   private[graft] def partValueOf(entry: String): Option[String] =
     partValueRawAt(entry, 0).filter(_ != HiveDefaultPart)
 
-  /** Transform `i`'s path value WITHOUT the null-partition filter: the
-    * hive default marker comes back verbatim — dynamic partition overwrite
-    * targets the null partition like any other. Level 0 is spelled
-    * `__part=`, deeper levels `__part1=`, `__part2=`, … (so
-    * single-transform tables written before multi-spec support stay
-    * valid byte-for-byte). */
-  private[graft] def partValueRawOf(entry: String): Option[String] =
-    partValueRawAt(entry, 0)
-
   private[graft] def partDirColAt(i: Int): String =
     if (i == 0) PartDirCol else s"$PartDirCol$i"
 
+  /** Transform `i`'s path value WITHOUT the null-partition filter: the
+    * hive default marker comes back verbatim. Level 0 is spelled
+    * `__part=`, deeper levels `__part1=`, `__part2=`, … (so
+    * single-transform tables written before multi-spec support stay
+    * valid byte-for-byte). */
   private[graft] def partValueRawAt(entry: String, i: Int): Option[String] = {
     val prefix = partDirColAt(i) + "="
     entry.split('/').find(_.startsWith(prefix))
@@ -3479,22 +3475,6 @@ object Snapshots {
     var attempt = 1
     while (true) {
       try return mergeIntoMor(spark, dir, updates, key, meta, evolve)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
-  }
-
-  /** [[deleteRangeMor]] with the conflict RETRY loop (same rebase rule). */
-  def deleteRangeMorRetry(spark: SparkSession, dir: String, column: String,
-      lower: Option[Any], upper: Option[Any],
-      meta: Map[String, String] = Map.empty, maxAttempts: Int = 10): Int = {
-    var attempt = 1
-    while (true) {
-      try return deleteRangeMor(spark, dir, column, lower, upper, meta)
       catch {
         case e: java.util.ConcurrentModificationException =>
           if (attempt >= maxAttempts) throw e

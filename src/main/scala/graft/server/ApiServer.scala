@@ -1,13 +1,13 @@
 package graft.server
 
 import java.net.InetSocketAddress
-import java.nio.file.Files
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import org.slf4j.LoggerFactory
 
 import graft.domain.{GridData, GridQuery, QueryRequest}
 import graft.render.RenderSink
@@ -70,37 +70,13 @@ class ApiServer(spark: SparkSession, port: Int = 0,
     QueryRequest(vars.split(",").map(_.trim).toSeq, start, end, ring)
   }
 
-  /** `GridQuery.select` prunes on a (file, variable) catalog; DSv2-backed
-    * grids carry no `file` column (the .grf layout is one file per variable),
-    * so synthesize it from the variable.
+  /** select → one Spark job → color breaks, PNGs and zip on the driver
+    * ([[RenderSink.renderZip]]). The value range comes from the same pass
+    * that renders: executors ship per-image partial rasters, so the
+    * selection runs once and the driver holds only the response's pixels.
     */
-  private def withFileColumn(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (df.columns.contains("file")) df else df.withColumn("file", col("variable"))
-
-  /** select → color breaks → distributed PNG render → zip. */
-  private[server] def fetchResult(req: QueryRequest): Array[Byte] = {
-    val sel = GridQuery.select(withFileColumn(grid(spark)), req)
-      .select("variable", "ts", "y", "x", "value")
-    val nbins = 10
-    // reference derives the color map from the selection's value range
-    // (Gddp.scala:230-236, StreamingHistogram breaks); min/max over the
-    // selection is one metadata-sized aggregate
-    val stats = sel.agg(min("value"), max("value")).collect()(0)
-    val (lo, hi) =
-      if (stats.isNullAt(0)) (0.0, 1.0)
-      else (stats.getDouble(0), stats.getDouble(1))
-    val step = math.max((hi - lo) / nbins, 1e-9)
-    val tmp = Files.createTempDirectory("graft-render").toFile
-    try {
-      RenderSink.writePngs(sel, tmp.getAbsolutePath, lo, step, nbins)
-      val zipPath = new java.io.File(tmp, "result.zip").getAbsolutePath
-      RenderSink.zipPngs(tmp.getAbsolutePath, zipPath)
-      Files.readAllBytes(java.nio.file.Paths.get(zipPath))
-    } finally {
-      Option(tmp.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-      tmp.delete()
-    }
-  }
+  private[server] def fetchResult(req: QueryRequest): Array[Byte] =
+    RenderSink.renderZip(GridQuery.select(grid(spark), req), nbins = 10)
 
   /** `POST /sql` — the SQL face of the whole library over HTTP: body
     * `{"query": "SELECT …"}`, response `{"columns": […], "rowCount": n,
@@ -152,13 +128,20 @@ class ApiServer(spark: SparkSession, port: Int = 0,
     try ex.getResponseBody.write(body) finally ex.close()
   }
 
+  /** A 500: the client gets the exception's class name only; the route and
+    * the stack trace go to the server log.
+    */
+  private def serverError(ex: HttpExchange, route: String, e: Exception): Unit = {
+    ApiServer.log.error(s"$route failed", e)
+    respond(ex, 500, "application/json",
+      s"""{"message": "Server Error: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
+  }
+
   def start(): Int = {
     server.createContext("/getBoundary", (ex: HttpExchange) =>
       try respond(ex, 200, "application/json", boundary().getBytes("UTF-8"))
       catch {
-        case e: Exception =>
-          respond(ex, 500, "application/json",
-            s"""{"message": "Server Error: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
+        case e: Exception => serverError(ex, "/getBoundary", e)
       })
     server.createContext("/fetchResult", (ex: HttpExchange) =>
       try {
@@ -174,9 +157,7 @@ class ApiServer(spark: SparkSession, port: Int = 0,
         if (req != null)
           respond(ex, 200, "application/zip", fetchResult(req))
       } catch {
-        case e: Exception =>
-          respond(ex, 500, "application/json",
-            s"""{"message": "Server Error: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
+        case e: Exception => serverError(ex, "/fetchResult", e)
       })
     server.createContext("/sql", (ex: HttpExchange) =>
       try {
@@ -199,9 +180,7 @@ class ApiServer(spark: SparkSession, port: Int = 0,
                   _: org.apache.spark.sql.AnalysisException) =>
           respond(ex, 400, "application/json",
             s"""{"message": "Bad Request: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
-        case e: Exception =>
-          respond(ex, 500, "application/json",
-            s"""{"message": "Server Error: ${e.getClass.getSimpleName}"}""".getBytes("UTF-8"))
+        case e: Exception => serverError(ex, "/sql", e)
       })
     server.start()
     server.getAddress.getPort
@@ -211,6 +190,9 @@ class ApiServer(spark: SparkSession, port: Int = 0,
 }
 
 object ApiServer {
+  /** Server-side log (slf4j, bound to the log4j2 Spark ships). */
+  private val log = LoggerFactory.getLogger(classOf[ApiServer])
+
   /** Standalone entry: `runMain graft.server.ApiServer [port]`. */
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

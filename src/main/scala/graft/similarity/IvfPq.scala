@@ -94,14 +94,6 @@ object IvfPq {
   def compactIndex(index: DataFrame): DataFrame =
     index.repartition(col("cid"))
 
-  /** [[compactIndex]] + re-persist through the session cache, mirroring
-    * [[encodeCached]]; `key` must change per compaction generation (e.g.
-    * include the appended-shard count) or the stale layout is returned.
-    */
-  def compactIndexCached(index: DataFrame, key: Any): DataFrame =
-    graft.PersistedCache(index.sparkSession, ("ivfpq-compacted", key))(
-      compactIndex(index))
-
   /** How many underlying partitions hold rows of the probed cells — the
     * batch/file count the probe filter CANNOT prune (ScaleSpec locks that
     * compaction shrinks this back to ≤ nprobe after shard appends inflate

@@ -209,7 +209,7 @@ object NcCatalog {
   */
 class NcGridTable(dir: String) extends Table with SupportsRead {
   // one table = one grid: every cube must share dims, the time axis, AND the
-  // coordinate arrays, so a single Section (including the conservative bbox
+  // coordinate arrays, so a single Section (including the exact bbox
   // narrowing derived from the FIRST cube's coords) is valid for all of
   // them (same contract as FileGridTable). Time-axis equality is checked
   // EXACTLY but file-by-file against the first file's (transient) array —
@@ -252,9 +252,11 @@ class NcGridTable(dir: String) extends Table with SupportsRead {
 }
 
 /** Same pushdown contract as the other grid paths — variable equality/IN
-  * prunes whole cubes, y/x ranges narrow the Section — plus EXACT ts
-  * narrowing by binary search on the stored time coordinate (works for any
-  * strictly-increasing axis, not just uniform steps).
+  * prunes whole cubes, y/x ranges narrow the Section — plus EXACT ts and
+  * lat/lon narrowing by binary search on the stored coordinates (any
+  * strictly monotone axis, not just uniform steps). Every pushed filter
+  * this reports handled leaves no post-scan re-evaluation behind, so the
+  * generated code of a request-shaped query carries no request literals.
   */
 class NcGridScanBuilder(cubes: Seq[NcCube], dir: String) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
@@ -293,62 +295,81 @@ class NcGridScanBuilder(cubes: Seq[NcCube], dir: String) extends ScanBuilder
     }
   }
 
-  // 1-D coordinate arrays for conservative bbox narrowing, each with its
+  // 1-D coordinate arrays for exact lat/lon narrowing, each with its
   // orientation — ascending view precomputed ONCE (the direction scan and
   // any reversal must not rerun per filter). A dim-sized driver read, done
   // lazily on the first lat/lon range filter (the reference's metadata open
   // reads exactly these, `geopy.py:52-61`). Axis dropped (None) when
   // curvilinear, not strictly monotonic, or containing NaN — anything the
-  // binary search can't be trusted on.
+  // binary search can't be trusted on; those filters stay with Spark.
   private case class Axis(ascending: Array[Double], wasDescending: Boolean)
   private lazy val coordAxes: (Option[Axis], Option[Axis]) =
     if (dims0.forall(_.curvilinear)) (None, None) // incl. cold start: no coords
     else {
       val (lats, lons) = NcGrid.coordArrays(dims0.get)
       def axis(a: Array[Double]): Option[Axis] = {
-        // STRICT one-direction monotonicity, no NaN: on anything else the
-        // binary search could prune rows Spark's filter would have kept
-        // (Double.compare sorts NaN above everything — it must not pass)
+        // STRICT one-direction monotonicity under the primitive `<`, no NaN:
+        // then Spark's double comparison (NaN largest, -0.0 == 0.0) agrees
+        // with the primitive one on every stored value
         if (a.length < 2 || a.exists(_.isNaN)) return None
-        val dirs = a.zip(a.drop(1)).map { case (p, q) => java.lang.Double.compare(q, p) }
-        if (dirs.forall(_ > 0)) Some(Axis(a, wasDescending = false))
-        else if (dirs.forall(_ < 0)) Some(Axis(a.reverse, wasDescending = true))
+        val pairs = a.zip(a.drop(1))
+        if (pairs.forall { case (p, q) => p < q }) Some(Axis(a, wasDescending = false))
+        else if (pairs.forall { case (p, q) => p > q }) Some(Axis(a.reverse, wasDescending = true))
         else None
       }
       (axis(lats), axis(lons))
     }
 
-  /** Conservative index range (in the ORIGINAL orientation) that could
-    * satisfy `>= v` (keepGE) or `<= v`: widened one cell; exactness stays
-    * with Spark's re-evaluation of the (unhandled) filter.
+  /** The index range (in the ORIGINAL orientation) whose stored coordinate
+    * satisfies the comparison `f` against the non-NaN literal `v`. The
+    * values that pass form one contiguous run of the ascending view, found
+    * by binary search — exact, so the filter is reported handled. An empty
+    * run comes back as `lo > hi`.
     */
-  private def coordRange(ax: Axis, v: Double, keepGE: Boolean): (Int, Int) = {
+  private def coordRange(ax: Axis, f: Filter, v: Double): (Int, Int) = {
     val a = ax.ascending
-    // first index with value >= v
-    var lo = 0; var hi = a.length
-    while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) < v) lo = m + 1 else hi = m }
-    val cut = lo
-    val (i0, i1) = if (keepGE) (cut - 1, a.length - 1) else (0, cut) // ±1 slack
-    if (ax.wasDescending) (a.length - 1 - i1, a.length - 1 - i0) else (i0, i1)
+    def firstAtLeast(strict: Boolean): Int = { // first index with a(i) >= v (> v if strict)
+      var lo = 0; var hi = a.length
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        if (a(m) < v || (strict && a(m) == v)) lo = m + 1 else hi = m
+      }
+      lo
+    }
+    val last = a.length - 1
+    val (i0, i1) = f match {
+      case _: GreaterThanOrEqual => (firstAtLeast(strict = false), last)
+      case _: GreaterThan => (firstAtLeast(strict = true), last)
+      case _: LessThanOrEqual => (0, firstAtLeast(strict = true) - 1)
+      case _ => (0, firstAtLeast(strict = false) - 1) // LessThan
+    }
+    if (ax.wasDescending) (last - i1, last - i0) else (i0, i1)
   }
 
-  private def narrowCoord(f: Filter): Unit = {
-    val (field, v, keepGE) = f match {
-      case GreaterThanOrEqual(c, x: Double) if c == "lat" || c == "lon" => (c, x, true)
-      case GreaterThan(c, x: Double) if c == "lat" || c == "lon" => (c, x, true)
-      case LessThanOrEqual(c, x: Double) if c == "lat" || c == "lon" => (c, x, false)
-      case LessThan(c, x: Double) if c == "lat" || c == "lon" => (c, x, false)
-      case _ => return
+  /** Narrow the section by a lat/lon comparison; true = handled exactly.
+    * NaN literals, curvilinear or non-monotone axes and cold start stay
+    * unhandled and untouched.
+    */
+  private def narrowCoord(f: Filter): Boolean = {
+    val (field, v) = f match {
+      case GreaterThanOrEqual(c, x: Double) => (c, x)
+      case GreaterThan(c, x: Double) => (c, x)
+      case LessThanOrEqual(c, x: Double) => (c, x)
+      case LessThan(c, x: Double) => (c, x)
+      case _ => return false
     }
-    if (field == "lat") coordAxes._1.foreach { ax =>
-      val (lo, hi) = coordRange(ax, v, keepGE)
-      section = section.copy(y0 = math.max(section.y0, lo),
-        y1 = math.min(section.y1, hi))
+    if (v.isNaN) return false
+    val axis = field match {
+      case "lat" => coordAxes._1
+      case "lon" => coordAxes._2
+      case _ => None
     }
-    else coordAxes._2.foreach { ax =>
-      val (lo, hi) = coordRange(ax, v, keepGE)
-      section = section.copy(x0 = math.max(section.x0, lo),
-        x1 = math.min(section.x1, hi))
+    axis.exists { ax =>
+      val (lo, hi) = coordRange(ax, f, v)
+      section =
+        if (field == "lat") section.copy(y0 = math.max(section.y0, lo), y1 = math.min(section.y1, hi))
+        else section.copy(x0 = math.max(section.x0, lo), x1 = math.min(section.x1, hi))
+      true
     }
   }
 
@@ -367,15 +388,13 @@ class NcGridScanBuilder(cubes: Seq[NcCube], dir: String) extends ScanBuilder
       // ts is handled ONLY by narrowTs above: Section.narrow's epoch/step
       // mapping assumes a uniform axis, which the nc coord array need not be
       case f if f.references.contains("ts") => false
+      case f if dims0.nonEmpty && narrowCoord(f) => true
       case f if dims0.nonEmpty => section.narrow(f) match {
         case Some(s) => section = s; true
         case None => false
       }
       case _ => false
     }
-    // bbox ranges narrow conservatively from the stored coordinate arrays
-    // but stay unhandled (Spark re-evaluates) — pruned seeks, exact results
-    rest.foreach(narrowCoord)
     pushed = handled
     rest
   }

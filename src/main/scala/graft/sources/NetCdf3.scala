@@ -93,12 +93,6 @@ object NetCdf3 {
         sliceElems(v) * sizeOf(v.ncType)
       } else recVars.map(_.vsize).sum
     }
-
-    /** Record count of a variable: numRecs for record vars, leading fixed dim
-      * size otherwise (callers treat dim 0 as the iteration axis).
-      */
-    def recordsOf(v: Variable): Int =
-      if (isRecordVar(v)) numRecs else dimsOf(v).headOption.map(_.size).getOrElse(1)
   }
 
   // ------------------------------------------------------------------ parse

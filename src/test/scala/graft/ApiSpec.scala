@@ -5,6 +5,8 @@ import java.net.{HttpURLConnection, URI}
 import java.util.zip.ZipInputStream
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.domain.{GridQuery, QueryRequest}
+import graft.render.RenderSink
 import graft.server.ApiServer
 
 /** End-to-end test of the HTTP serving surface: the reference contract is
@@ -123,6 +125,130 @@ class ApiSpec extends AnyFunSuite {
       }
       assert(fromNc == fromGen, "nc-backed render differs from generator-backed render")
     } finally srv.stop()
+  }
+
+  private def ncGrid(s: org.apache.spark.sql.SparkSession) =
+    s.read.format(classOf[graft.sources.GridSource].getName)
+      .option("path", graft.sources.SourceQueries.ncDir).load()
+
+  private def requestJson(r: QueryRequest): String = {
+    val ring = r.polygon.map { case (lon, lat) => s"[$lon, $lat]" }.mkString(", ")
+    s"""{"selectDate": "${r.start},${r.end}", "variables": "${r.variables.mkString(",")}",
+       | "geoJson": {"type": "Polygon", "coordinates": [[$ring]]}}""".stripMargin
+  }
+
+  /** The batch render of the same request, composed the way the server did
+    * before it rendered in one pass: catalog-joined select, Spark min/max
+    * for the color range, executor-written PNGs, zip of the directory.
+    */
+  private def batchZip(r: QueryRequest): Array[Byte] = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val sel = GridQuery.select(ncGrid(spark).withColumn("file", col("variable")), r)
+      .select("variable", "ts", "y", "x", "value")
+    val stats = sel.agg(min("value"), max("value")).collect()(0)
+    val (lo, hi) = if (stats.isNullAt(0)) (0.0, 1.0) else (stats.getDouble(0), stats.getDouble(1))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-batch-render").toFile
+    try {
+      RenderSink.writePngs(sel, tmp.getPath, lo, math.max((hi - lo) / 10, 1e-9), 10)
+      val zip = new java.io.File(tmp, "result.zip")
+      RenderSink.zipPngs(tmp.getPath, zip.getPath)
+      java.nio.file.Files.readAllBytes(zip.toPath)
+    } finally {
+      Option(tmp.listFiles()).getOrElse(Array.empty).foreach(_.delete())
+      tmp.delete()
+    }
+  }
+
+  test("a warm NetCDF fetch is one Spark job with no code compiled, byte-identical to the batch render") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val distinct = Seq( // polygon, dates and variables all differ from `request` and each other
+      QueryRequest(Seq("tasmin"), "1990-01-02", "1990-01-03",
+        Seq((-79.9, 44.1), (-79.4, 44.1), (-79.65, 44.6), (-79.9, 44.1))),
+      QueryRequest(Seq("tasmax", "tasmin"), "1990-01-05", "1990-01-08",
+        Seq((-79.2, 44.5), (-78.7, 44.5), (-78.7, 44.9), (-79.2, 44.9), (-79.2, 44.5))),
+      QueryRequest(Seq("tasmax"), "1990-01-01", "1990-01-01",
+        Seq((-79.61, 44.21), (-79.31, 44.23), (-79.2, 44.45), (-79.45, 44.63),
+          (-79.7, 44.4), (-79.61, 44.21))))
+    val srv = new ApiServer(spark, port = 0, grid = ncGrid)
+    val url = s"http://127.0.0.1:${srv.start()}/fetchResult"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(post(url, request)._1 == 200) // warm-up
+      distinct.foreach { r =>
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        jobs.set(0)
+        val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val (code, body) = post(url, requestJson(r))
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        assert(code == 200, new String(body.take(200), "UTF-8"))
+        assert(jobs.get == 1, s"$r ran ${jobs.get} jobs")
+        assert(compiled == 0, s"$r compiled $compiled classes")
+        assert(zipContents(body).nonEmpty, r)
+        assert(body.sameElements(batchZip(r)), s"$r: zip differs from the batch render")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      srv.stop()
+    }
+  }
+
+  test("fetchResult over NetCDF: all-NULL and empty selections match the batch render") {
+    // cell (y=0, x=17) on day 0 is NODATA ((t + y + x) % 17 == 0): a polygon
+    // around it alone selects one cell whose value is NULL
+    val allNull = QueryRequest(Seq("tasmax"), "1990-01-01", "1990-01-01",
+      Seq((-79.16, 43.99), (-79.14, 43.99), (-79.14, 44.01), (-79.16, 44.01), (-79.16, 43.99)))
+    // a polygon far outside the grid extent selects nothing
+    val empty = QueryRequest(Seq("tasmax"), "1990-01-02", "1990-01-04",
+      Seq((10.0, 10.0), (11.0, 10.0), (11.0, 11.0), (10.0, 11.0), (10.0, 10.0)))
+    val srv = new ApiServer(spark, port = 0, grid = ncGrid)
+    val url = s"http://127.0.0.1:${srv.start()}/fetchResult"
+    try {
+      val (c1, b1) = post(url, requestJson(allNull))
+      assert(c1 == 200)
+      assert(zipContents(b1).keySet == Set("grid_tasmax_1990-01-01.png"))
+      assert(b1.sameElements(batchZip(allNull)))
+      val (c2, b2) = post(url, requestJson(empty))
+      assert(c2 == 200)
+      assert(zipContents(b2).isEmpty)
+      assert(b2.sameElements(batchZip(empty)))
+    } finally srv.stop()
+  }
+
+  test("a 500 logs the route and the stack trace; the client body stays the class name") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("api-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    capture.start()
+    val logger = org.apache.logging.log4j.LogManager.getLogger(classOf[ApiServer])
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(capture)
+    val broken = (_: org.apache.spark.sql.SparkSession) =>
+      throw new RuntimeException("grid unavailable")
+    val srv = new ApiServer(spark, port = 0, grid = broken)
+    val port = srv.start()
+    try {
+      val (code, body) = post(s"http://127.0.0.1:$port/fetchResult", request)
+      assert(code == 500)
+      assert(new String(body, "UTF-8") == """{"message": "Server Error: RuntimeException"}""")
+      assert(get(s"http://127.0.0.1:$port/getBoundary")._1 == 500)
+      val logged = scala.jdk.CollectionConverters.CollectionHasAsScala(events).asScala.toSeq
+      for (route <- Seq("/fetchResult", "/getBoundary"))
+        assert(logged.exists(e => e.getMessage.getFormattedMessage.contains(route) &&
+          Option(e.getThrown).exists(_.getMessage == "grid unavailable")), s"$route not logged")
+    } finally {
+      srv.stop()
+      logger.removeAppender(capture)
+    }
   }
 
   test("getBoundary failure yields a 500 JSON response, not a dropped connection") {

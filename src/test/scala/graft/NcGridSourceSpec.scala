@@ -142,10 +142,10 @@ class NcGridSourceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("coordinate arrays differ"), e.getMessage)
   }
 
-  test("descending coordinate axes narrow correctly (orientation-mapped)") {
+  /** A north-up raster: latitudes stored descending (the common real layout). */
+  private lazy val descDir: String = {
     import graft.sources.NetCdf3, NetCdf3._
     val dir = java.nio.file.Files.createTempDirectory("graft-nc-desc").toFile.getAbsolutePath
-    // north-up raster: latitudes stored descending (the common real layout)
     NetCdf3.write(s"$dir/desc.nc",
       dims = Seq("time" -> 4, "lat" -> 10, "lon" -> 12), recordDim = None,
       gatts = Nil,
@@ -159,7 +159,74 @@ class NcGridSourceSpec extends AnyFunSuite {
           Array.tabulate(12)(x => -80.0 + x * 0.05)),
         WVar("temp", NcFloat, Seq("time", "lat", "lon"), Nil,
           Array.tabulate(4 * 10 * 12)(i => (i % 50).toDouble))))
-    val df = spark.read.format(classOf[GridSource].getName).option("path", dir).load()
+    dir
+  }
+
+  private def gridAt(dir: String) =
+    spark.read.format(classOf[GridSource].getName).option("path", dir).load()
+
+  /** Filters left for Spark to re-evaluate above the scan on lat or lon. */
+  private def postScanCoordFilters(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FilterExec
+          if f.condition.references.exists(a => a.name == "lat" || a.name == "lon") => f
+    }
+
+  /** The filter evaluated by Spark over every collected row, no source involved. */
+  private def fullEval(df: org.apache.spark.sql.DataFrame,
+      cond: org.apache.spark.sql.Column): Long =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+      .filter(cond).count()
+
+  private val comparisons: Seq[(String, (org.apache.spark.sql.Column, Double) => org.apache.spark.sql.Column)] =
+    Seq(">=" -> (_ >= _), ">" -> (_ > _), "<=" -> (_ <= _), "<" -> (_ < _))
+
+  test("1-D lat/lon comparisons are handled exactly at a stored coordinate, both orientations") {
+    for (dir <- Seq(SourceQueries.ncDir, descDir)) {
+      val df = gridAt(dir)
+      val cube = NcGrid.openCubes(new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".nc")).minBy(_.getName).getPath).head
+      val (lats, lons) = NcGrid.coordArrays(cube)
+      for ((field, coords) <- Seq("lat" -> lats, "lon" -> lons);
+           v <- Seq(coords(3), coords(coords.length - 1));
+           (op, cmp) <- comparisons) {
+        val cond = cmp(col(field), v)
+        val tag = s"$dir: $field $op $v"
+        val filtered = df.filter(cond)
+        assert(postScanCoordFilters(filtered).isEmpty, s"$tag\n${filtered.queryExecution.executedPlan}")
+        val expect = fullEval(df, cond)
+        assert(filtered.count() == expect, tag)
+        assert(filtered.collect().length == expect, tag)
+      }
+    }
+  }
+
+  test("NaN literals, curvilinear axes and cold start stay unhandled and correct") {
+    val nc = gridAt(SourceQueries.ncDir)
+    for (field <- Seq("lat", "lon"); (op, cmp) <- comparisons) {
+      val cond = cmp(col(field), Double.NaN)
+      val filtered = nc.filter(cond)
+      assert(postScanCoordFilters(filtered).nonEmpty, s"$field $op NaN")
+      // Spark orders NaN above every double: `<`/`<=` keep all, `>`/`>=` none
+      assert(filtered.count() == fullEval(nc, cond), s"$field $op NaN")
+    }
+    val curv = gridAt(SourceQueries.ncCurvDir)
+    val curvLat = curv.select("lat").orderBy("lat").collect()(100).getDouble(0)
+    for ((op, cmp) <- comparisons) {
+      val cond = cmp(col("lat"), curvLat)
+      val filtered = curv.filter(cond)
+      assert(postScanCoordFilters(filtered).nonEmpty, s"curvilinear lat $op")
+      assert(filtered.count() == fullEval(curv, cond), s"curvilinear lat $op")
+    }
+    val coldDir = java.nio.file.Files.createTempDirectory("graft-nc-cold-bbox").toString
+    val cold = spark.read.format(classOf[GridSource].getName)
+      .option("path", coldDir).option("format", "nc").load().filter(col("lat") >= 44.0)
+    assert(postScanCoordFilters(cold).nonEmpty)
+    assert(cold.count() == 0)
+  }
+
+  test("descending coordinate axes narrow correctly (orientation-mapped)") {
+    val df = gridAt(descDir)
     val filtered = df.filter(col("lat") >= 44.2 && col("lon") < -79.7)
     // full evaluation agrees (narrowing never changed semantics) …
     val expect = df.collect().count(r => r.getDouble(4) >= 44.2 && r.getDouble(5) < -79.7)
