@@ -1,125 +1,23 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.{ColumnBridge, TypeBridge}
 import org.apache.spark.sql.types._
 
-/** Hilbert-curve index of two 32-bit keys into one 63-bit sort key — the
-  * OTHER clustering curve (Iceberg's `hilbert` transform next to Z-order).
-  * The Hilbert curve's defining property is unit-step locality: consecutive
-  * indices are Manhattan-adjacent cells, so it has no Z-order "seams" (the
-  * long diagonal jumps where Morton adjacency breaks) and per-file [min,
-  * max] envelopes come out tighter on average for box queries. Standard
-  * quadrant-recursion xy2d (Hilbert 1891; the public iterative
-  * formulation): per level, the quadrant bits pick one of 4 sub-squares
-  * (Gray-coded into the index) and the lower bits rotate/reflect into that
-  * sub-square's frame.
-  *
-  * Inputs map through a sign flip (so the signed int order becomes the
-  * unsigned grid order) and drop one low bit, giving a 31-bit grid whose
-  * 62-bit index stays positive in a signed long. Codegen'd: layout writes
-  * evaluate this once per row; 31 iterations of shift/mask, no allocation.
-  */
-case class Hilbert64(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[TypeBridge.AbstractType] = Seq(IntegerType, IntegerType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hilbert64"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Hilbert64.index(a.asInstanceOf[Int], b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val cls = Hilbert64.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $cls.index($x, $y);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Hilbert64 =
-    copy(left = newLeft, right = newRight)
-}
-
-object Hilbert64 {
-  /** Grid order: 31 bits per axis (62-bit index, positive in a long). */
-  val Order = 31
-
-  /** Column value → grid coordinate: sign-flip maps the signed int order
-    * onto [0, 2^32), then one low bit drops to fit the 31-bit grid.
-    */
-  @inline private def toGrid(v: Int): Long =
-    ((v ^ Int.MinValue) >>> 1).toLong & 0x7FFFFFFFL
-
-  /** xy2d on the 2^31 grid. Invariant at each level: (x, y) are coordinates
-    * WITHIN the current sub-square of size 2s — the rotation re-expresses
-    * the low bits in the chosen quadrant's frame, so values never leave
-    * [0, s) going in.
-    */
-  def index(x0: Int, y0: Int): Long =
-    indexOrder(toGrid(x0), toGrid(y0), Order)
-
-  /** xy2d core on a 2^order grid — exposed for the property tests. */
-  def indexOrder(gx: Long, gy: Long, order: Int): Long = {
-    var x = gx
-    var y = gy
-    var d = 0L
-    var s = 1L << (order - 1)
-    while (s > 0) {
-      val rx = if ((x & s) != 0) 1L else 0L
-      val ry = if ((y & s) != 0) 1L else 0L
-      d += s * s * ((3 * rx) ^ ry)
-      val xl = x & (s - 1); val yl = y & (s - 1)
-      if (ry == 0) {
-        if (rx == 1) { x = s - 1 - yl; y = s - 1 - xl } // reflect + swap
-        else { x = yl; y = xl } // swap
-      } else { x = xl; y = yl }
-      s >>= 1
-    }
-    d
-  }
-
-  /** The inverse (d2xy) on an order-`k` grid — test-surface for the curve
-    * properties (bijectivity, unit-step adjacency); not used by layouts.
-    */
-  def inverse(d: Long, order: Int): (Long, Long) = {
-    var x = 0L; var y = 0L
-    var t = d
-    var s = 1L
-    while (s < (1L << order)) {
-      val rx = (t / 2) & 1
-      val ry = (t ^ rx) & 1
-      // un-rotate the coordinates accumulated so far
-      if (ry == 0) {
-        if (rx == 1) { val tx = x; x = s - 1 - y; y = s - 1 - tx }
-        else { val tx = x; x = y; y = tx }
-      }
-      x += s * rx
-      y += s * ry
-      t /= 4
-      s <<= 1
-    }
-    (x, y)
-  }
-}
-
-object HilbertFunctions {
-  /** 63-bit Hilbert key of two int columns (quantize doubles first). */
-  def hilbert64(x: Column, y: Column): Column =
-    ColumnBridge.column(Hilbert64(
-      ColumnBridge.expression(x), ColumnBridge.expression(y)))
-}
-
-/** N-DIMENSIONAL Hilbert index — the d-dim generalization of [[Hilbert64]]
-  * via the public Skilling transform (J. Skilling, "Programming the Hilbert
+/** d-DIMENSIONAL Hilbert index — the clustering curve next to Z-order
+  * (Iceberg's `hilbert` transform). Consecutive indices are
+  * Manhattan-adjacent cells, so the curve has no Z-order "seams" (the long
+  * diagonal jumps where Morton adjacency breaks) and per-file [min, max]
+  * envelopes come out tighter on average for box queries. Computed via the
+  * public Skilling transform (J. Skilling, "Programming the Hilbert
   * curve", AIP Conf. Proc. 707, 2004): coordinates → transposed Hilbert
   * form in place (Gray code + per-level bit exchanges), then the index is
   * the bit-interleave of the transposed words. Iterative, allocation-light
-  * (one n-long scratch array per row), and exact for any `n·bits ≤ 63`.
-  * The 2-D [[Hilbert64]] stays the codegen'd fast path for int pairs; this
-  * covers the (time, x, y)-style 3-D+ layouts a raster archive clusters by.
+  * (one n-long scratch array per row), and exact for any `n·bits ≤ 63` —
+  * one code path for 2-D layouts and the (time, x, y)-style 3-D+ layouts a
+  * raster archive clusters by.
   */
 object HilbertN {
   /** Skilling AxestoTranspose, in place over `x` (n words of `bits` bits). */
@@ -209,7 +107,7 @@ object HilbertN {
 /** `hilbertN(bits, rank1, …, rankN)` as a Catalyst expression: evaluates
   * [[HilbertN.index]] once per row over long rank children (already
   * canonicalized to [0, 2^bits) by the caller — see
-  * `Snapshots.clusterHilbertCols`). Codegen'd: one stack array + one
+  * `Snapshots.cluster`). Codegen'd: one stack array + one
   * static call, no boxing on the hot path.
   */
 case class HilbertNKey(children: Seq[Expression], bits: Int)

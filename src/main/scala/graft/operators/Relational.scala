@@ -474,9 +474,10 @@ object Relational extends QueryModule {
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"),
         min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
 
-  /** OPTIMIZE ZORDER + 2-D skipping: the table is replace-committed
-    * re-clustered on the Morton key of (o_custkey, o_orderkey), so BOTH
-    * columns' per-file stats are tight and the conjunctive range read
+  /** OPTIMIZE ZORDER + 2-D skipping: the table is re-clustered
+    * ([[Snapshots.cluster]]) on the Morton key of the bucket ranks of
+    * (o_custkey, o_orderkey), so BOTH columns' per-file stats are tight and
+    * the conjunctive range read
     * prunes on each dimension independently (SnapshotSpec locks that either
     * dimension alone skips files on this layout — the property 1-D range
     * clustering cannot give). Oracle is the plain 2-D BETWEEN.
@@ -487,12 +488,12 @@ object Relational extends QueryModule {
       val dir = java.nio.file.Files.createTempDirectory("graft-snapz").toFile.getAbsolutePath
       Snapshots.commit(s, dir,
         T.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"))
-      Snapshots.clusterZOrder(s, dir, "o_custkey", "o_orderkey", 16)
+      Snapshots.cluster(s, dir, Seq("o_custkey", "o_orderkey"), 16)
       dir
     })
 
   /** Hilbert twin of [[snapZDir]]: the same orders table re-clustered on
-    * the seam-free curve ([[Snapshots.clusterHilbert]]); the declared box
+    * the seam-free curve ([[Snapshots.Curve.Hilbert]]); the declared box
     * query prunes through the identical [[Snapshots.readRanges]] stats
     * machinery, so the oracle is a plain range filter.
     */
@@ -502,14 +503,15 @@ object Relational extends QueryModule {
       val dir = java.nio.file.Files.createTempDirectory("graft-snaph").toFile.getAbsolutePath
       Snapshots.commit(s, dir,
         T.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"))
-      Snapshots.clusterHilbert(s, dir, "o_custkey", "o_orderkey", 16)
+      Snapshots.cluster(s, dir, Seq("o_custkey", "o_orderkey"), 16,
+        Snapshots.Curve.Hilbert)
       dir
     })
 
   /** N-COLUMN Z-order twin of [[snapZDir]], exercising NON-INT dimensions:
     * the table re-clusters on the interleaved bucket ranks of (o_custkey
     * BIGINT, o_orderdate TIMESTAMP, o_totalprice DOUBLE) —
-    * [[Snapshots.clusterZOrderCols]] canonicalizes each column against
+    * [[Snapshots.cluster]] canonicalizes each column against
     * sampled boundaries, so every dimension's per-file stats come out tight
     * and the conjunctive 3-D read skips on each one (SnapshotSpec locks
     * per-dimension skip counts). The oracle is the plain 3-way BETWEEN.
@@ -520,14 +522,14 @@ object Relational extends QueryModule {
       val dir = java.nio.file.Files.createTempDirectory("graft-snapzc").toFile.getAbsolutePath
       Snapshots.commit(s, dir, T.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"))
-      Snapshots.clusterZOrderCols(s, dir,
+      Snapshots.cluster(s, dir,
         Seq("o_custkey", "o_orderdate", "o_totalprice"), 16)
       dir
     })
 
   /** N-column HILBERT twin of [[snapZColsDir]]: the same 3 mixed-type
     * dimensions re-clustered on the d-dimensional Hilbert key
-    * ([[Snapshots.clusterHilbertCols]], the seam-free curve) — per-file
+    * ([[Snapshots.Curve.Hilbert]], the seam-free curve) — per-file
     * stats come out tight on every dimension, same pruning machinery,
     * tighter average envelopes. The oracle is the plain 3-way BETWEEN.
     */
@@ -537,8 +539,9 @@ object Relational extends QueryModule {
       val dir = java.nio.file.Files.createTempDirectory("graft-snaphc").toFile.getAbsolutePath
       Snapshots.commit(s, dir, T.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"))
-      Snapshots.clusterHilbertCols(s, dir,
-        Seq("o_custkey", "o_orderdate", "o_totalprice"), 16)
+      Snapshots.cluster(s, dir,
+        Seq("o_custkey", "o_orderdate", "o_totalprice"), 16,
+        Snapshots.Curve.Hilbert)
       dir
     })
 
@@ -676,7 +679,7 @@ object Relational extends QueryModule {
 
   /** Incrementally-clustered twin of [[snapZDir]]: the even-key half is
     * clustered by the FULL rewrite, the odd-key half arrives afterwards
-    * and is clustered by [[Snapshots.clusterZOrderIncremental]] — only the
+    * and is clustered by an incremental [[Snapshots.cluster]] pass — only the
     * appended tail is rewritten (SnapshotSpec locks carried-file identity
     * and the no-op pass). The read proves 2-D skipping holds across BOTH
     * clustered chunks; the oracle is the same plain 2-D BETWEEN over all
@@ -688,9 +691,10 @@ object Relational extends QueryModule {
       val dir = java.nio.file.Files.createTempDirectory("graft-snapzi").toFile.getAbsolutePath
       val orders = T.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice")
       Snapshots.commit(s, dir, orders.filter(col("o_orderkey") % 2 === 0))
-      Snapshots.clusterZOrder(s, dir, "o_custkey", "o_orderkey", 8)
+      Snapshots.cluster(s, dir, Seq("o_custkey", "o_orderkey"), 8)
       Snapshots.commit(s, dir, orders.filter(col("o_orderkey") % 2 === 1))
-      Snapshots.clusterZOrderIncremental(s, dir, "o_custkey", "o_orderkey", 8)
+      Snapshots.cluster(s, dir, Seq("o_custkey", "o_orderkey"), 8,
+        incremental = true)
       dir
     })
 

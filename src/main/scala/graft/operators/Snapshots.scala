@@ -58,17 +58,21 @@ object Snapshots {
   def properties(spark: SparkSession, dir: String): Map[String, String] = {
     val (fs, _) = hfs(spark, dir)
     val pf = new org.apache.hadoop.fs.Path(s"${manifestDir(dir)}/table.props")
-    if (!fs.exists(pf)) Map.empty
-    else {
-      val in = fs.open(pf)
-      val text =
+    // under the writers' lock: [[writeProps]] deletes the old file before
+    // renaming the new one in, and a read in that gap would see no props
+    // at all (every branch, tag and constraint gone for a moment)
+    val text = publishLock(manifestDir(dir)).synchronized {
+      if (!fs.exists(pf)) ""
+      else {
+        val in = fs.open(pf)
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-      text.linesIterator.filter(_.nonEmpty).map { line =>
-        val Array(k, v) = line.split("\t", -1)
-        dec(k) -> dec(v)
-      }.toMap
+      }
     }
+    text.linesIterator.filter(_.nonEmpty).map { line =>
+      val Array(k, v) = line.split("\t", -1)
+      dec(k) -> dec(v)
+    }.toMap
   }
 
   // the read-modify-write below is serialized through the same per-table
@@ -549,13 +553,12 @@ object Snapshots {
     *    logical-conflict rule (blind replaces may omit it and always win).
     *
     * Data written by abandoned attempts is unique-named debris for
-    * [[vacuumOrphans]]. Retries are bounded by `maxAttempts` (each retry
-    * is a metadata op, so contention resolves in milliseconds).
+    * [[vacuumOrphans]]. Retries are bounded by [[MetadataRetries]] (each
+    * retry is a metadata op, so contention resolves in milliseconds).
     */
   def commitRetry(spark: SparkSession, dir: String, df: DataFrame,
       replace: Boolean = false, expectedVersion: Option[Int] = None,
-      evolve: Boolean = false, meta: Map[String, String] = Map.empty,
-      maxAttempts: Int = 20): Int = {
+      evolve: Boolean = false, meta: Map[String, String] = Map.empty): Int = {
     val planned = currentVersion(spark, dir).getOrElse(0)
     expectedVersion.foreach { ev =>
       if (planned != ev) throw new java.util.ConcurrentModificationException(
@@ -565,30 +568,50 @@ object Snapshots {
     if (!replace && planned > 0) enforceSchema(spark, dir, df, evolve)
     enforceConstraints(spark, dir, df)
     val fresh = writeData(spark, dir, planned + 1, df)
-    var attempt = 1
-    while (true) {
+    // Left(cur): a derived replace met a foreign commit — no retry can
+    // resolve that, so it leaves the loop and fails once
+    withCommitRetry(MetadataRetries) {
       val cur = currentVersion(spark, dir).getOrElse(0)
-      if (replace && expectedVersion.exists(_ != cur))
-        throw new java.util.ConcurrentModificationException(
-          s"$dir: replace derived from v${expectedVersion.get} conflicts " +
-            s"with concurrent v$cur — recompute from the current snapshot")
-      if (!replace && cur > planned) enforceSchema(spark, dir, df, evolve)
-      val next = cur + 1
-      val carried =
-        if (replace || next == 1) Seq.empty else files(spark, dir, cur)
-      val dvCarry =
-        if (replace || next == 1) None else dvRel(spark, dir, cur)
-      try {
+      if (replace && expectedVersion.exists(_ != cur)) Left(cur)
+      else {
+        if (!replace && cur > planned) enforceSchema(spark, dir, df, evolve)
+        val next = cur + 1
+        val carried =
+          if (replace || next == 1) Seq.empty else files(spark, dir, cur)
+        val dvCarry =
+          if (replace || next == 1) None else dvRel(spark, dir, cur)
         publish(spark, dir, next, carried, fresh, meta, dv = dvCarry)
-        return next
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
+        Right(next)
       }
-    }
-    -1 // unreachable
+    }.fold(cur => throw new java.util.ConcurrentModificationException(
+      s"$dir: replace derived from v${expectedVersion.get} conflicts " +
+        s"with concurrent v$cur — recompute from the current snapshot"),
+      identity)
   }
+
+  /** Attempt bound of a loop whose retry re-runs only the metadata publish
+    * ([[commitRetry]], [[publishStaged]]). */
+  private[graft] val MetadataRetries = 20
+  /** Attempt bound of a writer that re-derives its whole commit from the
+    * current snapshot per attempt (MERGE, DELETE, UPDATE, partition
+    * reloads): each retry rescans its candidate files. */
+  private[graft] val RecomputeRetries = 10
+
+  /** The optimistic-concurrency retry loop (Delta's conflict-resolution
+    * loop): run `attempt`, and while it loses a version-slot race — a
+    * [[java.util.ConcurrentModificationException]] — run it again, at most
+    * `maxAttempts` runs in all; the last run's exception propagates. Safe
+    * only for bodies that re-read the CURRENT version each run, so a replay
+    * after a concurrent commit incorporates it instead of erasing it — every
+    * snapshot writer does. Data written by a lost attempt is unique-named
+    * debris for [[vacuumOrphans]].
+    */
+  private[graft] def withCommitRetry[T](maxAttempts: Int)(attempt: => T): T =
+    try attempt
+    catch {
+      case _: java.util.ConcurrentModificationException if maxAttempts > 1 =>
+        withCommitRetry(maxAttempts - 1)(attempt)
+    }
 
   /** Write a commit's data files under a PER-WRITER-UNIQUE directory
     * (`data/c{next}-{uuid}`) and return the table-relative file list. The
@@ -1899,8 +1922,8 @@ object Snapshots {
     pruneFilesAll(spark, dir, version, Seq((column, lower, upper)))
 
   /** Conjunctive multi-column skipping: a file survives only if EVERY
-    * range's stats check keeps it — the shape a Z-order-clustered table is
-    * laid out for, where both dimensions' per-file [min, max] are tight.
+    * range's stats check keeps it — the shape a [[cluster]]ed table is
+    * laid out for, where every dimension's per-file [min, max] is tight.
     */
   def pruneFilesAll(spark: SparkSession, dir: String, version: Int,
       ranges: Seq[(String, Option[Any], Option[Any])]): (Seq[String], Seq[String]) = {
@@ -2020,8 +2043,8 @@ object Snapshots {
       version: Option[Int] = None): DataFrame =
     readRanges(spark, dir, Seq((column, lower, upper)), version)
 
-  /** [[readRange]] for a CONJUNCTION of per-column ranges — on a Z-order
-    * layout ([[clusterZOrder]]) either dimension alone skips files, and the
+  /** [[readRange]] for a CONJUNCTION of per-column ranges — on a
+    * [[cluster]]ed layout either dimension alone skips files, and the
     * conjunction skips near-multiplicatively.
     */
   def readRanges(spark: SparkSession, dir: String,
@@ -2039,188 +2062,118 @@ object Snapshots {
     pred.fold(base)(base.filter)
   }
 
-  /** OPTIMIZE ZORDER: replace-commit the table re-clustered on the Morton
-    * key of two (int-castable) columns, so BOTH columns' per-file stats come
-    * out tight and [[readRanges]] skips on either dimension or their
-    * conjunction. Layout cost is one full rewrite a deployment pays per
-    * maintenance window; prior versions keep reading their own files. The
-    * Morton key itself is dropped — derivable, and the dimension columns'
-    * stats do the pruning.
+  /** The space-filling curve a [[cluster]] pass orders rows by. Both curves
+    * read the same per-column bucket ranks; only how the ranks combine
+    * into one sort key differs.
     */
-  def clusterZOrder(spark: SparkSession, dir: String, xCol: String,
-      yCol: String, targetFiles: Int): Int = {
-    import org.apache.spark.sql.functions.col
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    // expectedVersion: a concurrent append must conflict, not be dropped;
-    // row-preserving publish: a CDF tail skips the rewrite instead of dying
-    val v = replacePreserving(spark, dir, read(spark, dir, Some(cur))
-      .withColumn("__z", graft.functions.ZOrderFunctions.zorder64(
-        col(xCol).cast("int"), col(yCol).cast("int")))
-      .repartitionByRange(targetFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z"), expectedVersion = Some(cur))
-    // a full rewrite clusters everything — later incremental passes start
-    // their tail here
-    setProperties(spark, dir, Map("zorder.clustered_through" -> v.toString))
-    v
+  sealed abstract class Curve(val name: String)
+  object Curve {
+    /** Morton order: the ranks' bits interleave. */
+    case object ZOrder extends Curve("zorder")
+    /** Hilbert order ([[graft.functions.HilbertN]], Skilling's transform):
+      * consecutive curve positions are Manhattan-adjacent cells, so sorted
+      * runs never take Morton's diagonal jumps and per-file envelopes
+      * average tighter for box queries (Iceberg's `hilbert` transform).
+      */
+    case object Hilbert extends Curve("hilbert")
   }
 
-  /** OPTIMIZE via the HILBERT curve — [[clusterZOrder]]'s twin on the
-    * seam-free curve (Iceberg's `hilbert` transform): consecutive curve
-    * positions are Manhattan-ADJACENT cells, so sorted runs never take
-    * Morton's diagonal jumps and per-file [min, max] envelopes average
-    * tighter for box queries. Same replace-preserving publish and the same
-    * `zorder.clustered_through` watermark — a table has one clustering
-    * lineage whichever curve each maintenance pass picks.
+  /** Bits of one column's bucket rank: 64 sampled buckets per column. */
+  private val RankBits = 6
+
+  /** OPTIMIZE ZORDER / HILBERT: re-cluster the table on a space-filling
+    * curve over `cols` (two or more columns of any orderable type: long,
+    * double, string, timestamp, date …), so every listed column's per-file
+    * [min, max] comes out tight and [[readRanges]] skips files on ANY
+    * single dimension or any conjunction. Each column is first
+    * CANONICALIZED to a bucket rank (0 until 64) against boundaries sampled
+    * from the rows being rewritten — the RangePartitioner recipe, so
+    * strings and timestamps rank exactly like ints — and the ranks combine
+    * into one key per `curve` that the rewrite range-partitions into
+    * `targetFiles` files and sorts by. The key itself is dropped: derivable,
+    * and the dimension columns' stats do the pruning.
+    *
+    * `incremental = false` rewrites every file; `incremental = true`
+    * rewrites only the files that joined after the last pass
+    * (`zorder.clustered_through` in the table props) and carries every
+    * already-clustered file byte-identical — a maintenance pass then costs
+    * O(new data), and the table ends up clustered in chunks whose per-file
+    * stats each stay tight. No-op (returns the current version, publishes
+    * nothing) when nothing is left to rewrite.
+    *
+    * Either way: the rewritten files are read through their deletion
+    * vectors (pending merge-on-read deletes materialize), masks on carried
+    * files survive in a filtered DV, and the publish is row-preserving (CDF
+    * tails emit zero rows for it). A commit landing mid-pass takes the
+    * version slot first and this pass fails with
+    * [[java.util.ConcurrentModificationException]] rather than drop it.
     */
-  def clusterHilbert(spark: SparkSession, dir: String, xCol: String,
-      yCol: String, targetFiles: Int): Int = {
-    import org.apache.spark.sql.functions.col
+  def cluster(spark: SparkSession, dir: String, cols: Seq[String],
+      targetFiles: Int, curve: Curve = Curve.ZOrder,
+      incremental: Boolean = false): Int = {
+    import org.apache.spark.sql.functions.{col, lit, shiftleft, shiftright}
+    require(cols.size >= 2, s"$dir: clustering wants >= 2 columns")
+    // one key must hold every column's rank bits: past 63 a Morton shift
+    // wraps (keys collide and carry) and a Hilbert index overflows
+    require(cols.size * RankBits <= 63,
+      s"$dir: a ${curve.name} key over ${cols.size} columns x $RankBits bits " +
+        s"exceeds a signed long — cluster on at most ${63 / RankBits} columns")
     val cur = currentVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val v = replacePreserving(spark, dir, read(spark, dir, Some(cur))
-      .withColumn("__z", graft.functions.HilbertFunctions.hilbert64(
-        col(xCol).cast("int"), col(yCol).cast("int")))
-      .repartitionByRange(targetFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z"), expectedVersion = Some(cur))
-    setProperties(spark, dir, Map("zorder.clustered_through" -> v.toString))
-    v
-  }
-
-  /** [[clusterZOrderIncremental]] on the Hilbert key: only the unclustered
-    * tail rewrites; carried files stay byte-identical.
-    */
-  def clusterHilbertIncremental(spark: SparkSession, dir: String,
-      xCol: String, yCol: String, targetFiles: Int): Int = {
-    import org.apache.spark.sql.functions.col
-    clusterIncremental(spark, dir, targetFiles, df =>
-      graft.functions.HilbertFunctions.hilbert64(
-        col(xCol).cast("int"), col(yCol).cast("int")))
-  }
-
-  /** OPTIMIZE via the HILBERT curve over ANY number of columns of ANY
-    * orderable type — [[clusterZOrderCols]]'s twin on the seam-free curve
-    * (and the 3-D answer for a (time, x, y) raster archive): the same
-    * sampled-boundary bucket ranks, combined through the d-dimensional
-    * Skilling transform instead of a Morton interleave. Same
-    * replace-preserving publish, same `zorder.clustered_through`
-    * watermark, same [[readRanges]] pruning — only the space-filling curve
-    * (and thus the average envelope tightness) differs.
-    */
-  def clusterHilbertCols(spark: SparkSession, dir: String, cols: Seq[String],
-      targetFiles: Int, buckets: Int = 64): Int = {
-    import org.apache.spark.sql.functions.col
-    require(cols.size >= 2, "clusterHilbertCols wants >= 2 columns")
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val df = read(spark, dir, Some(cur))
-    val v = replacePreserving(spark, dir,
-      df.withColumn("__z", hilbertKeyExpr(df, cols, buckets))
+    val curFiles = files(spark, dir, cur)
+    val clustered: Set[String] =
+      properties(spark, dir).get("zorder.clustered_through") match {
+        case Some(v) if incremental && versions(spark, dir).contains(v.toInt) =>
+          // files clustered then AND still alive now (a delete/merge may
+          // have rewritten some — those rewritten ones count as tail)
+          files(spark, dir, v.toInt).toSet.intersect(curFiles.toSet)
+        case _ => Set.empty
+      }
+    val tail = curFiles.filterNot(clustered)
+    if (tail.isEmpty) return cur
+    val next = cur + 1
+    val tailDf = maskedParquet(spark, dir, cur, tail.map(f => dataPath(dir, f)))
+    val ranks = bucketRanks(tailDf, cols)
+    val key = curve match {
+      case Curve.ZOrder => // bit i of rank j lands at key bit i·N + j
+        (for (i <- 0 until RankBits; j <- cols.indices)
+          yield shiftleft(shiftright(ranks(j), i).bitwiseAND(lit(1L)),
+            i * cols.size + j))
+          .reduce(_ + _) // disjoint bit positions: + is |
+      case Curve.Hilbert =>
+        graft.functions.HilbertNFunctions.hilbertN(RankBits, ranks: _*)
+    }
+    val fresh = writeData(spark, dir, next,
+      tailDf.withColumn("__z", key)
         .repartitionByRange(targetFiles, col("__z"))
         .sortWithinPartitions("__z")
-        .drop("__z"),
-      expectedVersion = Some(cur),
-      meta = Map("hilbert" -> cols.mkString(",")))
-    setProperties(spark, dir, Map("zorder.clustered_through" -> v.toString,
+        .drop("__z"))
+    val dvCarry = carryDvFor(spark, dir, cur, next, clustered.toSeq)
+    publish(spark, dir, next, clustered.toSeq.sorted, fresh,
+      meta = Map(curve.name -> cols.mkString(",")),
+      dv = dvCarry, noRowChange = true)
+    setProperties(spark, dir, Map("zorder.clustered_through" -> next.toString,
       "zorder.cols" -> cols.mkString(",")))
-    v
+    next
   }
 
-  /** [[clusterZOrderColsIncremental]] on the N-column Hilbert key: only
-    * the unclustered tail rewrites, ranked against boundaries sampled
-    * from the tail itself.
-    */
-  def clusterHilbertColsIncremental(spark: SparkSession, dir: String,
-      cols: Seq[String], targetFiles: Int, buckets: Int = 64): Int = {
-    require(cols.size >= 2, "clusterHilbertColsIncremental wants >= 2 columns")
-    clusterIncremental(spark, dir, targetFiles,
-      df => hilbertKeyExpr(df, cols, buckets))
-  }
-
-  /** OPTIMIZE ZORDER over ANY number of columns of ANY orderable type
-    * (long/double/string/timestamp/date …) — the generalization of the
-    * two-int [[clusterZOrder]]. Each column is first CANONICALIZED to a
-    * small bucket rank (0 until `buckets`) against boundaries sampled from
-    * the data — the RangePartitioner recipe, so strings and timestamps
-    * rank exactly like ints — and the ranks' bits interleave into one
-    * Morton key the rewrite range-partitions and sorts by. Every listed
-    * column's per-file [min, max] comes out tight, so [[readRanges]] skips
-    * files on ANY single dimension or any conjunction. The rank math is
-    * plain Spark expressions (one `aggregate` fold over a broadcast
-    * boundary array per column — codegen'd, no UDF); the only driver-side
-    * data is the sampled boundary lists (`buckets`-sized per column).
-    * Published as a data-preserving replace: CDF tails skip it, pending
-    * merge-on-read deletes materialize through the masked read.
-    */
-  def clusterZOrderCols(spark: SparkSession, dir: String, cols: Seq[String],
-      targetFiles: Int, buckets: Int = 64): Int = {
-    import org.apache.spark.sql.functions.col
-    require(cols.size >= 2, "clusterZOrderCols wants >= 2 columns")
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val df = read(spark, dir, Some(cur))
-    val v = replacePreserving(spark, dir,
-      df.withColumn("__z", zorderKeyExpr(df, cols, buckets))
-        .repartitionByRange(targetFiles, col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z"),
-      expectedVersion = Some(cur),
-      meta = Map("zorder" -> cols.mkString(",")))
-    setProperties(spark, dir, Map("zorder.clustered_through" -> v.toString,
-      "zorder.cols" -> cols.mkString(",")))
-    v
-  }
-
-  /** The N-column Morton key: per column, rank = #(sampled boundaries ≤
-    * value) via one `aggregate` fold over the boundary array (NULL ranks
-    * lowest), then bit i of rank j lands at key bit `i·N + j`. Boundaries
-    * come from a seeded bounded sample — layout only ever affects WHICH
-    * file a row lands in, never results, so sampling costs nothing in
+  /** Per-column bucket ranks (0 until 2^RankBits, NULL lowest): rank =
+    * #(sampled boundaries ≤ value), one `aggregate` fold over a literal
+    * boundary array per column — plain codegen'd expressions, no UDF.
+    * Boundaries come from a seeded bounded sample (one count + one sampled
+    * collect, a sliver of the rewrite's cost): layout only ever decides
+    * WHICH file a row lands in, never results, so sampling costs nothing in
     * correctness.
     */
-  private def zorderKeyExpr(df: DataFrame, cols: Seq[String],
-      buckets: Int): org.apache.spark.sql.Column = {
+  private def bucketRanks(df: DataFrame,
+      cols: Seq[String]): Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions._
-    val (ranks, bits) = bucketRankExprs(df, cols, buckets)
-    (for (i <- 0 until bits; j <- cols.indices)
-      yield shiftleft(shiftright(ranks(j), i).bitwiseAND(lit(1L)),
-        i * cols.size + j))
-      .reduce(_ + _) // disjoint bit positions: + is |
-  }
-
-  /** The N-column HILBERT key — [[zorderKeyExpr]]'s twin on the seam-free
-    * curve: the same per-column bucket ranks feed [[graft.functions
-    * .HilbertN]] (Skilling transform, codegen'd) instead of a bit
-    * interleave. Same canonicalization, same pruning story, tighter
-    * average envelopes (no Morton diagonal jumps).
-    */
-  private def hilbertKeyExpr(df: DataFrame, cols: Seq[String],
-      buckets: Int): org.apache.spark.sql.Column = {
-    val (ranks, bits) = bucketRankExprs(df, cols, buckets)
-    require(cols.size * bits <= 63,
-      s"hilbert key: ${cols.size} cols x $bits bits exceeds a signed long — lower buckets")
-    graft.functions.HilbertNFunctions.hilbertN(bits, ranks: _*)
-  }
-
-  /** Per-column bucket ranks (0 until `buckets`) against boundaries
-    * sampled from the data — the RangePartitioner recipe, so strings and
-    * timestamps rank exactly like ints. Returns (rank columns, bits per
-    * rank). Shared by the Morton and Hilbert N-column keys.
-    */
-  private def bucketRankExprs(df: DataFrame, cols: Seq[String],
-      buckets: Int): (Seq[org.apache.spark.sql.Column], Int) = {
-    import org.apache.spark.sql.functions._
-    val bits = math.max(1, 32 - Integer.numberOfLeadingZeros(buckets - 1))
-    val sampleTarget = buckets * 40
-    // bounded deterministic sample: one count + one sampled collect — both
-    // a sliver of the full-rewrite cost this maintenance pass already pays
+    val buckets = 1 << RankBits
     val n = df.count()
-    val fraction = math.min(1.0, sampleTarget.toDouble / math.max(1L, n))
+    val fraction = math.min(1.0, buckets * 40.0 / math.max(1L, n))
     val sampled = df.select(cols.map(col): _*)
       .sample(withReplacement = false, fraction, seed = 42L).collect()
-    val ranks = cols.zipWithIndex.map { case (c, j) =>
+    cols.zipWithIndex.map { case (c, j) =>
       val vals = sampled.flatMap(r => Option(r.get(j))).sortWith(anyLt)
       val bounds: Seq[Any] =
         if (vals.isEmpty) Seq.empty
@@ -2235,7 +2188,6 @@ object Snapshots {
         when(col(c).isNull, lit(0L)).otherwise(rank.cast("long"))
       }
     }
-    (ranks, bits)
   }
 
   /** Driver-side ordering for sampled boundary values — the same total
@@ -2245,87 +2197,7 @@ object Snapshots {
     case (x: Comparable[_], y) =>
       x.asInstanceOf[Comparable[Any]].compareTo(y) < 0
     case _ => throw new IllegalArgumentException(
-      s"cannot order ${a.getClass.getSimpleName} for Z-order boundaries")
-  }
-
-  /** INCREMENTAL OPTIMIZE ZORDER — cluster only the files appended since
-    * the last clustering pass (the liquid-clustering / partial-rewrite
-    * posture): `zorder.clustered_through` in the table props records the
-    * version whose file set is already clustered; this call Z-orders ONLY
-    * the tail files that joined after it and carries every
-    * already-clustered file into the new manifest byte-identical. At
-    * 100 TB this is the difference between a maintenance pass costing
-    * O(new data) per window and one costing O(table) — the full
-    * [[clusterZOrder]] rewrite is a rare re-layout, this runs after every
-    * ingest burst. The table ends up clustered in CHUNKS (one per pass);
-    * per-file stats stay tight inside every chunk, so [[readRanges]] skips
-    * on either dimension across all of them — the read-side cost of
-    * chunked clustering is more (still-tight) files, never wrong or loose
-    * pruning. No-op (returns the current version, publishes nothing) when
-    * no unclustered tail exists. The derived rewrite passes
-    * `expectedVersion` semantics via the slot CAS: a concurrent append
-    * conflicts loudly rather than being silently dropped.
-    */
-  def clusterZOrderIncremental(spark: SparkSession, dir: String, xCol: String,
-      yCol: String, targetFiles: Int): Int = {
-    import org.apache.spark.sql.functions.col
-    clusterIncremental(spark, dir, targetFiles, df =>
-      graft.functions.ZOrderFunctions.zorder64(
-        col(xCol).cast("int"), col(yCol).cast("int")))
-  }
-
-  /** [[clusterZOrderIncremental]] for the N-column any-type key of
-    * [[clusterZOrderCols]]: only the unclustered tail rewrites, ranked
-    * against boundaries sampled from the TAIL itself (each maintenance
-    * chunk is internally clustered — per-file stats stay tight inside
-    * every chunk, which is all [[readRanges]] pruning needs).
-    */
-  def clusterZOrderColsIncremental(spark: SparkSession, dir: String,
-      cols: Seq[String], targetFiles: Int, buckets: Int = 64): Int = {
-    require(cols.size >= 2, "clusterZOrderColsIncremental wants >= 2 columns")
-    clusterIncremental(spark, dir, targetFiles,
-      df => zorderKeyExpr(df, cols, buckets))
-  }
-
-  /** Shared incremental-clustering machinery: rewrite ONLY the files that
-    * joined after `zorder.clustered_through`, carrying every
-    * already-clustered file byte-identical; masked tail read (pending
-    * merge-on-read deletes materialize), filtered DV carry, row-preserving
-    * publish (CDF tails skip it).
-    */
-  private def clusterIncremental(spark: SparkSession, dir: String,
-      targetFiles: Int, keyOf: DataFrame => org.apache.spark.sql.Column): Int = {
-    import org.apache.spark.sql.functions.col
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val curFiles = files(spark, dir, cur)
-    val clustered: Set[String] =
-      properties(spark, dir).get("zorder.clustered_through") match {
-        case Some(v) if versions(spark, dir).contains(v.toInt) =>
-          // files clustered then AND still alive now (a delete/merge may
-          // have rewritten some — those rewritten ones count as tail)
-          files(spark, dir, v.toInt).toSet.intersect(curFiles.toSet)
-        case _ => Set.empty
-      }
-    val tail = curFiles.filterNot(clustered)
-    if (tail.isEmpty) return cur
-    val next = cur + 1
-    // masked tail read: pending merge-on-read deletes on tail files are
-    // MATERIALIZED by this rewrite; masks on carried files survive in a
-    // filtered DV so their deletes stay applied
-    val tailDf = maskedParquet(spark, dir, cur, tail.map(f => dataPath(dir, f)))
-    val fresh = writeData(spark, dir, next,
-      tailDf.withColumn("__z", keyOf(tailDf))
-        .repartitionByRange(targetFiles, col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z"))
-    val dvCarry = carryDvFor(spark, dir, cur, next, clustered.toSeq)
-    // row-preserving publish: a CDF tail emits zero rows for this version
-    // instead of refusing (no visible row changed)
-    publish(spark, dir, next, clustered.toSeq.sorted, fresh,
-      dv = dvCarry, noRowChange = true)
-    setProperties(spark, dir, Map("zorder.clustered_through" -> next.toString))
-    next
+      s"cannot order ${a.getClass.getSimpleName} for clustering boundaries")
   }
 
   /** The previous version's deletion vector restricted to the files a
@@ -2586,29 +2458,6 @@ object Snapshots {
         Some(cdc), Some(dv))
       next
     } finally { matching.unpersist(); () }
-  }
-
-  /** MERGE INTO with conflict RETRY: unlike a blind replace, a merge can
-    * safely re-derive after losing a version-slot race — each attempt
-    * re-reads the CURRENT snapshot, re-pins the touched files, and
-    * re-publishes, so a concurrent append is incorporated rather than
-    * erased (Delta's merge conflict-resolution loop). Bounded by
-    * `maxAttempts`; the recompute is the candidate-file scan, not a table
-    * rewrite.
-    */
-  def mergeIntoRetry(spark: SparkSession, dir: String, updates: DataFrame,
-      key: String, meta: Map[String, String] = Map.empty,
-      maxAttempts: Int = 10, evolve: Boolean = false): Int = {
-    var attempt = 1
-    while (true) {
-      try return mergeInto(spark, dir, updates, key, meta, evolve)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
   }
 
   /** Publish a METADATA-ONLY commit: a new version carrying the current
@@ -3125,11 +2974,6 @@ object Snapshots {
     }
   }
 
-  /** Publish a staged commit as the next version — pure metadata (the data
-    * files were written at stage time). Optimistic-retry on version-slot
-    * races like [[commitRetry]]; re-runs the schema gate against the
-    * CURRENT table first, so a conflicting evolution that landed since the
-    * stage refuses loudly instead of publishing a mixed table. */
   /** Version that already published staged commit `token`, if any — the
     * `wap.token` commit-meta entry rides every staged publish atomically,
     * so a crash between the publish and the staged-manifest delete is
@@ -3143,37 +2987,36 @@ object Snapshots {
         .exists(_.get("wap.token").contains(token))
     }
 
-  def publishStaged(spark: SparkSession, dir: String, token: String,
-      maxAttempts: Int = 20): Int = {
+  /** Publish a staged commit as the next version — pure metadata (the data
+    * files were written at stage time). Optimistic-retry on version-slot
+    * races like [[commitRetry]]; re-runs the schema gate against the
+    * CURRENT table first, so a conflicting evolution that landed since the
+    * stage refuses loudly instead of publishing a mixed table. */
+  def publishStaged(spark: SparkSession, dir: String, token: String): Int = {
     val (fs, _) = hfs(spark, dir)
     val (meta, evolve, staged) = stagedEntry(spark, dir, token)
     // one planned relation for both gates and every retry: the footer read
     // happens once, not per attempt
     val stagedRaw = spark.read.option("mergeSchema", "true")
       .parquet(staged.map(f => dataPath(dir, f)): _*)
-    var attempt = 1
-    while (true) {
+    withCommitRetry(MetadataRetries) {
       // IDEMPOTENCE: a crash (or a racing same-token caller) between the
       // publish and the staged-manifest delete leaves a live token whose
       // files are already in the table — re-listing them would duplicate
       // every staged row. The `wap.token` commit marker makes the replay
       // detectable: finish the cleanup and return the published version.
-      publishedStagedVersion(spark, dir, token).foreach { v =>
-        fs.delete(stagedManifest(dir, token), false)
-        return v
-      }
-      val cur = currentVersion(spark, dir).getOrElse(0)
-      // constraints re-check INSIDE the loop: stage validated against the
-      // constraints of ITS time; one ADDED since (even mid-retry) must not
-      // slip violating rows in. applyMapping: staged files carry PHYSICAL
-      // names (writeData's rule) — both gates compare LOGICAL schemas.
-      enforceConstraints(spark, dir, applyMapping(spark, dir, stagedRaw))
-      if (cur > 0)
-        enforceSchema(spark, dir, applyMapping(spark, dir, stagedRaw), evolve)
-      val next = cur + 1
-      val carried = if (next == 1) Seq.empty else files(spark, dir, cur)
-      val dvCarry = if (next == 1) None else dvRel(spark, dir, cur)
-      try {
+      val landed = publishedStagedVersion(spark, dir, token).getOrElse {
+        val cur = currentVersion(spark, dir).getOrElse(0)
+        // constraints re-check INSIDE the loop: stage validated against the
+        // constraints of ITS time; one ADDED since (even mid-retry) must not
+        // slip violating rows in. applyMapping: staged files carry PHYSICAL
+        // names (writeData's rule) — both gates compare LOGICAL schemas.
+        enforceConstraints(spark, dir, applyMapping(spark, dir, stagedRaw))
+        if (cur > 0)
+          enforceSchema(spark, dir, applyMapping(spark, dir, stagedRaw), evolve)
+        val next = cur + 1
+        val carried = if (next == 1) Seq.empty else files(spark, dir, cur)
+        val dvCarry = if (next == 1) None else dvRel(spark, dir, cur)
         // SAME-TOKEN race: two callers can both pass the replay check above
         // while neither has published yet; without atomicity the slower one
         // would re-list the staged files on top of the winner's version.
@@ -3188,17 +3031,12 @@ object Snapshots {
               meta + ("wap.token" -> token), dv = dvCarry)
           }
         }
-        val v = publishedStagedVersion(spark, dir, token)
+        publishedStagedVersion(spark, dir, token)
           .getOrElse(next) // ours just published at `next`
-        fs.delete(stagedManifest(dir, token), false)
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
       }
+      fs.delete(stagedManifest(dir, token), false)
+      landed
     }
-    -1 // unreachable
   }
 
   /** Delete a staged commit without a trace: its manifest and its data
@@ -3463,27 +3301,6 @@ object Snapshots {
     next
   }
 
-  /** [[mergeIntoMor]] with the conflict RETRY loop — the CDC-apply stream's
-    * writer next to compactors/appenders: each attempt re-derives from the
-    * CURRENT snapshot (candidate scan + DV union are deleted/updated-rows
-    * sized), so a lost version-slot race costs a rebase, never a wrong
-    * table.
-    */
-  def mergeIntoMorRetry(spark: SparkSession, dir: String, updates: DataFrame,
-      key: String, meta: Map[String, String] = Map.empty,
-      maxAttempts: Int = 10, evolve: Boolean = false): Int = {
-    var attempt = 1
-    while (true) {
-      try return mergeIntoMor(spark, dir, updates, key, meta, evolve)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
-  }
-
   private def countDistinctCol(key: String) = {
     import org.apache.spark.sql.functions.{col, countDistinct}
     countDistinct(col(key))
@@ -3640,27 +3457,6 @@ object Snapshots {
       expectedVersion = Some(cur),
       meta = Map("repartitioned" ->
         partitionSpecs(spark, dir).map(_.encoded).mkString(";")))
-  }
-
-  /** [[replaceWhere]] with optimistic retry on version-slot races — the
-    * idempotent partition-reload op is exactly what a scheduler retries,
-    * so it gets the same conflict-retry twin merge/delete have: the region
-    * swap is self-contained (it re-reads the CURRENT version each attempt),
-    * so replaying it after a concurrent commit is safe and loses nothing.
-    */
-  def replaceWhereRetry(spark: SparkSession, dir: String, df: DataFrame,
-      column: String, lower: Option[Any], upper: Option[Any],
-      maxAttempts: Int = 10): Int = {
-    var attempt = 1
-    while (true) {
-      try return replaceWhere(spark, dir, df, column, lower, upper)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
   }
 
   /** One WHEN MATCHED clause of [[mergeApply]]: `set = None` is DELETE,

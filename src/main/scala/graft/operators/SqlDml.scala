@@ -264,43 +264,28 @@ final class Boxed(val e: Expression) extends Serializable {
 }
 object Boxed { def apply(e: Expression): Boxed = new Boxed(e) }
 
-private[graft] object SqlDmlRetry {
-  /** SQL DML retries version-slot races like Delta does: every op here
-    * re-reads the CURRENT version each attempt, so replay after a
-    * concurrent commit is safe — a SQL user should see their statement
-    * land, not a raw ConcurrentModificationException from a racing
-    * appender. */
-  def retryOnCme[T](maxAttempts: Int = 10)(op: => T): T = {
-    var attempt = 1
-    while (true) {
-      try return op
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-}
+// Every command below re-derives its commit from the CURRENT version per
+// attempt, so it retries version-slot races as Delta does: a SQL user sees
+// the statement land, not a raw ConcurrentModificationException from a
+// racing appender.
 
-/** `DELETE FROM <snapshot table> WHERE <any predicate>`. */
 /** Dynamic `INSERT OVERWRITE` on a partitioned snapshot table. */
 case class SnapshotDynamicOverwriteCommand(dir: String, query: LogicalPlan)
     extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(query)
   override def run(spark: SparkSession): Seq[Row] = {
-    SqlDmlRetry.retryOnCme() {
+    Snapshots.withCommitRetry(Snapshots.RecomputeRetries) {
       Snapshots.insertOverwritePartitions(spark, dir, Shims.ofRows(spark, query))
     }
     Seq.empty
   }
 }
 
+/** `DELETE FROM <snapshot table> WHERE <any predicate>`. */
 case class SnapshotDeleteCommand(dir: String, cond: Boxed)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    SqlDmlRetry.retryOnCme() {
+    Snapshots.withCommitRetry(Snapshots.RecomputeRetries) {
       Snapshots.deleteWhere(spark, dir, Shims.column(cond.e),
         prune = SnapshotDmlRule.ranges(cond.e))
     }
@@ -314,7 +299,7 @@ case class SnapshotUpdateCommand(dir: String,
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions.lit
-    SqlDmlRetry.retryOnCme() {
+    Snapshots.withCommitRetry(Snapshots.RecomputeRetries) {
       Snapshots.updateWhere(spark, dir,
         cond.map(b => Shims.column(b.e)).getOrElse(lit(true)),
         sets.map { case (n, b) => n -> Shims.column(b.e) },
@@ -335,7 +320,7 @@ case class SnapshotMergeCommand(dir: String, source: LogicalPlan,
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] = {
     def c(b: Boxed): Column = Shims.column(b.e)
-    SqlDmlRetry.retryOnCme() {
+    Snapshots.withCommitRetry(Snapshots.RecomputeRetries) {
       Snapshots.mergeApply(spark, dir, Shims.ofRows(spark, source),
         c(onCond),
         matched.map { case (w, s) =>

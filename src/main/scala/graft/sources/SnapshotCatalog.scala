@@ -423,7 +423,7 @@ private[graft] class SnapshotV2Table(val dir: String, ident: String,
     import org.apache.spark.sql.functions.lit
     val cond = filters.flatMap(SnapshotV2Table.toColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    graft.operators.SqlDmlRetry.retryOnCme() {
+    Snapshots.withCommitRetry(Snapshots.RecomputeRetries) {
       Snapshots.deleteWhere(spark, dir, cond,
         prune = filters.toSeq.flatMap(SnapshotRelation.translate))
     }
@@ -762,7 +762,8 @@ private[graft] class SnapshotWriteBuilder(dir: String) extends WriteBuilder
               case EqualTo(c0, v0) => (c0, v0)
               case EqualNullSafe(c0, v0) => (c0, v0)
             }
-            Snapshots.replaceWhereRetry(spark, dir, data, c, Some(v), Some(v))
+            Snapshots.withCommitRetry(Snapshots.RecomputeRetries)(
+              Snapshots.replaceWhere(spark, dir, data, c, Some(v), Some(v)))
           case Some(_) => Snapshots.commit(spark, dir, data, replace = true)
           case None => Snapshots.commit(spark, dir, data, replace = overwrite)
         }

@@ -66,14 +66,14 @@ private[graft] object SnapshotProcedures {
       Seq(p("tbl", StringType), p("cols", StringType),
         pd("target_files", IntegerType, "8")),
       new StructType().add("version", IntegerType),
-      (s, dir, r, _) => Seq(Snapshots.clusterZOrderCols(s, dir,
+      (s, dir, r, _) => Seq(Snapshots.cluster(s, dir,
         str(r, 1).split(",").map(_.trim).toSeq, targetFiles = r.getInt(2)))),
     "hilbert" -> Spec(
       Seq(p("tbl", StringType), p("x_col", StringType), p("y_col", StringType),
         pd("target_files", IntegerType, "8")),
       new StructType().add("version", IntegerType),
-      (s, dir, r, _) => Seq(Snapshots.clusterHilbert(s, dir,
-        str(r, 1), str(r, 2), targetFiles = r.getInt(3)))),
+      (s, dir, r, _) => Seq(Snapshots.cluster(s, dir, Seq(str(r, 1), str(r, 2)),
+        targetFiles = r.getInt(3), curve = Snapshots.Curve.Hilbert))),
     "repartition" -> Spec(
       Seq(p("tbl", StringType)),
       new StructType().add("version", IntegerType),

@@ -77,7 +77,7 @@ class SnapshotChaosSpec extends AnyFunSuite {
           history += v ->
             (history(cur).filterNot(r => keys(r._1)) ++ upd).sorted
         case 4 => // z-order maintenance rewrite: content must not move
-          val v = Snapshots.clusterZOrder(spark, dir, "k", "v", 1 + rng.nextInt(6))
+          val v = Snapshots.cluster(spark, dir, Seq("k", "v"), 1 + rng.nextInt(6))
           history += v -> history(cur)
         case 5 => // retention + vacuum: head content must not move
           val keep = Snapshots.versions(spark, dir).last
@@ -141,7 +141,8 @@ class SnapshotChaosSpec extends AnyFunSuite {
           val ins = src.filterNot { case (k, _) => tKeys(k) }
           history += v -> (fromT ++ ins).sorted
         case 11 => // hilbert maintenance rewrite: content must not move
-          val v = Snapshots.clusterHilbert(spark, dir, "k", "v", 1 + rng.nextInt(6))
+          val v = Snapshots.cluster(spark, dir, Seq("k", "v"), 1 + rng.nextInt(6),
+            Snapshots.Curve.Hilbert)
           history += v -> history(cur)
       }
 
@@ -231,11 +232,13 @@ class SnapshotChaosSpec extends AnyFunSuite {
         // alternate the upsert strategy: copy-on-write and merge-on-read
         // retrying writers must both compose with the sink and compactor
         if (round % 2 == 0)
-          Snapshots.mergeIntoRetry(spark, dir,
-            Seq(((round % 7).toLong, round.toLong)).toDF("k", "v"), "k")
+          Snapshots.withCommitRetry(Snapshots.RecomputeRetries)(
+            Snapshots.mergeInto(spark, dir,
+              Seq(((round % 7).toLong, round.toLong)).toDF("k", "v"), "k"))
         else
-          Snapshots.mergeIntoMorRetry(spark, dir,
-            Seq(((round % 7).toLong, round.toLong)).toDF("k", "v"), "k")
+          Snapshots.withCommitRetry(Snapshots.RecomputeRetries)(
+            Snapshots.mergeIntoMor(spark, dir,
+              Seq(((round % 7).toLong, round.toLong)).toDF("k", "v"), "k"))
       }
       val fCompact = Future {
         if (jitter == 2) Thread.sleep(rng.nextInt(25).toLong)
@@ -299,8 +302,9 @@ class SnapshotChaosSpec extends AnyFunSuite {
             val a = rng.nextInt(97).toLong; val b = a + rng.nextInt(10)
             Snapshots.deleteRangeMor(spark, dir, "k", Some(a), Some(b))
           case 5 => Snapshots.compact(spark, dir, targetBytes = 1L << 20)
-          case 6 => Snapshots.clusterZOrderIncremental(spark, dir, "k", "v", 4)
-          case 7 => Snapshots.clusterHilbertIncremental(spark, dir, "k", "v", 4)
+          case 6 => Snapshots.cluster(spark, dir, Seq("k", "v"), 4, incremental = true)
+          case 7 => Snapshots.cluster(spark, dir, Seq("k", "v"), 4,
+            Snapshots.Curve.Hilbert, incremental = true)
         }
       }
       val head = Snapshots.currentVersion(spark, dir).get
@@ -498,9 +502,10 @@ class SnapshotChaosSpec extends AnyFunSuite {
     val replacer = Future {
       barrier.await()
       (1 to rounds).map { r =>
-        Snapshots.replaceWhereRetry(spark, dir,
-          spark.range(10, 30).toDF("k").withColumn("v", lit(r.toLong)),
-          "k", Some(10L), Some(29L))
+        Snapshots.withCommitRetry(Snapshots.RecomputeRetries)(
+          Snapshots.replaceWhere(spark, dir,
+            spark.range(10, 30).toDF("k").withColumn("v", lit(r.toLong)),
+            "k", Some(10L), Some(29L)))
       }
     }
     val appenders = (1 to nAppenders).map { t =>

@@ -11,6 +11,8 @@ class SnapshotSpec extends AnyFunSuite {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-snapspec").toFile.getAbsolutePath
 
+  private val curves = Seq(Snapshots.Curve.ZOrder, Snapshots.Curve.Hilbert)
+
   test("append commits never change a pinned version's rows") {
     val dir = tmp()
     val v1 = Snapshots.commit(spark, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
@@ -250,29 +252,75 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   test("clusterZOrder: either dimension alone skips files; conjunction stays exact") {
-    val dir = tmp()
+    checkCluster2D(Snapshots.Curve.ZOrder)
+  }
+
+  test("clusterHilbert: both dimensions skip; incremental pass carries clustered files") {
+    checkCluster2D(Snapshots.Curve.Hilbert)
+  }
+
+  /** 2-D clustering on one curve: both dimensions skip, the conjunction stays
+   *  exact, an incremental pass carries the clustered files, then idles. */
+  private def checkCluster2D(curve: Snapshots.Curve): Unit = {
     // a 64x64 grid: range clustering on x would leave y stats spanning the
-    // whole domain; z-order must make BOTH tight
+    // whole domain; either curve must make BOTH tight
     val grid = spark.range(64L * 64L).toDF("i")
       .withColumn("x", (col("i") % 64).cast("long"))
       .withColumn("y", (col("i") / 64).cast("long")).drop("i")
+    val dir = tmp()
     Snapshots.commit(spark, dir, grid)
-    val v = Snapshots.clusterZOrder(spark, dir, "x", "y", 16)
+    val v = Snapshots.cluster(spark, dir, Seq("x", "y"), 16, curve)
     val (keptX, all) = Snapshots.pruneFiles(spark, dir, v, "x", Some(0L), Some(15L))
     val (keptY, _) = Snapshots.pruneFiles(spark, dir, v, "y", Some(0L), Some(15L))
-    assert(all.length > 8)
-    assert(keptX.length < all.length, "x-range skipped nothing on the z layout")
-    assert(keptY.length < all.length, "y-range skipped nothing on the z layout")
+    assert(all.length > 8, curve.name)
+    assert(keptX.length < all.length, s"x-range skipped nothing on the ${curve.name} layout")
+    assert(keptY.length < all.length, s"y-range skipped nothing on the ${curve.name} layout")
     val (keptXY, _) = Snapshots.pruneFilesAll(spark, dir, v,
       Seq(("x", Some(0L), Some(15L)), ("y", Some(0L), Some(15L))))
-    assert(keptXY.length <= math.min(keptX.length, keptY.length))
+    assert(keptXY.length <= math.min(keptX.length, keptY.length), curve.name)
     val got = Snapshots.readRanges(spark, dir,
         Seq(("x", Some(0L), Some(15L)), ("y", Some(0L), Some(15L))))
       .count()
-    assert(got == 16L * 16L)
+    assert(got == 16L * 16L, curve.name)
     // pre-cluster version still readable, full content preserved
     assert(Snapshots.read(spark, dir, Some(v)).count() == 64L * 64L)
     assert(Snapshots.read(spark, dir, Some(v - 1)).count() == 64L * 64L)
+    // incremental: a fresh tail clusters, the 16 clustered files carry
+    val clustered = Snapshots.files(spark, dir, v).toSet
+    Snapshots.commit(spark, dir, grid.withColumn("x", col("x") + 100))
+    val v2 = Snapshots.cluster(spark, dir, Seq("x", "y"), 4, curve,
+      incremental = true)
+    val after = Snapshots.files(spark, dir, v2).toSet
+    assert(clustered.subsetOf(after),
+      s"incremental ${curve.name} pass rewrote clustered files")
+    assert(Snapshots.read(spark, dir, Some(v2)).count() == 2 * 64L * 64L)
+    // a further incremental pass is a no-op
+    assert(Snapshots.cluster(spark, dir, Seq("x", "y"), 4, curve,
+      incremental = true) == v2, curve.name)
+  }
+
+  test("cluster refuses a key wider than a signed long on both curves, before any job") {
+    val dir = tmp()
+    val cols = (0 until 11).map(i => s"c$i")
+    Snapshots.commit(spark, dir,
+      spark.range(100).select(cols.map(c => (col("id") * 7 % 100).as(c)): _*))
+    val sc = spark.sparkContext
+    for (curve <- curves) {
+      // 11 columns x 6 rank bits = 66 bits: a Morton shift would wrap
+      sc.setJobGroup("cluster-width-guard", curve.name)
+      val e = try intercept[IllegalArgumentException](
+          Snapshots.cluster(spark, dir, cols, 4, curve))
+        finally sc.clearJobGroup()
+      assert(e.getMessage.contains("signed long"), e.getMessage)
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(sc.statusTracker.getJobIdsForGroup("cluster-width-guard").isEmpty,
+        s"${curve.name}: the refused pass ran Spark jobs")
+      assert(Snapshots.versions(spark, dir) == Seq(1),
+        s"${curve.name}: the refused pass published a version")
+    }
+    // 10 columns x 6 bits = 60 still fit
+    assert(Snapshots.cluster(spark, dir, cols.take(10), 4) == 2)
+    assert(Snapshots.read(spark, dir).count() == 100)
   }
 
   test("shallow clone: zero bytes copied, independent evolution, source never touched") {
@@ -377,34 +425,6 @@ class SnapshotSpec extends AnyFunSuite {
     assert(e.getMessage.contains("nonneg"))
     // version-referencing props stay behind
     assert(Snapshots.tags(spark, dst).isEmpty, "tags must not travel")
-  }
-
-  test("clusterHilbert: both dimensions skip; incremental pass carries clustered files") {
-    val dir = tmp()
-    val grid = spark.range(64L * 64L).toDF("i")
-      .withColumn("x", (col("i") % 64).cast("long"))
-      .withColumn("y", (col("i") / 64).cast("long")).drop("i")
-    Snapshots.commit(spark, dir, grid)
-    val v = Snapshots.clusterHilbert(spark, dir, "x", "y", 16)
-    val (keptX, all) = Snapshots.pruneFiles(spark, dir, v, "x", Some(0L), Some(15L))
-    val (keptY, _) = Snapshots.pruneFiles(spark, dir, v, "y", Some(0L), Some(15L))
-    assert(all.length > 8)
-    assert(keptX.length < all.length, "x-range skipped nothing on the hilbert layout")
-    assert(keptY.length < all.length, "y-range skipped nothing on the hilbert layout")
-    val got = Snapshots.readRanges(spark, dir,
-        Seq(("x", Some(0L), Some(15L)), ("y", Some(0L), Some(15L))))
-      .count()
-    assert(got == 16L * 16L)
-    assert(Snapshots.read(spark, dir, Some(v - 1)).count() == 64L * 64L)
-    // incremental: a fresh tail clusters, the 16 clustered files carry
-    val clustered = Snapshots.files(spark, dir, v).toSet
-    Snapshots.commit(spark, dir, grid.withColumn("x", col("x") + 100))
-    val v2 = Snapshots.clusterHilbertIncremental(spark, dir, "x", "y", 4)
-    val after = Snapshots.files(spark, dir, v2).toSet
-    assert(clustered.subsetOf(after), "incremental pass rewrote clustered files")
-    assert(Snapshots.read(spark, dir, Some(v2)).count() == 2 * 64L * 64L)
-    // a further incremental pass is a no-op
-    assert(Snapshots.clusterHilbertIncremental(spark, dir, "x", "y", 4) == v2)
   }
 
   test("mergeInto rewrites only key-touched files; updates replace, inserts append") {
@@ -906,12 +926,12 @@ class SnapshotSpec extends AnyFunSuite {
     val odd = spark.range(1, 2000, 2)
       .select($"id".as("k"), ($"id" % 97).as("c"), ($"id" * 2).as("p"))
     Snapshots.commit(spark, dir, even)
-    val vFull = Snapshots.clusterZOrder(spark, dir, "c", "k", 4)
+    val vFull = Snapshots.cluster(spark, dir, Seq("c", "k"), 4)
     assert(Snapshots.properties(spark, dir)
       .get("zorder.clustered_through").contains(vFull.toString))
     val clusteredFiles = Snapshots.files(spark, dir, vFull).toSet
     Snapshots.commit(spark, dir, odd)
-    val vInc = Snapshots.clusterZOrderIncremental(spark, dir, "c", "k", 4)
+    val vInc = Snapshots.cluster(spark, dir, Seq("c", "k"), 4, incremental = true)
     // every pre-clustered file carried byte-identical; only the tail is new
     val after = Snapshots.files(spark, dir, vInc).toSet
     assert(clusteredFiles.subsetOf(after), "incremental pass rewrote clustered files")
@@ -928,7 +948,7 @@ class SnapshotSpec extends AnyFunSuite {
     val want = (0L until 2000L).count(i => i % 97 <= 20 && i <= 400)
     assert(got == want, s"chunked-clustered read wrong: $got != $want")
     // nothing new to cluster -> no-op, no version published
-    assert(Snapshots.clusterZOrderIncremental(spark, dir, "c", "k", 4) == vInc)
+    assert(Snapshots.cluster(spark, dir, Seq("c", "k"), 4, incremental = true) == vInc)
     assert(Snapshots.currentVersion(spark, dir).contains(vInc))
   }
 
@@ -978,8 +998,8 @@ class SnapshotSpec extends AnyFunSuite {
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     val merger = Future {
       barrier.await()
-      (1 to 4).map(i => Snapshots.mergeIntoRetry(spark, dir,
-        Seq((2L, s"B$i")).toDF("k", "v"), "k"))
+      (1 to 4).map(i => Snapshots.withCommitRetry(Snapshots.RecomputeRetries)(
+        Snapshots.mergeInto(spark, dir, Seq((2L, s"B$i")).toDF("k", "v"), "k")))
     }
     val appender = Future {
       barrier.await()
@@ -1309,12 +1329,12 @@ class SnapshotSpec extends AnyFunSuite {
     val dir = tmp()
     Snapshots.commit(spark, dir, kpTable()
       .withColumn("c", col("k") % 37).repartitionByRange(4, col("k")))
-    Snapshots.clusterZOrder(spark, dir, "c", "k", 4)
+    Snapshots.cluster(spark, dir, Seq("c", "k"), 4)
     Snapshots.commit(spark, dir,
       spark.range(1000, 1200).toDF("k")
         .withColumn("p", col("k") * 2.0).withColumn("c", col("k") % 37))
     val vDel = Snapshots.deleteRangeMor(spark, dir, "k", Some(10L), Some(19L))
-    val vInc = Snapshots.clusterZOrderIncremental(spark, dir, "c", "k", 4)
+    val vInc = Snapshots.cluster(spark, dir, Seq("c", "k"), 4, incremental = true)
     assert(vInc > vDel)
     // the incremental pass rewrote only the tail; the feed skips both
     // maintenance versions and the masked rows stay deleted
@@ -1520,7 +1540,17 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   test("clusterZOrderCols: each of 3 mixed-type dimensions skips files alone") {
-    val dir = tmp()
+    checkCluster3D(Snapshots.Curve.ZOrder)
+  }
+
+  test("clusterHilbertCols: 3-D mixed-type layout skips per dimension; incremental idles") {
+    checkCluster3D(Snapshots.Curve.Hilbert)
+  }
+
+  /** 3-D mixed-type clustering on one curve: every dimension skips alone,
+   *  reads stay exact, and the incremental pass idles, then rewrites only a
+   *  fresh tail. */
+  private def checkCluster3D(curve: Snapshots.Curve): Unit = {
     val base = java.time.LocalDateTime.parse("2020-01-01T00:00:00")
       .toInstant(java.time.ZoneOffset.UTC)
     val df = spark.range(4000).toDF("k")
@@ -1528,8 +1558,9 @@ class SnapshotSpec extends AnyFunSuite {
       .withColumn("ts", timestamp_seconds(lit(base.getEpochSecond) +
         ((col("k") * 40503L) % 86400L) * 365))
       .withColumn("p", ((col("k") * 69069L) % 100000L).cast("double"))
+    val dir = tmp()
     Snapshots.commit(spark, dir, df.repartition(8))
-    val v = Snapshots.clusterZOrderCols(spark, dir, Seq("c", "ts", "p"), 16)
+    val v = Snapshots.cluster(spark, dir, Seq("c", "ts", "p"), 16, curve)
     def skipped(ranges: Seq[(String, Option[Any], Option[Any])]): (Int, Int) = {
       val (kept, all) = Snapshots.pruneFilesAll(spark, dir, v, ranges)
       (kept.length, all.length)
@@ -1539,76 +1570,46 @@ class SnapshotSpec extends AnyFunSuite {
       Some(java.sql.Timestamp.from(base)),
       Some(java.sql.Timestamp.from(base.plusSeconds(86400L * 365 / 10))))))
     val (kP, n3) = skipped(Seq(("p", Some(0.0), Some(9999.0))))
-    assert(n1 == 16 && n2 == 16 && n3 == 16)
-    assert(kC <= n1 / 2, s"c-range kept $kC/$n1 — long dim not clustered")
-    assert(kT <= n2 / 2, s"ts-range kept $kT/$n2 — timestamp dim not clustered")
-    assert(kP <= n3 / 2, s"p-range kept $kP/$n3 — double dim not clustered")
+    assert(n1 == 16 && n2 == 16 && n3 == 16, curve.name)
+    assert(kC <= n1 / 2, s"${curve.name}: c-range kept $kC/$n1 — long dim not clustered")
+    assert(kT <= n2 / 2, s"${curve.name}: ts-range kept $kT/$n2 — timestamp dim not clustered")
+    assert(kP <= n3 / 2, s"${curve.name}: p-range kept $kP/$n3 — double dim not clustered")
     // the conjunction skips at least as hard as the best single dimension
     val (kAll, _) = skipped(Seq(
       ("c", Some(0L), Some(99L)),
       ("ts", Some(java.sql.Timestamp.from(base)),
         Some(java.sql.Timestamp.from(base.plusSeconds(86400L * 365 / 10)))),
       ("p", Some(0.0), Some(9999.0))))
-    assert(kAll <= Seq(kC, kT, kP).min)
-    // results stay exact through the rewrite
-    assert(Snapshots.read(spark, dir).count() == 4000)
-    assert(Snapshots.readRanges(spark, dir, Seq(("c", Some(0L), Some(99L))))
-      .count() == df.filter(col("c") <= 99).count())
-  }
-
-  test("clusterHilbertCols: 3-D mixed-type layout skips per dimension; incremental idles") {
-    val dir = tmp()
-    val base = java.time.LocalDateTime.parse("2020-01-01T00:00:00")
-      .toInstant(java.time.ZoneOffset.UTC)
-    val df = spark.range(4000).toDF("k")
-      .withColumn("c", (col("k") * 2654435761L) % 1000)
-      .withColumn("ts", timestamp_seconds(lit(base.getEpochSecond) +
-        ((col("k") * 40503L) % 86400L) * 365))
-      .withColumn("p", ((col("k") * 69069L) % 100000L).cast("double"))
-    Snapshots.commit(spark, dir, df.repartition(8))
-    val v = Snapshots.clusterHilbertCols(spark, dir, Seq("c", "ts", "p"), 16)
-    def skipped(ranges: Seq[(String, Option[Any], Option[Any])]): (Int, Int) = {
-      val (kept, all) = Snapshots.pruneFilesAll(spark, dir, v, ranges)
-      (kept.length, all.length)
-    }
-    val (kC, n1) = skipped(Seq(("c", Some(0L), Some(99L))))
-    val (kT, n2) = skipped(Seq(("ts",
-      Some(java.sql.Timestamp.from(base)),
-      Some(java.sql.Timestamp.from(base.plusSeconds(86400L * 365 / 10))))))
-    val (kP, n3) = skipped(Seq(("p", Some(0.0), Some(9999.0))))
-    assert(n1 == 16 && n2 == 16 && n3 == 16)
-    assert(kC <= n1 / 2, s"c-range kept $kC/$n1 — long dim not clustered")
-    assert(kT <= n2 / 2, s"ts-range kept $kT/$n2 — timestamp dim not clustered")
-    assert(kP <= n3 / 2, s"p-range kept $kP/$n3 — double dim not clustered")
+    assert(kAll <= Seq(kC, kT, kP).min, curve.name)
     // results stay exact through the rewrite
     assert(Snapshots.read(spark, dir).count() == 4000)
     assert(Snapshots.readRanges(spark, dir, Seq(("c", Some(0L), Some(99L))))
       .count() == df.filter(col("c") <= 99).count())
     // a fully-clustered table idles the incremental pass (no new version)
-    assert(Snapshots.clusterHilbertColsIncremental(spark, dir,
-      Seq("c", "ts", "p"), 16) == v)
+    assert(Snapshots.cluster(spark, dir, Seq("c", "ts", "p"), 16, curve,
+      incremental = true) == v, curve.name)
     // an appended tail rewrites ONLY itself; clustered files carry
     val before = Snapshots.files(spark, dir, v).toSet
     Snapshots.commit(spark, dir, df.withColumn("k", col("k") + 10000))
-    val vInc = Snapshots.clusterHilbertColsIncremental(spark, dir,
-      Seq("c", "ts", "p"), 16)
+    val vInc = Snapshots.cluster(spark, dir, Seq("c", "ts", "p"), 16, curve,
+      incremental = true)
     assert(vInc > v)
     val after = Snapshots.files(spark, dir, vInc).toSet
     assert(before.subsetOf(after), "clustered files must carry byte-identical")
     assert(Snapshots.read(spark, dir).count() == 8000)
   }
 
-  test("clusterZOrderColsIncremental: only the tail rewrites, chunks both skip, no-op idles") {
+  test("incremental cluster over any-type columns: only the tail rewrites, chunks both skip, no-op idles") {
     val dir = tmp()
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).toDF("k")
       .withColumn("c", (col("k") * 2654435761L) % 1000)
       .withColumn("p", ((col("k") * 69069L) % 100000L).cast("double"))
     Snapshots.commit(spark, dir, mk(0, 3000).repartition(6))
-    Snapshots.clusterZOrderCols(spark, dir, Seq("c", "p"), 16)
+    Snapshots.cluster(spark, dir, Seq("c", "p"), 16)
     Snapshots.commit(spark, dir, mk(3000, 6000).repartition(6))
     val before = Snapshots.files(spark, dir,
       Snapshots.currentVersion(spark, dir).get)
-    val vInc = Snapshots.clusterZOrderColsIncremental(spark, dir, Seq("c", "p"), 16)
+    val vInc = Snapshots.cluster(spark, dir, Seq("c", "p"), 16, incremental = true)
     // clustered chunk carried byte-identical, only the tail rewrote
     val after = Snapshots.files(spark, dir, vInc)
     val carried = after.toSet.intersect(before.toSet)
@@ -1620,16 +1621,16 @@ class SnapshotSpec extends AnyFunSuite {
     assert(kP.length <= all.length / 2, s"p kept ${kP.length}/${all.length}")
     assert(Snapshots.read(spark, dir).count() == 6000)
     // idle pass publishes nothing
-    assert(Snapshots.clusterZOrderColsIncremental(spark, dir, Seq("c", "p"), 16) == vInc)
+    assert(Snapshots.cluster(spark, dir, Seq("c", "p"), 16, incremental = true) == vInc)
   }
 
-  test("clusterZOrderCols clusters STRING dimensions; CDF tails skip the rewrite") {
+  test("cluster clusters STRING dimensions; CDF tails skip the rewrite") {
     val dir = tmp()
     val df = spark.range(2000).toDF("k")
       .withColumn("lang", concat(lit("lang_"),
         format_string("%03d", (col("k") * 7919L) % 200)))
     Snapshots.commit(spark, dir, df.repartition(6))
-    val v = Snapshots.clusterZOrderCols(spark, dir, Seq("lang", "k"), 8)
+    val v = Snapshots.cluster(spark, dir, Seq("lang", "k"), 8)
     val (kept, all) = Snapshots.pruneFiles(spark, dir, v, "lang",
       Some("lang_000"), Some("lang_019"))
     assert(all.length == 8 && kept.length <= all.length / 2,
