@@ -158,8 +158,8 @@ object RenderSink {
 
   /** Executor side: one partial raster per image present in the partition.
     * Rows are (variable, day, y, x, value); one image's rows usually arrive
-    * together (a grid scan partition is one (file, time step)), so the key
-    * lookup runs once per image run, not per row.
+    * together (a grid scan emits each (file, time step) slice's rows in one
+    * run), so the key lookup runs once per image run, not per row.
     */
   private def foldCells(rows: Iterator[InternalRow]): Iterator[Raster] = {
     val images = new java.util.LinkedHashMap[(String, String), CellBuffer]()

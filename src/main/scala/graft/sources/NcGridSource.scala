@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * binary-searches the STORED coordinate (no uniform-step assumption, so
   * irregular calendars stay exact): the scan re-reads ONE dim-sized array
   * per table, lazily (`NcGrid.timesOf`), and each planned partition is
-  * stamped with its single ts value — executors never re-derive time.
+  * stamped with its slices' ts values — executors never re-derive time.
   * Lat/lon carry no affine assumption either: 1-D coord arrays or full 2-D
   * curvilinear matrices (`geopy.py:52-61`) are both surfaced as stored.
   */
@@ -508,25 +508,56 @@ class NcGridScan(cubes: Seq[NcCube], section: GridSource.Section,
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
   }
 
-  /** One partition per (cube, t) slice in the section, each stamped with its
-    * single ts value at planning — executors never re-derive the time axis.
+  /** The section's (cube, t) slices packed into partitions by
+    * [[NcGridPartition.pack]], each stamped with its slices' ts values at
+    * planning — executors never re-derive the time axis.
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val times = if (cubes.isEmpty) Array.empty[Long] else timesFn()
-    (for {
-      c <- cubes
-      t <- section.t0 to math.min(section.t1, c.t - 1)
-      if t >= 0
-    } yield NcGridPartition(c, t, times(t), section): InputPartition).toArray
+    NcGridPartition.pack(cubes.map(_ -> times), section)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new NcGridReaderFactory(required)
 }
 
-case class NcGridPartition(cube: NcCube, t: Int, tsMicros: Long,
+/** A run of consecutive time steps `ts` of ONE cube (`tsMicros` their
+  * stamped times), read over the same clamped `section`.
+  */
+case class NcGridPartition(cube: NcCube, ts: Array[Int], tsMicros: Array[Long],
     section: GridSource.Section)
   extends InputPartition
+
+object NcGridPartition {
+  /** Pack every (cube, t) slice of `section` into partitions, cube-major
+    * then t, never mixing cubes. A slice weighs its clamped cells ×
+    * [[GridSource.RowWidthBytes]] (the scan's size estimate), and a
+    * partition takes as many consecutive slices as fit in Spark's file-split
+    * size, `FilePartition.maxSplitBytes`:
+    * `min(spark.sql.files.maxPartitionBytes, max(spark.sql.files.openCostInBytes,
+    * totalBytes / minPartitionNum))`, where `minPartitionNum` is
+    * `spark.sql.files.minPartitionNum` or else the default parallelism. A
+    * small section is one partition per cube; a large scan still splits into
+    * at least `minPartitionNum` partitions (a slice is never split).
+    */
+  def pack(cubes: Seq[(NcCube, Array[Long])], section: GridSource.Section): Array[InputPartition] = {
+    val runs = cubes.map { case (c, times) =>
+      val s = GridSource.clampTo(section, c.t, c.y, c.x)
+      val sliceBytes = GridSource.RowWidthBytes *
+        math.max(s.y1 - s.y0 + 1, 0) * math.max(s.x1 - s.x0 + 1, 0)
+      (c, times, s, (math.max(s.t0, 0) to s.t1).toArray, sliceBytes)
+    }
+    val split = org.apache.spark.sql.execution.datasources.FilePartition.maxSplitBytes(
+      org.apache.spark.sql.SparkSession.active,
+      runs.map { case (_, _, _, ts, sliceBytes) => ts.length * sliceBytes }.sum)
+    runs.flatMap { case (c, times, s, ts, sliceBytes) =>
+      val perPartition =
+        if (sliceBytes == 0) math.max(ts.length, 1)
+        else math.min(math.max(split / sliceBytes, 1L), Int.MaxValue.toLong).toInt
+      ts.grouped(perPartition).map(run => NcGridPartition(c, run, run.map(times(_)), s))
+    }.toArray
+  }
+}
 
 /** Micro-batch streaming over a `.nc` directory: an offset is the SET of
   * file names already ingested (serialized sorted, so offsets are stable
@@ -599,13 +630,8 @@ class NcGridMicroBatchStream(dir: String, section: GridSource.Section,
       // cube's coordinate arrays (see NcGrid.requireSameCoords)
       NcGrid.requireSameCoords(r +: opened.map(_._1))
     }
-    (for {
-      (c, times) <- opened
-      if varNames.forall(_.contains(c.varName))
-      clamped = GridSource.clampTo(section, c.t, c.y, c.x)
-      t <- clamped.t0 to clamped.t1
-      if t >= 0
-    } yield NcGridPartition(c, t, times(t), clamped): InputPartition).toArray
+    NcGridPartition.pack(opened.filter { case (c, _) => varNames.forall(_.contains(c.varName)) },
+      section)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -621,10 +647,10 @@ class NcGridReaderFactory(required: StructType) extends PartitionReaderFactory {
 }
 
 /** Executor-side section read of real NetCDF bytes (either container):
-  * re-opens the header (small), reads only the section's coordinate slices,
-  * then one positioned read per `[t, y, x0..x1]` row of the data variable
-  * (`Gddp.scala:224-226`); `_FillValue` → SQL NULL,
-  * `scale_factor`/`add_offset` applied.
+  * re-opens the header (small) and reads the coordinate arrays once per
+  * partition, then walks its time slices in turn with one positioned read
+  * per `[t, y, x0..x1]` row of the data variable (`Gddp.scala:224-226`);
+  * `_FillValue` → SQL NULL, `scale_factor`/`add_offset` applied.
   */
 class NcGridReader(p: NcGridPartition, required: StructType)
     extends PartitionReader[InternalRow] {
@@ -641,6 +667,8 @@ class NcGridReader(p: NcGridPartition, required: StructType)
   private val lons: Array[Double] =
     if (needLon) header.readAll(header.variable(c.lonVar).get) else null
 
+  private val empty = s.y0 > s.y1 || s.x0 > s.x1
+  private var i = 0 // the slice being read: p.ts(i)
   private var y = s.y0 - 1
   private var x = s.x1 // forces a row load on first next()
   private var row: Array[Double] = _
@@ -648,7 +676,7 @@ class NcGridReader(p: NcGridPartition, required: StructType)
   private val fieldGen: Array[(Int, Int) => Any] = required.fields.map { f =>
     f.name match {
       case "variable" => (_: Int, _: Int) => UTF8String.fromString(c.varName)
-      case "ts" => (_: Int, _: Int) => p.tsMicros
+      case "ts" => (_: Int, _: Int) => p.tsMicros(i)
       case "y" => (yy: Int, _: Int) => yy
       case "x" => (_: Int, xx: Int) => xx
       case "lat" => (yy: Int, xx: Int) =>
@@ -663,15 +691,19 @@ class NcGridReader(p: NcGridPartition, required: StructType)
   }
 
   override def next(): Boolean = {
-    if (s.x0 > s.x1) return false
+    if (empty || i == p.ts.length) return false
     x += 1
     if (x > s.x1) {
       y += 1
-      if (y > s.y1) return false
-      row = rdr.readRow(p.t, y, s.x0, s.x1)
+      if (y > s.y1) {
+        i += 1
+        if (i == p.ts.length) return false
+        y = s.y0
+      }
+      row = rdr.readRow(p.ts(i), y, s.x0, s.x1)
       x = s.x0
     }
-    y <= s.y1
+    true
   }
 
   override def get(): InternalRow =

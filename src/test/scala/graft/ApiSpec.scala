@@ -160,7 +160,7 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("a warm NetCDF fetch is one Spark job with no code compiled, byte-identical to the batch render") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     import org.apache.spark.metrics.source.CodegenMetrics
     val distinct = Seq( // polygon, dates and variables all differ from `request` and each other
       QueryRequest(Seq("tasmin"), "1990-01-02", "1990-01-03",
@@ -173,8 +173,10 @@ class ApiSpec extends AnyFunSuite {
     val srv = new ApiServer(spark, port = 0, grid = ncGrid)
     val url = s"http://127.0.0.1:${srv.start()}/fetchResult"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -182,12 +184,15 @@ class ApiSpec extends AnyFunSuite {
       distinct.foreach { r =>
         org.apache.spark.ListenerBusDrain(spark.sparkContext)
         jobs.set(0)
+        tasks.set(0)
         val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val (code, body) = post(url, requestJson(r))
         val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
         org.apache.spark.ListenerBusDrain(spark.sparkContext)
         assert(code == 200, new String(body.take(200), "UTF-8"))
         assert(jobs.get == 1, s"$r ran ${jobs.get} jobs")
+        // the scan packs each variable's days into one partition
+        assert(tasks.get == r.variables.size, s"$r ran ${tasks.get} tasks")
         assert(compiled == 0, s"$r compiled $compiled classes")
         assert(zipContents(body).nonEmpty, r)
         assert(body.sameElements(batchZip(r)), s"$r: zip differs from the batch render")
@@ -195,6 +200,44 @@ class ApiSpec extends AnyFunSuite {
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       srv.stop()
+    }
+  }
+
+  test("a warm /sql box aggregate over NetCDF scans one task per variable and compiles no code") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a daily box aggregate over several days of both variables; every
+    // request differs in its box and days but not in its shape
+    def query(day0: Int, day1: Int, lat0: Double, lon0: Double): String =
+      "SELECT date_format(ts, 'yyyy-MM-dd') AS k, variable, count(value) AS n, " +
+        s"sum(value) AS s FROM grid_scan('${graft.sources.SourceQueries.ncDir}') " +
+        "WHERE variable IN ('tasmax', 'tasmin') " +
+        s"AND ts >= TIMESTAMP '1990-01-0$day0 00:00:00' AND ts <= TIMESTAMP '1990-01-0$day1 23:59:59' " +
+        s"AND lat >= $lat0 AND lat <= ${lat0 + 0.2} AND lon >= $lon0 AND lon <= ${lon0 + 0.3} " +
+        "GROUP BY 1, 2 ORDER BY 1, 2"
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val listener = new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.add(s.stageInfo)
+    }
+    withServer { port =>
+      val url = s"http://127.0.0.1:$port/sql"
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        assert(post(url, s"""{"query": "${query(1, 4, 44.1, -79.8)}"}""")._1 == 200) // warm-up
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        stages.clear()
+        val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val (code, body) = post(url, s"""{"query": "${query(2, 7, 44.3, -79.4)}"}""")
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        assert(code == 200, new String(body.take(200), "UTF-8"))
+        assert(new String(body, "UTF-8").contains("\"rowCount\":12"), new String(body, "UTF-8"))
+        import scala.jdk.CollectionConverters._
+        val scanStages = stages.asScala.toSeq.filter(_.rddInfos.exists(_.name == "DataSourceRDD"))
+        assert(scanStages.nonEmpty, stages.asScala.map(_.rddInfos.map(_.name)))
+        assert(scanStages.forall(_.numTasks == 2), scanStages.map(_.numTasks))
+        assert(compiled == 0, s"compiled $compiled classes")
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 

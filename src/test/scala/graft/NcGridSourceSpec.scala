@@ -35,8 +35,59 @@ class NcGridSourceSpec extends AnyFunSuite {
     assert(plan.contains("vars=tasmax"), plan)
     // 3 days * 5 ys * 5 xs
     assert(df.count() == 75)
-    // partition count = surviving (cube, t) slices = 1 var * 3 days
-    assert(df.rdd.getNumPartitions == 3)
+    // the 75 cells pack into one partition …
+    assert(df.rdd.getNumPartitions == 1)
+    // … that plans exactly the surviving (cube, t) slices: tasmax, days 2..4
+    assert(TestSpark.ncSlices(df) == Seq("tasmax" -> 2, "tasmax" -> 3, "tasmax" -> 4))
+  }
+
+  /** Run `f` with the given SQL confs set, restoring the previous values. */
+  private def withSQLConf[A](kv: (String, String)*)(f: => A): A = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("packed partitions split mid-cube at the file split size; rows and order unchanged") {
+    import org.apache.spark.sql.Row
+    val cols = Seq("variable", "ts", "y", "x", "lat", "lon", "value")
+    val cells = GridData.cells(spark).select(cols.map(col): _*).collect().toSeq
+    // the curvilinear fixture in closed form (SourceQueries.ncCurvDir)
+    val curvCells = for (t <- 0 until 4; y <- 0 until 10; x <- 0 until 12) yield Row(
+      "temp", java.sql.Timestamp.from(java.time.Instant.parse("2000-01-01T00:00:00Z")
+        .plus(java.time.Duration.ofDays(t))), y, x,
+      44.0 + y * 0.05 + x * 0.001, -80.0 + x * 0.05 + y * 0.002,
+      if ((t + 2 * y + x) % 13 == 0) null else ((t * 13 + y * 5 + x * 11) % 90).toDouble / 2.0 - 20.0)
+    // (dir, rows in scan order, cells per (cube, t) slice, slices per cube)
+    val fixtures = Seq(
+      (SourceQueries.ncDir, cells, 20 * 30, 8),
+      (SourceQueries.nc4Dir, cells, 20 * 30, 8),
+      (SourceQueries.ncCurvDir, curvCells, 10 * 12, 4))
+    def runs(df: org.apache.spark.sql.DataFrame) =
+      TestSpark.ncPartitions(df).map(p => (p.cube.varName, p.ts.toSeq))
+    for ((dir, expect, sliceCells, t) <- fixtures) {
+      val cubes = expect.map(_.getString(0)).distinct
+      // three slices a partition: each cube splits 3 + 3 + 2 (8 days) or 3 + 1
+      withSQLConf(
+          "spark.sql.files.maxPartitionBytes" -> (3L * sliceCells * GridSource.RowWidthBytes).toString,
+          "spark.sql.files.openCostInBytes" -> "1",
+          "spark.sql.files.minPartitionNum" -> "1") {
+        val df = gridAt(dir).select(cols.map(col): _*)
+        assert(runs(df) == cubes.flatMap(v => (0 until t).grouped(3).map(v -> _)), dir)
+        assert(df.collect().toSeq == expect, dir)
+        // no partition mixes cubes: each partition's rows carry one variable
+        assert(df.select("variable").rdd.glom().collect()
+          .forall(_.map(_.getString(0)).distinct.length == 1), dir)
+      }
+      // a section above the split size still feeds every core
+      withSQLConf("spark.sql.files.openCostInBytes" -> "1") {
+        val df = gridAt(dir).select(cols.map(col): _*)
+        assert(runs(df).size >= spark.sparkContext.defaultParallelism, s"$dir: ${runs(df)}")
+        assert(df.collect().toSeq == expect, dir)
+      }
+      // default confs: the whole (small) fixture is one partition per cube
+      assert(runs(gridAt(dir)) == cubes.map(_ -> (0 until t)), dir)
+    }
   }
 
   test("sub-day ts bounds narrow exactly via the time-coordinate search") {

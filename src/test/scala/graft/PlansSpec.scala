@@ -125,8 +125,10 @@ class PlansSpec extends AnyFunSuite {
           lit("1990-01-07 23:59:59").cast("timestamp")) &&
         col("y").between(4, 17) && col("x").between(2, 28))
     assert(df.queryExecution.executedPlan.toString.contains("NcGridScan"))
-    // tasmax only, days 1..6 of 8
-    assert(df.rdd.getNumPartitions == 6, s"partitions=${df.rdd.getNumPartitions}")
+    // the section packs into one partition that plans exactly the surviving
+    // slices: tasmax only, days 1..6 of 8
+    assert(df.rdd.getNumPartitions == 1, s"partitions=${df.rdd.getNumPartitions}")
+    assert(TestSpark.ncSlices(df) == (1 to 6).map("tasmax" -> _))
   }
 
   test("q_quantile_rollup: partial sketch before the shard exchange, two-column scan") {

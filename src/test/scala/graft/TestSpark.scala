@@ -37,4 +37,14 @@ object TestSpark {
           case _ => Set.empty[String]
         }
     }.flatten.toSet
+
+  /** The NetCDF scan partitions the physical plan of `df` reads. */
+  def ncPartitions(df: org.apache.spark.sql.DataFrame): Seq[graft.sources.NcGridPartition] =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+    }.flatten.collect { case p: graft.sources.NcGridPartition => p }
+
+  /** The (variable, t) slices those partitions plan, in scan order. */
+  def ncSlices(df: org.apache.spark.sql.DataFrame): Seq[(String, Int)] =
+    ncPartitions(df).flatMap(p => p.ts.toSeq.map(p.cube.varName -> _))
 }
