@@ -65,8 +65,9 @@ object Scale {
     * tiles, order tiles by the Morton code of their tile coordinates, and
     * pack `tilesPerFile` CONSECUTIVE tiles into each container file — so a
     * file's spatial footprint stays square-ish and a pushed 2-D range
-    * prunes whole files from the tile directories at planning time
-    * (`TiledGridScan.planInputPartitions`). `morton = false` packs in
+    * prunes whole files from the tile directories at planning time (each
+    * tile is a unit that `GridPartition.pack` skips when the section misses
+    * it). `morton = false` packs in
     * row-major tile order instead: the strawman layout whose files are
     * long thin stripes, kept for the ScaleSpec files-touched comparison.
     *
@@ -132,15 +133,17 @@ object Scale {
     */
   def compactTiledDir(spark: org.apache.spark.sql.SparkSession,
       srcDir: String, dstDir: String, tilesPerFile: Int): Unit = {
-    import graft.sources.GridFile
+    import graft.sources.{GridFile, TileUnit}
     new java.io.File(dstDir).mkdirs()
     val files = Option(new java.io.File(srcDir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".grf")).sortBy(_.getName)
       .map(f => f.getAbsolutePath -> GridFile.readTiledHeader(f.getAbsolutePath))
     require(files.nonEmpty, s"no .grf files in $srcDir")
-    val h0 = files.head._2
+    val (p0, h0) = files.head
+    // merged tiles are written at h0's offsets: one layout identity, the
+    // same check grid tables and streams apply to their units
     files.foreach { case (p, h) =>
-      GridFile.requireSameLayout(p, h, h0, s"cannot compact with ${files.head._1}")
+      TileUnit.layout(p, h).requireSame(p, TileUnit.layout(p0, h0), s"cannot compact with $p0")
     }
     // (variable, group) work units: every tile of a variable across ALL
     // source containers, Morton-sorted, sliced into output groups

@@ -39,8 +39,10 @@ class ApiServer(spark: SparkSession, port: Int = 0,
   /** Serve `/getBoundary`: extent of the (dim-sized) distinct coord table.
     * With the default generator grid this is a closed-form scan; with a
     * file-backed grid (`grid = _.read.format(...).option("path", …).load()`)
-    * the min/max push down to the headers (`FileGridAggScan`) — the boundary
-    * request never reads a data byte, like the reference's hardcoded corners.
+    * the min/max push down to the table's coordinate axes (`NcGridAggScan`
+    * over NetCDF, `FileGridAggScan`/`TiledGridAggScan` over GRF) — the
+    * boundary request never reads a data byte, like the reference's
+    * hardcoded corners.
     */
   private def boundary(): String = {
     val row = grid(spark)

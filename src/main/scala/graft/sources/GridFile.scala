@@ -128,27 +128,6 @@ object GridFile {
     }
   }
 
-  /** Layout identity: every header field that determines byte offsets or
-    * global coordinates. One table/stream/compaction = ONE layout; a file
-    * whose identity differs would be read at wrong offsets, so every
-    * consumer rejects it through these (single definition — a field added
-    * here covers table open, mid-stream arrival and compaction alike).
-    */
-  private def layoutOf(h: Header) =
-    (h.t, h.y, h.x, h.epochMicros, h.stepMicros, h.lat0, h.dlat, h.lon0, h.dlon)
-  private def layoutOf(h: TiledHeader) =
-    (h.t, h.y, h.x, h.tileY, h.tileX, h.epochMicros, h.stepMicros,
-      h.lat0, h.dlat, h.lon0, h.dlon)
-
-  def requireSameLayout(p: String, h: Header, base: Header, context: String): Unit =
-    require(layoutOf(h) == layoutOf(base),
-      s"$p: heterogeneous grid layout (dims/time-base/coord-affine) — $context")
-
-  def requireSameLayout(p: String, h: TiledHeader, base: TiledHeader,
-      context: String): Unit =
-    require(layoutOf(h) == layoutOf(base),
-      s"$p: heterogeneous grid layout (dims/tiling/time-base/coord-affine) — $context")
-
   /** First four bytes decide GRF1 vs GRF2 (vs not ours at all). */
   def readMagic(path: String): Int = {
     val in = new DataInputStream(new FileInputStream(path))

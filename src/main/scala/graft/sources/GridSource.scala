@@ -7,6 +7,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -18,19 +19,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * `[t, y, x]` ranges are ever materialized (`Gddp.scala:206-226`,
   * README.md:96-108).
   *
-  * - `SupportsPushDownRequiredColumns` ⇒ only requested variables/coords are
-  *   generated (the reference's variable projection, `Gddp.scala:134-137`).
-  * - `SupportsPushDownFilters` ⇒ range predicates on t/y/x (and equality on
-  *   variable) shrink the generation loops — the section read. Pushed filters
-  *   are *fully* handled for those columns; everything else stays in Spark.
-  * - One `InputPartition` per (variable, t) slice — the natural NetCDF chunk
-  *   unit; a real file-backed source would open one file region per
-  *   partition. Partitions whose slice is excluded by pushed filters are
-  *   never planned, which is file/partition pruning (F1).
+  * Every container — NetCDF (classic or NetCDF-4), the library's GRF1 and
+  * tiled GRF2 codecs, and the closed-form generator — is a
+  * [[GridContainer]] that turns its files into [[GridUnit]]s sharing one
+  * [[GridLayout]]. ONE table, builder, scan, agg scan, partition packer,
+  * reader and stream serve them all:
   *
-  * The generated grid is `GridData.cells` minus the `file` column (same
-  * closed form), so correctness is oracle-checkable against the DuckDB
-  * generator.
+  * - `SupportsPushDownRequiredColumns` ⇒ only requested variables/coords are
+  *   produced (the reference's variable projection, `Gddp.scala:134-137`).
+  * - `SupportsPushDownFilters` ⇒ `variable =`/`IN` prunes units; `ts` and
+  *   1-D `lat`/`lon` comparisons narrow the section by binary search on the
+  *   table's stored or closed-form axis; `y`/`x` ranges via
+  *   [[GridSource.Section.narrow]]. Pushed filters are *fully* handled;
+  *   everything else stays in Spark.
+  * - A unit's (t) slices inside the section pack into few partitions
+  *   ([[GridPartition.pack]]); units and slices the filters exclude are
+  *   never planned, which is file/partition pruning (F1).
   */
 class GridSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = GridSource.schema
@@ -44,19 +48,19 @@ class GridSource extends TableProvider {
     Option(properties.get("path")) match {
       case Some(dir) =>
         // ONE directory snapshot: every decision below (mixed-dir reject,
-        // format agreement, magic sniff) sees the same file set — two
-        // listings would leave a race window where a file lands between
-        // them and is sniffed without having passed the checks
-        val listing = Option(new java.io.File(dir).listFiles())
-          .getOrElse(Array.empty)
-        val ncFiles = listing.filter(f => NcGrid.isNcName(f.getName))
-        val grfFiles = listing.filter(_.getName.endsWith(".grf")).sortBy(_.getName)
+        // format agreement, magic sniff) and the table itself see the same
+        // file set — a second listing would leave a race window where a
+        // file lands between them without having passed the checks
+        val listing = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+          .sortBy(_.getName)
+        val ncFiles = listing.filter(f => FileFamily.NetCdf.accepts(f.getName))
+        val grfFiles = listing.filter(f => FileFamily.Grf.accepts(f.getName))
         // a mixed directory must fail loudly: picking one format would
         // silently drop the other's files from every query
         require(!(ncFiles.nonEmpty && grfFiles.nonEmpty),
           s"$dir mixes NetCDF and .grf files; split them into separate directories")
         // the first .grf's magic decides GRF1 (one cube per file) vs GRF2
-        // (tiled container); each table's homogeneity check rejects a mix
+        // (tiled container); the other kind's header read rejects a mix
         val tiled = grfFiles.headOption
           .exists(f => GridFile.readMagic(f.getAbsolutePath) == GridFile.MagicTiled)
         // `option("format", nc|grf|grf2)` pins the table kind for a COLD
@@ -79,10 +83,12 @@ class GridSource extends TableProvider {
         // first arrival's layout — a file of another format landing instead
         // fails loudly at its header read or the listing guard, never a
         // misparse
-        if (ncFiles.nonEmpty || format.contains("nc")) new NcGridTable(dir)
-        else if (tiled || format.contains("grf2")) new TiledGridTable(dir)
-        else new FileGridTable(dir)
-      case None => new GridTable
+        val (container, files) =
+          if (ncFiles.nonEmpty || format.contains("nc")) (NcGrid.Container, ncFiles)
+          else if (tiled || format.contains("grf2")) (GridSource.Grf2, grfFiles)
+          else (GridSource.Grf1, grfFiles)
+        GridTable.open(container, dir, files.map(_.getAbsolutePath).toSeq)
+      case None => GridTable.generator
     }
 }
 
@@ -100,143 +106,91 @@ object GridSource {
 
   val epochMicros: Long = java.time.Instant.parse("1990-01-01T00:00:00Z").toEpochMilli * 1000L
 
-  def tsMicros(t: Int): Long = epochMicros + t.toLong * 24 * 3600 * 1000000L
-
   /** Estimated on-heap row width for statistics (7 columns, strings short). */
   val RowWidthBytes = 64L
 
-  /** Cells in the section per variable/file. */
+  /** Cells in the section. */
   def sectionDims(s: Section): Long =
     math.max(s.t1 - s.t0 + 1, 0).toLong *
       math.max(s.y1 - s.y0 + 1, 0) * math.max(s.x1 - s.x0 + 1, 0)
 
-  def sectionRows(s: Section): Long = s.vars.size.toLong * sectionDims(s)
-
-  /** THE per-file clamp — agg pushdown, statistics, and partition planning
-    * all derive their bounds from this one definition.
+  /** THE per-unit clamp: `s` cut to the table's `t` steps and the unit's
+    * (y, x) window — agg pushdown, statistics and partition planning all
+    * derive their bounds from this one definition.
     */
-  def clampTo(s: Section, t: Int, y: Int, x: Int): Section =
-    s.copy(t1 = math.min(s.t1, t - 1), y1 = math.min(s.y1, y - 1),
-      x1 = math.min(s.x1, x - 1))
-
-  /** Section clamped to one GRF2 tile's global bounds; None when disjoint.
-    * The tiled row scan and agg scan BOTH derive their per-tile extents
-    * here — a divergence would make count() disagree with the rows read.
-    */
-  def clampToTile(s: Section, h: GridFile.TiledHeader,
-      e: GridFile.TileEntry): Option[Section] = {
-    val (ty0, ty1, tx0, tx1) = h.tileBounds(e)
-    val c = s.copy(
-      t0 = math.max(s.t0, 0), t1 = math.min(s.t1, h.t - 1),
-      y0 = math.max(s.y0, ty0), y1 = math.min(s.y1, ty1),
-      x0 = math.max(s.x0, tx0), x1 = math.min(s.x1, tx1))
-    if (c.t0 > c.t1 || c.y0 > c.y1 || c.x0 > c.x1) None else Some(c)
+  def clamp(s: Section, t: Int, u: GridUnit): Section = {
+    val (y0, y1, x0, x1) = u.window
+    Section(math.max(s.t0, 0), math.min(s.t1, t - 1), math.max(s.y0, y0),
+      math.min(s.y1, y1), math.max(s.x0, x0), math.min(s.x1, x1))
   }
 
-  /** Inclusive index bounds per dimension, narrowed by pushed filters.
-    * `epochMicros`/`stepMicros` map ts predicates to t indices; the defaults
-    * are the generator grid's, the file-backed path passes its header's.
-    */
+  /** Inclusive index bounds per dimension, narrowed by pushed filters. */
   case class Section(
-    vars: Set[Int] = Set(0, 1),
     t0: Int = 0, t1: Int = T - 1,
     y0: Int = 0, y1: Int = Y - 1,
-    x0: Int = 0, x1: Int = X - 1,
-    epoch: Long = epochMicros, step: Long = 24L * 3600 * 1000000L) {
+    x0: Int = 0, x1: Int = X - 1) {
 
+    def isEmpty: Boolean = t0 > t1 || y0 > y1 || x0 > x1
+
+    /** Keep only indices `lo..hi` of dimension `dim` ("t", "y" or "x"). */
+    def keep(dim: String, lo: Int, hi: Int): Section = dim match {
+      case "t" => copy(t0 = math.max(t0, lo), t1 = math.min(t1, hi))
+      case "y" => copy(y0 = math.max(y0, lo), y1 = math.min(y1, hi))
+      case _ => copy(x0 = math.max(x0, lo), x1 = math.min(x1, hi))
+    }
+
+    /** y/x index ranges. Strict bounds saturate instead of wrapping:
+      * y > Int.MaxValue must empty the section, not wrap to MinValue and
+      * silently pass every row through a claimed-handled filter.
+      */
     def narrow(f: Filter): Option[Section] = f match {
-      case EqualTo("variable", v: String) =>
-        val id = if (v == "tasmax") 0 else if (v == "tasmin") 1 else -1
-        Some(copy(vars = vars.filter(_ == id)))
-      case In("variable", vs) =>
-        val ids = vs.collect { case "tasmax" => 0; case "tasmin" => 1 }.toSet
-        Some(copy(vars = vars.intersect(ids)))
-      // strict bounds saturate instead of wrapping: y > Int.MaxValue must
-      // empty the section (y0 = MaxValue > any real y1), not wrap to
-      // MinValue and silently pass every row through a claimed-handled
-      // filter (same overflow class as the ts clamp below)
-      case GreaterThanOrEqual("y", v: Int) => Some(copy(y0 = math.max(y0, v)))
-      case GreaterThan("y", v: Int) => Some(copy(y0 = math.max(y0, satInc(v))))
-      case LessThanOrEqual("y", v: Int) => Some(copy(y1 = math.min(y1, v)))
-      case LessThan("y", v: Int) => Some(copy(y1 = math.min(y1, satDec(v))))
-      case GreaterThanOrEqual("x", v: Int) => Some(copy(x0 = math.max(x0, v)))
-      case GreaterThan("x", v: Int) => Some(copy(x0 = math.max(x0, satInc(v))))
-      case LessThanOrEqual("x", v: Int) => Some(copy(x1 = math.min(x1, v)))
-      case LessThan("x", v: Int) => Some(copy(x1 = math.min(x1, satDec(v))))
-      // cells exist ONLY at exact step multiples, so the index range below is
-      // EXACT for any bound (sub-day bounds included): lower bounds take the
-      // ceiling slice (strict: the next slice when the bound sits on one),
-      // upper bounds the floor slice (strict: the previous one). This matters
-      // because pushFilters claims these filters fully handled — a merely
-      // day-floored mapping would emit day-start rows that violate a mid-day
-      // lower bound, and the pushed aggregates trust the same exactness.
-      case GreaterThanOrEqual("ts", ts) =>
-        tsMicrosOf(ts).map(m => copy(t0 = math.max(t0, ceilDiv(m - epoch, step))))
-      case LessThanOrEqual("ts", ts) =>
-        tsMicrosOf(ts).map(m => copy(t1 = math.min(t1, floorDiv(m - epoch, step))))
-      case GreaterThan("ts", ts) =>
-        tsMicrosOf(ts).map(m => copy(t0 = math.max(t0, floorDiv(m - epoch, step) + 1)))
-      case LessThan("ts", ts) =>
-        tsMicrosOf(ts).map(m => copy(t1 = math.min(t1, ceilDiv(m - epoch, step) - 1)))
+      case GreaterThanOrEqual(d @ ("y" | "x"), v: Int) => Some(keep(d, v, Int.MaxValue))
+      case GreaterThan(d @ ("y" | "x"), v: Int) => Some(keep(d, satInc(v), Int.MaxValue))
+      case LessThanOrEqual(d @ ("y" | "x"), v: Int) => Some(keep(d, Int.MinValue, v))
+      case LessThan(d @ ("y" | "x"), v: Int) => Some(keep(d, Int.MinValue, satDec(v)))
       case _ => None
     }
 
-    // Clamp the Long slice index into Int range BEFORE truncating: a tiny
-    // step with a far-out ts bound must not wrap toInt and corrupt a section
-    // that pushFilters claimed fully handled. [-2, MaxValue-1] keeps the ±1
-    // adjustments at the call sites overflow-free while preserving semantics:
-    // a clamped lower bound (MaxValue-1) still empties the section, a clamped
-    // upper bound (-2) still empties it, and the conservative directions
-    // (lower clamped up from below Int range, upper clamped down) only widen.
-    private def clampIdx(q: Long): Int = GridSource.clampSlackIdx(q)
     private def satInc(v: Int): Int = if (v == Int.MaxValue) v else v + 1
     private def satDec(v: Int): Int = if (v == Int.MinValue) v else v - 1
-    private def floorDiv(a: Long, b: Long): Int = clampIdx(math.floorDiv(a, b))
-    private def ceilDiv(a: Long, b: Long): Int = clampIdx(-math.floorDiv(-a, b))
-
-    private def tsMicrosOf(v: Any): Option[Long] = GridSource.tsMicrosOf(v)
   }
 
-  /** Conservative bbox → index narrowing for an affine coordinate axis
-    * `c(i) = c0 + i·d` (either sign of d) — the reference's F3 envelope →
-    * hyperslab mapping (`Gddp.scala:73-94`). The computed bound is WIDENED
-    * one cell and the caller keeps the filter UNHANDLED (Spark re-evaluates
-    * it), so floating-point boundary rounding can never change results —
-    * only how many cells are generated/read. Returns the section unchanged
-    * for filters this cannot narrow.
+  /** Orientation of a 1-D coordinate axis a binary search can be trusted
+    * on: Some(true) strictly ascending, Some(false) strictly descending
+    * under the primitive `<`, NaN-free — then Spark's double comparison (NaN
+    * largest, -0.0 == 0.0) agrees with the primitive one on every value.
+    * None (curvilinear, non-monotone, NaN, fewer than 2 values) leaves the
+    * filter with Spark.
     */
-  /** THE saturating Long→Int slice-index clamp: [-2, MaxValue-1] keeps ±1
-    * adjustments at call sites overflow-free (see Section.narrow's comment).
-    */
-  private[sources] def clampSlackIdx(q: Long): Int =
-    math.max(-2L, math.min(q, Int.MaxValue - 1L)).toInt
+  def orientation(a: Axis[Double]): Option[Boolean] = {
+    val n = a.length
+    if (n < 2 || (0 until n).exists(a(_).isNaN)) None
+    else if ((1 until n).forall(i => a(i - 1) < a(i))) Some(true)
+    else if ((1 until n).forall(i => a(i - 1) > a(i))) Some(false)
+    else None
+  }
 
-  def narrowCoordConservative(s: Section, f: Filter,
-      lat0: Double, dlat: Double, lon0: Double, dlon: Double): Section = {
-    def clampI(r: Double): Int = clampSlackIdx(r.toLong)
-    def narrowed(field: String, v: Double, keepGE: Boolean): Section = {
-      val (c0, d) = if (field == "lat") (lat0, dlat) else (lon0, dlon)
-      val q = (v - c0) / d
-      if (d == 0 || !java.lang.Double.isFinite(q)) return s
-      val keepsHigherIdx = keepGE == (d > 0)
-      (field, keepsHigherIdx) match {
-        case ("lat", true) => s.copy(y0 = math.max(s.y0, clampI(math.floor(q) - 1)))
-        case ("lat", false) => s.copy(y1 = math.min(s.y1, clampI(math.ceil(q) + 1)))
-        case (_, true) => s.copy(x0 = math.max(s.x0, clampI(math.floor(q) - 1)))
-        case (_, false) => s.copy(x1 = math.min(s.x1, clampI(math.ceil(q) + 1)))
-      }
+  /** The index range `(i0, i1)` of a monotone axis whose values pass the
+    * comparison `f` against `v`. The passing values form one contiguous
+    * run of the ascending view, found by binary search — exact, so the
+    * filter is reported handled. An empty run comes back as `i0 > i1`.
+    */
+  def range[A](a: Axis[A], ascending: Boolean, f: Filter, v: A)(
+      implicit o: Ordering[A]): (Int, Int) = {
+    val last = a.length - 1
+    val at: Int => A = if (ascending) a(_) else i => a(last - i)
+    def first(p: A => Boolean): Int = { // first index of the ascending view passing p
+      var lo = 0; var hi = a.length
+      while (lo < hi) { val m = (lo + hi) >>> 1; if (p(at(m))) hi = m else lo = m + 1 }
+      lo
     }
-    f match {
-      case GreaterThanOrEqual(c, v: Double) if c == "lat" || c == "lon" =>
-        narrowed(c, v, keepGE = true)
-      case GreaterThan(c, v: Double) if c == "lat" || c == "lon" =>
-        narrowed(c, v, keepGE = true)
-      case LessThanOrEqual(c, v: Double) if c == "lat" || c == "lon" =>
-        narrowed(c, v, keepGE = false)
-      case LessThan(c, v: Double) if c == "lat" || c == "lon" =>
-        narrowed(c, v, keepGE = false)
-      case _ => s
+    val (i0, i1) = f match {
+      case _: GreaterThanOrEqual => (first(o.gteq(_, v)), last)
+      case _: GreaterThan => (first(o.gt(_, v)), last)
+      case _: LessThanOrEqual => (0, first(o.gt(_, v)) - 1)
+      case _ => (0, first(o.gteq(_, v)) - 1) // LessThan
     }
+    if (ascending) (i0, i1) else (last - i1, last - i0)
   }
 
   // full microsecond precision (Timestamp.getTime alone drops sub-ms)
@@ -247,65 +201,386 @@ object GridSource {
       Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
     case _ => None
   }
+
+  /** The layout of a GRF header: time and coordinates in closed form. */
+  private[sources] def stepLayout(path: String, t: Int, y: Int, x: Int,
+      epoch: Long, step: Long, lat0: Double, dlat: Double, lon0: Double, dlon: Double,
+      tiling: Option[(Int, Int)]): GridLayout = {
+    require(step > 0, s"$path: non-positive time step")
+    require(BigInt(epoch) + BigInt(math.max(t - 1, 0)) * step <= Long.MaxValue,
+      s"$path: time axis overflows")
+    GridLayout(t, y, x, Axis.LongSteps(epoch, step, t), Axis.Steps(lat0, dlat, y),
+      Axis.Steps(lon0, dlon, x), curvilinear = false, tiling)
+  }
+
+  private def files(units: Seq[GridUnit]): String =
+    s"files=${units.map(_.path).distinct.mkString(",")} "
+
+  /** GRF1: one variable's whole cube per file. */
+  object Grf1 extends GridContainer {
+    val label = "File"
+    val tableName = "graft_grid_files"
+    val family: FileFamily = FileFamily.Grf
+    def listing(units: Seq[GridUnit]): String = files(units)
+    def open(path: String): Seq[(GridLayout, Seq[GridUnit])] = {
+      val u = FileUnit(path, GridFile.readHeader(path))
+      Seq(u.layout -> Seq(u))
+    }
+  }
+
+  /** GRF2: several spatial tiles of one variable's global cube per file;
+    * each tile is a unit, so a pushed 2-D range skips whole files — the
+    * layout [[graft.operators.Scale.writeZOrderedGrid]] produces by packing
+    * Morton-consecutive tiles together.
+    */
+  object Grf2 extends GridContainer {
+    val label = "Tiled"
+    val tableName = "graft_grid_tiled"
+    val family: FileFamily = FileFamily.Grf
+    def listing(units: Seq[GridUnit]): String = files(units)
+    def open(path: String): Seq[(GridLayout, Seq[GridUnit])] = {
+      val h = GridFile.readTiledHeader(path)
+      Seq(TileUnit.layout(path, h) -> h.tiles.map(TileUnit(path, h, _)))
+    }
+  }
 }
 
-class GridTable extends Table with SupportsRead {
-  override def name(): String = "graft_grid"
+/** A 1-D axis of a grid: the values as stored, or the closed form
+  * `c0 + i·d` — the very expression the closed-form readers emit, so a
+  * binary search on the axis and the rows read agree bit for bit. A
+  * curvilinear coordinate is a stored y·x matrix.
+  */
+sealed trait Axis[A] extends Serializable {
+  def length: Int
+  def apply(i: Int): A
+}
+
+object Axis {
+  final case class Stored[A](values: Array[A]) extends Axis[A] {
+    def length: Int = values.length
+    def apply(i: Int): A = values(i)
+    // element-wise, like java.util.Arrays.equals: equal arrays = same axis
+    override def equals(o: Any): Boolean = o match {
+      case o: Stored[_] =>
+        java.util.Objects.deepEquals(values.asInstanceOf[AnyRef], o.values.asInstanceOf[AnyRef])
+      case _ => false
+    }
+    override def hashCode: Int = length
+  }
+  final case class Steps(c0: Double, d: Double, length: Int) extends Axis[Double] {
+    def apply(i: Int): Double = c0 + i * d
+  }
+  final case class LongSteps(c0: Long, d: Long, length: Int) extends Axis[Long] {
+    def apply(i: Int): Long = c0 + i * d
+  }
+}
+
+/** The axes every unit of one grid table shares: dims, the time axis
+  * (epoch micros, strictly increasing) and the lat/lon coordinates. The
+  * driver keeps ONE per table — units and partitions never carry it, so
+  * driver state stays O(1) per file.
+  */
+final case class GridLayout(t: Int, y: Int, x: Int, times: Axis[Long],
+    lat: Axis[Double], lon: Axis[Double], curvilinear: Boolean,
+    tiling: Option[(Int, Int)] = None) {
+
+  def latAt(yy: Int, xx: Int): Double = if (curvilinear) lat(yy * x + xx) else lat(yy)
+  def lonAt(yy: Int, xx: Int): Double = if (curvilinear) lon(yy * x + xx) else lon(xx)
+
+  /** The `lat` or `lon` values over section `s`. */
+  def coordsIn(field: String, s: GridSource.Section): Seq[Double] =
+    if (curvilinear)
+      for (yy <- s.y0 to s.y1; xx <- s.x0 to s.x1)
+        yield if (field == "lat") latAt(yy, xx) else lonAt(yy, xx)
+    else if (field == "lat") (s.y0 to s.y1).map(lat(_))
+    else (s.x0 to s.x1).map(lon(_))
+
+  lazy val latOrder: Option[Boolean] = if (curvilinear) None else GridSource.orientation(lat)
+  lazy val lonOrder: Option[Boolean] = if (curvilinear) None else GridSource.orientation(lon)
+
+  /** One table = one grid: a section narrowed on one unit's axes is applied
+    * to all of them, so a unit whose dims, time axis or coordinates differ
+    * would be read at wrong offsets or silently lose rows the filter keeps.
+    */
+  def requireSame(path: String, base: GridLayout, context: String): Unit = {
+    require(t == base.t && y == base.y && x == base.x && tiling == base.tiling &&
+      curvilinear == base.curvilinear,
+      s"$path: heterogeneous grid layout (dims/tiling/coordinate shape) — $context")
+    require(times == base.times, s"$path: heterogeneous time axis — $context")
+    require(lat == base.lat && lon == base.lon, s"$path: coordinate arrays differ — $context")
+  }
+}
+
+/** The smallest thing a grid scan prunes, packs and reads: a NetCDF cube, a
+  * GRF1 file, one tile of a GRF2 file, or one generated variable. It covers
+  * the global index `window` (y0, y1, x0, x1) of its table's layout — the
+  * whole grid for all but GRF2 tiles. Metadata only: it travels in
+  * partitions, and only [[open]] touches bytes, on the executor.
+  */
+trait GridUnit extends Serializable {
+  def variable: String
+  def path: String
+  def window: (Int, Int, Int, Int)
+  def fill: Option[Double]
+  def scale: Double = 1.0
+  def offset: Double = 0.0
+  def open(): UnitReader
+
+  /** A stored value as the `value` column: fill → SQL NULL, CF unpacking. */
+  final def value(v: Double): Any =
+    if (fill.exists(f => if (f.isNaN) v.isNaN else v == f)) null
+    else if (scale == 1.0 && offset == 0.0) v
+    else v * scale + offset
+}
+
+/** Executor-side reads of one unit: a positioned `[t, y, x0..x1]` row read
+  * (`Gddp.scala:224-226`) plus the coordinates of a cell.
+  */
+trait UnitReader extends NcIo.RowReader {
+  def latAt(y: Int, x: Int): Double
+  def lonAt(y: Int, x: Int): Double
+}
+
+/** Reader of a unit whose coordinates are its layout's closed form. */
+abstract class StepReader(l: GridLayout) extends UnitReader {
+  def latAt(y: Int, x: Int): Double = l.latAt(y, x)
+  def lonAt(y: Int, x: Int): Double = l.lonAt(y, x)
+}
+
+final case class FileUnit(path: String, h: GridFile.Header) extends GridUnit {
+  def variable: String = h.variable
+  def window: (Int, Int, Int, Int) = (0, h.y - 1, 0, h.x - 1)
+  def fill: Option[Double] = Some(h.fill)
+  def layout: GridLayout = GridSource.stepLayout(path, h.t, h.y, h.x, h.epochMicros,
+    h.stepMicros, h.lat0, h.dlat, h.lon0, h.dlon, None)
+  def open(): UnitReader = new StepReader(layout) {
+    private val r = new GridFile.SectionReader(path, h)
+    def readRow(t: Int, y: Int, x0: Int, x1: Int): Array[Double] = r.readRow(t, y, x0, x1)
+    def close(): Unit = r.close()
+  }
+}
+
+final case class TileUnit(path: String, h: GridFile.TiledHeader, tile: GridFile.TileEntry)
+    extends GridUnit {
+  def variable: String = h.variable
+  def window: (Int, Int, Int, Int) = h.tileBounds(tile)
+  def fill: Option[Double] = Some(h.fill)
+  // global indices in, tile-local offsets at the byte layer
+  def open(): UnitReader = new StepReader(TileUnit.layout(path, h)) {
+    private val r = new GridFile.TiledSectionReader(path, h)
+    def readRow(t: Int, y: Int, x0: Int, x1: Int): Array[Double] = r.readRow(tile, t, y, x0, x1)
+    def close(): Unit = r.close()
+  }
+}
+
+object TileUnit {
+  def layout(path: String, h: GridFile.TiledHeader): GridLayout =
+    GridSource.stepLayout(path, h.t, h.y, h.x, h.epochMicros, h.stepMicros,
+      h.lat0, h.dlat, h.lon0, h.dlon, Some((h.tileY, h.tileX)))
+}
+
+/** One generated variable: `GridData.cells` minus the `file` column (same
+  * closed form), so correctness is oracle-checkable against the DuckDB
+  * generator.
+  */
+final case class GenUnit(v: Int) extends GridUnit {
+  import graft.domain.GridData.{X, Y}
+  def variable: String = if (v == 0) "tasmax" else "tasmin"
+  def path: String = ""
+  def window: (Int, Int, Int, Int) = (0, Y - 1, 0, X - 1)
+  def fill: Option[Double] = Some(Double.NaN)
+  def open(): UnitReader = new StepReader(GenUnit.layout) {
+    def readRow(t: Int, y: Int, x0: Int, x1: Int): Array[Double] =
+      Array.tabulate(x1 - x0 + 1) { i =>
+        val x = x0 + i
+        if ((t + y + x) % 17 == 0) Double.NaN
+        else ((t * 31 + y * 7 + x * 13 + v * 5) % 100).toDouble / 2.0 - 10.0
+      }
+    def close(): Unit = ()
+  }
+}
+
+object GenUnit {
+  import graft.domain.GridData.{DLat, DLon, Lat0, Lon0, T, X, Y}
+  val layout: GridLayout = GridLayout(T, Y, X,
+    Axis.LongSteps(GridSource.epochMicros, 24L * 3600 * 1000000L, T),
+    Axis.Steps(Lat0, DLat, Y), Axis.Steps(Lon0, DLon, X), curvilinear = false)
+}
+
+/** The two file families a grid dir may hold — one at a time. */
+sealed abstract class FileFamily(val name: String, val accepts: String => Boolean)
+
+object FileFamily {
+  case object NetCdf extends FileFamily("NetCDF", NcGrid.isNcName)
+  case object Grf extends FileFamily(".grf", _.endsWith(".grf"))
+
+  /** The family of a file name; None for checkpoint dirs, markers and
+    * stray files.
+    */
+  def of(name: String): Option[FileFamily] = Seq(NetCdf, Grf).find(_.accepts(name))
+}
+
+/** One kind of file container: which file family it reads, how a file
+  * becomes [[GridUnit]]s, and what its table and scans are called.
+  */
+trait GridContainer {
+  /** Scan labels: `<label>GridScan`, `<label>GridAggScan`. */
+  def label: String
+  def tableName: String
+  def family: FileFamily
+  /** What a scan description lists of its units (trailing space). */
+  def listing(units: Seq[GridUnit]): String
+  /** Driver-side metadata open of one file: its units, grouped by the
+    * layout they claim — the reference's file-catalog step
+    * (`Gddp.scala:61-68,118-131`). Cell data is never touched here.
+    */
+  def open(path: String): Seq[(GridLayout, Seq[GridUnit])]
+}
+
+/** Holds every arriving unit to the first layout admitted (or a given one):
+  * the one layout check of table open and of each micro-batch.
+  */
+private[sources] final class LayoutGuard(var base: Option[(String, GridLayout)]) {
+  def admit(path: String, l: GridLayout, context: String): Unit = base match {
+    case Some((p0, b)) => l.requireSame(path, b, s"$context $p0")
+    case None => base = Some(path -> l)
+  }
+}
+
+/** Table over a grid's units: a dir's files read by one container
+  * (`source`), or the generator's variables (no source). An EMPTY dir is a
+  * valid cold-start state (declare the stream, then land files): batch
+  * reads plan zero partitions, the micro-batch stream adopts the first
+  * arrival's layout, and filters stay Spark-applied until a layout exists
+  * to resolve them against.
+  */
+class GridTable(private[sources] val label: String, tableName: String,
+    private[sources] val source: Option[(String, GridContainer)],
+    private[sources] val units: Seq[GridUnit],
+    private[sources] val base: Option[(String, GridLayout)]) extends Table with SupportsRead {
+  def layout: Option[GridLayout] = base.map(_._2)
+  /** What a scan description lists of `units` (trailing space), or "". */
+  private[sources] def listing(units: Seq[GridUnit]): String =
+    source.fold("")(_._2.listing(units))
+  override def name(): String = tableName + source.fold("")(s => s"(${s._1})")
   override def schema(): StructType = GridSource.schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
+    if (source.isEmpty) util.EnumSet.of(TableCapability.BATCH_READ)
+    else util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GridScanBuilder
+    new GridScanBuilder(this)
 }
 
-class GridScanBuilder extends ScanBuilder
+object GridTable {
+  /** Open each of `files` (the listing `getTable` took) ONCE, holding every
+    * unit to the first one's layout. Only that first layout is kept. Two
+    * units of one variable over the same cells would emit every such cell
+    * twice, so a dir holding them is refused.
+    */
+  def open(container: GridContainer, dir: String, files: Seq[String]): GridTable = {
+    val guard = new LayoutGuard(None)
+    val units = files.flatMap { p =>
+      container.open(p).flatMap { case (l, us) => guard.admit(p, l, "must match"); us }
+    }
+    units.groupBy(u => (u.variable, u.window)).collectFirst {
+      case ((v, _), us) if us.size > 1 => throw new IllegalArgumentException(
+        s"$dir: variable $v is stored twice over the same cells (${us.map(_.path).distinct.mkString(", ")})")
+    }
+    new GridTable(container.label, container.tableName, Some(dir -> container), units, guard.base)
+  }
+
+  /** The closed-form generator: one unit per variable, no files. */
+  lazy val generator: GridTable = new GridTable("", "graft_grid", None,
+    Seq(GenUnit(0), GenUnit(1)), Some("" -> GenUnit.layout))
+}
+
+/** The one pushdown rule set of every grid table (see [[GridSource]]).
+  * Every filter it reports handled leaves no post-scan re-evaluation
+  * behind, so the generated code of a request-shaped query carries no
+  * request literals.
+  */
+class GridScanBuilder(table: GridTable) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
-  private var section = GridSource.Section()
+  // cold start (no layout): nothing section-shaped is reported pushed —
+  // Spark keeps applying the filters itself, which stays correct once
+  // files land
+  private var section = table.layout match {
+    case Some(l) => GridSource.Section(0, l.t - 1, 0, l.y - 1, 0, l.x - 1)
+    case None => GridSource.Section(0, Int.MaxValue - 1, 0, Int.MaxValue - 1, 0, Int.MaxValue - 1)
+  }
+  private var varNames: Option[Set[String]] = None
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = GridSource.schema
   private var aggPlan: Option[Seq[GridAgg]] = None
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (handled, rest) = filters.partition { f =>
-      section.narrow(f) match {
-        case Some(s) => section = s; true
-        case None => false
-      }
+  // varNames holds the FILTER's values, not their intersection with the
+  // units present at open: a streaming read must admit units for a
+  // filtered variable that arrive AFTER the stream starts (the filter is
+  // reported pushed, so Spark never re-applies it)
+  private def keepVars(names: Set[String]): Unit =
+    varNames = Some(varNames.fold(names)(_.intersect(names)))
+
+  /** Narrow the section by one comparison; true = handled exactly. NaN
+    * literals and curvilinear or non-monotone coordinate axes stay
+    * unhandled and untouched.
+    */
+  private def narrow(l: GridLayout, f: Filter): Boolean = {
+    val (field, v) = f match {
+      case GreaterThanOrEqual(c, v) => (c, v)
+      case GreaterThan(c, v) => (c, v)
+      case LessThanOrEqual(c, v) => (c, v)
+      case LessThan(c, v) => (c, v)
+      case _ => (null, null)
     }
-    // bbox (lat/lon) ranges narrow the section CONSERVATIVELY but stay in
-    // `rest` (Spark re-evaluates them): pruning without owning exactness
-    rest.foreach { f =>
-      import graft.domain.GridData.{DLat, DLon, Lat0, Lon0}
-      section = GridSource.narrowCoordConservative(section, f, Lat0, DLat, Lon0, DLon)
+    def keep(dim: String, r: (Int, Int)): Boolean = { section = section.keep(dim, r._1, r._2); true }
+    def coord(dim: String, a: Axis[Double], order: Option[Boolean], d: Double): Boolean =
+      !d.isNaN && order.exists(asc =>
+        keep(dim, GridSource.range(a, asc, f, d)(Ordering.Double.IeeeOrdering)))
+    (field, v) match {
+      case ("ts", _) => GridSource.tsMicrosOf(v).exists(k =>
+        keep("t", GridSource.range(l.times, ascending = true, f, k)))
+      case ("lat", d: Double) => coord("y", l.lat, l.latOrder, d)
+      case ("lon", d: Double) => coord("x", l.lon, l.lonOrder, d)
+      case _ => section.narrow(f).exists { s => section = s; true }
+    }
+  }
+
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    val (handled, rest) = filters.partition {
+      case EqualTo("variable", v: String) => keepVars(Set(v)); true
+      case In("variable", vs) => keepVars(vs.collect { case s: String => s }.toSet); true
+      case f => table.layout.exists(narrow(_, f))
     }
     pushed = handled
     rest // Spark re-evaluates these; handled ones are fully enforced here
   }
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   /** COUNT(*) / MIN / MAX over the index and coordinate columns are pure
-    * metadata: the section bounds answer them without generating (or, in the
-    * file path, reading) a single cell — the DSv2 form of "the catalog
-    * answers it" (the reference reads ranges from attributes/coord arrays,
+    * metadata: the section and the layout's axes answer them without
+    * reading a single cell — the DSv2 form of "the catalog answers it" (the
+    * reference reads ranges from attributes/coord arrays,
     * `Gddp.scala:121-130`, never the cube). Spark only offers complete
-    * pushdown when every filter was already pushed, so the section is exact.
-    * `value` aggregates are refused — NODATA nulls require scanning.
+    * pushdown when every filter was already pushed, so the section is
+    * exact. `value` aggregates are refused — NODATA nulls require scanning;
+    * so is a cold start, whose empty scan Spark aggregates itself.
     */
   override def supportCompletePushDown(agg: Aggregation): Boolean =
-    GridAgg.translate(agg).isDefined
-  override def pushAggregation(agg: Aggregation): Boolean =
-    GridAgg.translate(agg) match {
-      case some @ Some(_) => aggPlan = some; true
-      case None => false
-    }
+    table.layout.nonEmpty && GridAgg.translate(agg).isDefined
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    if (table.layout.nonEmpty) aggPlan = GridAgg.translate(agg)
+    aggPlan.isDefined
+  }
 
-  override def build(): Scan = aggPlan match {
-    case Some(plan) => new GridAggScan(section, plan)
-    case None => new GridScan(section, required, pushed)
+  override def build(): Scan = {
+    val kept = table.units.filter(u => varNames.forall(_.contains(u.variable)))
+    aggPlan match {
+      case Some(plan) => new GridAggScan(table, kept, section, plan)
+      case None => new GridScan(table, kept, section, required, pushed, varNames)
+    }
   }
 }
 
@@ -340,86 +615,46 @@ object GridAgg {
     case "y" | "x" => IntegerType
     case _ => DoubleType
   }
-
-  /** min/max of an affine `c0 + i*d` over `[i0, i1]` — endpoint-safe for
-    * either sign of `d` (descending north-up rasters have `dlat < 0`).
-    */
-  def affineBound(c0: Double, d: Double, i0: Int, i1: Int, lo: Boolean): Double = {
-    val (a, b) = (c0 + i0 * d, c0 + i1 * d)
-    if (lo) math.min(a, b) else math.max(a, b)
-  }
-
-  /** Coord/time metadata of one aggregation unit (a file or a tile). */
-  final case class UnitMeta(epochMicros: Long, stepMicros: Long,
-      lat0: Double, dlat: Double, lon0: Double, dlon: Double)
-
-  /** Combine closed-form aggregates over per-unit section clamps — the one
-    * definition FileGridAggScan and TiledGridAggScan both answer from
-    * (units with empty clamps must be filtered out by the caller).
-    */
-  def combineUnits(units: Seq[(UnitMeta, GridSource.Section)],
-      plan: Seq[GridAgg]): Seq[Any] = {
-    def bound(m: UnitMeta, c: GridSource.Section, f: String, lo: Boolean): Any =
-      f match {
-        case "ts" => m.epochMicros + (if (lo) c.t0 else c.t1).toLong * m.stepMicros
-        case "y" => if (lo) c.y0 else c.y1
-        case "x" => if (lo) c.x0 else c.x1
-        case "lat" => affineBound(m.lat0, m.dlat, c.y0, c.y1, lo)
-        case "lon" => affineBound(m.lon0, m.dlon, c.x0, c.x1, lo)
-      }
-    def combine(f: String, lo: Boolean): Any =
-      if (units.isEmpty) null
-      else {
-        val vs = units.map { case (m, c) => bound(m, c, f, lo) }
-        f match {
-          case "y" | "x" =>
-            val is = vs.map(_.asInstanceOf[Int]); if (lo) is.min else is.max
-          case "ts" =>
-            val ls = vs.map(_.asInstanceOf[Long]); if (lo) ls.min else ls.max
-          case _ =>
-            val ds = vs.map(_.asInstanceOf[Double]); if (lo) ds.min else ds.max
-        }
-      }
-    plan.map {
-      case CountAll => units.map { case (_, c) => GridSource.sectionDims(c) }.sum
-      case MinOf(f) => combine(f, lo = true)
-      case MaxOf(f) => combine(f, lo = false)
-    }
-  }
-
-  /** Evaluate one aggregate from the (exactly-filtered) section bounds. */
-  def eval(a: GridAgg, s: GridSource.Section): Any = {
-    import graft.domain.GridData.{DLat, DLon, Lat0, Lon0}
-    val count = GridSource.sectionRows(s)
-    def bound(f: String, lo: Boolean): Any = f match {
-      case "ts" => s.epoch + (if (lo) s.t0 else s.t1).toLong * s.step
-      case "y" => if (lo) s.y0 else s.y1
-      case "x" => if (lo) s.x0 else s.x1
-      case "lat" => affineBound(Lat0, DLat, s.y0, s.y1, lo)
-      case "lon" => affineBound(Lon0, DLon, s.x0, s.x1, lo)
-    }
-    a match {
-      case CountAll => count
-      case MinOf(f) => if (count == 0) null else bound(f, lo = true)
-      case MaxOf(f) => if (count == 0) null else bound(f, lo = false)
-    }
-  }
 }
 
-/** Shared scaffolding for completely-pushed aggregates: the agg-typed read
-  * schema and a one-partition, one-row scan. The row is computed driver-side
-  * at planning time (it is pure section/header metadata) and shipped in the
-  * partition.
+/** Completely-pushed aggregate: one partition, one row, zero cells read.
+  * The row is computed driver-side at planning time from the per-unit
+  * section clamps and the table's axes, and shipped in the partition.
   */
-abstract class SingleRowAggScan(plan: Seq[GridAgg]) extends Scan with Batch {
+class GridAggScan(table: GridTable, units: Seq[GridUnit], section: GridSource.Section,
+    plan: Seq[GridAgg]) extends Scan with Batch {
   override def readSchema(): StructType = StructType(plan.zipWithIndex.map {
     case (GridAgg.CountAll, i) => StructField(s"agg$i", LongType, nullable = false)
     case (GridAgg.MinOf(f), i) => StructField(s"agg$i", GridAgg.fieldType(f), nullable = true)
     case (GridAgg.MaxOf(f), i) => StructField(s"agg$i", GridAgg.fieldType(f), nullable = true)
   })
   override def toBatch: Batch = this
-  /** The single result row (Catalyst internal values: long/int/double/null). */
-  protected def resultRow(): Seq[Any]
+  override def description(): String =
+    s"${table.label}GridAggScan ${table.listing(units)}" +
+      s"section=$section pushedAggregates=[${plan.mkString(", ")}]"
+
+  /** The result row (Catalyst internal values: long/int/double/null). */
+  private def resultRow(): Seq[Any] = {
+    val l = table.layout.get
+    val clamps = units.map(GridSource.clamp(section, l.t, _)).filterNot(_.isEmpty)
+    val windows = clamps.distinct // units sharing a window share its bounds
+    def bound(f: String, lo: Boolean): Any = {
+      def pick[A](vs: Seq[A])(implicit o: Ordering[A]): A = if (lo) vs.min else vs.max
+      if (windows.isEmpty) null
+      else f match {
+        case "ts" => pick(windows.map(c => l.times(if (lo) c.t0 else c.t1)))
+        case "y" => pick(windows.map(c => if (lo) c.y0 else c.y1))
+        case "x" => pick(windows.map(c => if (lo) c.x0 else c.x1))
+        case _ => pick(windows.map(c => pick(l.coordsIn(f, c))(Ordering.Double.TotalOrdering)))(
+          Ordering.Double.TotalOrdering)
+      }
+    }
+    plan.map {
+      case GridAgg.CountAll => clamps.map(GridSource.sectionDims).sum
+      case GridAgg.MinOf(f) => bound(f, lo = true)
+      case GridAgg.MaxOf(f) => bound(f, lo = false)
+    }
+  }
   override def planInputPartitions(): Array[InputPartition] =
     Array(SingleRowPartition(resultRow()))
   override def createReaderFactory(): PartitionReaderFactory = SingleRowReaderFactory
@@ -438,284 +673,136 @@ object SingleRowReaderFactory extends PartitionReaderFactory {
     }
 }
 
-/** Completely-pushed aggregate: one partition, one row, zero cells read. */
-class GridAggScan(section: GridSource.Section, plan: Seq[GridAgg])
-    extends SingleRowAggScan(plan) {
-  override def description(): String =
-    s"GridAggScan section=$section pushedAggregates=[${plan.mkString(", ")}]"
-  override protected def resultRow(): Seq[Any] = plan.map(a => GridAgg.eval(a, section))
-}
-
-class GridScan(section: GridSource.Section, required: StructType, pushed: Array[Filter])
+class GridScan(table: GridTable, units: Seq[GridUnit], section: GridSource.Section,
+    required: StructType, pushed: Array[Filter], varNames: Option[Set[String]])
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  /** Streaming micro-batch form of the same scan: new files arriving in the
+    * table's dir become micro-batches, with the SAME section/variable
+    * pushdown narrowing every batch's reads (filters on a `readStream` DSv2
+    * relation push down like batch). See [[DirMicroBatchStream]].
+    */
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+    new DirMicroBatchStream(table, varNames, section, required)
   override def description(): String =
-    s"GridScan section=$section pushed=[${pushed.mkString(", ")}]"
+    s"${table.label}GridScan ${table.listing(units)}" +
+      s"section=$section pushed=[${pushed.mkString(", ")}]"
 
-  /** Exact statistics from the section (the closed form knows its own
-    * cardinality) — a narrowed slice reports a small size, so Catalyst can
-    * broadcast it in joins instead of defaulting to a conservative estimate.
+  /** Exact statistics from the per-unit clamps — a narrowed slice reports a
+    * small size, so Catalyst can broadcast it in joins instead of
+    * defaulting to a conservative estimate.
     */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = GridSource.sectionRows(section)
+    private val rows = table.layout.fold(0L)(l =>
+      units.map(u => GridSource.sectionDims(GridSource.clamp(section, l.t, u))).sum)
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(rows * GridSource.RowWidthBytes)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
   }
 
-  /** One partition per (variable, t) slice inside the section — excluded
-    * slices are never planned (partition pruning).
-    */
   override def planInputPartitions(): Array[InputPartition] =
-    (for {
-      v <- section.vars.toSeq.sorted
-      t <- section.t0 to section.t1
-    } yield GridPartition(v, t, section): InputPartition).toArray
+    table.layout.fold(Array.empty[InputPartition])(GridPartition.pack(units, _, section))
 
   override def createReaderFactory(): PartitionReaderFactory = new GridReaderFactory(required)
 }
 
-case class GridPartition(v: Int, t: Int, section: GridSource.Section) extends InputPartition
+/** A run of consecutive time steps `ts` of ONE unit (`tsMicros` their
+  * stamped times), read over the same clamped, non-empty `section`.
+  */
+case class GridPartition(unit: GridUnit, ts: Array[Int], tsMicros: Array[Long],
+    section: GridSource.Section) extends InputPartition
+
+object GridPartition {
+  /** Pack every (unit, t) slice of `section` into partitions, unit-major
+    * then t, never mixing units; units the section misses plan nothing. A
+    * slice weighs its clamped cells × [[GridSource.RowWidthBytes]] (the
+    * scan's size estimate), and a partition takes as many consecutive
+    * slices as fit in Spark's file-split size, `FilePartition.maxSplitBytes`:
+    * `min(spark.sql.files.maxPartitionBytes, max(spark.sql.files.openCostInBytes,
+    * totalBytes / minPartitionNum))`, where `minPartitionNum` is
+    * `spark.sql.files.minPartitionNum` or else the default parallelism. A
+    * small section is one partition per unit; a large scan still splits
+    * into at least `minPartitionNum` partitions (a slice is never split).
+    * Each partition is stamped with its slices' ts values — executors never
+    * re-derive the time axis.
+    */
+  def pack(units: Seq[GridUnit], l: GridLayout, section: GridSource.Section): Array[InputPartition] = {
+    val runs = units.map(u => u -> GridSource.clamp(section, l.t, u)).filterNot(_._2.isEmpty)
+    def sliceBytes(s: GridSource.Section): Long =
+      GridSource.RowWidthBytes * (s.y1 - s.y0 + 1) * (s.x1 - s.x0 + 1)
+    val split = org.apache.spark.sql.execution.datasources.FilePartition.maxSplitBytes(
+      org.apache.spark.sql.SparkSession.active,
+      runs.map { case (_, s) => (s.t1 - s.t0 + 1) * sliceBytes(s) }.sum)
+    runs.flatMap { case (u, s) =>
+      val perPartition = math.min(math.max(split / sliceBytes(s), 1L), Int.MaxValue.toLong).toInt
+      (s.t0 to s.t1).grouped(perPartition).map { run =>
+        val ts = run.toArray
+        GridPartition(u, ts, ts.map(l.times(_)), s)
+      }
+    }.toArray
+  }
+}
 
 class GridReaderFactory(required: StructType) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new GridReader(p.asInstanceOf[GridPartition], required)
 }
 
-/** Generates exactly the section's `[y0..y1, x0..x1]` cells for its
-  * (variable, t) slice — the hyperslab read.
+/** Executor-side section read of one unit: opens it once per partition,
+  * then walks the partition's time slices in turn with one positioned read
+  * per `[t, y, x0..x1]` row; fill → SQL NULL, scale/offset applied.
   */
 class GridReader(p: GridPartition, required: StructType) extends PartitionReader[InternalRow] {
   private val s = p.section
-  private var y = s.y0
-  private var x = s.x0 - 1
+  private val u = p.unit
+  private val rdr = u.open()
+  private val name = UTF8String.fromString(u.variable)
+  private var i = 0 // the slice being read: p.ts(i)
+  private var y = s.y0 - 1
+  private var x = s.x1 // forces a row load on first next()
+  private var row: Array[Double] = _
+
   private val fieldGen: Array[(Int, Int) => Any] = required.fields.map { f =>
     f.name match {
-      case "variable" => (_: Int, _: Int) =>
-        UTF8String.fromString(if (p.v == 0) "tasmax" else "tasmin")
-      case "ts" => (_: Int, _: Int) => GridSource.tsMicros(p.t)
+      case "variable" => (_: Int, _: Int) => name
+      case "ts" => (_: Int, _: Int) => p.tsMicros(i)
       case "y" => (yy: Int, _: Int) => yy
       case "x" => (_: Int, xx: Int) => xx
-      case "lat" => (yy: Int, _: Int) => graft.domain.GridData.Lat0 + yy * graft.domain.GridData.DLat
-      case "lon" => (_: Int, xx: Int) => graft.domain.GridData.Lon0 + xx * graft.domain.GridData.DLon
-      case "value" => (yy: Int, xx: Int) =>
-        if ((p.t + yy + xx) % 17 == 0) null
-        else ((p.t * 31 + yy * 7 + xx * 13 + p.v * 5) % 100).toDouble / 2.0 - 10.0
+      case "lat" => (yy: Int, xx: Int) => rdr.latAt(yy, xx)
+      case "lon" => (yy: Int, xx: Int) => rdr.lonAt(yy, xx)
+      case "value" => (_: Int, xx: Int) => u.value(row(xx - s.x0))
     }
   }
 
   override def next(): Boolean = {
+    if (i == p.ts.length) return false
     x += 1
-    if (x > s.x1) { x = s.x0; y += 1 }
-    y <= s.y1
+    if (x > s.x1) {
+      y += 1
+      if (y > s.y1) {
+        i += 1
+        if (i == p.ts.length) return false
+        y = s.y0
+      }
+      row = rdr.readRow(p.ts(i), y, s.x0, s.x1)
+      x = s.x0
+    }
+    true
   }
 
   override def get(): InternalRow =
     InternalRow.fromSeq(fieldGen.toSeq.map(g => g(y, x)))
 
-  override def close(): Unit = ()
+  override def close(): Unit = rdr.close()
 }
 
-// ---- file-backed path: the same scan over the GridFile binary codec ----
-
-/** Table over a directory of `*.grf` files (one variable per file). Listing
-  * the directory and reading headers is the metadata open — driver-side,
-  * catalog-sized, exactly the reference's file-catalog step
-  * (`Gddp.scala:61-68,118-131`). Cell data is only touched by executors, and
-  * only the requested sections of it.
-  */
-class FileGridTable(dir: String) extends Table with SupportsRead {
-  private[sources] val files: Seq[(String, GridFile.Header)] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".grf")).sortBy(_.getName)
-      .map(f => f.getAbsolutePath -> GridFile.readHeader(f.getAbsolutePath)).toSeq
-
-  // one table = one grid layout: the scan narrows ONE Section (dims, time
-  // base, coord affine taken from the first header), so every file must share
-  // them — a mismatched file would otherwise be read at wrong byte offsets.
-  // Reject loudly at metadata-open time instead. An EMPTY dir is a valid
-  // cold-start state (declare the stream, then land files): batch reads plan
-  // zero partitions, the micro-batch stream adopts the first arrival's
-  // layout, and filters stay Spark-applied until a layout exists to resolve
-  // them against.
-  files.headOption.foreach { case (f0, h0) =>
-    files.foreach { case (p, h) =>
-      GridFile.requireSameLayout(p, h, h0, s"must match $f0")
-    }
-    require(h0.stepMicros > 0, s"$f0: non-positive time step")
-  }
-
-  override def name(): String = s"graft_grid_files($dir)"
-  override def schema(): StructType = GridSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new FileGridScanBuilder(dir, files)
-}
-
-/** Same pushdown contract as the generator path: variable equality/IN prunes
-  * whole files, ts/y/x ranges narrow the Section each partition reads.
-  */
-class FileGridScanBuilder(dir: String, files: Seq[(String, GridFile.Header)]) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
-  // cold start (empty dir): no layout exists to resolve index/time filters
-  // against, so NOTHING section-shaped is reported pushed — Spark keeps
-  // applying the filters itself, which stays correct once files land
-  private val dims0: Option[GridFile.Header] = files.headOption.map(_._2)
-  private var section = dims0 match {
-    case Some(d) => GridSource.Section(
-      t1 = d.t - 1, y1 = d.y - 1, x1 = d.x - 1,
-      epoch = d.epochMicros, step = d.stepMicros)
-    case None => GridSource.Section(
-      t1 = Int.MaxValue - 1, y1 = Int.MaxValue - 1, x1 = Int.MaxValue - 1,
-      epoch = 0L, step = 1L) // placeholders; never consulted (no narrowing)
-  }
-  private var varNames: Option[Set[String]] = None
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = GridSource.schema
-  private var aggPlan: Option[Seq[GridAgg]] = None
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (handled, rest) = filters.partition {
-      // varNames holds the FILTER's values, not their intersection with the
-      // files present at open: a streaming read must admit files for a
-      // filtered variable that arrive AFTER the stream starts (the filter
-      // is reported pushed, so Spark never re-applies it)
-      case EqualTo("variable", v: String) =>
-        varNames = Some(varNames.map(_.intersect(Set(v))).getOrElse(Set(v)))
-        true
-      case In("variable", vs) =>
-        val names = vs.collect { case s: String => s }.toSet
-        varNames = Some(varNames.map(_.intersect(names)).getOrElse(names))
-        true
-      case f if dims0.nonEmpty => section.narrow(f) match {
-        case Some(s) => section = s; true
-        case None => false
-      }
-      case _ => false
-    }
-    // conservative bbox narrowing from the header's coord affine; filters
-    // stay unhandled (exactness is Spark's, the seeks get smaller)
-    dims0.foreach { dims =>
-      rest.foreach { f =>
-        section = GridSource.narrowCoordConservative(section, f,
-          dims.lat0, dims.dlat, dims.lon0, dims.dlon)
-      }
-    }
-    pushed = handled
-    rest
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  /** Same metadata-aggregate contract as the generator path, answered from
-    * the file HEADERS (dims + coord affine) — the literal "metadata read"
-    * (`Gddp.scala:121-130`): no data bytes are touched.
-    */
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    dims0.nonEmpty && GridAgg.translate(agg).isDefined
-  override def pushAggregation(agg: Aggregation): Boolean =
-    if (dims0.isEmpty) false // cold start: let Spark aggregate the empty scan
-    else GridAgg.translate(agg) match {
-      case some @ Some(_) => aggPlan = some; true
-      case None => false
-    }
-
-  private def kept: Seq[(String, GridFile.Header)] =
-    files.filter { case (_, h) => varNames.forall(_.contains(h.variable)) }
-
-  override def build(): Scan = aggPlan match {
-    case Some(plan) => new FileGridAggScan(kept.map(_._2), section, plan)
-    case None => new FileGridScan(kept, section, required, pushed, dir, varNames,
-      files.headOption.map(_._2))
-  }
-}
-
-/** Header-answered aggregate over the file-backed table: per-file section
-  * clamp → closed-form count / bounds, combined across surviving files.
-  */
-class FileGridAggScan(headers: Seq[GridFile.Header], section: GridSource.Section,
-    plan: Seq[GridAgg]) extends SingleRowAggScan(plan) {
-
-  override def description(): String =
-    s"FileGridAggScan files=${headers.map(_.variable).mkString(",")} section=$section " +
-      s"pushedAggregates=[${plan.mkString(", ")}]"
-
-  override protected def resultRow(): Seq[Any] =
-    GridAgg.combineUnits(
-      headers.map { h =>
-        (GridAgg.UnitMeta(h.epochMicros, h.stepMicros,
-          h.lat0, h.dlat, h.lon0, h.dlon),
-          GridSource.clampTo(section, h.t, h.y, h.x))
-      }.filter { case (_, c) => GridSource.sectionDims(c) > 0 },
-      plan)
-}
-
-class FileGridScan(files: Seq[(String, GridFile.Header)], section: GridSource.Section,
-    required: StructType, pushed: Array[Filter],
-    // no defaults: a scan built without the ingest dir or layout baseline
-    // would stream forever-empty batches with no diagnostic
-    dir: String, varNames: Option[Set[String]],
-    baseline: Option[GridFile.Header]) extends Scan with Batch
-    with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  /** Streaming micro-batch form of the same scan: new `.grf` files arriving
-    * in `dir` become micro-batches, with the SAME Section/variable pushdown
-    * narrowing every batch's reads (filters on a `readStream` DSv2 relation
-    * push down like batch). See [[FileGridMicroBatchStream]].
-    */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    // the layout baseline is the TABLE's first file, not the variable-pruned
-    // list's — a stream whose filtered variable has no file yet must start
-    // with empty batches, not crash. A cold-start stream (empty dir at
-    // open) has NO baseline yet; the first arrival fixes the layout.
-    new FileGridMicroBatchStream(dir, baseline.orElse(files.headOption.map(_._2)),
-      varNames, section, required)
-  override def description(): String =
-    s"FileGridScan files=${files.map(_._1).mkString(",")} section=$section " +
-      s"pushed=[${pushed.mkString(", ")}]"
-
-  /** Exact cardinality from headers + section (homogeneous layout enforced
-    * at open, so one per-file clamp covers all files).
-    */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = files.headOption.map { case (_, h) =>
-      files.size * GridSource.sectionDims(GridSource.clampTo(section, h.t, h.y, h.x))
-    }.getOrElse(0L)
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(rows * GridSource.RowWidthBytes)
-    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
-  }
-
-  /** One partition per (file, t) slice in the section — a real file-backed
-    * source opens one file region per task.
-    */
-  override def planInputPartitions(): Array[InputPartition] =
-    (for {
-      (path, header) <- files
-      t <- section.t0 to math.min(section.t1, header.t - 1)
-      if t >= 0
-    } yield FileGridPartition(path, header, t, section): InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FileGridReaderFactory(required)
-}
-
-case class FileGridPartition(path: String, header: GridFile.Header, t: Int,
-  section: GridSource.Section) extends InputPartition
-
-/** Offset = the set of `.grf` files already processed (paths only — the
-  * same seen-files bookkeeping Spark's own FileStreamSource keeps in its
-  * log; bounded by file count, not data volume). Correct for ANY arrival
+/** Offset = the set of files already processed (paths only — the same
+  * seen-files bookkeeping Spark's own FileStreamSource keeps in its log;
+  * bounded by file count, not data volume). Correct for ANY arrival
   * order — no monotone-naming assumption.
   */
-case class GridFilesOffset(names: Seq[String])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
+case class GridFilesOffset(names: Seq[String]) extends Offset {
   override def json(): String =
     org.json4s.jackson.JsonMethods.compact(
       org.json4s.JsonDSL.seq2jvalue(names.sorted.map(
@@ -729,20 +816,15 @@ object GridFilesOffset {
   }
 }
 
-/** Micro-batch streaming ingest of grid containers: each trigger lists the
-  * directory, and files not in the start offset become the batch — planned
-  * as the SAME (file, t)-sliced partitions the batch scan uses, with the
-  * SAME pushed Section/variable narrowing (a `readStream` filter pushes down
-  * through V2ScanRelationPushDown exactly like batch). New files must match
-  * the table's grid layout — the homogeneity contract is enforced per batch,
-  * same as at table open. At scale this is the nightly-archive ingest shape:
-  * an object-store prefix accrues one container per (variable, day) and each
-  * trigger reads only the new arrivals, metadata-first (headers on the
-  * driver, cell bytes in executor tasks).
-  */
-/** Shared dir-listing micro-batch plumbing for the `.grf` container
-  * sources: offsets are the seen-file set, a batch is the freshly listed
-  * files — subclasses translate fresh files into their partition shape.
+/** Micro-batch streaming ingest of a grid dir: each trigger lists the
+  * directory, and files not in the start offset become the batch — opened
+  * by the table's container, held to the table's layout (a cold-start
+  * stream adopts the first arrival's), and packed with the SAME pushed
+  * section/variable narrowing the batch scan uses. At scale this is the
+  * nightly-archive ingest shape: an object-store prefix accrues one
+  * container per (variable, day) and each trigger reads only the new
+  * arrivals, metadata-first (headers on the driver, cell bytes in executor
+  * tasks).
   *
   * ATOMIC-PUBLISH CONTRACT (same as Spark's own FileStreamSource): a file
   * must appear in the directory complete — write it elsewhere (or under a
@@ -752,24 +834,23 @@ object GridFilesOffset {
   * `._COPYING_`, or a leading `.`/`_` hidden marker) are skipped until the
   * rename lands.
   */
-abstract class DirMicroBatchStream(dir: String)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  protected def partitionsFor(fresh: Seq[String]): Array[InputPartition]
+class DirMicroBatchStream(table: GridTable, varNames: Option[Set[String]],
+    section: GridSource.Section, required: StructType) extends MicroBatchStream {
+  private val (dir, container) = table.source.get
+  private val family = container.family
+  private val guard = new LayoutGuard(table.base)
 
   private def listNow(): Seq[String] = {
     val names = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filterNot(f => DirMicroBatchStream.isInProgressName(f.getName))
     // the mixed-dir reject at table open only sees files present THEN; a
-    // NetCDF file landing mid-stream (or after a cold start on an empty
-    // dir) would otherwise be silently ignored by the *.grf listing forever
-    names.find(f => NcGrid.isNcName(f.getName)).foreach { f =>
+    // file of the other family landing mid-stream (or after a cold start on
+    // an empty dir) would otherwise be silently ignored forever
+    for (f <- names; other <- FileFamily.of(f.getName) if other != family)
       throw new IllegalArgumentException(
-        s"${f.getAbsolutePath}: NetCDF file arrived in a .grf streaming dir — " +
-          "this table reads .grf containers only; split formats into separate dirs")
-    }
-    names.filter(_.getName.endsWith(".grf")).map(_.getAbsolutePath).sorted.toSeq
+        s"${f.getAbsolutePath}: ${other.name} file arrived in a ${family.name} streaming dir — " +
+          s"this table reads ${family.name} containers only; split formats into separate dirs")
+    names.filter(f => family.accepts(f.getName)).map(_.getAbsolutePath).sorted.toSeq
   }
 
   override def initialOffset(): Offset = GridFilesOffset(Nil)
@@ -779,9 +860,20 @@ abstract class DirMicroBatchStream(dir: String)
   override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val seen = start.asInstanceOf[GridFilesOffset].names.toSet
-    partitionsFor(end.asInstanceOf[GridFilesOffset].names.filterNot(seen))
+    // seen files compare by name inside the one dir: offsets hold absolute
+    // paths, but NetCDF streams checkpointed bare names before the grid
+    // streams were unified, and a resumed stream must not re-ingest those
+    def name(p: String): String = new java.io.File(p).getName
+    val seen = start.asInstanceOf[GridFilesOffset].names.map(name).toSet
+    val units = end.asInstanceOf[GridFilesOffset].names.filterNot(p => seen(name(p))).flatMap { p =>
+      container.open(p).flatMap { case (l, us) =>
+        guard.admit(p, l, "arrived mid-stream; must match"); us }
+    }
+    guard.base.fold(Array.empty[InputPartition])(b => GridPartition.pack(
+      units.filter(u => varNames.forall(_.contains(u.variable))), b._2, section))
   }
+
+  override def createReaderFactory(): PartitionReaderFactory = new GridReaderFactory(required)
 }
 
 object DirMicroBatchStream {
@@ -792,345 +884,4 @@ object DirMicroBatchStream {
   def isInProgressName(n: String): Boolean =
     n.startsWith(".") || n.startsWith("_") ||
       n.endsWith(".tmp") || n.endsWith(".inprogress") || n.endsWith("._COPYING_")
-}
-
-class FileGridMicroBatchStream(dir: String, base0: Option[GridFile.Header],
-    varNames: Option[Set[String]], section: GridSource.Section,
-    required: StructType) extends DirMicroBatchStream(dir) {
-
-  // cold start: the first arrival's layout becomes the stream's baseline.
-  // (After a checkpoint restart the table re-open re-lists the dir, so a
-  // restarted stream always gets its baseline from the table.)
-  private var base: Option[GridFile.Header] = base0
-
-  override protected def partitionsFor(fresh: Seq[String]): Array[InputPartition] = {
-    val headers = fresh.map(p => p -> GridFile.readHeader(p))
-    headers.foreach { case (p, h) =>
-      base match {
-        case Some(b) => GridFile.requireSameLayout(p, h, b,
-          "arrived mid-stream; must match the table's first file")
-        case None =>
-          // same validation the table open runs on ITS first file
-          require(h.stepMicros > 0, s"$p: non-positive time step")
-          base = Some(h)
-      }
-    }
-    (for {
-      (path, header) <- headers
-      if varNames.forall(_.contains(header.variable))
-      // clamp per file: a cold-start section is unbounded until the first
-      // file defines the grid, and the reader iterates section bounds
-      sec = GridSource.clampTo(section, header.t, header.y, header.x)
-      t <- sec.t0 to sec.t1
-      if t >= 0
-    } yield FileGridPartition(path, header, t, sec): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FileGridReaderFactory(required)
-}
-
-class FileGridReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new FileGridReader(p.asInstanceOf[FileGridPartition], required)
-}
-
-/** Shared row-walk of a clamped section over an affine-coordinate file
-  * grid: the projection (variable/ts constants, global y/x indices, affine
-  * lat/lon, fill→NULL) and the y/x odometer exist ONCE; subclasses supply
-  * the positioned byte read for one `[t, y, x0..x1]` row.
-  */
-abstract class SectionRowReader(s: GridSource.Section, required: StructType,
-    variable: String, tsMicros: Long,
-    lat0: Double, dlat: Double, lon0: Double, dlon: Double,
-    isFill: Double => Boolean) extends PartitionReader[InternalRow] {
-
-  /** Read row `y` of the partition's timestep over `[s.x0, s.x1]`. */
-  protected def fetchRow(y: Int): Array[Double]
-
-  private var y = s.y0 - 1
-  private var x = s.x1 // forces a row load on first next()
-  private var row: Array[Double] = _
-
-  private val fieldGen: Array[(Int, Int) => Any] = required.fields.map { f =>
-    f.name match {
-      case "variable" => (_: Int, _: Int) => UTF8String.fromString(variable)
-      case "ts" => (_: Int, _: Int) => tsMicros
-      case "y" => (yy: Int, _: Int) => yy
-      case "x" => (_: Int, xx: Int) => xx
-      case "lat" => (yy: Int, _: Int) => lat0 + yy * dlat
-      case "lon" => (_: Int, xx: Int) => lon0 + xx * dlon
-      case "value" => (_: Int, xx: Int) =>
-        val v = row(xx - s.x0)
-        if (isFill(v)) null else v
-    }
-  }
-
-  override def next(): Boolean = {
-    if (s.x0 > s.x1) return false // empty x-section: nothing to read
-    x += 1
-    if (x > s.x1) {
-      y += 1
-      if (y > s.y1) return false
-      row = fetchRow(y)
-      x = s.x0
-    }
-    y <= s.y1
-  }
-
-  override def get(): InternalRow =
-    InternalRow.fromSeq(fieldGen.toSeq.map(g => g(y, x)))
-}
-
-/** Seeks and reads exactly the `[t, y0..y1, x0..x1]` section of its file —
-  * one positioned read per y row (`Gddp.scala:224-226`); fill → SQL NULL.
-  */
-class FileGridReader(p: FileGridPartition, required: StructType)
-    extends SectionRowReader(p.section, required, p.header.variable,
-      p.header.epochMicros + p.t.toLong * p.header.stepMicros,
-      p.header.lat0, p.header.dlat, p.header.lon0, p.header.dlon,
-      p.header.isFill) {
-  private val rdr = new GridFile.SectionReader(p.path, p.header)
-  override protected def fetchRow(y: Int): Array[Double] =
-    rdr.readRow(p.t, y, p.section.x0, p.section.x1)
-  override def close(): Unit = rdr.close()
-}
-
-// ---- tiled path: GRF2 containers with per-file spatial footprints ----
-
-/** Table over a directory of GRF2 containers ([[GridFile.TiledHeader]]):
-  * each file packs several spatial tiles of one variable's global cube, so
-  * unlike [[FileGridTable]] a file covers a SUBSET of the y/x plane and a
-  * pushed 2-D range can skip whole files — the layout
-  * [[graft.operators.Scale.writeZOrderedGrid]] produces by packing
-  * Morton-consecutive tiles together.
-  */
-class TiledGridTable(dir: String) extends Table with SupportsRead {
-  private[sources] val files: Seq[(String, GridFile.TiledHeader)] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".grf")).sortBy(_.getName)
-      .map(f => f.getAbsolutePath -> GridFile.readTiledHeader(f.getAbsolutePath)).toSeq
-
-  // one table = one GLOBAL grid layout; tiles differ, the grid not. Empty
-  // dir = valid cold start, as in [[FileGridTable]].
-  files.headOption.foreach { case (f0, h0) =>
-    files.foreach { case (p, h) =>
-      GridFile.requireSameLayout(p, h, h0, s"must match $f0")
-    }
-    require(h0.stepMicros > 0, s"$f0: non-positive time step")
-  }
-
-  override def name(): String = s"graft_grid_tiled($dir)"
-  override def schema(): StructType = GridSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TiledGridScanBuilder(dir, files)
-}
-
-/** Same pushdown contract as the one-cube-per-file path; the payoff lands at
-  * planning time, where per-file tile directories turn the section into a
-  * file-skip decision.
-  */
-class TiledGridScanBuilder(dir: String, files: Seq[(String, GridFile.TiledHeader)])
-    extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
-  // cold start (empty dir): nothing section-shaped is reported pushed —
-  // see [[FileGridScanBuilder]]
-  private val dims0: Option[GridFile.TiledHeader] = files.headOption.map(_._2)
-  private var section = dims0 match {
-    case Some(d) => GridSource.Section(
-      t1 = d.t - 1, y1 = d.y - 1, x1 = d.x - 1,
-      epoch = d.epochMicros, step = d.stepMicros)
-    case None => GridSource.Section(
-      t1 = Int.MaxValue - 1, y1 = Int.MaxValue - 1, x1 = Int.MaxValue - 1,
-      epoch = 0L, step = 1L) // placeholders; never consulted (no narrowing)
-  }
-  private var varNames: Option[Set[String]] = None
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = GridSource.schema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (handled, rest) = filters.partition {
-      // varNames holds the FILTER's values, not their intersection with the
-      // files present at open: a streaming read must admit files for a
-      // filtered variable that arrive AFTER the stream starts (the filter
-      // is reported pushed, so Spark never re-applies it)
-      case EqualTo("variable", v: String) =>
-        varNames = Some(varNames.map(_.intersect(Set(v))).getOrElse(Set(v)))
-        true
-      case In("variable", vs) =>
-        val names = vs.collect { case s: String => s }.toSet
-        varNames = Some(varNames.map(_.intersect(names)).getOrElse(names))
-        true
-      case f if dims0.nonEmpty => section.narrow(f) match {
-        case Some(s) => section = s; true
-        case None => false
-      }
-      case _ => false
-    }
-    dims0.foreach { dims =>
-      rest.foreach { f =>
-        section = GridSource.narrowCoordConservative(section, f,
-          dims.lat0, dims.dlat, dims.lon0, dims.dlon)
-      }
-    }
-    pushed = handled
-    rest
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  /** Same metadata-aggregate contract as the other grid tables, answered
-    * from the tile DIRECTORIES: count/min/max come from per-tile section
-    * clamps — no tile bytes are read.
-    */
-  private var aggPlan: Option[Seq[GridAgg]] = None
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    dims0.nonEmpty && GridAgg.translate(agg).isDefined
-  override def pushAggregation(agg: Aggregation): Boolean =
-    if (dims0.isEmpty) false // cold start: let Spark aggregate the empty scan
-    else GridAgg.translate(agg) match {
-      case some @ Some(_) => aggPlan = some; true
-      case None => false
-    }
-
-  private def kept: Seq[(String, GridFile.TiledHeader)] =
-    files.filter { case (_, h) => varNames.forall(_.contains(h.variable)) }
-
-  override def build(): Scan = aggPlan match {
-    case Some(plan) => new TiledGridAggScan(kept.map(_._2), section, plan)
-    case None => new TiledGridScan(kept, section, required, pushed, dir, varNames,
-      files.headOption.map(_._2))
-  }
-}
-
-/** Directory-answered aggregate over the tiled table: clamp the section to
-  * every surviving tile, combine closed-form counts/bounds — zero data
-  * bytes, like [[FileGridAggScan]] but per tile instead of per file.
-  */
-class TiledGridAggScan(headers: Seq[GridFile.TiledHeader],
-    section: GridSource.Section, plan: Seq[GridAgg])
-    extends SingleRowAggScan(plan) {
-
-  override def description(): String =
-    s"TiledGridAggScan vars=${headers.map(_.variable).mkString(",")} section=$section " +
-      s"pushedAggregates=[${plan.mkString(", ")}]"
-
-  override protected def resultRow(): Seq[Any] =
-    GridAgg.combineUnits(
-      for {
-        h <- headers
-        e <- h.tiles
-        c <- GridSource.clampToTile(section, h, e)
-      } yield (GridAgg.UnitMeta(h.epochMicros, h.stepMicros,
-        h.lat0, h.dlat, h.lon0, h.dlon), c),
-      plan)
-}
-
-class TiledGridScan(files: Seq[(String, GridFile.TiledHeader)],
-    section: GridSource.Section, required: StructType, pushed: Array[Filter],
-    // no defaults — see [[FileGridScan]]
-    dir: String, varNames: Option[Set[String]],
-    baseline: Option[GridFile.TiledHeader])
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  /** Streaming twin of [[FileGridScan.toMicroBatchStream]] for tiled
-    * containers: new arrivals plan only their section-surviving tiles, so
-    * the Morton file/tile skip applies per micro-batch too.
-    */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TiledGridMicroBatchStream(dir, baseline.orElse(files.headOption.map(_._2)),
-      varNames, section, required)
-  override def description(): String =
-    s"TiledGridScan files=${files.map(_._1).mkString(",")} section=$section " +
-      s"pushed=[${pushed.mkString(", ")}]"
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = (for {
-      (_, h) <- files; e <- h.tiles
-      c <- GridSource.clampToTile(section, h, e)
-    } yield (c.t1 - c.t0 + 1).toLong * (c.y1 - c.y0 + 1) * (c.x1 - c.x0 + 1)).sum
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(rows * GridSource.RowWidthBytes)
-    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
-  }
-
-  /** One partition per (file, tile, t) the section touches. A file none of
-    * whose tiles intersect contributes NOTHING — the file skip that the
-    * Morton packing makes frequent for 2-D ranges.
-    */
-  override def planInputPartitions(): Array[InputPartition] =
-    (for {
-      (path, h) <- files
-      e <- h.tiles
-      c <- GridSource.clampToTile(section, h, e).toSeq
-      t <- c.t0 to c.t1
-    } yield TiledGridPartition(path, h, e, t, c): InputPartition).toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TiledGridReaderFactory(required)
-}
-
-case class TiledGridPartition(path: String, header: GridFile.TiledHeader,
-    tile: GridFile.TileEntry, t: Int, section: GridSource.Section)
-  extends InputPartition
-
-/** Micro-batch ingest of GRF2 tiled containers — same seen-file-set offsets
-  * as [[FileGridMicroBatchStream]]; each batch plans only the new files'
-  * section-surviving tiles, so the Morton tile/file skip is per-trigger.
-  */
-class TiledGridMicroBatchStream(dir: String, base0: Option[GridFile.TiledHeader],
-    varNames: Option[Set[String]], section: GridSource.Section,
-    required: StructType) extends DirMicroBatchStream(dir) {
-
-  // cold start: first arrival fixes the layout (see FileGridMicroBatchStream)
-  private var base: Option[GridFile.TiledHeader] = base0
-
-  override protected def partitionsFor(fresh: Seq[String]): Array[InputPartition] = {
-    val headers = fresh.map(p => p -> GridFile.readTiledHeader(p))
-    headers.foreach { case (p, h) =>
-      base match {
-        case Some(b) => GridFile.requireSameLayout(p, h, b,
-          "arrived mid-stream; must match the table's first file")
-        case None =>
-          // same validation the table open runs on ITS first file
-          require(h.stepMicros > 0, s"$p: non-positive time step")
-          base = Some(h)
-      }
-    }
-    (for {
-      (path, h) <- headers
-      if varNames.forall(_.contains(h.variable))
-      e <- h.tiles
-      c <- GridSource.clampToTile(section, h, e).toSeq
-      t <- c.t0 to c.t1
-    } yield TiledGridPartition(path, h, e, t, c): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TiledGridReaderFactory(required)
-}
-
-class TiledGridReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new TiledGridReader(p.asInstanceOf[TiledGridPartition], required)
-}
-
-/** Reads its tile's slice of the section — global indices in, tile-local
-  * offsets at the byte layer ([[GridFile.TiledSectionReader]]).
-  */
-class TiledGridReader(p: TiledGridPartition, required: StructType)
-    extends SectionRowReader(p.section, required, p.header.variable,
-      p.header.epochMicros + p.t.toLong * p.header.stepMicros,
-      p.header.lat0, p.header.dlat, p.header.lon0, p.header.dlon,
-      p.header.isFill) {
-  private val rdr = new GridFile.TiledSectionReader(p.path, p.header)
-  override protected def fetchRow(y: Int): Array[Double] =
-    rdr.readRow(p.tile, p.t, y, p.section.x0, p.section.x1)
-  override def close(): Unit = rdr.close()
 }

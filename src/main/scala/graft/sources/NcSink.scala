@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** NetCDF-3 export sink: write grid cells back out as one classic `.nc` file
-  * per variable — the inverse of [[NcGridTable]], closing the round trip
+  * per variable — the inverse of a NetCDF [[GridTable]], closing the round trip
   * (query → transform → standard container another tool can open).
   *
   * Scale shape mirrors the PNG render sink: cells repartition by variable and
@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * (NaN).
   *
   * Deliberately NOT spatially tiled: the `.nc` table contract is one grid
-  * layout per directory ([[NcGridTable]] reads every file at the same byte
-  * offsets), so per-file spatial footprints would be a silent misparse
+  * layout per directory (a NetCDF [[GridTable]] reads every file at the same
+  * byte offsets), so per-file spatial footprints would be a silent misparse
   * waiting to happen. The Morton-packed, file-skipping ingest layout lives
   * in the library's own container instead —
   * [[graft.operators.Scale.writeZOrderedGrid]] → GRF2

@@ -54,11 +54,12 @@ class GridFileSpec extends AnyFunSuite {
         col("ts") >= lit("1990-01-06 00:00:00").cast("timestamp"))
     val scanDesc = df.queryExecution.executedPlan.toString
     assert(scanDesc.contains("tasmax.grf") && !scanDesc.contains("tasmin.grf"), scanDesc)
-    // Section(vars, t0, t1, y0, y1, x0, x1, …): t narrowed to 5..7, y to 5..8,
-    // x to 0..3 by the pushed predicates
-    assert(scanDesc.contains(",5,7,5,8,0,3,"), scanDesc)
-    // 3 surviving days x 1 file = 3 partitions; 4 y-rows x 4 xs each
-    assert(df.rdd.getNumPartitions == 3)
+    // Section(t0, t1, y0, y1, x0, x1): t narrowed to 5..7, y to 5..8, x to
+    // 0..3 by the pushed predicates
+    assert(scanDesc.contains("section=Section(5,7,5,8,0,3)"), scanDesc)
+    // 3 surviving days x 1 file, packed into one partition; 4 y-rows x 4 xs each
+    assert(TestSpark.gridSlices(df) == (5 to 7).map("tasmax" -> _))
+    assert(df.rdd.getNumPartitions == 1)
     assert(df.count() == 3 * 4 * 4)
     // values identical to the generator under the same predicate
     val gen = GridData.cells(spark)

@@ -64,27 +64,37 @@ class GridSourceSpec extends AnyFunSuite {
   }
 
   test("far-out ts bounds with a tiny step clamp instead of wrapping toInt") {
-    // step = 1 µs: a year-3000 bound puts the slice index at ~3.2e16, far past
-    // Int range. The old truncation wrapped (possibly negative) and corrupted
-    // the section silently; the clamp must keep the semantics exact.
-    val s = graft.sources.GridSource.Section(step = 1L)
-    val far = java.time.Instant.parse("3000-01-01T00:00:00Z")
-    val before = java.time.Instant.parse("1970-01-01T00:00:00Z") // pre-epoch
-    import org.apache.spark.sql.sources.{GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
-    // lower bound far in the future -> section must be EMPTY, not wrapped
-    val hi1 = s.narrow(GreaterThanOrEqual("ts", far)).get
-    val hi2 = s.narrow(GreaterThan("ts", far)).get
-    assert(hi1.t0 > hi1.t1 && hi2.t0 > hi2.t1, s"$hi1 / $hi2 should be empty")
-    // upper bound far in the future -> full section (conservative, correct)
-    val full = s.narrow(LessThanOrEqual("ts", far)).get
-    assert(full.t0 == s.t0 && full.t1 == s.t1, full.toString)
-    // upper bound before the epoch -> EMPTY, not clamped up to slice 0
-    val lo1 = s.narrow(LessThanOrEqual("ts", before)).get
-    val lo2 = s.narrow(LessThan("ts", before)).get
-    assert(lo1.t0 > lo1.t1 && lo2.t0 > lo2.t1, s"$lo1 / $lo2 should be empty")
-    // lower bound before the epoch -> full section
-    val full2 = s.narrow(GreaterThanOrEqual("ts", before)).get
-    assert(full2.t0 == s.t0 && full2.t1 == s.t1, full2.toString)
+    // step = 1 µs: a year-3000 bound sits ~3.2e16 slices past the epoch, far
+    // past Int range. A bound mapped to a slice index by truncation wraps
+    // (possibly negative) and corrupts the section silently; the scan must
+    // keep the semantics of these claimed-handled filters exact.
+    val dir = java.nio.file.Files.createTempDirectory("graft-grf-us").toFile.getAbsolutePath
+    graft.sources.GridFile.write(s"$dir/v.grf", "v", 4, 2, 3,
+      graft.sources.GridSource.epochMicros, 1L, 44.0, 0.05, -80.0, 0.05) {
+      (t, y, x) => Some((t * 100 + y * 10 + x).toDouble) }
+    val tbl = spark.read.format(classOf[graft.sources.GridSource].getName)
+      .option("path", dir).load()
+    val all = 4L * 2 * 3
+    def ts(s: String) = lit(s).cast("timestamp")
+    for ((cond, expect, tag) <- Seq(
+      // lower bound far in the future -> EMPTY, not wrapped
+      (col("ts") >= ts("3000-01-01 00:00:00"), 0L, "gte-far"),
+      (col("ts") > ts("3000-01-01 00:00:00"), 0L, "gt-far"),
+      // upper bound far in the future -> every row
+      (col("ts") <= ts("3000-01-01 00:00:00"), all, "lte-far"),
+      // upper bound before the epoch -> EMPTY, not clamped up to slice 0
+      (col("ts") <= ts("1970-01-01 00:00:00"), 0L, "lte-before"),
+      (col("ts") < ts("1970-01-01 00:00:00"), 0L, "lt-before"),
+      // lower bound before the epoch -> every row
+      (col("ts") >= ts("1970-01-01 00:00:00"), all, "gte-before"))) {
+      val df = tbl.filter(cond)
+      // handled by the scan: no ts filter left for Spark to re-evaluate
+      assert(df.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FilterExec => f
+      }.isEmpty, s"$tag\n${df.queryExecution.executedPlan}")
+      assert(df.count() == expect, s"$tag (pushed COUNT)")
+      assert(df.collect().length == expect, tag)
+    }
   }
 
   test("lat/lon bbox narrows the section conservatively; results stay exact") {
@@ -139,12 +149,16 @@ class GridSourceSpec extends AnyFunSuite {
 
   test("variable + time predicates prune partitions at planning time") {
     val full = SourceQueries.gridTable(spark)
-    assert(full.rdd.getNumPartitions == 2 * GridData.T)
+    // every (variable, day) slice, packed into one partition per variable
+    assert(TestSpark.gridSlices(full) ==
+      Seq("tasmax", "tasmin").flatMap(v => (0 until GridData.T).map(v -> _)))
+    assert(full.rdd.getNumPartitions == 2)
     val sliced = full.filter(col("variable") === "tasmax" &&
       col("ts").between(lit("1990-01-03 00:00:00").cast("timestamp"),
         lit("1990-01-06 23:59:59").cast("timestamp")))
-    // 1 variable × 4 days -> 4 planned partitions (12 pruned before read)
-    assert(sliced.rdd.getNumPartitions == 4)
+    // 1 variable × 4 days planned (12 slices pruned before read)
+    assert(TestSpark.gridSlices(sliced) == (2 to 5).map("tasmax" -> _))
+    assert(sliced.rdd.getNumPartitions == 1)
   }
 
   test("index-range pushdown generates only the hyperslab") {

@@ -38,7 +38,7 @@ class NcGridSourceSpec extends AnyFunSuite {
     // the 75 cells pack into one partition …
     assert(df.rdd.getNumPartitions == 1)
     // … that plans exactly the surviving (cube, t) slices: tasmax, days 2..4
-    assert(TestSpark.ncSlices(df) == Seq("tasmax" -> 2, "tasmax" -> 3, "tasmax" -> 4))
+    assert(TestSpark.gridSlices(df) == Seq("tasmax" -> 2, "tasmax" -> 3, "tasmax" -> 4))
   }
 
   /** Run `f` with the given SQL confs set, restoring the previous values. */
@@ -64,7 +64,7 @@ class NcGridSourceSpec extends AnyFunSuite {
       (SourceQueries.nc4Dir, cells, 20 * 30, 8),
       (SourceQueries.ncCurvDir, curvCells, 10 * 12, 4))
     def runs(df: org.apache.spark.sql.DataFrame) =
-      TestSpark.ncPartitions(df).map(p => (p.cube.varName, p.ts.toSeq))
+      TestSpark.gridPartitions(df).map(p => (p.unit.variable, p.ts.toSeq))
     for ((dir, expect, sliceCells, t) <- fixtures) {
       val cubes = expect.map(_.getString(0)).distinct
       // three slices a partition: each cube splits 3 + 3 + 2 (8 days) or 3 + 1
@@ -233,11 +233,14 @@ class NcGridSourceSpec extends AnyFunSuite {
     Seq(">=" -> (_ >= _), ">" -> (_ > _), "<=" -> (_ <= _), "<" -> (_ < _))
 
   test("1-D lat/lon comparisons are handled exactly at a stored coordinate, both orientations") {
-    for (dir <- Seq(SourceQueries.ncDir, descDir)) {
-      val df = gridAt(dir)
-      val cube = NcGrid.openCubes(new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".nc")).minBy(_.getName).getPath).head
-      val (lats, lons) = NcGrid.coordArrays(cube)
+    // NetCDF (ascending, descending), GRF1 and the generator: the GRF and
+    // generator axes are closed form, and their readers emit those very doubles
+    for ((dir, df) <- Seq(SourceQueries.ncDir, descDir, SourceQueries.grfDir).map(d => d -> gridAt(d)) :+
+        ("generator" -> SourceQueries.gridTable(spark))) {
+      // the stored axis values in index order, as the scan surfaces them
+      def axis(idx: String, c: String): Array[Double] =
+        df.select(idx, c).distinct().orderBy(idx).collect().map(_.getDouble(1))
+      val (lats, lons) = (axis("y", "lat"), axis("x", "lon"))
       for ((field, coords) <- Seq("lat" -> lats, "lon" -> lons);
            v <- Seq(coords(3), coords(coords.length - 1));
            (op, cmp) <- comparisons) {
@@ -348,13 +351,13 @@ class NcGridSourceSpec extends AnyFunSuite {
   test("NcCube holds O(1) time metadata, never the per-file time array") {
     // the driver retains one NcCube per (file, variable); at 100 TB that is
     // millions of cubes, so dim-sized arrays must not live on them — exact
-    // ts narrowing re-reads ONE array per scan via NcGrid.timesOf instead
+    // ts narrowing searches the ONE time axis the table keeps instead
     assert(!classOf[graft.sources.NcCube].getDeclaredFields
       .exists(_.getType.isArray), "NcCube must not retain array-typed state")
-    val cubes = graft.sources.NcGrid.openCubes(SourceQueries.ncDir + "/tasmax.nc")
-    val times = graft.sources.NcGrid.timesOf(cubes.head)
-    assert(cubes.head.tMin == times.head && cubes.head.tMax == times.last)
-    assert(times.length == cubes.head.t)
+    val Seq((cube, layout)) = NcGrid.openCubes(SourceQueries.ncDir + "/tasmax.nc")
+    assert(layout.times.length == cube.t)
+    assert(layout.times(0) == GridSource.epochMicros &&
+      layout.times(cube.t - 1) == GridSource.epochMicros + (cube.t - 1) * 86400000000L)
   }
 
   test("NetCDF-4 (HDF5) table reproduces the generator grid exactly") {

@@ -113,8 +113,10 @@ class PlansSpec extends AnyFunSuite {
           lit("1990-01-05 23:59:59").cast("timestamp")) &&
         col("y") >= 2 && col("x").between(3, 27))
     assert(df.queryExecution.executedPlan.toString.contains("FileGridScan"))
-    // tasmin only (variable pruning dropped the tasmax file), days 1..4 of 8
-    assert(df.rdd.getNumPartitions == 4, s"partitions=${df.rdd.getNumPartitions}")
+    // tasmin only (variable pruning dropped the tasmax file), days 1..4 of
+    // 8, packed into one partition
+    assert(df.rdd.getNumPartitions == 1, s"partitions=${df.rdd.getNumPartitions}")
+    assert(TestSpark.gridSlices(df) == (1 to 4).map("tasmin" -> _))
   }
 
   test("q_grid_nc: ts/y/x pushdown plans only the surviving partitions") {
@@ -128,7 +130,7 @@ class PlansSpec extends AnyFunSuite {
     // the section packs into one partition that plans exactly the surviving
     // slices: tasmax only, days 1..6 of 8
     assert(df.rdd.getNumPartitions == 1, s"partitions=${df.rdd.getNumPartitions}")
-    assert(TestSpark.ncSlices(df) == (1 to 6).map("tasmax" -> _))
+    assert(TestSpark.gridSlices(df) == (1 to 6).map("tasmax" -> _))
   }
 
   test("q_quantile_rollup: partial sketch before the shard exchange, two-column scan") {
@@ -145,6 +147,12 @@ class PlansSpec extends AnyFunSuite {
     assert(plan.contains("TiledGridScan"), plan)
     Seq("LessThan(y,10)", "LessThan(x,10)", "GreaterThanOrEqual(ts,")
       .foreach(p => assert(plan.contains(p), s"missing pushed $p in\n$plan"))
+    // the 4 tiles of the y, x < 10 corner per variable, days 2..7 of 8: one
+    // partition per tile
+    val parts = TestSpark.gridPartitions(SparkEntry.queries("q_grid_tiled")(spark, TestSpark.sf))
+    val corner = for (ty <- 0 to 1; tx <- 0 to 1) yield (ty * 5, ty * 5 + 4, tx * 5, tx * 5 + 4)
+    assert(parts.map(p => (p.unit.variable, p.unit.window, p.ts.toSeq)) ==
+      Seq("tasmax", "tasmin").flatMap(v => corner.map(w => (v, w, 2 to 7))), parts)
   }
 
   test("q_scan_partitioned: the day predicate prunes directories, not rows") {

@@ -344,9 +344,8 @@ class ScaleSpec extends AnyFunSuite {
 
   test("z-order tiled .grf ingest: bbox skips whole container files") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
     import graft.domain.GridData
-    import graft.sources.{GridSource, TiledGridPartition}
+    import graft.sources.GridSource
     val cells = GridData.cells(spark)
       .select("variable", "ts", "y", "x", "lat", "lon", "value")
     def writeDir(morton: Boolean): String = {
@@ -373,12 +372,12 @@ class ScaleSpec extends AnyFunSuite {
     // Morton packing keeps file footprints square-ish (2 of 6 touched), the
     // row-major strawman smears the strip across long thin files (4 of 6)
     def filesTouched(dir: String): Int = {
-      val df = table(dir).filter(col("variable") === "tasmax" && col("x") <= 4)
-      val rel = df.queryExecution.optimizedPlan.collectFirst {
-        case r: DataSourceV2ScanRelation => r
-      }.getOrElse(fail("no DSv2 scan in plan"))
-      rel.scan.toBatch.planInputPartitions()
-        .map(_.asInstanceOf[TiledGridPartition].path).distinct.length
+      val parts = TestSpark.gridPartitions(
+        table(dir).filter(col("variable") === "tasmax" && col("x") <= 4))
+      // exactly the x = 0..4 tile column of tasmax, every day, whatever the packing
+      assert(parts.map(p => (p.unit.variable, p.unit.window, p.ts.toSeq)).sortBy(_._2._1) ==
+        (0 until 4).map(ty => ("tasmax", (ty * 5, ty * 5 + 4, 0, 4), 0 until GridData.T)), dir)
+      parts.map(_.unit.path).distinct.length
     }
     val (zf, rf) = (filesTouched(zdir), filesTouched(rdir))
     assert(zf <= rf / 2, s"z-order touched $zf files, row-major $rf")

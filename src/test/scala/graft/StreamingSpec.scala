@@ -453,6 +453,23 @@ class StreamingSpec extends AnyFunSuite {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("NetCDF file arrived")), msgs(e).mkString(" | "))
+    // and the other direction: a .grf landing in a NetCDF stream dir
+    val ncDir = java.nio.file.Files.createTempDirectory("graft-nc-mixed").toFile.getAbsolutePath
+    java.nio.file.Files.copy(java.nio.file.Paths.get(graft.sources.SourceQueries.ncDir, "tasmax.nc"),
+      java.nio.file.Paths.get(ncDir, "tasmax.nc"))
+    val q2 = spark.readStream.format(classOf[GridSource].getName)
+      .option("path", ncDir).load()
+      .writeStream.format("memory").queryName("nc_mixed").outputMode("append").start()
+    q2.processAllAvailable()
+    assert(spark.table("nc_mixed").count() > 0)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/tasmax.grf"),
+      java.nio.file.Paths.get(ncDir, "late.grf"))
+    val e2 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q2.processAllAvailable()
+    }
+    q2.stop()
+    assert(msgs(e2).exists(_.contains(".grf file arrived in a NetCDF streaming dir")),
+      msgs(e2).mkString(" | "))
   }
 
   test("grid stream restart recovers the seen-file offset from the checkpoint") {
@@ -489,6 +506,46 @@ class StreamingSpec extends AnyFunSuite {
     val perVar = out.groupBy("variable").count()
       .as[(String, Long)].collect().toMap
     assert(perVar == Map("tasmax" -> 32L, "tasmin" -> 32L), s"got $perVar")
+  }
+
+  test("NetCDF stream restart resumes from a checkpoint offset of bare file names") {
+    import java.nio.file.{Files, Paths}
+    import graft.sources.{GridSource, SourceQueries}
+    val dir = Files.createTempDirectory("graft-nc-ckpt").toFile.getAbsolutePath
+    val ckpt = Files.createTempDirectory("graft-nc-ckpt-loc").toFile.getAbsolutePath
+    val outDir = Files.createTempDirectory("graft-nc-ckpt-out").toFile.getAbsolutePath
+    def land(f: String): Unit = Files.copy(Paths.get(SourceQueries.ncDir, f), Paths.get(dir, f))
+    def start() = spark.readStream.format(classOf[GridSource].getName)
+      .option("path", dir).load()
+      .writeStream.format("parquet").option("path", outDir)
+      .option("checkpointLocation", ckpt).outputMode("append").start()
+    land("tasmax.nc")
+    val q1 = start()
+    q1.processAllAvailable(); q1.stop()
+    val first = spark.read.parquet(outDir).count()
+    assert(first > 0)
+    // NetCDF streams once checkpointed bare file names, not paths: rewrite
+    // the committed offsets to that form (dropping their checksums) so the
+    // restart resumes from an offset such a stream wrote
+    val offsets = new java.io.File(ckpt, "offsets")
+    val logs = offsets.listFiles().filter(_.getName.forall(_.isDigit))
+    assert(logs.nonEmpty, "no committed offset to rewrite")
+    logs.foreach { f =>
+      val text = new String(Files.readAllBytes(f.toPath), "UTF-8")
+      val bare = text.replace(s"$dir/", "")
+      assert(bare != text && bare.contains("\"tasmax.nc\""), text)
+      Files.write(f.toPath, bare.getBytes("UTF-8"))
+      new java.io.File(offsets, s".${f.getName}.crc").delete()
+    }
+    land("tasmin.nc")
+    val q2 = start()
+    q2.processAllAvailable(); q2.stop()
+    val out = spark.read.parquet(outDir)
+    import spark.implicits._
+    val perVar = out.groupBy("variable").count().as[(String, Long)].collect().toMap
+    assert(perVar == Map("tasmax" -> first, "tasmin" -> first),
+      s"restart re-read or lost files: $perVar")
+    assert(out.select("variable", "ts", "y", "x").distinct().count() == out.count())
   }
 
   test("tiled GRF2 source streams new containers as micro-batches") {

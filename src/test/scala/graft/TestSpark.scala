@@ -38,13 +38,13 @@ object TestSpark {
         }
     }.flatten.toSet
 
-  /** The NetCDF scan partitions the physical plan of `df` reads. */
-  def ncPartitions(df: org.apache.spark.sql.DataFrame): Seq[graft.sources.NcGridPartition] =
+  /** The grid scan partitions the physical plan of `df` reads. */
+  def gridPartitions(df: org.apache.spark.sql.DataFrame): Seq[graft.sources.GridPartition] =
     df.queryExecution.sparkPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
-    }.flatten.collect { case p: graft.sources.NcGridPartition => p }
+    }.flatten.collect { case p: graft.sources.GridPartition => p }
 
   /** The (variable, t) slices those partitions plan, in scan order. */
-  def ncSlices(df: org.apache.spark.sql.DataFrame): Seq[(String, Int)] =
-    ncPartitions(df).flatMap(p => p.ts.toSeq.map(p.cube.varName -> _))
+  def gridSlices(df: org.apache.spark.sql.DataFrame): Seq[(String, Int)] =
+    gridPartitions(df).flatMap(p => p.ts.toSeq.map(p.unit.variable -> _))
 }
