@@ -749,14 +749,20 @@ class GridReaderFactory(required: StructType) extends PartitionReaderFactory {
     new GridReader(p.asInstanceOf[GridPartition], required)
 }
 
-/** Executor-side section read of one unit: opens it once per partition,
-  * then walks the partition's time slices in turn with one positioned read
-  * per `[t, y, x0..x1]` row; fill → SQL NULL, scale/offset applied.
+/** Executor-side section read of one unit's partition: every (ts, y, x)
+  * cell of its time slices yields one row, in t, y, x order; fill → SQL
+  * NULL, scale/offset applied. It reads only what `required` projects: the
+  * index columns come from the partition, stored values are read one
+  * `[t, y, x0..x1]` row at a time only when `value` is required, and the
+  * unit is opened (at most once) only when `value`, `lat` or `lon` is — so
+  * a `variable`/`ts` scan such as the catalog touches no data file.
   */
 class GridReader(p: GridPartition, required: StructType) extends PartitionReader[InternalRow] {
   private val s = p.section
   private val u = p.unit
-  private val rdr = u.open()
+  private var opened: UnitReader = null
+  private def rdr: UnitReader = { if (opened == null) opened = u.open(); opened }
+  private val readsValue = required.fieldNames.contains("value")
   private val name = UTF8String.fromString(u.variable)
   private var i = 0 // the slice being read: p.ts(i)
   private var y = s.y0 - 1
@@ -785,7 +791,7 @@ class GridReader(p: GridPartition, required: StructType) extends PartitionReader
         if (i == p.ts.length) return false
         y = s.y0
       }
-      row = rdr.readRow(p.ts(i), y, s.x0, s.x1)
+      if (readsValue) row = rdr.readRow(p.ts(i), y, s.x0, s.x1)
       x = s.x0
     }
     true
@@ -794,7 +800,7 @@ class GridReader(p: GridPartition, required: StructType) extends PartitionReader
   override def get(): InternalRow =
     InternalRow.fromSeq(fieldGen.toSeq.map(g => g(y, x)))
 
-  override def close(): Unit = rdr.close()
+  override def close(): Unit = if (opened != null) opened.close()
 }
 
 /** Offset = the set of files already processed (paths only — the same

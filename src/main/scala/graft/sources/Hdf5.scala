@@ -151,8 +151,15 @@ object Hdf5 {
         * resolved file its layout addresses live in. Data reads redirect
         * there; metadata (dims/dtype/attrs) is already materialized.
         */
-      extFile: Option[String] = None) {
+      extFile: Option[String] = None,
+      /** The fill value message's defined value, decoded with `dtype`: what
+        * an unallocated chunk reads as. None when the file leaves it
+        * undefined, in which case the format's default 0 applies.
+        */
+      fillValue: Option[Double] = None) {
     def attr(n: String): Option[H5Attr] = attrs.find(_.name == n)
+    /** The value of a cell no chunk holds. */
+    def fill: Double = fillValue.getOrElse(0.0)
     def elems: Long = if (dims.isEmpty) 1L else dims.product
   }
 
@@ -965,6 +972,8 @@ object Hdf5 {
   private final case class LayoutMsg(layout: Layout) extends Msg
   private final case class AttrMsg(attr: RawAttr) extends Msg
   private final case class FilterMsg(filters: Seq[H5Filter]) extends Msg
+  /** The fill value message's raw defined value; None when undefined. */
+  private final case class FillMsg(value: Option[Array[Byte]]) extends Msg
   private final case class SymbolTableMsg(btreeAddr: Long, heapAddr: Long) extends Msg
   private final case class LinkInfoMsg(fractalHeapAddr: Long,
       nameBtreeAddr: Long) extends Msg
@@ -994,7 +1003,7 @@ object Hdf5 {
       case 0x0001 => msgs += parseDataspace(body, path); None
       case 0x0002 => msgs += parseLinkInfo(body, path); None
       case 0x0003 => msgs += DatatypeMsg(parseDatatype(body, path)); None
-      case 0x0005 => None // fill value — subset treats data as fully written
+      case 0x0005 => msgs += FillMsg(parseFill(body, path)); None
       case 0x0006 => msgs += parseLink(body, path); None
       case 0x0008 => msgs += parseLayout(body, path); None
       case 0x000A => None // group info — advisory size estimates only
@@ -1007,6 +1016,33 @@ object Hdf5 {
       case t =>
         throw new IllegalArgumentException(
           f"$path: object header message type 0x$t%04X unsupported")
+    }
+  }
+
+  /** Fill value message (0x0005) versions 1–3: the raw defined value, or
+    * None when the message leaves it undefined or at the library default.
+    * v1/v2 store size and value only when the "defined" byte is set (as
+    * libhdf5 decodes both); v3 packs allocation time, write time and the
+    * undefined (bit 4) and has-value (bit 5) flags into one byte.
+    */
+  private[graft] def parseFill(b: ByteBuffer, path: String): Option[Array[Byte]] = {
+    def value(): Option[Array[Byte]] = {
+      val n = b.getInt()
+      require(n >= 0 && n <= b.remaining(),
+        s"$path: fill value size $n overruns its message (${b.remaining()} bytes left)")
+      if (n == 0) None else { val v = new Array[Byte](n); b.get(v); Some(v) }
+    }
+    b.get() match {
+      case 1 | 2 =>
+        b.get(); b.get() // space allocation time, fill value write time
+        if (b.get() != 0) value() else None
+      case 3 =>
+        val flags = b.get() & 0xFF
+        require((flags & 0xC0) == 0 && (flags & 0x30) != 0x30,
+          f"$path: fill value message flags 0x$flags%02X invalid")
+        if ((flags & 0x20) != 0) value() else None
+      case v => throw new IllegalArgumentException(
+        s"$path: fill value message version $v unsupported")
     }
   }
 
@@ -1351,19 +1387,31 @@ object Hdf5 {
     out.toByteArray
   }
 
-  private[graft] def inflateBytes(src: Array[Byte], sizeHint: Int): Array[Byte] = {
+  /** Inflate one deflated chunk straight into an array of its `expected`
+    * size. A stream cut before its end marker is truncated (EOFException);
+    * one that holds more than `expected` bytes is refused before it can
+    * allocate past the chunk's size; one that ends short comes back short,
+    * for the caller's size check.
+    */
+  private[graft] def inflateBytes(src: Array[Byte], expected: Int): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
     try {
       inf.setInput(src)
-      val out = new java.io.ByteArrayOutputStream(math.max(sizeHint, 64))
-      val buf = new Array[Byte](8192)
+      val out = new Array[Byte](expected)
+      val probe = new Array[Byte](1) // once full, only the end marker may remain
+      var n = 0
       while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && inf.needsInput())
+        val k = if (n < expected) inf.inflate(out, n, expected - n) else inf.inflate(probe)
+        if (k > 0 && n == expected)
+          throw new java.util.zip.DataFormatException(
+            s"deflate chunk inflates past its expected $expected bytes")
+        if (k == 0 && inf.needsDictionary())
+          throw new java.util.zip.DataFormatException("deflate chunk needs a preset dictionary")
+        if (k == 0 && inf.needsInput())
           throw new java.io.EOFException("truncated deflate chunk")
-        out.write(buf, 0, n)
+        n += k
       }
-      out.toByteArray
+      if (n == expected) out else java.util.Arrays.copyOf(out, n)
     } finally inf.end() // native memory — release on the error path too
   }
 
@@ -1437,9 +1485,13 @@ object Hdf5 {
   private def defilterChunk(raw: Array[Byte], mask: Int, filters: Seq[H5Filter],
       expected: Int, path: String): Array[Byte] = {
     var bytes = raw
+    def applied(i: Int): Boolean = (mask & (1 << i)) == 0
     filters.zipWithIndex.reverse.foreach { case (f, i) =>
-      if ((mask & (1 << i)) == 0) bytes = f match {
-        case Deflate(_) => inflateBytes(bytes, expected)
+      if (applied(i)) bytes = f match {
+        // inflates to what the filters before it produced: a checksum put
+        // first in the pipeline (netCDF-C's order) adds its 4 bytes
+        case Deflate(_) => inflateBytes(bytes, expected +
+          4 * (0 until i).count(j => applied(j) && filters(j) == Fletcher32))
         case Shuffle(esz) => unshuffleBytes(bytes, esz)
         case Fletcher32 =>
           require(bytes.length >= 4, s"$path: fletcher32 chunk shorter than its checksum")
@@ -1499,7 +1551,20 @@ object Hdf5 {
     val filters = msgs.collectFirst { case FilterMsg(f) => f }.getOrElse(Nil)
     require(filters.isEmpty || layout.isInstanceOf[ChunkedLayout],
       s"$path: $name has filters on a non-chunked layout")
-    H5Dataset(name, addr, dims, dtype, layout, attrs, filters)
+    val fill = msgs.collectFirst { case FillMsg(Some(v)) => v }
+      .filter(_ => numeric(dtype)).map { v =>
+        require(v.length == dtype.size,
+          s"$path: $name fill value is ${v.length} bytes, its type ${dtype.size}")
+        val out = new Array[Double](1)
+        decode(v, dtype, out, 0, 1, path)
+        out(0)
+      }
+    H5Dataset(name, addr, dims, dtype, layout, attrs, filters, fillValue = fill)
+  }
+
+  private def numeric(t: DType): Boolean = t match {
+    case I8 | I16 | I32 | I64 | F32 | F64 => true
+    case _ => false
   }
 
   private def resolveAttr(r: Reader, a: RawAttr, addrToName: Map[Long, String],
@@ -1568,6 +1633,7 @@ object Hdf5 {
     val raf = new RandomAccessFile(ds.extFile.getOrElse(path), "r")
     try {
       val out = new Array[Double](ds.elems.toInt)
+      if (ds.fill != 0.0) java.util.Arrays.fill(out, ds.fill) // unallocated chunks
       ds.layout match {
         case Contiguous(addr, _) =>
           val buf = new Array[Byte](ds.elems.toInt * ds.dtype.size)
@@ -2161,7 +2227,16 @@ object Hdf5 {
   /** Random-access row reader for a 3-D `[t, y, x]` dataset — the HDF5 twin
     * of [[NetCdf3.SectionReader]]. Contiguous: one seek + read per row.
     * Chunked: rows are served from a lazily-loaded chunk index; each read
-    * touches only the chunks overlapping `[x0, x1]`.
+    * touches only the chunks overlapping `[x0, x1]`, and a cell no chunk
+    * holds reads as the dataset's fill value.
+    *
+    * Decoded chunks are cached one chunk-row BAND at a time: the chunks of
+    * the current (t-chunk, y-chunk), keyed by their x offset, dropped when a
+    * read moves to another band. A section read walks t, then y, then x, so
+    * every chunk is inflated and decoded once per band visit — once in all
+    * when chunks span one time step, and at most once per time step they
+    * cover when they span more (the band changes with y before t returns).
+    * The cache holds at most the x-chunk span of the rows read.
     */
   final class SectionReader(path: String, ds: H5Dataset) extends AutoCloseable {
     require(ds.dims.length == 3, s"${ds.name}: section reader expects 3-D")
@@ -2177,23 +2252,24 @@ object Hdf5 {
             .toMap
         case _ => Map.empty
       }
-    // one-entry decoded-chunk cache: section reads walk rows in order, so
-    // consecutive reads hit the same chunk — without this, a deflated chunk
-    // would re-inflate once per row it serves
-    private var cachedKey: (Long, Long, Long) = null
-    private var cachedVals: Array[Double] = null
+    private var bandT = -1L
+    private var bandY = -1L
+    private val band = scala.collection.mutable.LongMap.empty[Array[Double]]
 
     private def chunkVals(key: (Long, Long, Long), cdims: Seq[Int]): Option[Array[Double]] = {
-      if (key == cachedKey) return Some(cachedVals)
-      chunkIndex.get(key).map { case (addr, size, mask) =>
+      if (key._1 != bandT || key._2 != bandY) {
+        band.clear(); bandT = key._1; bandY = key._2
+      }
+      band.get(key._3).orElse(chunkIndex.get(key).map { case (addr, size, mask) =>
         val raw = new Array[Byte](size.toInt)
         raf.seek(addr); raf.readFully(raw)
         val bytes = defilterChunk(raw, mask, ds.filters, cdims.product * esz, path)
         val cvals = new Array[Double](cdims.product)
         decode(bytes, ds.dtype, cvals, 0, cdims.product, path)
-        cachedKey = key; cachedVals = cvals
+        SectionReader.decodes.increment()
+        band(key._3) = cvals
         cvals
-      }
+      })
     }
 
     def readRow(t: Int, y: Int, x0: Int, x1: Int): Array[Double] = {
@@ -2220,7 +2296,8 @@ object Hdf5 {
                   out(xi - x0) = cvals(ci)
                   xi += 1
                 }
-              case None => // unallocated chunk: leave zeros (fill)
+              case None => // unallocated chunk
+                java.util.Arrays.fill(out, x - x0, hi - x0 + 1, ds.fill)
             }
             x = hi + 1
           }
@@ -2230,6 +2307,13 @@ object Hdf5 {
     }
 
     override def close(): Unit = raf.close()
+  }
+
+  object SectionReader {
+    /** Chunks inflated and decoded by every section reader in this JVM —
+      * band-cache misses; tests read it to pin how often a scan decodes.
+      */
+    private[graft] val decodes = new java.util.concurrent.atomic.LongAdder
   }
 
   // ------------------------------------------------------------------ write
@@ -2283,7 +2367,11 @@ object Hdf5 {
         * element addresses and — when a whole page's slots are sparse —
         * uninitialized data-block pages. FA/EA indexes only.
         */
-      sparseChunks: Set[Int] = Set.empty)
+      sparseChunks: Set[Int] = Set.empty,
+      /** A DEFINED fill value (what netCDF-C stores for `_FillValue`):
+        * unallocated chunks read as it. None writes it undefined (reads 0).
+        */
+      fillValue: Option[Double] = None)
 
   /** A root-group link for the writer: soft (in-file target path) or
     * external (target file + path). External links require `latest = true`
@@ -2694,8 +2782,12 @@ object Hdf5 {
       val msgs = scala.collection.mutable.ArrayBuffer[(Int, Array[Byte])]()
       msgs += 0x0001 -> dataspaceBytes(d.dims)
       msgs += 0x0003 -> dtypeBytes(d.dtype)
-      locally { // fill value v2, undefined
-        val f = new LeBuf; f.u8(2).u8(1).u8(0).u8(0)
+      locally { // fill value v2: undefined, or defined with its value
+        val f = new LeBuf; f.u8(2).u8(1).u8(0)
+        d.fillValue match {
+          case None => f.u8(0)
+          case Some(v) => f.u8(1).u32(d.dtype.size).raw(encodeData(d.dtype, Array(v)))
+        }
         msgs += 0x0005 -> f.bytes
       }
       locally {
@@ -3642,8 +3734,12 @@ object Hdf5 {
       val msgs = scala.collection.mutable.ArrayBuffer[(Int, Array[Byte])]()
       msgs += 0x0001 -> dataspaceBytesV2(d.dims, d.maxDims)
       msgs += 0x0003 -> dtypeBytes(d.dtype)
-      locally { // fill value v2, undefined
-        val f = new LeBuf; f.u8(2).u8(1).u8(0).u8(0)
+      locally { // fill value: v2 undefined, or v3 (alloc time early, has-value)
+        val f = new LeBuf
+        d.fillValue match {
+          case None => f.u8(2).u8(1).u8(0).u8(0)
+          case Some(v) => f.u8(3).u8(0x01 | 0x20).u32(d.dtype.size).raw(encodeData(d.dtype, Array(v)))
+        }
         msgs += 0x0005 -> f.bytes
       }
       locally {

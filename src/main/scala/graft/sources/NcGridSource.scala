@@ -20,18 +20,22 @@ final case class NcCube(
   def variable: String = varName
   def window: (Int, Int, Int, Int) = (0, y - 1, 0, x - 1)
 
-  /** Re-opens the header (small) once per partition; the coordinate arrays
-    * are read only if a lat/lon column asks for them.
+  /** Re-opens the header (small) once per partition; the data variable's
+    * row reader opens on the first row read, and the coordinate arrays are
+    * read only if a lat/lon column asks for them.
     */
   def open(): UnitReader = new UnitReader {
     private val h = NcIo.open(path)
-    private val rows = h.rowReader(h.variable(varName).get)
+    private var rows: NcIo.RowReader = null
     private lazy val lats = h.readAll(h.variable(latVar).get)
     private lazy val lons = h.readAll(h.variable(lonVar).get)
-    def readRow(t: Int, yy: Int, x0: Int, x1: Int): Array[Double] = rows.readRow(t, yy, x0, x1)
+    def readRow(t: Int, yy: Int, x0: Int, x1: Int): Array[Double] = {
+      if (rows == null) rows = h.rowReader(h.variable(varName).get)
+      rows.readRow(t, yy, x0, x1)
+    }
     def latAt(yy: Int, xx: Int): Double = if (curvilinear) lats(yy * x + xx) else lats(yy)
     def lonAt(yy: Int, xx: Int): Double = if (curvilinear) lons(yy * x + xx) else lons(xx)
-    def close(): Unit = rows.close()
+    def close(): Unit = if (rows != null) rows.close()
   }
 }
 

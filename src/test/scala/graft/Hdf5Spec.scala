@@ -217,20 +217,23 @@ class Hdf5Spec extends AnyFunSuite {
     val p = tmp("filtered.h5")
     // repetitive data so deflate actually shrinks the stored bytes
     val data = cube((t, y, x) => (x % 3).toDouble)
-    val pipeline = Seq(Shuffle(4), Deflate(6), Fletcher32)
-    Hdf5.write(p, Seq(
-      WDataset("temp", F32, Seq(T, Y, X), data,
-        chunkDims = Some(Seq(2, 3, 3)), filters = pipeline)))
-    val h = Hdf5.open(p)
-    val temp = h.dataset("temp").get
-    assert(temp.filters == pipeline)
-    assert(Hdf5.readAll(p, temp).toSeq == data.toSeq)
-    val rdr = new Hdf5.SectionReader(p, temp)
-    try {
-      for (t <- 0 until T; y <- 0 until Y)
-        assert(rdr.readRow(t, y, 0, X - 1).toSeq ==
-          (0 until X).map(x => data((t * Y + y) * X + x)), s"t=$t y=$y")
-    } finally rdr.close()
+    // checksum last, and first (netCDF-C's order: deflate then carries it)
+    for (pipeline <- Seq(Seq(Shuffle(4), Deflate(6), Fletcher32),
+        Seq(Fletcher32, Shuffle(4), Deflate(6)))) {
+      Hdf5.write(p, Seq(
+        WDataset("temp", F32, Seq(T, Y, X), data,
+          chunkDims = Some(Seq(2, 3, 3)), filters = pipeline)))
+      val h = Hdf5.open(p)
+      val temp = h.dataset("temp").get
+      assert(temp.filters == pipeline)
+      assert(Hdf5.readAll(p, temp).toSeq == data.toSeq, pipeline)
+      val rdr = new Hdf5.SectionReader(p, temp)
+      try {
+        for (t <- 0 until T; y <- 0 until Y)
+          assert(rdr.readRow(t, y, 0, X - 1).toSeq ==
+            (0 until X).map(x => data((t * Y + y) * X + x)), s"$pipeline t=$t y=$y")
+      } finally rdr.close()
+    }
     // deflate engaged: stored file smaller than the same data unfiltered
     val praw = tmp("unfiltered.h5")
     Hdf5.write(praw, Seq(
@@ -255,6 +258,70 @@ class Hdf5Spec extends AnyFunSuite {
     val ff = Array.fill(100000)(0xFF.toByte)
     val s = Hdf5.fletcher32(ff, ff.length)
     assert(s >= 0 && s <= 0xFFFFFFFFL, s"fletcher width saturated: $s")
+  }
+
+  test("inflate: a stream longer than its chunk is refused, a cut one is truncated") {
+    val b = Array.tabulate(5000)(i => (i * 7 % 251).toByte)
+    val z = Hdf5.deflateBytes(b, 6)
+    assert(Hdf5.inflateBytes(z, b.length).toSeq == b.toSeq)
+    // one byte more than the chunk holds: refused before it can grow
+    val e = intercept[java.util.zip.DataFormatException](Hdf5.inflateBytes(z, b.length - 1))
+    assert(e.getMessage.contains("past its expected 4999 bytes"), e.getMessage)
+    intercept[java.io.EOFException](Hdf5.inflateBytes(z.dropRight(8), b.length))
+    // all data present, end marker cut: still truncated, never accepted
+    intercept[java.io.EOFException](Hdf5.inflateBytes(z.dropRight(4), b.length))
+    // a zlib header asking for a preset dictionary (FDICT) fails, never spins
+    intercept[java.util.zip.DataFormatException](Hdf5.inflateBytes(
+      Array(0x78, 0xBB, 0, 0, 0, 1, 1, 2, 3, 4).map(_.toByte), b.length))
+  }
+
+  test("fill value message: versions 1–3, defined or not") {
+    def body(bytes: Int*): java.nio.ByteBuffer =
+      java.nio.ByteBuffer.wrap(bytes.map(_.toByte).toArray).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def fill(bytes: Int*): Option[Seq[Byte]] = Hdf5.parseFill(body(bytes: _*), "f").map(_.toSeq)
+    assert(fill(1, 2, 2, 1, 2, 0, 0, 0, 0x34, 0x12) == Some(Seq[Byte](0x34, 0x12)))
+    assert(fill(1, 2, 2, 0) == None)
+    assert(fill(2, 1, 0, 0) == None)
+    assert(fill(2, 1, 0, 1, 0, 0, 0, 0) == None) // defined at the library default
+    assert(fill(3, 0x10 | 0x01) == None)
+    assert(fill(3, 0x20 | 0x01, 1, 0, 0, 0, 0x7F) == Some(Seq[Byte](0x7F)))
+    intercept[IllegalArgumentException](fill(3, 0x30)) // undefined AND has-value
+    intercept[IllegalArgumentException](fill(2, 1, 0, 1, 9, 0, 0, 0, 1)) // size overruns
+    intercept[IllegalArgumentException](fill(4, 0))
+  }
+
+  test("defined fill value: unallocated chunks read as it, whole and sectioned") {
+    val td = 8 // 8 × 2 × 2 = 32 chunks of (1, 2, 3); fixed-array index
+    val sparse = Set(0, 5, 6, 31)
+    val data = Array.tabulate(td * Y * X)(i => (i % 37).toDouble + 1)
+    def chunkOf(t: Int, y: Int, x: Int): Int = (t * 2 + y / 2) * 2 + x / 3
+    for ((dtype, fill) <- Seq(F32 -> -999.0, I16 -> -32767.0, F64 -> Double.NaN)) {
+      val p = tmp(s"fill-$dtype.h5")
+      Hdf5.write(p, Seq(WDataset("temp", dtype, Seq(td, Y, X), data,
+        chunkDims = Some(Seq(1, 2, 3)), sparseChunks = sparse,
+        fillValue = Some(fill))), latest = true)
+      val ds = Hdf5.open(p).dataset("temp").get
+      assert(ds.fillValue.map(_.toString) == Some(fill.toString), dtype)
+      val want = Array.tabulate(td * Y * X) { i =>
+        if (sparse(chunkOf(i / (Y * X), (i / X) % Y, i % X))) fill else data(i)
+      }
+      assert(Hdf5.readAll(p, ds).map(_.toString).toSeq == want.map(_.toString).toSeq, dtype)
+      val rdr = new Hdf5.SectionReader(p, ds)
+      try {
+        for (t <- 0 until td; y <- 0 until Y)
+          assert(rdr.readRow(t, y, 1, X - 1).map(_.toString).toSeq ==
+            (1 until X).map(x => want((t * Y + y) * X + x).toString), s"$dtype t=$t y=$y")
+      } finally rdr.close()
+    }
+    // the classic writer's v2 message carries the defined value too
+    val pc = tmp("fill-classic.h5")
+    Hdf5.write(pc, Seq(WDataset("temp", F32, Seq(T, Y, X), cube((_, _, _) => 1.0),
+      chunkDims = Some(Seq(1, Y, X)), fillValue = Some(-999.0))))
+    assert(Hdf5.open(pc).dataset("temp").get.fillValue == Some(-999.0))
+    // undefined: the format's default 0
+    val pu = tmp("fill-undefined.h5")
+    writeGrid(pu, chunked = true, latest = true)
+    assert(Hdf5.open(pu).dataset("temp").get.fillValue.isEmpty)
   }
 
   test("lookup3 matches the published hashlittle test vectors") {

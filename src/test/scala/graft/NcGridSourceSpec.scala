@@ -460,6 +460,150 @@ class NcGridSourceSpec extends AnyFunSuite {
     assert(got == data.toSeq)
   }
 
+  // ---- projection-aware reads and the chunk-row band cache
+
+  private val CY = 100
+  private val CX = 150
+  private val Day0 = java.time.Instant.parse("1990-01-01T00:00:00Z")
+
+  /** The serving corpus's cell pattern: multiples of 0.25 (exact sums in
+    * any order), -999 on a closed-form fill pattern.
+    */
+  private def corpusCell(t: Int, y: Int, x: Int, v: Int): Double =
+    if ((t * 5 + y * 3 + x * 7 + v * 11) % 29 == 0) -999.0
+    else ((t * 3 + y * 2 + x + v * 37) % 240) / 4.0 - 20.0
+
+  /** A serving-corpus-shaped NetCDF-4 dir: tasmax and tasmin over `td`
+    * days on a 100×150 grid in (1, 40, 40) chunks — y spans 3 chunks, x 4 —
+    * so each file stores `td` × 12 chunks.
+    */
+  private def writeCorpus(td: Int, filters: Seq[graft.sources.Hdf5.H5Filter]): String = {
+    import graft.sources.Hdf5, Hdf5._
+    val dir = java.nio.file.Files.createTempDirectory("graft-nc4-corpus").toFile.getAbsolutePath
+    for ((name, v) <- Seq("tasmax", "tasmin").zipWithIndex) {
+      val data = Array.tabulate(td * CY * CX)(i => corpusCell(i / (CY * CX), (i / CX) % CY, i % CX, v))
+      Hdf5.write(s"$dir/$name.nc4", Seq(
+        WDataset("time", I32, Seq(td), Array.tabulate(td)(_.toDouble),
+          strAttrs = Seq("CLASS" -> "DIMENSION_SCALE", "NAME" -> "time",
+            "units" -> "days since 1990-01-01")),
+        WDataset("lat", F64, Seq(CY), Array.tabulate(CY)(40.0 + _ * 0.05),
+          strAttrs = Seq("CLASS" -> "DIMENSION_SCALE", "NAME" -> "lat")),
+        WDataset("lon", F64, Seq(CX), Array.tabulate(CX)(-80.0 + _ * 0.05),
+          strAttrs = Seq("CLASS" -> "DIMENSION_SCALE", "NAME" -> "lon")),
+        WDataset(name, F32, Seq(td, CY, CX), data,
+          numAttrs = Seq(("_FillValue", F32, Seq(-999.0))),
+          refAttrs = Seq("DIMENSION_LIST" -> Seq(Seq("time"), Seq("lat"), Seq("lon"))),
+          chunkDims = Some(Seq(1, 40, 40)), filters = filters)))
+    }
+    dir
+  }
+
+  /** Chunks the section readers inflate and decode while `f` runs. */
+  private def decoded[A](f: => A): (Long, A) = {
+    val d0 = graft.sources.Hdf5.SectionReader.decodes.sum()
+    val a = f
+    (graft.sources.Hdf5.SectionReader.decodes.sum() - d0, a)
+  }
+
+  test("a full scan decodes each stored chunk once; a box decodes only its own chunks") {
+    import graft.sources.Hdf5.{Deflate, F32, Shuffle}
+    val td = 3
+    val df = gridAt(writeCorpus(td, Seq(Shuffle(F32.size), Deflate(4))))
+    val stored = for (v <- 0 to 1; t <- 0 until td; y <- 0 until CY; x <- 0 until CX)
+      yield corpusCell(t, y, x, v)
+    val (full, row) = decoded(df.agg(count("value"), sum("value")).collect()(0))
+    assert(full == 2 * td * 3 * 4)
+    assert(row.getLong(0) == stored.count(_ != -999.0))
+    assert(row.getDouble(1) == stored.filter(_ != -999.0).sum)
+    // 10×10 cells astride the x-chunk edge at 40, inside y-chunk 0: two
+    // chunks a day, not one per row per chunk
+    val box = df.filter(col("variable") === "tasmin" && col("y").between(5, 14) &&
+      col("x").between(35, 44))
+    val (n, got) = decoded(box.select("ts", "y", "x", "value").collect())
+    assert(n == td * 2)
+    assert(got.map(r => (r.getTimestamp(0).toInstant, r.getInt(1), r.getInt(2),
+      Option(r.get(3)))).sortBy(_.toString).toSeq ==
+      (for (t <- 0 until td; y <- 5 to 14; x <- 35 to 44) yield {
+        val c = corpusCell(t, y, x, 1)
+        (Day0.plus(java.time.Duration.ofDays(t)), y, x, if (c == -999.0) None else Some(c))
+      }).sortBy(_.toString))
+  }
+
+  test("a variable/ts-only scan (the catalog shape) opens no data file and decodes nothing") {
+    import graft.sources.Hdf5.{Deflate, F32, Shuffle}
+    val td = 3
+    val dir = writeCorpus(td, Seq(Shuffle(F32.size), Deflate(4)))
+    val df = gridAt(dir)
+    // the table holds all a variable/ts scan needs: it runs with the files gone
+    new java.io.File(dir).listFiles().foreach(f => assert(f.delete(), f))
+    val (n, (rows, catalog)) = decoded((
+      df.select("variable", "ts").rdd.count(),
+      graft.domain.GridQuery.catalog(df.withColumn("file", col("variable")))
+        .orderBy("variable").collect()))
+    assert(n == 0)
+    assert(rows == 2L * td * CY * CX)
+    assert(catalog.map(r => (r.getAs[String]("variable"),
+      r.getAs[java.sql.Timestamp]("ts_min").toInstant,
+      r.getAs[java.sql.Timestamp]("ts_max").toInstant)).toSeq ==
+      Seq("tasmax", "tasmin").map(v =>
+        (v, Day0, Day0.plus(java.time.Duration.ofDays(td - 1L)))))
+    // a scan that does project value needs the bytes: it fails, loudly
+    intercept[org.apache.spark.SparkException](df.agg(sum("value")).collect())
+  }
+
+  test("a corrupted chunk still fails loudly when value is projected") {
+    import graft.sources.Hdf5, Hdf5.{Deflate, F32, Fletcher32, Shuffle}
+    val dir = writeCorpus(2, Seq(Shuffle(F32.size), Deflate(4), Fletcher32))
+    val f = s"$dir/tasmin.nc4"
+    val raf = new java.io.RandomAccessFile(f, "rw")
+    try { // the last chunk written is the file's last block: flip a byte in it
+      raf.seek(raf.length() - 10)
+      val b = raf.read(); raf.seek(raf.length() - 10); raf.write(b ^ 0xFF)
+    } finally raf.close()
+    val hit = intercept[IllegalArgumentException](
+      Hdf5.readAll(f, Hdf5.open(f).dataset("tasmin").get))
+    assert(hit.getMessage.contains("fletcher32 mismatch"), hit.getMessage)
+    val df = gridAt(dir)
+    for (q <- Seq(df.agg(sum("value")),
+        df.filter(col("variable") === "tasmin").select("ts", "y", "x", "value"))) {
+      val e = intercept[org.apache.spark.SparkException](q.collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.getMessage != null && c.getMessage.contains("fletcher32 mismatch")), e)
+    }
+    // a scan that never projects value never reads the chunk
+    assert(df.select("variable", "ts").rdd.count() == 2L * 2 * CY * CX)
+  }
+
+  test("a sparse NetCDF-4 file's unwritten cells read as its _FillValue: NULL, not 0.0") {
+    import graft.sources.Hdf5, Hdf5._
+    val (td, yd, xd) = (4, 20, 30) // (1, 10, 16) chunks: 2 × 2 a day, 16 in all
+    val sparse = Set(1, 6, 11, 12)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nc4-sparse").toFile.getAbsolutePath
+    val data = Array.tabulate(td * yd * xd)(i => (i % 50) / 2.0 + 1.0) // never 0, never fill
+    Hdf5.write(s"$dir/temp.nc4", Seq(
+      WDataset("time", I32, Seq(td), Array.tabulate(td)(_.toDouble),
+        strAttrs = Seq("CLASS" -> "DIMENSION_SCALE", "NAME" -> "time",
+          "units" -> "days since 1990-01-01")),
+      WDataset("lat", F64, Seq(yd), Array.tabulate(yd)(44.0 + _ * 0.05),
+        strAttrs = Seq("CLASS" -> "DIMENSION_SCALE", "NAME" -> "lat")),
+      WDataset("lon", F64, Seq(xd), Array.tabulate(xd)(-80.0 + _ * 0.05),
+        strAttrs = Seq("CLASS" -> "DIMENSION_SCALE", "NAME" -> "lon")),
+      WDataset("temp", F32, Seq(td, yd, xd), data,
+        numAttrs = Seq(("_FillValue", F32, Seq(-999.0))),
+        refAttrs = Seq("DIMENSION_LIST" -> Seq(Seq("time"), Seq("lat"), Seq("lon"))),
+        chunkDims = Some(Seq(1, 10, 16)), sparseChunks = sparse,
+        fillValue = Some(-999.0))), latest = true)
+    val cells = gridAt(dir).select("ts", "y", "x", "value").collect().map { r =>
+      val t = java.time.Duration.between(Day0, r.getTimestamp(0).toInstant).toDays.toInt
+      (t, r.getInt(1), r.getInt(2)) -> Option(r.get(3))
+    }.toMap
+    def chunkOf(t: Int, y: Int, x: Int): Int = (t * 2 + y / 10) * 2 + x / 16
+    assert(cells.size == td * yd * xd)
+    val want = (for (t <- 0 until td; y <- 0 until yd; x <- 0 until xd) yield
+      (t, y, x) -> (if (sparse(chunkOf(t, y, x))) None else Some(data((t * yd + y) * xd + x)))).toMap
+    assert(cells == want)
+  }
+
   test("CF time-unit strings parse to (epoch, scale)") {
     assert(NcGrid.timeUnit("days since 1990-01-01") ==
       (631152000000000L, 86400000000L))
