@@ -73,8 +73,7 @@ object Mview {
   def refresh(spark: SparkSession, srcDir: String, viewDir: String,
       keys: Seq[String], sumCols: Seq[String],
       minMaxCols: Seq[String] = Seq.empty): Int = {
-    val head = Snapshots.currentVersion(spark, srcDir).getOrElse(
-      throw new IllegalArgumentException(s"$srcDir: no published snapshots"))
+    val head = Snapshots.headVersion(spark, srcDir)
     appliedSrcVersion(spark, viewDir) match {
       case Some(applied) if applied == head =>
         Snapshots.currentVersion(spark, viewDir).get // nothing new: no-op
@@ -153,8 +152,7 @@ object Mview {
   def refreshViaFeed(spark: SparkSession, srcDir: String, viewDir: String,
       keys: Seq[String], sumCols: Seq[String],
       minMaxCols: Seq[String] = Seq.empty): Int = {
-    val head = Snapshots.currentVersion(spark, srcDir).getOrElse(
-      throw new IllegalArgumentException(s"$srcDir: no published snapshots"))
+    val head = Snapshots.headVersion(spark, srcDir)
     appliedSrcVersion(spark, viewDir) match {
       case Some(applied) if applied == head =>
         Snapshots.currentVersion(spark, viewDir).get
@@ -287,8 +285,7 @@ object Mview {
   def rebuild(spark: SparkSession, srcDir: String, viewDir: String,
       keys: Seq[String], sumCols: Seq[String],
       minMaxCols: Seq[String] = Seq.empty): Int = {
-    val head = Snapshots.currentVersion(spark, srcDir).getOrElse(
-      throw new IllegalArgumentException(s"$srcDir: no published snapshots"))
+    val head = Snapshots.headVersion(spark, srcDir)
     Snapshots.commit(spark, viewDir,
       aggregated(Snapshots.read(spark, srcDir, Some(head)), keys, sumCols,
         minMaxCols),

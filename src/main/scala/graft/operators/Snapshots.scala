@@ -454,6 +454,11 @@ object Snapshots {
   def currentVersion(spark: SparkSession, dir: String): Option[Int] =
     versions(spark, dir).lastOption
 
+  /** The latest published version; fails loudly on a table with none. */
+  private[graft] def headVersion(spark: SparkSession, dir: String): Int =
+    currentVersion(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+
   /** Raw manifest lines of one version: `#key=value` headers (sidecar
     * references) followed by data-file paths. */
   private def listLines(spark: SparkSession, dir: String,
@@ -692,16 +697,14 @@ object Snapshots {
     out.sorted.toSeq
   }
 
-  /** Table-relative path of an absolute data-file path/URI — the inverse of
-    * the manifest entry. Resolves against the table dir itself (never a
+  /** A data file's absolute path/URI back to its MANIFEST-ENTRY form — the
+    * inverse of [[dataPath]]: table-relative for files under the table dir,
+    * the absolute path itself for a shallow clone's external references
+    * (that absolute form IS their entry — so every key-DML verb works on
+    * clones: the rewrite lands locally, the untouched external entries
+    * carry verbatim). Resolves against the table dir itself (never a
     * substring scan: a table living under a `/data/c…` parent must not
     * confuse the parse).
-    */
-  /** A touched file's path back to its MANIFEST-ENTRY form: table-relative
-    * for files under the table dir, the absolute path itself for a shallow
-    * clone's external references (that absolute form IS their entry — so
-    * every key-DML verb works on clones: the rewrite lands locally, the
-    * untouched external entries carry verbatim).
     */
   private def relPath(dir: String, absPathOrUri: String): String = {
     val dirPath = new org.apache.hadoop.fs.Path(dir).toUri.getPath
@@ -1062,12 +1065,6 @@ object Snapshots {
       version: Int): Option[DataFrame] =
     dvRel(spark, dir, version).map(rel => spark.read.parquet(s"$dir/$rel"))
 
-  /** Open `paths` with the row's identity attached (`__fname`, `__pos`)
-    * and any existing deletion-vector rows ALREADY masked out — the
-    * primitive every merge-on-read path builds on. The DV anti-join keys
-    * on (file name, file-absolute row index): the DV side is deleted-rows
-    * sized, so Spark broadcast it and the scan stays one pass.
-    */
   /** PHYSICAL schema of one version from its `.schema` sidecar, if the
     * version recorded one — the metadata answer to "what columns do these
     * files hold" that replaces the mergeSchema footer sweep at planning
@@ -1166,6 +1163,12 @@ object Snapshots {
       case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
 
+  /** Open `paths` with the row's identity attached (`__fname`, `__pos`)
+    * and any existing deletion-vector rows ALREADY masked out — the
+    * primitive every merge-on-read path builds on. The DV anti-join keys
+    * on (file name, file-absolute row index): the DV side is deleted-rows
+    * sized, so Spark broadcast it and the scan stays one pass.
+    */
   private def openWithPos(spark: SparkSession, dir: String, version: Int,
       paths: Seq[String], dv: Option[String],
       mergeAll: Boolean = false): DataFrame = {
@@ -1250,8 +1253,7 @@ object Snapshots {
     * matter what lands in the table afterwards.
     */
   def read(spark: SparkSession, dir: String, version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+    val v = version.getOrElse(headVersion(spark, dir))
     val fs = files(spark, dir, v)
     require(fs.nonEmpty, s"$dir: snapshot v$v lists no files")
     // mergeSchema (inside maskedParquet): evolved tables (evolve = true
@@ -1391,17 +1393,18 @@ object Snapshots {
     */
   def compact(spark: SparkSession, dir: String, targetBytes: Long): Int = {
     val (fs, _) = hfs(spark, dir)
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val total = files(spark, dir, cur)
+    val head = new Head(spark, dir)
+    val total = head.files
       .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(dataPath(dir, f))).getLen)
       .sum
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    // expectedVersion: an append landing between the read and this commit
-    // must surface as a conflict, not silently vanish from the new head.
-    // read() masks deletion vectors, so compaction MATERIALIZES pending
+    // a row-preserving replace of every file: an append landing between
+    // the read and this commit takes the version slot first and surfaces
+    // as a conflict, never silently vanishing from the new head. read()
+    // masks deletion vectors, so compaction MATERIALIZES pending
     // merge-on-read deletes (the rewritten files carry no DV).
-    //
+    def land(df: DataFrame, msg: String) = landCow(spark, head, head.files, None,
+      Seq(df), Map("compaction" -> s"$total bytes$msg"), noRowChange = true)
     // Partitioned tables skip the global repartition(n): the routed commit
     // write re-shuffles by partition tuple anyway, so the sizing shuffle
     // was pure waste AND the tuple shuffle silently overrode targetBytes
@@ -1410,14 +1413,9 @@ object Snapshots {
     // onto AQE's advisory partition size for the duration of the write.
     if (partitionSpecs(spark, dir).nonEmpty)
       withAdvisorySize(spark, targetBytes) {
-        replacePreserving(spark, dir, read(spark, dir, Some(cur)),
-          expectedVersion = Some(cur),
-          meta = Map("compaction" -> s"$total bytes, partition-binned"))
+        land(read(spark, dir, Some(head.version)), ", partition-binned")
       }
-    else
-      replacePreserving(spark, dir, read(spark, dir, Some(cur)).repartition(n),
-        expectedVersion = Some(cur),
-        meta = Map("compaction" -> s"$total bytes -> $n files"))
+    else land(read(spark, dir, Some(head.version)).repartition(n), s" -> $n files")
   }
 
   /** Pin AQE's advisory partition size (the rebalance bin-packing target)
@@ -1482,57 +1480,22 @@ object Snapshots {
   def compactRange(spark: SparkSession, dir: String, column: String,
       lower: Option[Any], upper: Option[Any], targetBytes: Long): Int = {
     val (fs, _) = hfs(spark, dir)
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val (hot, all) = pruneFilesAll(spark, dir, cur, Seq((column, lower, upper)))
-    if (hot.length <= 1) return cur // nothing to fold
-    val untouched = all.filterNot(hot.toSet)
+    val head = new Head(spark, dir)
+    val (hot, _) = pruneFilesAll(spark, dir, head.version, Seq((column, lower, upper)))
+    if (hot.length <= 1) return head.version // nothing to fold
     val total = hot
       .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(dataPath(dir, f))).getLen)
       .sum
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val next = cur + 1
+    def land(df: DataFrame, msg: String) = landCow(spark, head, hot, None, Seq(df),
+      Map("compaction" -> s"$column-scoped: ${hot.length} files$msg"), noRowChange = true)
     // partitioned tables: same treatment as compact() — no pre-repartition
-    // (the routed write's rebalance bins within partitions at targetBytes)
-    val hotDf = maskedParquet(spark, dir, cur, hot.map(f => dataPath(dir, f)))
-    val fresh =
-      if (partitionSpecs(spark, dir).nonEmpty)
-        withAdvisorySize(spark, targetBytes) {
-          writeData(spark, dir, next, hotDf)
-        }
-      else writeData(spark, dir, next, hotDf.repartition(n))
-    val dvCarry = carryDvFor(spark, dir, cur, next, untouched)
-    // partitioned tables don't honor n (the rebalance/advisory sizing
-    // decides the file count) — record what actually happened, mirroring
-    // compact()'s partition-binned message
-    val compactionMsg =
-      if (partitionSpecs(spark, dir).nonEmpty)
-        s"$column-scoped: ${hot.length} files, partition-binned"
-      else s"$column-scoped: ${hot.length} files -> $n"
-    publish(spark, dir, next, untouched, fresh,
-      meta = Map("compaction" -> compactionMsg),
-      dv = dvCarry, noRowChange = true)
-    next
-  }
-
-  /** A replace commit that PRESERVES the table's visible rows (compaction,
-    * re-clustering): published with the `#norowchange` marker so change-feed
-    * consumers skip it (zero rows) instead of refusing — maintenance next
-    * to a live CDF tail, Delta's `dataChange = false`. The caller is
-    * responsible for `df` truly being the current content.
-    */
-  private def replacePreserving(spark: SparkSession, dir: String, df: DataFrame,
-      expectedVersion: Option[Int], meta: Map[String, String] = Map.empty): Int = {
-    val cur = currentVersion(spark, dir).getOrElse(0)
-    expectedVersion.foreach { ev =>
-      if (cur != ev) throw new java.util.ConcurrentModificationException(
-        s"$dir: rewrite derived from v$ev conflicts with concurrent v$cur — " +
-          "recompute from the current snapshot")
-    }
-    val next = cur + 1
-    val fresh = writeData(spark, dir, next, df)
-    publish(spark, dir, next, Seq.empty, fresh, meta, noRowChange = true)
-    next
+    // (the routed write's rebalance bins within partitions at targetBytes),
+    // and n is not honored (the rebalance/advisory sizing decides the file
+    // count), so the message records what actually happened
+    if (partitionSpecs(spark, dir).nonEmpty)
+      withAdvisorySize(spark, targetBytes)(land(head.rows(hot), ", partition-binned"))
+    else land(head.rows(hot).repartition(n), s" -> $n")
   }
 
   /** [[expire]] by age: drop every version whose commit time is older than
@@ -2051,8 +2014,7 @@ object Snapshots {
       ranges: Seq[(String, Option[Any], Option[Any])],
       version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = version.orElse(currentVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+    val v = version.getOrElse(headVersion(spark, dir))
     val (kept, all) = pruneFilesAll(spark, dir, v, ranges)
     val base = if (kept.nonEmpty) maskedParquet(spark, dir, v, kept.map(f => dataPath(dir, f)))
       else read(spark, dir, Some(v)).filter(lit(false))
@@ -2118,8 +2080,7 @@ object Snapshots {
     require(cols.size * RankBits <= 63,
       s"$dir: a ${curve.name} key over ${cols.size} columns x $RankBits bits " +
         s"exceeds a signed long — cluster on at most ${63 / RankBits} columns")
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+    val cur = headVersion(spark, dir)
     val curFiles = files(spark, dir, cur)
     val clustered: Set[String] =
       properties(spark, dir).get("zorder.clustered_through") match {
@@ -2217,26 +2178,210 @@ object Snapshots {
         // can be 100k files and a 100k-literal predicate won't plan
         import spark.implicits._
         val nameDf = names.toDF("file_name")
-        val kept = spark.read.parquet(s"$dir/$rel")
-          .join(broadcast(nameDf), Seq("file_name"), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (kept.isEmpty) None
-          else Some(writeDv(spark, dir, next, kept))
-        } finally { kept.unpersist(); () }
+        withPersisted(spark.read.parquet(s"$dir/$rel")
+            .join(broadcast(nameDf), Seq("file_name"), "left_semi")) { kept =>
+          if (kept.isEmpty) None else Some(writeDv(spark, dir, next, kept))
+        }
       }
     }
 
-  /** Row-level DELETE of `column BETWEEN lower AND upper`, copy-on-write:
-    * the stats index narrows the rewrite to the files that can contain a
-    * matching row; every other file is CARRIED into the new manifest
-    * untouched (same path, same bytes — prior versions keep reading it
-    * too). Rows where the predicate is NULL survive, per SQL DELETE
-    * semantics. Returns the new version — or the current one unchanged when
-    * stats prove nothing matches (a provable no-op publishes nothing).
-    * History is rewritten for the affected files, so [[readChanges]] across
-    * a delete fails loudly, exactly like a replace commit.
+  // -------------------------------------------------- row-level DML
+  // Every row-level verb is a spec over one engine: the [[Head]] it plans
+  // against, [[locate]] (one masked scan of the stats candidates returning
+  // matching rows with their identity), and one of two landings —
+  // [[landCow]] rewrites the touched files, [[landMor]] masks positions
+  // through the deletion vector. Each verb fixes its write layout
+  // (rebalanced or not), its no-op rule and its Spark jobs at its own call
+  // site: the layout is part of the float-summing oracles' contract, and
+  // the streaming CDC apply relies on a missed delete publishing nothing.
+
+  /** The table state one DML call plans against: the head version, its
+    * files and deletion vector, and (lazily) its logical schema. Loaded
+    * once per call and never cached across calls, so every
+    * [[withCommitRetry]] attempt plans against the version it races for.
     */
+  private final class Head(spark: SparkSession, val dir: String) {
+    val version: Int = headVersion(spark, dir)
+    val files: Seq[String] = Snapshots.files(spark, dir, version)
+    val dv: Option[String] = dvRel(spark, dir, version)
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      read(spark, dir, Some(version)).schema
+    /** The live rows of `fs` (entries of [[files]]), masks applied. */
+    def rows(fs: Seq[String]): DataFrame =
+      maskedParquet(spark, dir, version, fs.map(dataPath(dir, _)))
+  }
+
+  /** `body` over `df` persisted (memory and disk), unpersisted after: one
+    * materialization serves every consumer inside. */
+  private def withPersisted[T](df: DataFrame)(body: DataFrame => T): T = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(p) finally { p.unpersist(); () }
+  }
+
+  /** Rows with `column BETWEEN lower AND upper` (either bound optional);
+    * NULL never matches, per SQL DELETE. */
+  private def inRange(column: String, lower: Option[Any],
+      upper: Option[Any]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, lit}
+    (Seq(col(column).isNotNull) ++
+      lower.map(col(column) >= lit(_)) ++ upper.map(col(column) <= lit(_)))
+      .reduce(_ && _)
+  }
+
+  /** One masked scan of the `candidates` files: the live rows `select`
+    * keeps, each carrying its identity (`__path`, `__fname`, `__pos`). A
+    * row a prior merge-on-read delete masked can neither match nor pin.
+    */
+  private def locate(spark: SparkSession, head: Head, candidates: Seq[String])(
+      select: DataFrame => DataFrame): DataFrame =
+    select(openWithPos(spark, head.dir, head.version,
+      candidates.map(dataPath(head.dir, _)), head.dv))
+
+  /** The copy-on-write touched set: the files holding a row [[locate]]
+    * finds (a metadata-sized collect), in manifest-entry form, sorted.
+    * No scan when nothing is a candidate.
+    */
+  private def touchedBy(spark: SparkSession, head: Head, candidates: Seq[String])(
+      select: DataFrame => DataFrame): Seq[String] =
+    if (candidates.isEmpty) Seq.empty
+    else locate(spark, head, candidates)(select)
+      .select("__path").distinct().collect()
+      .map(r => relPathIn(head.dir, head.files.toSet, r.getString(0))).toSeq.sorted
+
+  /** Copy-on-write landing of the version after `head`: `feed` becomes its
+    * recorded change feed, each frame of `data` lands as fresh files, and
+    * every file but `rewritten` carries with its mask (the rewritten files
+    * materialized theirs through the masked read).
+    */
+  private def landCow(spark: SparkSession, head: Head, rewritten: Seq[String],
+      feed: Option[DataFrame], data: Seq[DataFrame], meta: Map[String, String],
+      noRowChange: Boolean = false): Int = {
+    val next = head.version + 1
+    val cdc = feed.map(writeCdc(spark, head.dir, next, _))
+    val fresh = data.flatMap(writeData(spark, head.dir, next, _))
+    val carried = head.files.filterNot(rewritten.toSet)
+    publish(spark, head.dir, next, carried, fresh, meta, cdc,
+      carryDvFor(spark, head.dir, head.version, next, carried), noRowChange)
+    next
+  }
+
+  /** Merge-on-read landing of the version after `head`: every data file
+    * carries, the new mask is the prior one ∪ the positions of `masked` (a
+    * [[locate]] result; None keeps the prior mask by reference), and
+    * `appended` lands as fresh files. No data file is rewritten.
+    */
+  private def landMor(spark: SparkSession, head: Head, masked: Option[DataFrame],
+      feed: Option[DataFrame], appended: Option[DataFrame],
+      meta: Map[String, String], noRowChange: Boolean = false): Int = {
+    import org.apache.spark.sql.functions.col
+    val next = head.version + 1
+    val cdc = feed.map(writeCdc(spark, head.dir, next, _))
+    val dv = masked.fold(head.dv) { m =>
+      val rows = m.select(col("__fname").as("file_name"), col("__pos").as("pos"))
+      Some(writeDv(spark, head.dir, next, head.dv.fold(rows)(rel =>
+        spark.read.parquet(s"${head.dir}/$rel").unionByName(rows))))
+    }
+    val fresh = appended.toSeq.flatMap(writeData(spark, head.dir, next, _))
+    publish(spark, head.dir, next, head.files, fresh, meta, cdc, dv, noRowChange)
+    next
+  }
+
+  /** Merge-on-read DELETE of the rows [[locate]] finds with `select` in the
+    * `candidates` files; the head version, publishing nothing, when it
+    * finds none. The change feed records exactly the deleted rows in the
+    * table schema — columns a pre-evolution file lacks surface as typed
+    * NULLs.
+    */
+  private def maskDelete(spark: SparkSession, head: Head, candidates: Seq[String],
+      meta: Map[String, String])(select: DataFrame => DataFrame): Int = {
+    import org.apache.spark.sql.functions.{col, lit}
+    if (candidates.isEmpty) head.version
+    else withPersisted(locate(spark, head, candidates)(select)) { m =>
+      if (m.isEmpty) head.version
+      else {
+        val avail = m.columns.toSet
+        val feed = m.select(head.schema.map(f =>
+            if (avail(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)): _*)
+          .withColumn("_change_type", lit("delete"))
+        landMor(spark, head, Some(m), Some(feed), None, meta)
+      }
+    }
+  }
+
+  /** The keyed upserts: `updates` (key-unique, non-null keys — checked, a
+    * double match would silently duplicate) replace same-`key` rows and
+    * insert the rest, landing copy-on-write or merge-on-read. One
+    * materialization of `updates` feeds the CHECK probe, the change feed
+    * and the write. Candidates come from the update-key envelope.
+    */
+  private def mergeByKey(spark: SparkSession, dir: String, updates: DataFrame,
+      key: String, meta: Map[String, String], evolve: Boolean,
+      mor: Boolean): Int = {
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, min, max}
+    val head = new Head(spark, dir)
+    enforceSchema(spark, dir, updates, evolve)
+    withPersisted(updates) { up =>
+      enforceConstraints(spark, dir, up)
+      val Array(h) = up.agg(count(lit(1)), count(col(key)),
+        countDistinct(col(key)), min(col(key)), max(col(key))).collect()
+      val (total, nonNull, distinct) = (h.getLong(0), h.getLong(1), h.getLong(2))
+      if (total == 0) head.version
+      else {
+        require(nonNull == total, s"$dir: merge key $key has null(s) in updates")
+        require(distinct == total, s"$dir: merge updates carry duplicate $key values")
+        val (candidates, _) = pruneFiles(spark, dir, head.version, key,
+          Option(h.get(3)), Option(h.get(4)))
+        val keys = up.select(col(key))
+        // change feed: the replaced rows `pre` (update_pre), their
+        // replacements (update_post), and updates matching nothing (insert),
+        // in the TABLE column order — the using-key joins moved `key` to the
+        // front, `updates` may arrive in any order, and feed readers bind
+        // positionally; evolved columns append after the table's
+        def feed(pre: Option[DataFrame]): DataFrame = {
+          val matchedKeys = pre.map(_.select(col(key)).distinct())
+          val post = matchedKeys.map(mk => up.join(mk, Seq(key), "left_semi")
+            .withColumn("_change_type", lit("update_post")))
+          val ins = matchedKeys.map(mk => up.join(mk, Seq(key), "left_anti"))
+            .getOrElse(up).withColumn("_change_type", lit("insert"))
+          val tableCols = head.schema.fieldNames.toSeq
+          (pre.map(_.withColumn("_change_type", lit("update_pre"))).toSeq ++
+            post.toSeq :+ ins).reduce(_.unionByName(_, allowMissingColumns = true))
+            .select((tableCols ++ up.columns.filterNot(tableCols.contains) :+
+              "_change_type").map(col): _*)
+        }
+        // DML rewrites size their fresh files adaptively (guide §6): without
+        // the hint every shuffle partition of the written frame became its
+        // own tiny file (32 files per commit at the bench config; the
+        // post-merge table then paid ~1 scan task per file on every read).
+        // REBALANCE lets AQE bin-pack to the advisory size — scale-adaptive,
+        // a no-op without AQE.
+        if (mor) {
+          // the pre-image: LIVE candidate rows matching an update key, with
+          // their (file, pos) identity — these positions join the DV
+          val matched =
+            if (candidates.isEmpty) None
+            else Some(locate(spark, head, candidates)(_.join(keys, Seq(key), "left_semi"))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          try {
+            val pre = matched.filter(!_.isEmpty)
+            landMor(spark, head, pre, Some(feed(pre)), Some(up.hint("rebalance")), meta)
+          } finally { matched.foreach(_.unpersist()); () }
+        } else {
+          // a DV-deleted ghost row must neither pin a file nor feed the
+          // pre-image: the pin scan and the rewrite both read masked
+          val touched = touchedBy(spark, head, candidates)(
+            _.select(col(key), col("__path")).join(keys, Seq(key)))
+          val rows = if (touched.isEmpty) None else Some(head.rows(touched))
+          val survivors = rows.fold(up)(_.join(keys, Seq(key), "left_anti")
+            .unionByName(up, allowMissingColumns = true))
+          landCow(spark, head, touched,
+            Some(feed(rows.map(_.join(keys, Seq(key), "left_semi")))),
+            Seq(survivors.hint("rebalance")), meta)
+        }
+      }
+    }
+  }
+
   /** MERGE INTO (upsert), copy-on-write: rows of `updates` replace
     * same-`key` table rows, the rest insert — Delta's
     * whenMatched-update/whenNotMatched-insert in one call. Touched files
@@ -2252,84 +2397,8 @@ object Snapshots {
     */
   def mergeInto(spark: SparkSession, dir: String, updates: DataFrame,
       key: String, meta: Map[String, String] = Map.empty,
-      evolve: Boolean = false): Int = {
-    import org.apache.spark.sql.functions.{col, count, lit, min, max}
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    enforceSchema(spark, dir, updates, evolve)
-    enforceConstraints(spark, dir, updates)
-    val prevDv = dvRel(spark, dir, cur)
-    val up = updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val Array(head) = up.agg(count(lit(1)), count(col(key)),
-        countDistinctCol(key), min(col(key)), max(col(key))).collect()
-      val (total, nonNull, distinct) = (head.getLong(0), head.getLong(1), head.getLong(2))
-      if (total == 0) return cur
-      require(nonNull == total, s"$dir: merge key $key has null(s) in updates")
-      require(distinct == total, s"$dir: merge updates carry duplicate $key values")
-      val (candidates, all) = pruneFiles(spark, dir, cur, key,
-        Option(head.get(3)), Option(head.get(4)))
-      // one MASKED scan of only the envelope candidates pins the files that
-      // hold a LIVE matched key (metadata-sized result: distinct file paths;
-      // a DV-deleted ghost row must neither pin a file nor feed the pre-image)
-      val touched: Seq[String] =
-        if (candidates.isEmpty) Seq.empty
-        else {
-          openWithPos(spark, dir, cur, candidates.map(f => dataPath(dir, f)), prevDv)
-            .select(col(key), col("__path"))
-            .join(up.select(col(key)), Seq(key))
-            .select("__path").distinct().collect()
-            .map(r => relPathIn(dir, all.toSet, r.getString(0))).toSeq.sorted
-        }
-      val untouched = all.filterNot(touched.toSet)
-      val next = cur + 1
-      val touchedRows =
-        if (touched.isEmpty) None
-        else Some(maskedParquet(spark, dir, cur, touched.map(f => dataPath(dir, f))))
-      val survivors = touchedRows match {
-        case None => up.toDF()
-        case Some(tr) => tr.join(up.select(col(key)), Seq(key), "left_anti")
-          .unionByName(up, allowMissingColumns = true)
-      }
-      // change feed: replaced rows (update_pre), their replacements
-      // (update_post), and updates matching nothing (insert)
-      val replaced = touchedRows.map(
-        _.join(up.select(col(key)), Seq(key), "left_semi"))
-      val matchedKeys = replaced.map(_.select(col(key)).distinct())
-      val cdcDf = {
-        val pre = replaced.map(_.withColumn("_change_type", lit("update_pre")))
-        val post = matchedKeys.map(mk =>
-          up.join(mk, Seq(key), "left_semi")
-            .withColumn("_change_type", lit("update_post")))
-        val ins = matchedKeys
-          .map(mk => up.join(mk, Seq(key), "left_anti"))
-          .getOrElse(up.toDF())
-          .withColumn("_change_type", lit("insert"))
-        val u = (pre.toSeq ++ post.toSeq :+ ins)
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-        // restore the TABLE column order: the using-key joins above moved
-        // `key` to the front (and `updates` may arrive in any order), and
-        // feed readers bind positionally; evolved columns append after the
-        // table's in a stable order
-        val tableCols = read(spark, dir, Some(cur)).columns.toSeq
-        val newCols = updates.columns.filterNot(tableCols.contains).toSeq
-        u.select((tableCols ++ newCols :+ "_change_type").map(col): _*)
-      }
-      val cdc = writeCdc(spark, dir, next, cdcDf)
-      // DML rewrites size their fresh files adaptively (guide §6): without
-      // the hint every shuffle partition of the survivor frame became its
-      // own tiny file (32 files per commit at the bench config; the
-      // post-merge table then paid ~1 scan task per file on every read).
-      // REBALANCE lets AQE bin-pack to the advisory size — scale-adaptive,
-      // a no-op without AQE. Explicitly-sized writes (compact's
-      // repartition(n), fixture layouts) don't pass through here.
-      val fresh = writeData(spark, dir, next, survivors.hint("rebalance"))
-      // rewritten files materialized their masks; carried files keep theirs
-      val dvCarry = carryDvFor(spark, dir, cur, next, untouched)
-      publish(spark, dir, next, untouched, fresh, meta, Some(cdc), dvCarry)
-      next
-    } finally { up.unpersist(); () }
-  }
+      evolve: Boolean = false): Int =
+    mergeByKey(spark, dir, updates, key, meta, evolve, mor = false)
 
   /** MERGE INTO, merge-on-read: matched table rows are masked out through
     * the version's DELETION VECTOR and every update row lands in fresh
@@ -2345,71 +2414,8 @@ object Snapshots {
     */
   def mergeIntoMor(spark: SparkSession, dir: String, updates: DataFrame,
       key: String, meta: Map[String, String] = Map.empty,
-      evolve: Boolean = false): Int = {
-    import org.apache.spark.sql.functions.{col, count, lit, min, max}
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    enforceSchema(spark, dir, updates, evolve)
-    enforceConstraints(spark, dir, updates)
-    val prevDv = dvRel(spark, dir, cur)
-    val up = updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val Array(head) = up.agg(count(lit(1)), count(col(key)),
-        countDistinctCol(key), min(col(key)), max(col(key))).collect()
-      val (total, nonNull, distinct) = (head.getLong(0), head.getLong(1), head.getLong(2))
-      if (total == 0) return cur
-      require(nonNull == total, s"$dir: merge key $key has null(s) in updates")
-      require(distinct == total, s"$dir: merge updates carry duplicate $key values")
-      val (candidates, all) = pruneFiles(spark, dir, cur, key,
-        Option(head.get(3)), Option(head.get(4)))
-      // the pre-image: LIVE candidate rows matching an update key, with
-      // their (file, pos) identity — these positions join the DV
-      val matched =
-        if (candidates.isEmpty) None
-        else Some(openWithPos(spark, dir, cur, candidates.map(f => dataPath(dir, f)), prevDv)
-          .join(up.select(col(key)), Seq(key), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      try {
-        val anyMatched = matched.exists(!_.isEmpty)
-        val next = cur + 1
-        val tableCols = read(spark, dir, Some(cur)).columns.toSeq
-        val newCols = updates.columns.filterNot(tableCols.contains).toSeq
-        val matchedKeys = matched.filter(_ => anyMatched)
-          .map(_.select(col(key)).distinct())
-        val cdcDf = {
-          val pre = matched.filter(_ => anyMatched).map(
-            _.withColumn("_change_type", lit("update_pre")))
-          val post = matchedKeys.map(mk =>
-            up.join(mk, Seq(key), "left_semi")
-              .withColumn("_change_type", lit("update_post")))
-          val ins = matchedKeys
-            .map(mk => up.join(mk, Seq(key), "left_anti"))
-            .getOrElse(up.toDF())
-            .withColumn("_change_type", lit("insert"))
-          val u = (pre.toSeq ++ post.toSeq :+ ins)
-            .reduce(_.unionByName(_, allowMissingColumns = true))
-          u.select((tableCols ++ newCols :+ "_change_type").map(col): _*)
-        }
-        val cdc = writeCdc(spark, dir, next, cdcDf)
-        // new mask = prior mask ∪ matched positions (deleted-rows sized)
-        val dvOpt: Option[String] =
-          if (!anyMatched) prevDv // nothing masked anew: carry verbatim
-          else {
-            val newRows = matched.get
-              .select(col("__fname").as("file_name"), col("__pos").as("pos"))
-            val allRows = prevDv match {
-              case None => newRows
-              case Some(rel) =>
-                spark.read.parquet(s"$dir/$rel").unionByName(newRows)
-            }
-            Some(writeDv(spark, dir, next, allRows))
-          }
-        val fresh = writeData(spark, dir, next, up.toDF().hint("rebalance"))
-        publish(spark, dir, next, all, fresh, meta, Some(cdc), dvOpt)
-        next
-      } finally { matched.foreach(_.unpersist()); () }
-    } finally { up.unpersist(); () }
-  }
+      evolve: Boolean = false): Int =
+    mergeByKey(spark, dir, updates, key, meta, evolve, mor = true)
 
   /** Row-level DELETE of `column BETWEEN lower AND upper`, merge-on-read:
     * matching rows are masked via the DELETION VECTOR instead of rewriting
@@ -2424,40 +2430,10 @@ object Snapshots {
   def deleteRangeMor(spark: SparkSession, dir: String, column: String,
       lower: Option[Any], upper: Option[Any],
       meta: Map[String, String] = Map.empty): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val (affected, _) = pruneFiles(spark, dir, cur, column, lower, upper)
-    if (affected.isEmpty) return cur
-    val prevDv = dvRel(spark, dir, cur)
-    val hit = (Seq(col(column).isNotNull) ++
-      lower.map(col(column) >= lit(_)) ++ upper.map(col(column) <= lit(_)))
-      .reduce(_ && _)
-    val matching = openWithPos(spark, dir, cur, affected.map(f => dataPath(dir, f)), prevDv)
-      .filter(hit)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (matching.isEmpty) return cur // provable no-op publishes nothing
-      val next = cur + 1
-      // pre-evolution affected files may lack evolved columns: surface
-      // typed NULLs so the feed row matches the table schema
-      val avail = matching.columns.toSet
-      val cdc = writeCdc(spark, dir, next,
-        matching.select(read(spark, dir, Some(cur)).schema.map(f =>
-            if (avail(f.name)) col(f.name)
-            else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
-          .withColumn("_change_type", lit("delete")))
-      val newRows = matching
-        .select(col("__fname").as("file_name"), col("__pos").as("pos"))
-      val allRows = prevDv match {
-        case None => newRows
-        case Some(rel) => spark.read.parquet(s"$dir/$rel").unionByName(newRows)
-      }
-      val dv = writeDv(spark, dir, next, allRows)
-      publish(spark, dir, next, files(spark, dir, cur), Seq.empty, meta,
-        Some(cdc), Some(dv))
-      next
-    } finally { matching.unpersist(); () }
+    val head = new Head(spark, dir)
+    maskDelete(spark, head,
+      pruneFiles(spark, dir, head.version, column, lower, upper)._1, meta)(
+      _.filter(inRange(column, lower, upper)))
   }
 
   /** Publish a METADATA-ONLY commit: a new version carrying the current
@@ -2471,12 +2447,7 @@ object Snapshots {
   def commitMarker(spark: SparkSession, dir: String,
       meta: Map[String, String]): Int = {
     require(meta.nonEmpty, s"$dir: a marker commit needs metadata to carry")
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val next = cur + 1
-    publish(spark, dir, next, files(spark, dir, cur), Seq.empty, meta,
-      dv = dvRel(spark, dir, cur), noRowChange = true)
-    next
+    landMor(spark, new Head(spark, dir), None, None, None, meta, noRowChange = true)
   }
 
   /** COUNT(*) answered from METADATA — the stats sidecar's per-file row
@@ -2488,8 +2459,7 @@ object Snapshots {
     */
   def countRows(spark: SparkSession, dir: String,
       version: Option[Int] = None): Long = {
-    val v = version.getOrElse(currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots")))
+    val v = version.getOrElse(headVersion(spark, dir))
     val idx = stats(spark, dir, v)
     val fs = files(spark, dir, v)
     val perFile = fs.map(f => idx.get(f).flatMap(_.values.headOption).map(_.rows))
@@ -2564,8 +2534,7 @@ object Snapshots {
       s"$dir: invalid branch name '$name'")
     require(!branches(spark, dir).contains(name),
       s"$dir: branch '$name' already exists")
-    val base = at.getOrElse(currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots")))
+    val base = at.getOrElse(headVersion(spark, dir))
     require(versions(spark, dir).contains(base),
       s"$dir: cannot branch from v$base — it does not exist (expired?)")
     setProperties(spark, dir, Map(branchKey(name) -> base.toString))
@@ -2681,8 +2650,7 @@ object Snapshots {
     val (fs, _) = hfs(spark, dir)
     val (base, headFiles) = branchHeadFiles(spark, dir, name)
     val ks = branchVersions(spark, dir, name)
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+    val cur = headVersion(spark, dir)
     if (ks.isEmpty) { deleteBranch(spark, dir, name); return cur }
     if (cur != base)
       throw new java.util.ConcurrentModificationException(
@@ -2728,7 +2696,6 @@ object Snapshots {
     removeProperties(spark, dir, Seq(branchKey(name)))
   }
 
-  /** Branches as a relation (the `snapshot_branches` TVF's body). */
   /** The `.partitions` metadata table (Iceberg's answer to SHOW
     * PARTITIONS on hidden partitioning): one row per live partition value
     * tuple of the CURRENT version with its file and row counts — a pure
@@ -2743,8 +2710,7 @@ object Snapshots {
     import spark.implicits._
     val specs = partitionSpecs(spark, dir)
     require(specs.nonEmpty, s"$dir: table declares no partition spec")
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+    val v = headVersion(spark, dir)
     val idx = stats(spark, dir, v)
     def rowsOf(f: String): Long =
       idx.get(f).flatMap(_.values.headOption).map(_.rows).getOrElse(-1L)
@@ -2775,6 +2741,7 @@ object Snapshots {
     }.select((names.map(col) ++ Seq(col("n_files"), col("n_rows"))): _*)
   }
 
+  /** Branches as a relation (the `snapshot_branches` TVF's body). */
   def branchesDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     branches(spark, dir).toSeq.sortBy(_._1).map { case (n, base) =>
@@ -3102,8 +3069,7 @@ object Snapshots {
     * Requires `toVersion` to still exist (not expired).
     */
   def restore(spark: SparkSession, dir: String, toVersion: Int): Int = {
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+    val cur = headVersion(spark, dir)
     require(versions(spark, dir).contains(toVersion),
       s"$dir: cannot restore to v$toVersion — it does not exist (expired?)")
     if (toVersion == cur) return cur
@@ -3178,8 +3144,7 @@ object Snapshots {
     val srcAbs = qualify(srcDir)
     val dstAbs = qualify(dstDir)
     require(srcAbs != dstAbs, "clone target must differ from the source")
-    val sv = version.getOrElse(currentVersion(spark, srcDir).getOrElse(
-      throw new IllegalArgumentException(s"$srcDir: no published snapshots")))
+    val sv = version.getOrElse(headVersion(spark, srcDir))
     require(versions(spark, srcDir).contains(sv),
       s"$srcDir: cannot clone v$sv — it does not exist (expired?)")
     require(dvRel(spark, srcDir, sv).isEmpty,
@@ -3214,42 +3179,15 @@ object Snapshots {
     */
   def deleteByKeysMor(spark: SparkSession, dir: String, keys: DataFrame,
       key: String, meta: Map[String, String] = Map.empty): Int = {
-    import org.apache.spark.sql.functions.{col, count, lit, min, max}
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val kp = keys.select(col(key)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    import org.apache.spark.sql.functions.{col, count, min, max}
+    val head = new Head(spark, dir)
+    withPersisted(keys.select(col(key)).distinct()) { kp =>
       val Array(h) = kp.agg(count(col(key)), min(col(key)), max(col(key))).collect()
-      if (h.getLong(0) == 0) return cur
-      val (candidates, _) = pruneFiles(spark, dir, cur, key,
-        Option(h.get(1)), Option(h.get(2)))
-      if (candidates.isEmpty) return cur
-      val prevDv = dvRel(spark, dir, cur)
-      val matching = openWithPos(spark, dir, cur, candidates.map(f => dataPath(dir, f)), prevDv)
-        .join(kp, Seq(key), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (matching.isEmpty) return cur
-        val next = cur + 1
-        val avail = matching.columns.toSet
-        val cdc = writeCdc(spark, dir, next,
-          matching.select(read(spark, dir, Some(cur)).schema.map(f =>
-              if (avail(f.name)) col(f.name)
-              else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
-            .withColumn("_change_type", lit("delete")))
-        val newRows = matching
-          .select(col("__fname").as("file_name"), col("__pos").as("pos"))
-        val allRows = prevDv match {
-          case None => newRows
-          case Some(rel) => spark.read.parquet(s"$dir/$rel").unionByName(newRows)
-        }
-        val dv = writeDv(spark, dir, next, allRows)
-        publish(spark, dir, next, files(spark, dir, cur), Seq.empty, meta,
-          Some(cdc), Some(dv))
-        next
-      } finally { matching.unpersist(); () }
-    } finally { kp.unpersist(); () }
+      val candidates =
+        if (h.getLong(0) == 0) Seq.empty
+        else pruneFiles(spark, dir, head.version, key, Option(h.get(1)), Option(h.get(2)))._1
+      maskDelete(spark, head, candidates, meta)(_.join(kp, Seq(key), "left_semi"))
+    }
   }
 
   /** PARTIAL deletion-vector materialization (Delta's REORG PURGE /
@@ -3269,18 +3207,16 @@ object Snapshots {
       maxMaskedFraction: Double = 0.1): Int = {
     require(maxMaskedFraction >= 0 && maxMaskedFraction < 1,
       s"maxMaskedFraction $maxMaskedFraction out of [0, 1)")
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val rel = dvRel(spark, dir, cur) match {
-      case None => return cur // no mask, nothing to purge
+    val head = new Head(spark, dir)
+    val rel = head.dv match {
+      case None => return head.version // no mask, nothing to purge
       case Some(r) => r
     }
     val masked: Map[String, Long] = spark.read.parquet(s"$dir/$rel")
       .groupBy("file_name").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val idx = stats(spark, dir, cur)
-    val all = files(spark, dir, cur)
-    val hot = all.filter { f =>
+    val idx = stats(spark, dir, head.version)
+    val hot = head.files.filter { f =>
       val name = new org.apache.hadoop.fs.Path(f).getName
       masked.get(name).exists { m =>
         idx.get(f).flatMap(_.values.headOption).map(_.rows) match {
@@ -3289,21 +3225,10 @@ object Snapshots {
         }
       }
     }
-    if (hot.isEmpty) return cur
-    val untouched = all.filterNot(hot.toSet)
-    val next = cur + 1
-    val fresh = writeData(spark, dir, next,
-      maskedParquet(spark, dir, cur, hot.map(f => dataPath(dir, f))))
-    val dvCarry = carryDvFor(spark, dir, cur, next, untouched)
-    publish(spark, dir, next, untouched, fresh,
-      meta = Map("purge" -> s"${hot.length} of ${all.length} files"),
-      dv = dvCarry, noRowChange = true)
-    next
-  }
-
-  private def countDistinctCol(key: String) = {
-    import org.apache.spark.sql.functions.{col, countDistinct}
-    countDistinct(col(key))
+    if (hot.isEmpty) head.version
+    else landCow(spark, head, hot, None, Seq(head.rows(hot)),
+      Map("purge" -> s"${hot.length} of ${head.files.length} files"),
+      noRowChange = true)
   }
 
   /** REPLACE WHERE (Delta's replaceWhere / Iceberg's overwrite-by-filter):
@@ -3320,52 +3245,31 @@ object Snapshots {
     */
   def replaceWhere(spark: SparkSession, dir: String, df: DataFrame,
       column: String, lower: Option[Any], upper: Option[Any]): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+    import org.apache.spark.sql.functions.lit
+    val head = new Head(spark, dir)
     enforceSchema(spark, dir, df, evolve = false)
     // the incoming frame is consumed repeatedly (constraint probe, region
     // probe, CDC record, data write) — persist it like the sibling
     // merge/delete ops, so an expensive recompute runs once and every
     // consumer sees ONE materialization
-    val up = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withPersisted(df) { up =>
       enforceConstraints(spark, dir, up)
-      val inRegion = (Seq(col(column).isNotNull) ++
-        lower.map(col(column) >= lit(_)) ++ upper.map(col(column) <= lit(_)))
-        .reduce(_ && _)
+      val inRegion = inRange(column, lower, upper)
       val escapee = up.filter(!inRegion).limit(1).collect()
       require(escapee.isEmpty,
         s"$dir: replaceWhere row outside the replaced region on '$column': " +
           s"${escapee.headOption.getOrElse("")} — refusing to leak writes")
-      val (affected, all) = pruneFiles(spark, dir, cur, column, lower, upper)
-      val untouched = all.filterNot(affected.toSet)
-      val next = cur + 1
-      val keep = (Seq(col(column).isNull) ++
-        lower.map(col(column) < lit(_)) ++ upper.map(col(column) > lit(_)))
-        .reduce(_ || _)
-      val rows =
-        if (affected.isEmpty) None
-        else Some(maskedParquet(spark, dir, cur, affected.map(f => dataPath(dir, f)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      try {
-        val inserts = up.withColumn("_change_type", lit("insert"))
-        val cdc = writeCdc(spark, dir, next, rows match {
-          case Some(r) => r.filter(!keep).withColumn("_change_type", lit("delete"))
-            .unionByName(inserts, allowMissingColumns = true)
-          case None => inserts
-        })
-        val freshKeep = rows match {
-          case Some(r) => writeData(spark, dir, next, r.filter(keep))
-          case None => Seq.empty
-        }
-        val freshNew = writeData(spark, dir, next, up)
-        val dvCarry = carryDvFor(spark, dir, cur, next, untouched)
-        publish(spark, dir, next, untouched, freshKeep ++ freshNew,
-          cdc = Some(cdc), dv = dvCarry)
-        next
-      } finally { rows.foreach(_.unpersist()); () }
-    } finally { up.unpersist(); () }
+      val (affected, _) = pruneFiles(spark, dir, head.version, column, lower, upper)
+      val inserts = up.withColumn("_change_type", lit("insert"))
+      if (affected.isEmpty)
+        landCow(spark, head, affected, Some(inserts), Seq(up), Map.empty)
+      else withPersisted(head.rows(affected)) { rows =>
+        landCow(spark, head, affected,
+          Some(rows.filter(inRegion).withColumn("_change_type", lit("delete"))
+            .unionByName(inserts, allowMissingColumns = true)),
+          Seq(rows.filter(!inRegion), up), Map.empty)
+      }
+    }
   }
 
   /** INSERT OVERWRITE with DYNAMIC partition semantics on a
@@ -3391,11 +3295,9 @@ object Snapshots {
     require(specs.nonEmpty,
       s"$dir: dynamic INSERT OVERWRITE needs a partitioned table — " +
         "an unpartitioned table takes the full replace (static mode)")
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+    val head = new Head(spark, dir)
     enforceSchema(spark, dir, df, evolve = false)
-    val up = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withPersisted(df) { up =>
       enforceConstraints(spark, dir, up)
       // the touched set is the distinct TUPLE of transform values —
       // partition-count-sized, never row-sized
@@ -3408,9 +3310,8 @@ object Snapshots {
       val touched: Set[Seq[String]] = up.select(pvs: _*).distinct().collect()
         .map(r => specs.indices.map(i =>
           Option(r.getString(i)).getOrElse(HiveDefaultPart))).toSet
-      val all = files(spark, dir, cur)
-      val statsIdx = stats(spark, dir, cur)
-      val (replaced, carried) = all.partition { f =>
+      val statsIdx = stats(spark, dir, head.version)
+      val replaced = head.files.filter { f =>
         val tuple = specs.indices.map(i => partValueRawAt(f, i))
         if (tuple.forall(_.nonEmpty)) touched.contains(tuple.map(_.get))
         else {
@@ -3422,22 +3323,13 @@ object Snapshots {
           true // the 0-row schema-pin file: drop with the replaced set
         }
       }
-      val next = cur + 1
-      val replacedRows =
-        if (replaced.isEmpty) None
-        else Some(maskedParquet(spark, dir, cur,
-          replaced.map(f => dataPath(dir, f))))
       val inserts = up.withColumn("_change_type", lit("insert"))
-      val cdc = writeCdc(spark, dir, next, replacedRows match {
-        case Some(r) => r.withColumn("_change_type", lit("delete"))
+      val feed =
+        if (replaced.isEmpty) inserts
+        else head.rows(replaced).withColumn("_change_type", lit("delete"))
           .unionByName(inserts, allowMissingColumns = true)
-        case None => inserts
-      })
-      val fresh = writeData(spark, dir, next, up)
-      val dvCarry = carryDvFor(spark, dir, cur, next, carried)
-      publish(spark, dir, next, carried, fresh, meta, Some(cdc), dvCarry)
-      next
-    } finally { up.unpersist(); () }
+      landCow(spark, head, replaced, Some(feed), Seq(up), meta)
+    }
   }
 
   /** Rewrite the whole table under its CURRENT partition spec — the
@@ -3451,12 +3343,10 @@ object Snapshots {
   def rewritePartitioned(spark: SparkSession, dir: String): Int = {
     require(partitionSpecs(spark, dir).nonEmpty,
       s"$dir: no partition spec declared — set one before rewriting")
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    replacePreserving(spark, dir, read(spark, dir, Some(cur)),
-      expectedVersion = Some(cur),
-      meta = Map("repartitioned" ->
-        partitionSpecs(spark, dir).map(_.encoded).mkString(";")))
+    val head = new Head(spark, dir)
+    landCow(spark, head, head.files, None, Seq(read(spark, dir, Some(head.version))),
+      Map("repartitioned" -> partitionSpecs(spark, dir).map(_.encoded).mkString(";")),
+      noRowChange = true)
   }
 
   /** One WHEN MATCHED clause of [[mergeApply]]: `set = None` is DELETE,
@@ -3499,11 +3389,10 @@ object Snapshots {
       notMatchedBySource: Seq[WhenNotMatchedBySource] = Seq.empty,
       pruneKey: Option[(String, org.apache.spark.sql.Column)] = None,
       meta: Map[String, String] = Map.empty): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, struct, when}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, when}
     import org.apache.spark.sql.Column
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val tableSchema = read(spark, dir, Some(cur)).schema
+    val head = new Head(spark, dir)
+    val tableSchema = head.schema
     val tableCols = tableSchema.fieldNames.toSeq
     // UPDATE sets may target nested struct fields (dot paths); INSERTs
     // assign whole columns only (a nested insert target is meaningless —
@@ -3514,29 +3403,22 @@ object Snapshots {
       require(tableCols.contains(c), s"$dir: MERGE INSERT targets unknown column '$c'") })
     notMatchedBySource.foreach(_.set.foreach(_.foreach { case (c, _) =>
       fieldTypeAt(dir, tableSchema, c) }))
-    val src = source.withColumn("__s_present", lit(true))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withPersisted(source.withColumn("__s_present", lit(true))) { src =>
       // ---- candidate discovery: stats envelope, then one masked scan
-      val (candidates, all) = pruneKey match {
+      val candidates = pruneKey match {
         case Some((tCol, sExpr)) if notMatchedBySource.isEmpty =>
           // sExpr is expressed over the __s alias, so aggregate through it
           val Array(mm) = src.alias("__s").agg(min(sExpr), max(sExpr)).collect()
-          if (mm.isNullAt(0)) (Seq.empty[String], files(spark, dir, cur))
-          else pruneFiles(spark, dir, cur, tCol, Option(mm.get(0)), Option(mm.get(1)))
-        case _ => val fs = files(spark, dir, cur); (fs, fs)
+          if (mm.isNullAt(0)) Seq.empty
+          else pruneFiles(spark, dir, head.version, tCol,
+            Option(mm.get(0)), Option(mm.get(1)))._1
+        case _ => head.files
       }
-      val prevDv = dvRel(spark, dir, cur)
       val sAliased = src.alias("__s")
       val touched: Seq[String] =
-        if (notMatchedBySource.nonEmpty) all
-        else if (candidates.isEmpty) Seq.empty
-        else openWithPos(spark, dir, cur, candidates.map(f => dataPath(dir, f)), prevDv)
-          .alias("__t").join(sAliased, onCond, "left_semi")
-          .select("__path").distinct().collect()
-          .map(r => relPathIn(dir, all.toSet, r.getString(0))).toSeq.sorted
-      val untouched = all.filterNot(touched.toSet)
-      val next = cur + 1
+        if (notMatchedBySource.nonEmpty) head.files
+        else touchedBy(spark, head, candidates)(
+          _.alias("__t").join(sAliased, onCond, "left_semi"))
       def truthy(c: Option[Column]): Column =
         c.map(x => coalesce(x, lit(false))).getOrElse(lit(true))
       // first-applicable-clause index per branch; -1 = no clause claims it
@@ -3558,36 +3440,27 @@ object Snapshots {
           }.as(c)
         }: _*)
 
-      if (touched.isEmpty) {
-        // nothing matched (or the table is all-carry): insert-only path
-        val inserts = insertsOf(sAliased)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (inserts.isEmpty) return cur
+      // NOTE (r22): neither path rebalances its write — re-binning the SQL
+      // MERGE output changed the double-summation association order on the
+      // merged table and flipped a round(sum(o_totalprice), 2) result by
+      // one cent at sf0.01 (oracle mismatch). The layout a table's
+      // float-aggregating oracles were proven against is part of its
+      // contract; the other DML paths' rebalance stands (all their family
+      // oracles stay green).
+      // nothing matched (or the table is all-carry): insert-only path
+      if (touched.isEmpty) withPersisted(insertsOf(sAliased)) { inserts =>
+        if (inserts.isEmpty) head.version
+        else {
           enforceConstraints(spark, dir, inserts)
-          val cdc = writeCdc(spark, dir, next,
-            inserts.withColumn("_change_type", lit("insert")))
-          // NOTE (r22): no rebalance here — re-binning the SQL MERGE
-          // output changed the double-summation association order on the
-          // merged table and flipped a round(sum(o_totalprice), 2) result
-          // by one cent at sf0.01 (oracle mismatch). The layout a table's
-          // float-aggregating oracles were proven against is part of its
-          // contract; the other DML paths' rebalance stands (all their
-          // family oracles stay green).
-          val fresh = writeData(spark, dir, next, inserts)
-          publish(spark, dir, next, all, fresh, meta, Some(cdc),
-            carryDvFor(spark, dir, cur, next, all))
-          return next
-        } finally { inserts.unpersist(); () }
+          landCow(spark, head, Seq.empty,
+            Some(inserts.withColumn("_change_type", lit("insert"))), Seq(inserts), meta)
+        }
       }
-
       // full outer: matched pairs + target-only (carry / BY SOURCE) +
       // source-only (insert candidates)
-      val tAliased = openWithPos(spark, dir, cur, touched.map(f => dataPath(dir, f)), prevDv)
-        .withColumn("__t_present", lit(true)).alias("__t")
-      val joined = tAliased.join(sAliased, onCond, "full_outer")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      else withPersisted(locate(spark, head, touched)(
+          _.withColumn("__t_present", lit(true)).alias("__t")
+            .join(sAliased, onCond, "full_outer"))) { joined =>
         val tPresent = col("__t_present") === lit(true)
         val sPresent = col("__s_present") === lit(true)
         // ANSI multi-match rule: a second source match would duplicate the
@@ -3635,25 +3508,18 @@ object Snapshots {
           tSide.filter(changedT).select(outCols: _*).unionByName(inserts))
         // change feed: update pre/post pairs, deletes, inserts — rows no
         // clause claimed emit nothing
-        val preRows = tSide.filter(changedT)
+        def priorOf(f: Column, kind: String) = tSide.filter(f)
           .select(tableCols.map(c => col(s"__t.$c").as(c)): _*)
-          .withColumn("_change_type", lit("update_pre"))
+          .withColumn("_change_type", lit(kind))
         val postRows = tSide.filter(changedT).select(outCols: _*)
           .withColumn("_change_type", lit("update_post"))
-        val delRows = tSide.filter(dropped)
-          .select(tableCols.map(c => col(s"__t.$c").as(c)): _*)
-          .withColumn("_change_type", lit("delete"))
         val insRows = inserts.withColumn("_change_type", lit("insert"))
-        val cdc = writeCdc(spark, dir, next,
-          Seq(preRows, postRows, delRows, insRows).reduce(_.unionByName(_)))
-        // no rebalance on the SQL MERGE survivor write either — see the
-        // insertsOf note above (one-cent float-sum flip at sf0.01)
-        val fresh = writeData(spark, dir, next, survivors)
-        val dvCarry = carryDvFor(spark, dir, cur, next, untouched)
-        publish(spark, dir, next, untouched, fresh, meta, Some(cdc), dvCarry)
-        next
-      } finally { joined.unpersist(); () }
-    } finally { src.unpersist(); () }
+        landCow(spark, head, touched,
+          Some(Seq(priorOf(changedT, "update_pre"), postRows, priorOf(dropped, "delete"),
+            insRows).reduce(_.unionByName(_))),
+          Seq(survivors), meta)
+      }
+    }
   }
 
   /** Generic predicate DELETE, copy-on-write — the SQL face's
@@ -3671,38 +3537,20 @@ object Snapshots {
       cond: org.apache.spark.sql.Column,
       prune: Seq[(String, Option[Any], Option[Any])] = Seq.empty,
       meta: Map[String, String] = Map.empty): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val (candidates, all) = pruneFilesAll(spark, dir, cur, prune)
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val head = new Head(spark, dir)
     val hit = coalesce(cond, lit(false))
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else openWithPos(spark, dir, cur, candidates.map(f => dataPath(dir, f)),
-          dvRel(spark, dir, cur))
-        .filter(hit).select("__path").distinct().collect()
-        .map(r => relPathIn(dir, all.toSet, r.getString(0))).toSeq.sorted
-    if (touched.isEmpty) return cur
-    val untouched = all.filterNot(touched.toSet)
-    val next = cur + 1
-    val rows = maskedParquet(spark, dir, cur, touched.map(f => dataPath(dir, f)))
-    val cdc = writeCdc(spark, dir, next,
-      rows.filter(hit).withColumn("_change_type", lit("delete")))
-    val fresh = writeData(spark, dir, next, rows.filter(!hit).hint("rebalance"))
-    val dvCarry = carryDvFor(spark, dir, cur, next, untouched)
-    publish(spark, dir, next, untouched, fresh, meta, Some(cdc), dvCarry)
-    next
+    val touched = touchedBy(spark, head,
+      pruneFilesAll(spark, dir, head.version, prune)._1)(_.filter(hit))
+    if (touched.isEmpty) head.version
+    else {
+      val rows = head.rows(touched)
+      landCow(spark, head, touched,
+        Some(rows.filter(hit).withColumn("_change_type", lit("delete"))),
+        Seq(rows.filter(!hit).hint("rebalance")), meta)
+    }
   }
 
-  /** Generic predicate UPDATE, copy-on-write — the SQL face's
-    * `UPDATE t SET c = expr, … WHERE <condition>`. Same touched-file
-    * discovery as [[deleteWhere]]; each touched file rewrites with the
-    * assignments applied to matching rows (assignment expressions are cast
-    * to the column's existing type — SQL UPDATE never changes schema), all
-    * other files carry by reference. CHECK constraints gate the post-image.
-    * The change feed records update_pre/update_post pairs. SQL NULL
-    * semantics: a NULL condition leaves the row unchanged.
-    */
   /** Resolve a (possibly dot-nested) assignment path against `schema` and
     * return the leaf field's type — loud on unknown segments and on
     * descending through a non-struct. `a.b.c` names field c of struct b
@@ -3751,29 +3599,30 @@ object Snapshots {
     }
   }
 
+  /** Generic predicate UPDATE, copy-on-write — the SQL face's
+    * `UPDATE t SET c = expr, … WHERE <condition>`. Same touched-file
+    * discovery as [[deleteWhere]]; each touched file rewrites with the
+    * assignments applied to matching rows (assignment expressions are cast
+    * to the column's existing type — SQL UPDATE never changes schema), all
+    * other files carry by reference. CHECK constraints gate the post-image.
+    * The change feed records update_pre/update_post pairs. SQL NULL
+    * semantics: a NULL condition leaves the row unchanged.
+    */
   def updateWhere(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)],
       prune: Seq[(String, Option[Any], Option[Any])] = Seq.empty,
       meta: Map[String, String] = Map.empty): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val schema = read(spark, dir, Some(cur)).schema
+    val head = new Head(spark, dir)
+    val schema = head.schema
     require(sets.nonEmpty, s"$dir: UPDATE needs at least one assignment")
     sets.foreach { case (c, _) => fieldTypeAt(dir, schema, c) } // loud validate
-    val (candidates, all) = pruneFilesAll(spark, dir, cur, prune)
     val hit = coalesce(cond, lit(false))
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else openWithPos(spark, dir, cur, candidates.map(f => dataPath(dir, f)),
-          dvRel(spark, dir, cur))
-        .filter(hit).select("__path").distinct().collect()
-        .map(r => relPathIn(dir, all.toSet, r.getString(0))).toSeq.sorted
-    if (touched.isEmpty) return cur
-    val untouched = all.filterNot(touched.toSet)
-    val next = cur + 1
-    val rows = maskedParquet(spark, dir, cur, touched.map(f => dataPath(dir, f)))
+    val touched = touchedBy(spark, head,
+      pruneFilesAll(spark, dir, head.version, prune)._1)(_.filter(hit))
+    if (touched.isEmpty) return head.version
+    val rows = head.rows(touched)
     val byTop = sets.groupBy(_._1.split('.').head)
     def applied(src: DataFrame, always: Boolean): DataFrame =
       src.select(schema.fieldNames.toSeq.map { c =>
@@ -3784,47 +3633,42 @@ object Snapshots {
           case None => col(c)
         }
       }: _*)
-    val out = applied(rows, always = false)
     // the post-image must satisfy the table's CHECK constraints — gate on
     // exactly the rows the update produces, not the carried ones
     enforceConstraints(spark, dir, applied(rows.filter(hit), always = true))
-    val cdc = writeCdc(spark, dir, next,
-      rows.filter(hit).withColumn("_change_type", lit("update_pre"))
+    landCow(spark, head, touched,
+      Some(rows.filter(hit).withColumn("_change_type", lit("update_pre"))
         .unionByName(applied(rows.filter(hit), always = true)
-          .withColumn("_change_type", lit("update_post"))))
-    val fresh = writeData(spark, dir, next, out.hint("rebalance"))
-    val dvCarry = carryDvFor(spark, dir, cur, next, untouched)
-    publish(spark, dir, next, untouched, fresh, meta, Some(cdc), dvCarry)
-    next
+          .withColumn("_change_type", lit("update_post")))),
+      Seq(applied(rows, always = false).hint("rebalance")), meta)
   }
 
+  /** Row-level DELETE of `column BETWEEN lower AND upper`, copy-on-write:
+    * the stats index narrows the rewrite to the files that can contain a
+    * matching row; every other file is CARRIED into the new manifest
+    * untouched (same path, same bytes — prior versions keep reading it
+    * too). Rows where the predicate is NULL survive, per SQL DELETE
+    * semantics. Returns the new version — or the current one unchanged when
+    * stats prove nothing matches (a provable no-op publishes nothing).
+    * History is rewritten for the affected files, so [[readChanges]] across
+    * a delete fails loudly, exactly like a replace commit.
+    */
   def deleteRange(spark: SparkSession, dir: String, column: String,
       lower: Option[Any], upper: Option[Any]): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-    val (affected, all) = pruneFiles(spark, dir, cur, column, lower, upper)
-    if (affected.isEmpty) return cur
-    val untouched = all.filterNot(affected.toSet)
-    val next = cur + 1
-    val keep = (Seq(col(column).isNull) ++
-      lower.map(col(column) < lit(_)) ++ upper.map(col(column) > lit(_)))
-      .reduce(_ || _)
+    import org.apache.spark.sql.functions.lit
+    val head = new Head(spark, dir)
+    val (affected, _) = pruneFiles(spark, dir, head.version, column, lower, upper)
+    if (affected.isEmpty) return head.version
+    val hit = inRange(column, lower, upper)
     // masked read: a row a prior merge-on-read delete already masked must
     // neither resurrect in the rewrite nor re-surface in the change feed
-    val affectedRows = maskedParquet(spark, dir, cur,
-      affected.map(f => dataPath(dir, f)))
-    // change feed: exactly the rows the predicate removes
-    val cdc = writeCdc(spark, dir, next,
-      affectedRows.filter(!keep).withColumn("_change_type", lit("delete")))
+    val rows = head.rows(affected)
     // no rebalance here: coalescing a range-delete's rewritten files to one
     // defeats per-file bloom/stat skipping on the surviving rows at small
     // scale (SnapshotSpec's rewrites-preserve-bloom lock); the rewrite
     // keeps the incoming partitioning instead
-    val fresh = writeData(spark, dir, next, affectedRows.filter(keep))
-    // rewritten files materialized their masks; carried files keep theirs
-    val dvCarry = carryDvFor(spark, dir, cur, next, untouched)
-    publish(spark, dir, next, untouched, fresh, cdc = Some(cdc), dv = dvCarry)
-    next
+    landCow(spark, head, affected,
+      Some(rows.filter(hit).withColumn("_change_type", lit("delete"))),
+      Seq(rows.filter(!hit)), Map.empty)
   }
 }

@@ -2460,29 +2460,17 @@ object Hdf5 {
     b.array()
   }
 
-  def write(path: String, datasets: Seq[WDataset]): Unit =
-    write(path, datasets, latest = false)
-
-  def write(path: String, datasets: Seq[WDataset], latest: Boolean): Unit =
-    write(path, datasets, latest, denseRoot = false)
-
-  def write(path: String, datasets: Seq[WDataset], latest: Boolean,
-      links: Seq[WLink]): Unit =
-    write(path, datasets, latest, denseRoot = false, denseAttrs = false,
-      groupInternalK = 16, denseNodeSize = 4096, denseIdLen = 0,
-      denseHeapGeom = None, links = links)
-
-  def write(path: String, datasets: Seq[WDataset], latest: Boolean,
-      denseRoot: Boolean): Unit =
-    write(path, datasets, latest, denseRoot, denseAttrs = false)
-
-  /** `latest = true` emits the format's latest-version encodings — the
+  /** Write `datasets` (plus `links`) as one HDF5 file. Every option has
+    * the library default.
+    *
+    * `latest = true` emits the format's latest-version encodings — the
     * 48-byte checksummed superblock v3, v2 (`OHDR`) object headers, compact
     * link-message groups, dataspace v2, attribute v3, filter pipeline v2,
     * and data layout v4 (contiguous, or chunked with a Single Chunk or
     * Fixed Array index) — i.e. what `H5F_LIBVER_LATEST` produces for this
     * subset. `latest = false` keeps the default-format encodings
     * (superblock v0, v1 headers, symbol-table groups, layout v3).
+    *
     * `denseRoot = true` (latest only) stores the root group's links DENSE:
     * one fractal-heap managed object per link message plus a single-leaf
     * name-index v2 b-tree — what libhdf5 switches to when a group passes
@@ -2491,62 +2479,41 @@ object Hdf5 {
     * attributes DENSE: the object header carries only an Attribute Info
     * message pointing at a per-dataset fractal heap + type-8 name-index
     * b-tree — what libhdf5 switches to past 8 attributes by default.
-    */
-  def write(path: String, datasets: Seq[WDataset], latest: Boolean,
-      denseRoot: Boolean, denseAttrs: Boolean): Unit =
-    write(path, datasets, latest, denseRoot, denseAttrs, groupInternalK = 16)
-
-  /** `groupInternalK` is the superblock's declared group internal node k:
+    *
+    * `groupInternalK` is the superblock's declared group internal node k:
     * every classic group b-tree node (level 0 over SNODs, higher levels
     * over tree nodes) splits at 2·k children, recursively — libhdf5's rule
     * (default k = 16, so the tree goes multi-level past 32 SNODs ≈ 256
     * names). Lower it to exercise deep group trees on small fixtures.
-    */
-  def write(path: String, datasets: Seq[WDataset], latest: Boolean,
-      denseRoot: Boolean, denseAttrs: Boolean, groupInternalK: Int): Unit =
-    write(path, datasets, latest, denseRoot, denseAttrs, groupInternalK,
-      denseNodeSize = 4096)
-
-  def write(path: String, datasets: Seq[WDataset], latest: Boolean,
-      denseRoot: Boolean, denseAttrs: Boolean, groupInternalK: Int,
-      denseNodeSize: Int): Unit =
-    write(path, datasets, latest, denseRoot, denseAttrs, groupInternalK,
-      denseNodeSize, denseIdLen = 0)
-
-  /** `denseNodeSize` is the v2 b-tree node size declared in every dense
+    *
+    * `denseNodeSize` is the v2 b-tree node size declared in every dense
     * name-index `BTHD` header (libhdf5 default 4096). The tree's depth
     * follows from it: one leaf below ~400 records, a depth-1 internal past
     * that, internal-over-internal once the cumulative depth-1 capacity
     * (~100k records at 4096) overflows — lower it to exercise deep trees on
     * small fixtures; the reader derives all geometry from the header.
-    */
-  /** `denseIdLen` (0 = library defaults: 7-byte link / 8-byte attribute
+    *
+    * `denseIdLen` (0 = library defaults: 7-byte link / 8-byte attribute
     * IDs) widens the declared fractal-heap ID length so that short
     * messages take libhdf5's TINY inline path — at the defaults nothing
     * real fits an ID, exactly as in libhdf5-written files.
-    */
-  def write(path: String, datasets: Seq[WDataset], latest: Boolean,
-      denseRoot: Boolean, denseAttrs: Boolean, groupInternalK: Int,
-      denseNodeSize: Int, denseIdLen: Int): Unit =
-    write(path, datasets, latest, denseRoot, denseAttrs, groupInternalK,
-      denseNodeSize, denseIdLen, denseHeapGeom = None)
-
-  /** `denseHeapGeom = Some((startBlockSize, maxDirectSize))` (both powers of
+    *
+    * `denseHeapGeom = Some((startBlockSize, maxDirectSize))` (both powers of
     * two, maxDirect ≥ 2·start) lays every dense store's fractal heap out as
     * a REAL multi-block doubling table: `FHIB` root, direct rows, and child
     * indirect blocks once the link/attribute data outruns the direct rows —
     * the wide-group shape of real many-variable archives, shrunk to fixture
     * scale. `None` (default) keeps one root direct block sized to fit.
-    */
-  /** `sbV1 = true` (classic only) emits a version-1 superblock — v0 plus
+    *
+    * `sbV1 = true` (classic only) emits a version-1 superblock — v0 plus
     * the 2-byte Indexed Storage Internal Node K (written at libhdf5's
     * default 32) + 2 reserved bytes, the 1.6-era shape produced when
     * `istore_k` departs its default.
     */
-  def write(path: String, datasets: Seq[WDataset], latest: Boolean,
-      denseRoot: Boolean, denseAttrs: Boolean, groupInternalK: Int,
-      denseNodeSize: Int, denseIdLen: Int,
-      denseHeapGeom: Option[(Long, Long)], sbV1: Boolean = false,
+  def write(path: String, datasets: Seq[WDataset], latest: Boolean = false,
+      denseRoot: Boolean = false, denseAttrs: Boolean = false,
+      groupInternalK: Int = 16, denseNodeSize: Int = 4096, denseIdLen: Int = 0,
+      denseHeapGeom: Option[(Long, Long)] = None, sbV1: Boolean = false,
       links: Seq[WLink] = Nil, denseHeapFilter: Boolean = false): Unit = {
     require(!sbV1 || !latest, "superblock v1 is a classic-format shape")
     require(!denseRoot || latest, "dense root groups require the latest format")

@@ -670,8 +670,7 @@ private[graft] class SnapshotMetaAggScan(dir: String, pinned: Option[Int],
       override def schema: StructType = out
       override def buildScan(): RDD[Row] = {
         val spark = sqlContext.sparkSession
-        val v = pinned.orElse(Snapshots.currentVersion(spark, dir)).getOrElse(
-          throw new IllegalArgumentException(s"$dir: no published snapshots"))
+        val v = pinned.getOrElse(Snapshots.headVersion(spark, dir))
         val idx = Snapshots.stats(spark, dir, v)
         val fls = Snapshots.files(spark, dir, v)
         def sts(name: String) = {

@@ -516,9 +516,7 @@ object SourceQueries extends QueryModule {
           // one unlimited dim → EA is libhdf5's pick; two → the v2 b-tree
           maxDims = if (eaIndex) Some(Seq(-1L, YD.toLong, XD.toLong))
           else if (bt2) Some(Seq(-1L, -1L, XD.toLong)) else None)),
-        latest, dense, denseAttrs, groupInternalK = 16,
-        denseNodeSize = 4096, denseIdLen = 0, denseHeapGeom = None,
-        sbV1 = sbV1)
+        latest = latest, denseRoot = dense, denseAttrs = denseAttrs, sbV1 = sbV1)
     }
     dir
   }

@@ -261,8 +261,7 @@ class SnapshotRelation(override val sqlContext: SQLContext, val dir: String,
     * view observes later commits (incl. its own `INSERT INTO`s); a
     * versionAsOf/timestampAsOf pin stays frozen, per time-travel contract.
     */
-  private def version: Int = pinned.orElse(Snapshots.currentVersion(spark, dir))
-    .getOrElse(throw new IllegalArgumentException(s"$dir: no published snapshots"))
+  private def version: Int = pinned.getOrElse(Snapshots.headVersion(spark, dir))
 
   override val schema: StructType = Snapshots.read(spark, dir, Some(version)).schema
 

@@ -35,7 +35,7 @@ class Hdf5Spec extends AnyFunSuite {
         strAttrs = Seq("long_name" -> "air temperature"),
         numAttrs = Seq(("_FillValue", F32, Seq(-999.0))),
         refAttrs = Seq("DIMENSION_LIST" -> Seq(Seq("time"), Seq("lat"), Seq("lon"))),
-        chunkDims = if (chunked) Some(Seq(2, 3, 3)) else None)), latest)
+        chunkDims = if (chunked) Some(Seq(2, 3, 3)) else None)), latest = latest)
   }
 
   for (latest <- Seq(false, true); chunked <- Seq(false, true)) {
@@ -1038,7 +1038,7 @@ class Hdf5Spec extends AnyFunSuite {
           btreeLeafK = leafK,
           btreeInternalK = if (leafK.isDefined && rnd.nextBoolean())
             Some(rnd.nextInt(4) + 2) else None)),
-        latest)
+        latest = latest)
       val h = Hdf5.open(p)
       val v = h.dataset("v").get
       assert(Hdf5.readAll(p, v).toSeq == data.toSeq,
@@ -1224,7 +1224,7 @@ class Hdf5Spec extends AnyFunSuite {
     val data = cube((t, y, x) => scale * (t * 100.0 + y * 10 + x))
     Hdf5.write(path, Seq(
       WDataset(name, F64, Seq(T, Y, X), data,
-        strAttrs = Seq("long_name" -> s"$name var"))), latest, links)
+        strAttrs = Seq("long_name" -> s"$name var"))), latest = latest, links = links)
     data
   }
 

@@ -2167,4 +2167,116 @@ class SnapshotSpec extends AnyFunSuite {
       s"sidecar v2 must append the evolved column after carried ones: $side2")
     assert(Snapshots.read(spark, dir).columns.toSeq == Seq("k", "v", "w"))
   }
+
+  test("keyed merges compute each update row once on a CHECK-constrained table") {
+    // the constraint probe must read the same materialization the merge
+    // writes: a non-deterministic frame checked on one evaluation and
+    // written from another could commit a row the check never saw
+    val counted = udf { (k: Long) => SnapshotSpec.computed.increment(); k * 10.0 }
+      .asNondeterministic()
+    for ((name, merge) <- Seq[(String, (String, org.apache.spark.sql.DataFrame) => Int)](
+        "mergeInto" -> ((d, u) => Snapshots.mergeInto(spark, d, u, "k")),
+        "mergeIntoMor" -> ((d, u) => Snapshots.mergeIntoMor(spark, d, u, "k")))) {
+      val dir = tmp()
+      Snapshots.commit(spark, dir,
+        spark.range(20).select(col("id").as("k"), col("id").cast("double").as("p")))
+      Snapshots.addCheckConstraint(spark, dir, "p_nonneg", "p >= 0")
+      SnapshotSpec.computed.reset()
+      merge(dir, spark.range(10, 30, 1, 2).select(col("id").as("k"), counted(col("id")).as("p")))
+      assert(SnapshotSpec.computed.sum == 20, s"$name computed " +
+        s"${SnapshotSpec.computed.sum} update rows for 20")
+      assert(Snapshots.read(spark, dir).count() == 30, name)
+    }
+  }
+
+  test("row-level verbs keep their Spark job, data-file and version counts") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "snapshot-dml-lock"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    def table(withDv: Boolean, partitioned: Boolean): String = {
+      val dir = tmp()
+      if (partitioned) Snapshots.setPartitionSpec(spark, dir, Snapshots.IdentityPart("p"))
+      Snapshots.commit(spark, dir, spark.range(0, 40, 1, 4).select(col("id").as("k"),
+        (col("id") % 4).as("p"), (col("id") * 0.5).as("v")))
+      if (withDv) Snapshots.deleteRangeMor(spark, dir, "k", Some(0L), Some(1L))
+      dir
+    }
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi, 1, 2).select(col("id").as("k"),
+      (col("id") % 4).as("p"), (col("id") * 2.0).as("v"))
+    def applyMerge(dir: String, source: org.apache.spark.sql.DataFrame) =
+      Snapshots.mergeApply(spark, dir, source, col("__t.k") === col("__s.k"),
+        Seq(Snapshots.WhenMatched(None, Some(Seq("v" -> col("__s.v"))))),
+        Seq(Snapshots.WhenNotMatched(None,
+          Seq("k" -> col("__s.k"), "p" -> col("__s.p"), "v" -> col("__s.v")))),
+        pruneKey = Some(("k", col("__s.k"))))
+    val verbs: Seq[(String, Boolean, String => Int)] = Seq(
+      ("mergeInto", false, d => Snapshots.mergeInto(spark, d, rows(30, 50), "k")),
+      ("mergeIntoMor", false, d => Snapshots.mergeIntoMor(spark, d, rows(30, 50), "k")),
+      ("deleteRange", false, d => Snapshots.deleteRange(spark, d, "k", Some(10L), Some(19L))),
+      ("deleteRangeMor", false,
+        d => Snapshots.deleteRangeMor(spark, d, "k", Some(10L), Some(19L))),
+      ("deleteByKeysMor", false,
+        d => Snapshots.deleteByKeysMor(spark, d, rows(10, 20).select("k"), "k")),
+      ("deleteByKeysMor miss", false,
+        d => Snapshots.deleteByKeysMor(spark, d, rows(100, 110).select("k"), "k")),
+      ("deleteWhere", false, d => Snapshots.deleteWhere(spark, d,
+        col("k").between(10, 19), prune = Seq(("k", Some(10L), Some(19L))))),
+      ("updateWhere", false, d => Snapshots.updateWhere(spark, d, col("k") < 10,
+        Seq("v" -> (col("v") + 1)), prune = Seq(("k", None, Some(9L))))),
+      ("replaceWhere", false,
+        d => Snapshots.replaceWhere(spark, d, rows(10, 20), "k", Some(10L), Some(19L))),
+      ("mergeApply", false, d => applyMerge(d, rows(30, 50))),
+      ("mergeApply insert-only", false, d => applyMerge(d, rows(100, 110))),
+      ("insertOverwritePartitions", true,
+        d => Snapshots.insertOverwritePartitions(spark, d, rows(40, 60).filter(col("p") === 1))),
+      ("purgeDeletes", false, d => Snapshots.purgeDeletes(spark, d, 0.0)),
+      ("commitMarker", false, d => Snapshots.commitMarker(spark, d, Map("mark" -> "1"))))
+    // (jobs, data files added, versions published) without / with a prior
+    // deletion vector: the counts each verb had while it carried its own
+    // copy of the DML recipe, before they shared one engine
+    val expected = Map(
+      "mergeInto" -> ((18, 1, 1), (30, 1, 1)),
+      "mergeIntoMor" -> ((15, 1, 1), (20, 1, 1)),
+      "deleteRange" -> ((3, 1, 1), (11, 1, 1)),
+      "deleteRangeMor" -> ((4, 0, 1), (9, 0, 1)),
+      "deleteByKeysMor" -> ((9, 0, 1), (13, 0, 1)),
+      "deleteByKeysMor miss" -> ((3, 0, 0), (3, 0, 0)),
+      "deleteWhere" -> ((6, 1, 1), (16, 1, 1)),
+      "updateWhere" -> ((6, 1, 1), (15, 1, 1)),
+      "replaceWhere" -> ((8, 3, 1), (16, 3, 1)),
+      "mergeApply" -> ((14, 8, 1), (24, 8, 1)),
+      "mergeApply insert-only" -> ((7, 2, 1), (13, 2, 1)),
+      "insertOverwritePartitions" -> ((7, 1, 1), (15, 1, 1)),
+      "purgeDeletes" -> ((0, 0, 0), (9, 1, 1)),
+      "commitMarker" -> ((0, 0, 1), (0, 0, 1)))
+    sc.addSparkListener(listener)
+    val got = try {
+      for ((name, partitioned, verb) <- verbs) yield name -> {
+        val Seq(plain, masked) = Seq(false, true).map { withDv =>
+          val dir = table(withDv, partitioned)
+          val v0 = Snapshots.currentVersion(spark, dir).get
+          val before = Snapshots.files(spark, dir, v0).toSet
+          org.apache.spark.ListenerBusDrain(sc)
+          jobs.set(0)
+          sc.setJobGroup(group, name)
+          val v = try verb(dir) finally sc.clearJobGroup()
+          org.apache.spark.ListenerBusDrain(sc)
+          (jobs.get, Snapshots.files(spark, dir, v).count(f => !before(f)), v - v0)
+        }
+        (plain, masked)
+      }
+    } finally sc.removeSparkListener(listener)
+    for ((name, counts) <- got) assert(counts == expected(name), s"$name: $counts")
+  }
+}
+
+object SnapshotSpec {
+  /** Update rows evaluated by the counting UDF (executors share the JVM). */
+  val computed = new java.util.concurrent.atomic.LongAdder
 }
