@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{And, Cast, Expression, ExpressionInfo, GreaterThanOrEqual, LessThanOrEqual, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BindReferences, Cast, Expression, ExpressionInfo, GreaterThanOrEqual, InterpretedUnsafeProjection, LessThanOrEqual, Literal, NamedExpression, PlanExpression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, truncatedString}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
+import graft.sources.{GridAggScan, GridScan}
 import graft.functions.{ApproxTopK, CmsEstimate, CosineSimilarity, DotProduct, GramMatrixAgg, GramMergeCov, GramSketch, HistogramBreaks, HistogramMergeQuantiles, HistogramSketch, MinHashSignature, PointInPolygon, SimHash64, TopKByScore, ZOrder64}
 
 /** Session extension (`spark.sql.extensions=graft.GraftExtensions`) wiring the
@@ -43,6 +49,11 @@ import graft.functions.{ApproxTopK, CmsEstimate, CosineSimilarity, DotProduct, G
   *     (reference: bbox-then-mask, `Gddp.scala:206-235`). At 100 TB this is
   *     the difference between masking every cell and reading only the
   *     envelope's row groups.
+  *   - Small grid requests plan small: [[OnePartitionPlan]] drops the
+  *     shuffles of a plan that provably runs in one partition, so a box
+  *     `/sql` aggregate over one packed grid partition is one Spark job, and
+  *     [[GridAggLocalStrategy]] answers a completely pushed metadata
+  *     aggregate (`/getBoundary`) on the driver with no job at all.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -330,7 +341,82 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // an aggregate over a registered snapshot source answers from its
     // fresh Mview instead — registration-gated, no-op otherwise
     ext.injectOptimizerRule(session => new graft.operators.MviewRewriteRule(session))
+    ext.injectQueryStagePrepRule(_ => OnePartitionPlan)
+    ext.injectPlannerStrategy(_ => GridAggLocalStrategy)
   }
+}
+
+/** AQE query-stage preparation: a plan that provably runs in ONE partition
+  * needs none of the shuffles `EnsureRequirements` put in, because a single
+  * partition already satisfies every distribution a node can require
+  * (clustered, ordered, all tuples). With those exchanges gone AQE creates
+  * no stage and runs the plan as one job — a daily box aggregate over one
+  * packed grid partition, the serving path's `/sql` shape. Spark cannot
+  * see this on its own: `BatchScanExec` reports `UnknownPartitioning(0)`.
+  *
+  * "Provably one partition" means every leaf is a `BatchScanExec` over a
+  * [[GridScan]] that planned exactly one input partition, and every node
+  * above it keeps the count at one: unary nodes, and joins whose sides both
+  * do. Anything else leaves the plan untouched — a union (it concatenates
+  * its children's partitions), a scan with zero partitions (a global
+  * aggregate over it needs the exchange to emit its one row), any other
+  * leaf, a broadcast, a subquery, or a shuffle the user asked for
+  * (`repartition`, rebalance). With AQE off the rule never runs.
+  */
+object OnePartitionPlan extends Rule[SparkPlan] {
+  override def apply(plan: SparkPlan): SparkPlan =
+    if (!onePartition(plan)) plan
+    else plan.transformUp {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == ENSURE_REQUIREMENTS => e.child
+    }
+
+  private def onePartition(p: SparkPlan): Boolean =
+    !p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) && (p match {
+      case b: BatchScanExec => b.scan.isInstanceOf[GridScan] && b.inputPartitions.size == 1
+      case e: ShuffleExchangeExec => e.shuffleOrigin == ENSURE_REQUIREMENTS && onePartition(e.child)
+      case _: Exchange => false
+      case u: UnaryExecNode => onePartition(u.child)
+      case j: BaseJoinExec => j.children.forall(onePartition)
+      case _ => false
+    })
+}
+
+/** Plans a completely pushed grid aggregate — the
+  * `Project(aliases, DataSourceV2ScanRelation(GridAggScan))` that
+  * `V2ScanRelationPushDown` leaves — as a [[GridAggLocalExec]] holding its
+  * projected row. The scan computes that row from metadata on the driver
+  * anyway; planned as a `ProjectExec` over the scan it still cost a Spark
+  * job to fetch it back.
+  */
+object GridAggLocalStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    // a subquery in the projection is planned and run later, not here
+    case Project(list, r: DataSourceV2ScanRelation) if r.scan.isInstanceOf[GridAggScan] &&
+        list.forall(e => e.deterministic && !SubqueryExpression.hasSubquery(e)) =>
+      val scan = r.scan.asInstanceOf[GridAggScan]
+      // one row: interpreting the projection beats compiling it
+      val project = InterpretedUnsafeProjection.createProjection(
+        BindReferences.bindReferences(list, r.output))
+      GridAggLocalExec(list.map(_.toAttribute),
+        Seq(project(InternalRow.fromSeq(scan.resultRow())).copy()), scan.description()) :: Nil
+    case _ => Nil
+  }
+}
+
+/** A pushed grid aggregate's rows, already projected: `collect` and `take`
+  * return them without a job; `execute` ships them as one partition. The
+  * plan string keeps the scan's description (`…GridAggScan …
+  * pushedAggregates=[…]`).
+  */
+case class GridAggLocalExec(output: Seq[Attribute], rows: Seq[InternalRow], scanDescription: String)
+    extends LeafExecNode {
+  override def nodeName: String = "LocalGridAgg"
+  override def simpleString(maxFields: Int): String =
+    s"$nodeName${truncatedString(output, "[", ", ", "]", maxFields)} $scanDescription"
+
+  override def executeCollect(): Array[InternalRow] = rows.toArray
+  override def executeTake(limit: Int): Array[InternalRow] = rows.take(limit).toArray
+  override protected def doExecute(): RDD[InternalRow] = sparkContext.parallelize(rows, 1)
 }
 
 object PolygonEnvelopeRule extends Rule[LogicalPlan] {

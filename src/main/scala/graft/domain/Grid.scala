@@ -152,19 +152,21 @@ object GridQuery {
     */
   def select(cellsDf: DataFrame, req: QueryRequest): DataFrame = {
     val lons = req.polygon.map(_._1); val lats = req.polygon.map(_._2)
-    val pruned =
-      if (cellsDf.columns.contains("file")) {
-        val keep = catalog(cellsDf)
-          .filter(col("variable").isin(req.variables: _*) &&
-            col("ts_max") >= tsStart(req) && col("ts_min") <= tsEnd(req))
-          .select("file", "variable")
-        cellsDf.join(broadcast(keep), Seq("file", "variable")) // prune: catalog is dim-sized
-      } else cellsDf.filter(col("variable").isin(req.variables: _*))
-    pruned
-      .filter(col("ts").between(tsStart(req), tsEnd(req)))
-      .filter(col("lat").between(lats.min, lats.max) &&
-        col("lon").between(lons.min, lons.max))
-      .filter(point_in_polygon(col("lat"), col("lon"), req.polygon))
+    // one filter, not a chain: each Dataset.filter is analyzed eagerly. The
+    // conjuncts keep the chain's order and nest the way CombineFilters
+    // merged it, so a DSv2 grid's optimized plan is the chain's.
+    val inTime = col("ts").between(tsStart(req), tsEnd(req))
+    val inPolygon = col("lat").between(lats.min, lats.max) &&
+      col("lon") >= lons.min && col("lon") <= lons.max &&
+      point_in_polygon(col("lat"), col("lon"), req.polygon)
+    if (cellsDf.columns.contains("file")) {
+      val keep = catalog(cellsDf)
+        .filter(col("variable").isin(req.variables: _*) &&
+          col("ts_max") >= tsStart(req) && col("ts_min") <= tsEnd(req))
+        .select("file", "variable")
+      cellsDf.join(broadcast(keep), Seq("file", "variable")) // prune: catalog is dim-sized
+        .filter(inTime && inPolygon)
+    } else cellsDf.filter(col("variable").isin(req.variables: _*) && inTime && inPolygon)
   }
 
   /** A1: per-variable quantile breaks over the selection (exact form; the

@@ -42,7 +42,9 @@ class ApiServer(spark: SparkSession, port: Int = 0,
     * the min/max push down to the table's coordinate axes (`NcGridAggScan`
     * over NetCDF, `FileGridAggScan`/`TiledGridAggScan` over GRF) — the
     * boundary request never reads a data byte, like the reference's
-    * hardcoded corners.
+    * hardcoded corners. The pushed row is answered while the query is
+    * planned ([[graft.GridAggLocalStrategy]]), so `collect` runs no Spark
+    * job.
     */
   private def boundary(): String = {
     val row = grid(spark)

@@ -619,7 +619,9 @@ object GridAgg {
 
 /** Completely-pushed aggregate: one partition, one row, zero cells read.
   * The row is computed driver-side at planning time from the per-unit
-  * section clamps and the table's axes, and shipped in the partition.
+  * section clamps and the table's axes, and shipped in the partition; under
+  * [[graft.GraftExtensions]] it is answered on the driver with no job
+  * ([[graft.GridAggLocalExec]]).
   */
 class GridAggScan(table: GridTable, units: Seq[GridUnit], section: GridSource.Section,
     plan: Seq[GridAgg]) extends Scan with Batch {
@@ -634,7 +636,7 @@ class GridAggScan(table: GridTable, units: Seq[GridUnit], section: GridSource.Se
       s"section=$section pushedAggregates=[${plan.mkString(", ")}]"
 
   /** The result row (Catalyst internal values: long/int/double/null). */
-  private def resultRow(): Seq[Any] = {
+  private[graft] def resultRow(): Seq[Any] = {
     val l = table.layout.get
     val clamps = units.map(GridSource.clamp(section, l.t, _)).filterNot(_.isEmpty)
     val windows = clamps.distinct // units sharing a window share its bounds

@@ -241,6 +241,70 @@ class ApiSpec extends AnyFunSuite {
     }
   }
 
+  /** Jobs, tasks and shuffle bytes written while `f` runs, after a drain. */
+  private def counted[A](f: => A): (A, Int, Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        Option(t.taskMetrics).foreach(m => shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      }
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (out, jobs.get, tasks.get, shuffled.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a warm /getBoundary over NetCDF runs no Spark job") {
+    val srv = new ApiServer(spark, port = 0, grid = ncGrid)
+    val url = s"http://127.0.0.1:${srv.start()}/getBoundary"
+    try {
+      assert(get(url)._1 == 200) // warm-up
+      val ((code, body), jobs, _, _) = counted(get(url))
+      assert(code == 200)
+      assert(new String(body, "UTF-8") == "[[44.0, -80.0], [44.95, -78.55]]", new String(body, "UTF-8"))
+      assert(jobs == 0, s"/getBoundary ran $jobs jobs")
+    } finally srv.stop()
+  }
+
+  test("a warm one-variable /sql box aggregate is one job, one task, no shuffle, no code compiled") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the serving path's /sql shape: one variable's daily box aggregate
+    def query(day0: Int, day1: Int, lat0: Double, lon0: Double): String =
+      "SELECT date_format(ts, 'yyyy-MM-dd') AS k, count(value) AS n, sum(value) AS s, " +
+        s"avg(value) AS m FROM grid_scan('${graft.sources.SourceQueries.ncDir}') " +
+        "WHERE variable = 'tasmin' " +
+        s"AND ts >= TIMESTAMP '1990-01-0$day0 00:00:00' AND ts <= TIMESTAMP '1990-01-0$day1 23:59:59' " +
+        s"AND lat >= $lat0 AND lat <= ${lat0 + 0.25} AND lon >= $lon0 AND lon <= ${lon0 + 0.35} " +
+        "GROUP BY 1 ORDER BY 1"
+    withServer { port =>
+      val url = s"http://127.0.0.1:$port/sql"
+      assert(post(url, s"""{"query": "${query(1, 3, 44.1, -79.8)}"}""")._1 == 200) // warm-up
+      val warm = s"""{"query": "${query(3, 8, 44.35, -79.3)}"}"""
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ((code, body), jobs, tasks, shuffled) = counted(post(url, warm))
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+      val text = new String(body, "UTF-8")
+      assert(code == 200, text)
+      assert(text.contains("\"rowCount\":6"), text)
+      assert(jobs == 1, s"ran $jobs jobs")
+      assert(tasks == 1, s"ran $tasks tasks")
+      assert(shuffled == 0L, s"wrote $shuffled shuffle bytes")
+      assert(compiled == 0, s"compiled $compiled classes")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val off = try post(url, warm) finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      assert(off._1 == 200 && new String(off._2, "UTF-8") == text, new String(off._2, "UTF-8"))
+    }
+  }
+
   test("fetchResult over NetCDF: all-NULL and empty selections match the batch render") {
     // cell (y=0, x=17) on day 0 is NODATA ((t + y + x) % 17 == 0): a polygon
     // around it alone selects one cell whose value is NULL

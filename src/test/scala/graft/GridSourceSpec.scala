@@ -135,6 +135,14 @@ class GridSourceSpec extends AnyFunSuite {
     assert(row.getLong(0) == 0L && row.isNullAt(1) && row.isNullAt(2), row.toString)
   }
 
+  test("a pushed aggregate projected with a scalar subquery still answers") {
+    SourceQueries.gridTable(spark).createOrReplaceTempView("graft_grid_subq_v")
+    val q = "SELECT count(*) + (SELECT max(id) FROM range(3)) AS n FROM graft_grid_subq_v WHERE y < 3"
+    val df = spark.sql(q)
+    assert(df.queryExecution.executedPlan.toString.contains("GridAggScan"))
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(2L * GridData.T * 3 * GridData.X + 2))
+  }
+
   test("aggregates the section cannot answer (value, groupBy) do NOT push") {
     val grouped = SourceQueries.gridTable(spark)
       .groupBy("variable").agg(count(lit(1)))

@@ -300,4 +300,110 @@ class PlansSpec extends AnyFunSuite {
     assert(plan.split("Exchange").length - 1 <= 3, plan)
     assert(plan.split("Scan ").length - 1 == 1, s"events scanned more than once: $plan")
   }
+
+  // ---- OnePartitionPlan: a plan that provably runs in one partition drops
+  // its EnsureRequirements shuffles under AQE. Every case checks its answer
+  // against the same query with AQE off, where every exchange stays.
+
+  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The shuffle exchanges of `df`'s executed plan, once it has run. */
+  private def shuffles(df: org.apache.spark.sql.DataFrame) =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }
+
+  /** `query`'s rows and shuffle count with AQE on, and its rows with AQE off. */
+  private def bothWays(query: String): (Seq[org.apache.spark.sql.Row], Int, Seq[org.apache.spark.sql.Row]) = {
+    val on = spark.sql(query)
+    val rows = on.collect().toSeq
+    val off = withConf("spark.sql.adaptive.enabled" -> "false")(spark.sql(query).collect().toSeq)
+    (rows, shuffles(on).size, off)
+  }
+
+  private lazy val nc = sources.SourceQueries.ncDir
+  /** One variable, days 1–4 of the NetCDF fixture: one packed partition. */
+  private def box(v: String): String =
+    s"FROM grid_scan('$nc') WHERE variable = '$v' AND ts <= TIMESTAMP '1990-01-04 23:59:59' " +
+      "AND lat >= 44.1 AND lat <= 44.5 AND lon >= -79.6 AND lon <= -79.1"
+
+  test("one-partition grid plan: the box aggregate drops its shuffles, same answer") {
+    val q = s"SELECT date_format(ts, 'yyyy-MM-dd') AS k, count(value) AS n, sum(value) AS s, " +
+      s"avg(value) AS m ${box("tasmax")} GROUP BY 1 ORDER BY 1"
+    assert(TestSpark.gridPartitions(spark.sql(q)).size == 1)
+    val (rows, exchanges, off) = bothWays(q)
+    assert(exchanges == 0, spark.sql(q).queryExecution.executedPlan)
+    assert(rows.size == 4 && rows == off, s"$rows vs $off")
+  }
+
+  test("one-partition grid plan: a join of two one-partition scans drops its shuffles") {
+    val q = s"SELECT a.y, count(*) AS n, sum(a.value - b.value) AS d FROM " +
+      s"(SELECT ts, y, x, value ${box("tasmax")}) a JOIN (SELECT ts, y, x, value ${box("tasmin")}) b " +
+      "ON a.ts = b.ts AND a.y = b.y AND a.x = b.x GROUP BY a.y ORDER BY a.y"
+    val (rows, exchanges, off) = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(bothWays(q))
+    assert(exchanges == 0)
+    assert(rows.nonEmpty && rows == off, s"$rows vs $off")
+  }
+
+  test("one-partition guard: GROUP BY over a UNION ALL of two one-partition scans keeps its shuffle") {
+    val one = s"SELECT variable FROM grid_scan('$nc') WHERE variable = 'tasmax' " +
+      "AND ts <= TIMESTAMP '1990-01-01 23:59:59' AND y = 0 AND x < 9"
+    val q = s"SELECT variable, count(*) AS n FROM ($one UNION ALL $one) GROUP BY variable"
+    val (rows, exchanges, off) = bothWays(q)
+    assert(rows.map(r => (r.getString(0), r.getLong(1))) == Seq("tasmax" -> 18L), rows)
+    assert(rows == off)
+    assert(exchanges > 0)
+  }
+
+  test("one-partition guard: a global count over a box pruned to zero partitions is one row of 0") {
+    val q = s"SELECT count(value) AS n FROM grid_scan('$nc') WHERE variable = 'tasmax' AND lat > 1000"
+    assert(TestSpark.gridPartitions(spark.sql(q)).isEmpty)
+    val (rows, _, off) = bothWays(q)
+    assert(rows.map(_.getLong(0)) == Seq(0L) && rows == off, rows)
+  }
+
+  test("one-partition guard: a join with a multi-partition parquet table keeps its shuffles") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-plans-onepart").toFile.getAbsolutePath
+    spark.range(30).toDF("y").repartition(3).write.mode("overwrite").parquet(dir)
+    val q = s"SELECT g.y, count(*) AS n FROM (SELECT y ${box("tasmax")}) g " +
+      s"JOIN parquet.`$dir` p ON g.y = p.y GROUP BY g.y ORDER BY g.y"
+    val (rows, exchanges, off) = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(bothWays(q))
+    assert(exchanges > 0)
+    assert(rows.nonEmpty && rows == off, s"$rows vs $off")
+  }
+
+  test("one-partition grid plan: ORDER BY … LIMIT k returns the first k rows in order") {
+    val all = s"SELECT y, round(sum(value), 6) AS s ${box("tasmax")} GROUP BY y ORDER BY s DESC, y"
+    val full = withConf("spark.sql.adaptive.enabled" -> "false")(spark.sql(all).collect().toSeq)
+    assert(full.size > 3)
+    val (rows, exchanges, off) = bothWays(s"$all LIMIT 3")
+    assert(exchanges == 0)
+    assert(rows == full.take(3) && off == full.take(3), s"$rows vs ${full.take(3)}")
+    // the /sql route's shape: a row cap over the limited query, then toJSON
+    val capped = spark.sql(s"$all LIMIT 3").limit(10001).toJSON.collect().toSeq
+    val cappedOff = withConf("spark.sql.adaptive.enabled" -> "false")(
+      spark.sql(s"$all LIMIT 3").limit(10001).toJSON.collect().toSeq)
+    assert(capped.size == 3 && capped == cappedOff, s"$capped vs $cappedOff")
+  }
+
+  test("one-partition guard: a box split into 2 partitions keeps its shuffles") {
+    // 4 days of a 20 x 30 slice are 4 x 38,400 B: a 76,800 B split packs them two and two
+    withConf("spark.sql.files.maxPartitionBytes" -> "76800") {
+      val q = s"SELECT date_format(ts, 'yyyy-MM-dd') AS k, count(value) AS n, sum(value) AS s " +
+        s"FROM grid_scan('$nc') WHERE variable = 'tasmax' AND ts <= TIMESTAMP '1990-01-04 23:59:59' " +
+        "GROUP BY 1 ORDER BY 1"
+      assert(TestSpark.gridPartitions(spark.sql(q)).size == 2)
+      val (rows, exchanges, off) = bothWays(q)
+      assert(exchanges > 0)
+      assert(rows.size == 4 && rows == off, s"$rows vs $off")
+    }
+  }
 }
