@@ -270,8 +270,8 @@ object Behavioral extends QueryModule {
     // recognized as co-partitioned for the (ck, item) join keys once the
     // cached plan hides behind AdaptiveSparkPlan, so the hint re-shuffled
     // the full 2.8M-row candidate table (shuffle 1 KB -> 54 MB, task time
-    // 14 -> 60+ s); ItemcfProbe noop timings also show all three join
-    // strategies within noise on the warmed caches. The planner's
+    // 14 -> 60+ s); noop-sink timings of this body also showed all three
+    // join strategies within noise on the warmed caches. The planner's
     // broadcast of the ownership side stays.
     val cand = scoresCached(s, d).join(owned.withColumnRenamed("pk", "item"),
       Seq("ck", "item"), "left_anti")

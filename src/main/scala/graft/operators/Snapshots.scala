@@ -51,29 +51,43 @@ object Snapshots {
     publishLocks.computeIfAbsent(
       new org.apache.hadoop.fs.Path(key).toString, _ => new Object)
 
-  /** Table properties (durable, version-independent — e.g. which columns
-    * get bloom filters). Stored as a `table.props` k/v file in the
-    * manifest dir, written with the same atomic temp+rename publish.
-    */
-  def properties(spark: SparkSession, dir: String): Map[String, String] = {
-    val (fs, _) = hfs(spark, dir)
-    val pf = new org.apache.hadoop.fs.Path(s"${manifestDir(dir)}/table.props")
-    // under the writers' lock: [[writeProps]] deletes the old file before
-    // renaming the new one in, and a read in that gap would see no props
-    // at all (every branch, tag and constraint gone for a moment)
-    val text = publishLock(manifestDir(dir)).synchronized {
-      if (!fs.exists(pf)) ""
-      else {
-        val in = fs.open(pf)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      }
-    }
+  /** A small metadata file's whole UTF-8 text, None when it does not
+    * exist: one `open`, no `exists` probe first. */
+  private def readText(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    try {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** The `key<TAB>value` line format (URL-encoded fields, sorted by key)
+    * that `table.props` and a commit's `meta` sidecar share. */
+  private def encodeKv(m: Map[String, String]): Array[Byte] =
+    m.toSeq.sortBy(_._1).map { case (k, v) => s"${enc(k)}\t${enc(v)}" }
+      .mkString("", "\n", "\n").getBytes("UTF-8")
+
+  private def decodeKv(text: String): Map[String, String] =
     text.linesIterator.filter(_.nonEmpty).map { line =>
       val Array(k, v) = line.split("\t", -1)
       dec(k) -> dec(v)
     }.toMap
-  }
+
+  /** Table properties (durable, version-independent — e.g. which columns
+    * get bloom filters). Stored as a `table.props` k/v file in the
+    * manifest dir, written with the same atomic temp+rename publish.
+    */
+  def properties(spark: SparkSession, dir: String): Map[String, String] =
+    readProps(hfs(spark, dir)._1, dir)
+
+  private def readProps(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Map[String, String] =
+    // under the writers' lock: [[writeProps]] deletes the old file before
+    // renaming the new one in, and a read in that gap would see no props
+    // at all (every branch, tag and constraint gone for a moment)
+    publishLock(manifestDir(dir)).synchronized {
+      readText(fs, new org.apache.hadoop.fs.Path(s"${manifestDir(dir)}/table.props"))
+    }.fold(Map.empty[String, String])(decodeKv)
 
   // the read-modify-write below is serialized through the same per-table
   // publishLock as manifest CAS: tags (retention pins) and CHECK
@@ -98,12 +112,9 @@ object Snapshots {
     val (fs, _) = hfs(spark, dir)
     val md = new org.apache.hadoop.fs.Path(manifestDir(dir))
     fs.mkdirs(md)
-    val body = merged.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${enc(k)}\t${enc(v)}" }
-      .mkString("", "\n", "\n").getBytes("UTF-8")
     val tmp = new org.apache.hadoop.fs.Path(md, ".table.props.tmp")
     val out = fs.create(tmp, true)
-    try out.write(body) finally out.close()
+    try out.write(encodeKv(merged)) finally out.close()
     val fin = new org.apache.hadoop.fs.Path(md, "table.props")
     fs.delete(fin, false)
     require(fs.rename(tmp, fin), s"$dir: table.props publish failed")
@@ -114,62 +125,38 @@ object Snapshots {
   // name is fixed at its first append; RENAME records physical→logical in
   // the table props (metadata-only — zero files rewritten), DROP records
   // the physical in a hidden set. Reads translate physical→logical and
-  // hide dropped columns at the two scan choke points (maskedParquet /
+  // hide dropped columns at the two scan choke points (maskedScan /
   // openWithPos); writes translate logical→physical at the single write
   // choke point (writeData). Stats/blooms/pruning stay keyed physical;
-  // callers pass logical names and [[toPhysical]] translates. The mapping
-  // is table-level (not versioned): renames apply to time-travel reads of
-  // older versions too — simpler than Delta's versioned metadata, and the
-  // mapping is invertible so no data ambiguity arises.
-
-  /** One props read → (physical→logical renames, dropped physicals). */
-  private def mappingState(spark: SparkSession,
-      dir: String): (Map[String, String], Set[String]) = {
-    val props = properties(spark, dir)
-    val renames = props.collect {
-      case (k, v) if k.startsWith("colmap.ren.") =>
-        k.stripPrefix("colmap.ren.") -> v
-    }
-    val dropped = props.get("colmap.dropped")
-      .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
-    (renames, dropped)
-  }
-
-  private def colMapping(spark: SparkSession, dir: String): Map[String, String] =
-    mappingState(spark, dir)._1
-
-  private def droppedCols(spark: SparkSession, dir: String): Set[String] =
-    mappingState(spark, dir)._2
+  // callers pass logical names and [[TableState.toPhysical]] translates.
+  // The mapping is table-level (not versioned): renames apply to
+  // time-travel reads of older versions too — simpler than Delta's
+  // versioned metadata, and the mapping is invertible so no data ambiguity
+  // arises.
 
   /** Physical name of a logical column (identity when never renamed). */
   private[graft] def toPhysical(spark: SparkSession, dir: String,
       logical: String): String =
-    colMapping(spark, dir).collectFirst {
-      case (p, l) if l == logical => p
-    }.getOrElse(logical)
+    new TableState(spark, dir).toPhysical(logical)
 
   /** Apply the column mapping to a PHYSICAL frame: hide dropped physicals,
     * surface renamed ones under their logical names. Internal `__` columns
     * pass through untouched. */
-  private def applyMapping(spark: SparkSession, dir: String,
-      df: DataFrame): DataFrame = {
+  private def applyMapping(st: TableState, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (renames, dropped) = mappingState(spark, dir)
-    if (renames.isEmpty && dropped.isEmpty) df
+    if (st.renames.isEmpty && st.dropped.isEmpty) df
     else df.select(df.columns.toSeq.collect {
       case c if c.startsWith("__") => col(c)
-      case c if !dropped.contains(c) => col(c).as(renames.getOrElse(c, c))
+      case c if !st.dropped.contains(c) => col(c).as(st.renames.getOrElse(c, c))
     }: _*)
   }
 
   /** Reverse-apply the mapping to a LOGICAL frame before a data write. */
-  private def toPhysicalFrame(spark: SparkSession, dir: String,
-      df: DataFrame): DataFrame = {
+  private def toPhysicalFrame(st: TableState, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val m = colMapping(spark, dir) // physical -> logical
-    if (m.isEmpty) df
+    if (st.renames.isEmpty) df
     else {
-      val rev = m.map(_.swap) // logical -> physical
+      val rev = st.renames.map(_.swap) // logical -> physical
       df.select(df.columns.toSeq.map(c =>
         col(c).as(rev.getOrElse(c, c))): _*)
     }
@@ -182,16 +169,16 @@ object Snapshots {
     */
   def renameColumn(spark: SparkSession, dir: String, from: String,
       to: String): Unit = {
-    val logical = read(spark, dir).columns.toSet
+    val st = new TableState(spark, dir)
+    val logical = st.schema.fieldNames.toSet
     require(logical.contains(from), s"$dir: no column '$from' to rename")
-    requireUnconstrained(spark, dir, from, "rename")
+    requireUnconstrained(st, from, "rename")
     require(!logical.contains(to), s"$dir: column '$to' already exists")
     require(!to.startsWith("__"), s"$dir: '$to' is a reserved name")
-    val phys = toPhysical(spark, dir, from)
+    val phys = st.toPhysical(from)
     // the new logical name must not shadow a live or dropped PHYSICAL name
     // (an append would then write a colliding parquet column)
-    val usedPhysical = droppedCols(spark, dir) ++
-      read(spark, dir).columns.map(toPhysical(spark, dir, _)).toSet
+    val usedPhysical = st.dropped ++ logical.map(st.toPhysical)
     require(!usedPhysical.contains(to) || phys == to,
       s"$dir: '$to' collides with a physical column name — pick another")
     setProperties(spark, dir, Map(s"colmap.ren.$phys" -> to))
@@ -203,12 +190,12 @@ object Snapshots {
     * logical name later refuses (the hidden physical would resurrect).
     */
   def dropColumn(spark: SparkSession, dir: String, name: String): Unit = {
-    val logical = read(spark, dir).columns.toSet
+    val st = new TableState(spark, dir)
+    val logical = st.schema.fieldNames.toSet
     require(logical.contains(name), s"$dir: no column '$name' to drop")
     require(logical.size > 1, s"$dir: cannot drop the last column")
-    requireUnconstrained(spark, dir, name, "drop")
-    val phys = toPhysical(spark, dir, name)
-    val dropped = droppedCols(spark, dir) + phys
+    requireUnconstrained(st, name, "drop")
+    val dropped = st.dropped + st.toPhysical(name)
     setProperties(spark, dir, Map("colmap.dropped" -> dropped.toSeq.sorted.mkString(",")))
   }
 
@@ -224,8 +211,7 @@ object Snapshots {
     setProperties(spark, dir, Map("bloom.columns" -> cols.mkString(",")))
 
   def bloomColumns(spark: SparkSession, dir: String): Seq[String] =
-    properties(spark, dir).get("bloom.columns")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
+    new TableState(spark, dir).bloomColumns
 
   // ------------------------------------------------------ partitioning
   /** HIDDEN partition transform of a table (Iceberg's partition-spec
@@ -304,8 +290,7 @@ object Snapshots {
     partitionSpecs(spark, dir).headOption
 
   def partitionSpecs(spark: SparkSession, dir: String): Seq[PartitionSpec] =
-    properties(spark, dir).get(PartProp).toSeq
-      .flatMap(_.split(';').toSeq.filter(_.nonEmpty).map(parsePartitionSpec))
+    new TableState(spark, dir).partitionSpecs
 
   private[graft] def parsePartitionSpec(s: String): PartitionSpec = {
     val Ident = """identity\((.+)\)""".r
@@ -399,11 +384,11 @@ object Snapshots {
       Some(((h % n) + n) % n)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def bloomWriteOptions(spark: SparkSession, dir: String): Map[String, String] =
-    bloomColumns(spark, dir)
+  private def bloomWriteOptions(st: TableState): Map[String, String] =
+    st.bloomColumns
       // declared names may be logical (post-rename); the writer sees the
       // physical frame, so the option must key the physical name
-      .map(c => s"parquet.bloom.filter.enabled#${toPhysical(spark, dir, c)}" -> "true")
+      .map(c => s"parquet.bloom.filter.enabled#${st.toPhysical(c)}" -> "true")
       .toMap
 
   /** Snapshot data files always carry TIMESTAMP_MICROS (INT64) timestamps:
@@ -441,59 +426,181 @@ object Snapshots {
   }
 
   /** Published versions, ascending (empty for a fresh table). */
-  def versions(spark: SparkSession, dir: String): Seq[Int] = {
-    val (fs, _) = hfs(spark, dir)
-    val md = new org.apache.hadoop.fs.Path(manifestDir(dir))
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".list") =>
-        n.stripPrefix("v").stripSuffix(".list").toInt }
-      .sorted
-  }
+  def versions(spark: SparkSession, dir: String): Seq[Int] =
+    new TableState(spark, dir).versions
 
   def currentVersion(spark: SparkSession, dir: String): Option[Int] =
-    versions(spark, dir).lastOption
+    new TableState(spark, dir).current
 
   /** The latest published version; fails loudly on a table with none. */
   private[graft] def headVersion(spark: SparkSession, dir: String): Int =
-    currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"$dir: no published snapshots"))
-
-  /** Raw manifest lines of one version: `#key=value` headers (sidecar
-    * references) followed by data-file paths. */
-  private def listLines(spark: SparkSession, dir: String,
-      version: Int): Seq[String] = {
-    val (fs, _) = hfs(spark, dir)
-    val mf = new org.apache.hadoop.fs.Path(s"${manifestDir(dir)}/v$version.list")
-    require(fs.exists(mf), s"$dir: snapshot version $version does not exist")
-    val in = fs.open(mf)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList.filter(_.nonEmpty)
-    finally in.close()
-  }
+    new TableState(spark, dir).version
 
   /** Data-file paths (relative to `dir`) of one snapshot. */
   def files(spark: SparkSession, dir: String, version: Int): Seq[String] =
-    listLines(spark, dir, version).filterNot(_.startsWith("#"))
+    new TableState(spark, dir).manifest(version).entries
 
-  /** Manifest-dir file name of a version's `stats`/`meta` sidecar. New
-    * manifests reference a PER-WRITER-UNIQUE sidecar from a `#kind=` header
-    * line (so racing same-slot writers can never clobber each other's
-    * sidecars — the `.list` rename is the only contended name); manifests
-    * written before the header existed fall back to the legacy fixed
-    * `v{N}.{kind}` name.
+  /** One parsed `.list` manifest — a version's `v<N>.list`, a branch
+    * commit's or a staged commit's — read with ONE `open`. It holds the
+    * data-file entries (table-relative, or absolute for a clone's external
+    * references) and the `#key=value` headers: the per-writer-unique
+    * sidecar names (`stats`, `meta`, `schema`), the change-feed and
+    * deletion-vector dirs (`cdc`, `dv`), the data-preserving marker
+    * (`norowchange`), and a branch or staged commit's inline `#m=` metadata
+    * and `#evolve=1` flag. Sidecars load lazily, each at most once; a
+    * header naming a missing sidecar reads as absent, and a manifest
+    * without a header has no such sidecar. [[Manifest.encode]] is the one
+    * writer of the format.
     */
-  private def sidecarName(spark: SparkSession, dir: String, version: Int,
-      kind: String): Option[String] =
-    listLines(spark, dir, version)
-      .collectFirst { case l if l.startsWith(s"#$kind=") =>
-        l.substring(kind.length + 2) }
-      .orElse {
-        val (fs, _) = hfs(spark, dir)
-        val legacy = s"v$version.$kind"
-        if (fs.exists(new org.apache.hadoop.fs.Path(manifestDir(dir), legacy)))
-          Some(legacy)
-        else None
+  private final class Manifest(fs: org.apache.hadoop.fs.FileSystem,
+      md: org.apache.hadoop.fs.Path, lines: Seq[String]) {
+    private val (heads, body) = lines.partition(_.startsWith("#"))
+    val entries: Seq[String] = body
+    private val headers: Map[String, String] =
+      heads.filterNot(_.startsWith("#m=")).map { l =>
+        val (k, v) = l.drop(1).span(_ != '=')
+        k -> v.drop(1)
+      }.toMap
+    /** Table-relative change-feed dir the commit recorded, if any
+      * (merge/delete do; plain appends derive their feed from the
+      * manifest diff instead). */
+    def cdc: Option[String] = headers.get("cdc")
+    /** Table-relative DELETION-VECTOR dir, if the version carries
+      * merge-on-read deletes. */
+    def dv: Option[String] = headers.get("dv")
+    def rowPreserving: Boolean = headers.contains("norowchange")
+    def evolve: Boolean = headers.get("evolve").contains("1")
+    /** Manifest-dir names of the sidecars this manifest references. */
+    def sidecars: Seq[String] = Seq("stats", "meta", "schema").flatMap(headers.get)
+    private def sidecar(kind: String): Option[String] =
+      headers.get(kind).flatMap(n => readText(fs, new org.apache.hadoop.fs.Path(md, n)))
+    lazy val stats: Map[String, Map[String, ColStat]] =
+      sidecar("stats").fold(Map.empty[String, Map[String, ColStat]])(decodeStats)
+    /** The PHYSICAL schema the version recorded, if any. */
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      sidecar("schema").map(t => org.apache.spark.sql.types.DataType.fromJson(t)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    /** Commit metadata: a version's `meta` sidecar, or a branch or staged
+      * commit's inline `#m=` pairs. */
+    lazy val meta: Map[String, String] =
+      heads.collect { case l if l.startsWith("#m=") =>
+        val Array(k, v) = l.stripPrefix("#m=").split("\t", -1)
+        dec(k) -> dec(v)
+      }.toMap ++ sidecar("meta").fold(Map.empty[String, String])(decodeKv)
+  }
+
+  private object Manifest {
+    /** Parse `md/name`; a missing file fails with `missing`. */
+    def load(fs: org.apache.hadoop.fs.FileSystem, md: org.apache.hadoop.fs.Path,
+        name: String, missing: => String): Manifest = {
+      val text = readText(fs, new org.apache.hadoop.fs.Path(md, name))
+      require(text.isDefined, missing)
+      new Manifest(fs, md, text.get.linesIterator.filter(_.nonEmpty).toList)
+    }
+
+    /** The on-disk form: `#key=value` headers in the given order, then the
+      * inline `#m=` metadata sorted by key, then one entry per line. */
+    def encode(headers: Seq[(String, String)], meta: Map[String, String],
+        entries: Seq[String]): Array[Byte] =
+      (headers.map { case (k, v) => s"#$k=$v" } ++
+        meta.toSeq.sortBy(_._1).map { case (k, v) => s"#m=${enc(k)}\t${enc(v)}" } ++
+        entries).mkString("", "\n", "\n").getBytes("UTF-8")
+  }
+
+  /** A snapshot table's metadata as ONE operation sees it: the manifest
+    * dir's listing (one `listStatus`: the published versions with their
+    * publish times, plus branch and staged manifests), the `table.props`
+    * map (one read, under the writers' lock) and every [[Manifest]] the
+    * operation opens, each parsed once. Column mapping, partition specs,
+    * bloom columns, tags, branches and CHECK constraints are pure functions
+    * of the props map; the logical schema of a version is its schema
+    * sidecar with the mapping applied. Each part loads on first use.
+    *
+    * A state lives for one public call and is never cached across calls:
+    * the table moves between calls, and every [[withCommitRetry]] attempt
+    * loads its own so it plans against the version it races for. Checks
+    * that must see the table as it is NOW — the publish slot, a staged
+    * token's carrier, a props read-modify-write — read the filesystem
+    * again instead.
+    */
+  private final class TableState(val spark: SparkSession, val dir: String) {
+    val fs: org.apache.hadoop.fs.FileSystem = hfs(spark, dir)._1
+    val md = new org.apache.hadoop.fs.Path(manifestDir(dir))
+
+    /** Manifest-dir entries by name (empty for a fresh table). */
+    lazy val listing: Map[String, org.apache.hadoop.fs.FileStatus] =
+      (try fs.listStatus(md).toSeq
+       catch { case _: java.io.FileNotFoundException => Seq.empty })
+        .map(s => s.getPath.getName -> s).toMap
+
+    /** Published version → publish time (its `.list` mtime: the atomic
+      * rename is the commit point). */
+    private lazy val published: Map[Int, Long] = listing.collect {
+      case (n, s) if n.startsWith("v") && n.endsWith(".list") =>
+        n.stripPrefix("v").stripSuffix(".list").toInt -> s.getModificationTime
+    }
+    lazy val versions: Seq[Int] = published.keys.toSeq.sorted
+    def current: Option[Int] = versions.lastOption
+    /** The head version; fails loudly on a table with none. */
+    lazy val version: Int = current.getOrElse(
+      throw new IllegalArgumentException(s"$dir: no published snapshots"))
+    def commitTime(v: Int): Long = published.getOrElse(v,
+      throw new IllegalArgumentException(s"$dir: snapshot version $v does not exist"))
+
+    private val opened = scala.collection.mutable.Map.empty[String, Manifest]
+    private def load(name: String, missing: => String): Manifest =
+      opened.synchronized(opened.getOrElseUpdate(name, Manifest.load(fs, md, name, missing)))
+    def manifest(v: Int): Manifest =
+      load(s"v$v.list", s"$dir: snapshot version $v does not exist")
+    def head: Manifest = manifest(version)
+    def files: Seq[String] = head.entries
+    def dv: Option[String] = head.dv
+    /** The live rows of `fs` (entries of the head's [[files]]), masks
+      * applied. */
+    def rows(entries: Seq[String]): DataFrame =
+      maskedScan(this, version, entries.map(dataPath(dir, _)))
+
+    /** LOGICAL schema of version `v`: the schema sidecar with the mapping
+      * applied; a version without a sidecar plans the mergeSchema read. */
+    def schemaAt(v: Int): org.apache.spark.sql.types.StructType =
+      manifest(v).schema match {
+        case Some(phys) => org.apache.spark.sql.types.StructType(phys.fields.collect {
+          case f if !dropped.contains(f.name) => f.copy(name = renames.getOrElse(f.name, f.name))
+        })
+        case None => readAt(this, Some(v)).schema
       }
+    lazy val schema: org.apache.spark.sql.types.StructType = schemaAt(version)
+
+    lazy val props: Map[String, String] = readProps(fs, dir)
+    private def prefixed(p: String): Map[String, String] =
+      props.collect { case (k, v) if k.startsWith(p) => k.stripPrefix(p) -> v }
+    /** physical → logical renames */
+    lazy val renames: Map[String, String] = prefixed("colmap.ren.")
+    /** hidden (dropped) physical columns */
+    lazy val dropped: Set[String] = props.get("colmap.dropped")
+      .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
+    def toPhysical(logical: String): String =
+      renames.collectFirst { case (p, l) if l == logical => p }.getOrElse(logical)
+    def partitionSpecs: Seq[PartitionSpec] = props.get(PartProp).toSeq
+      .flatMap(_.split(';').toSeq.filter(_.nonEmpty).map(parsePartitionSpec))
+    def bloomColumns: Seq[String] = props.get("bloom.columns")
+      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
+    def tags: Map[String, Int] = prefixed("ref.tag.").map { case (k, v) => k -> v.toInt }
+    def branches: Map[String, Int] =
+      prefixed("branch.").map { case (k, v) => dec(k) -> v.toInt }
+    def constraints: Map[String, String] = prefixed("constraint.check.")
+
+    /** Committed branch versions (1-based, contiguous from 1). */
+    def branchVersions(name: String): Seq[Int] =
+      Iterator.from(1).takeWhile(k => listing.contains(branchFile(name, k))).toSeq
+    def branchManifest(name: String, k: Int): Manifest =
+      load(branchFile(name, k), s"$dir: branch '$name' has no v$k")
+    def stagedTokens: Seq[String] = listing.keys.toSeq
+      .collect { case n if n.startsWith("staged-") && n.endsWith(".list") =>
+        n.stripPrefix("staged-").stripSuffix(".list") }.sorted
+    def staged(token: String): Manifest =
+      load(s"staged-$token.list", s"$dir: no staged commit '$token'")
+  }
 
   /** Commit `df` as the next snapshot version and return it. `replace =
     * false` appends (new manifest = previous files + new files); `replace =
@@ -520,25 +627,29 @@ object Snapshots {
   def commit(spark: SparkSession, dir: String, df: DataFrame,
       replace: Boolean = false, expectedVersion: Option[Int] = None,
       evolve: Boolean = false, meta: Map[String, String] = Map.empty): Int = {
-    val (fs, _) = hfs(spark, dir)
-    val cur = currentVersion(spark, dir).getOrElse(0)
+    val st = new TableState(spark, dir)
+    val cur = st.current.getOrElse(0)
     expectedVersion.foreach { ev =>
       if (cur != ev) throw new java.util.ConcurrentModificationException(
         s"$dir: commit planned against v$ev but table is at v$cur — " +
           "rebase the commit on the current snapshot and retry")
     }
-    if (!replace && cur > 0) enforceSchema(spark, dir, df, evolve)
-    enforceConstraints(spark, dir, df)
+    if (!replace && cur > 0) enforceSchema(st, df, evolve)
+    enforceConstraints(st, df)
     val next = cur + 1
-    val fresh = writeData(spark, dir, next, df)
-    val carried =
-      if (replace || next == 1) Seq.empty else files(spark, dir, next - 1)
-    // carried files keep their deletion-vector masks; a replace drops them
-    val dvCarry =
-      if (replace || next == 1) None else dvRel(spark, dir, next - 1)
-    publish(spark, dir, next, carried, fresh, meta, dv = dvCarry)
+    val fresh = writeData(st, next, df)
+    publishOnto(st, next, fresh, replace, meta)
     next
   }
+
+  /** Publish `fresh` as version `next` on top of `st`'s head: a replace
+    * (or a first commit) lists only `fresh`; an append carries the head's
+    * files with their deletion-vector masks. */
+  private def publishOnto(st: TableState, next: Int, fresh: Seq[String],
+      replace: Boolean, meta: Map[String, String]): Unit =
+    if (replace || next == 1) publish(st, next, Seq.empty, fresh, meta)
+    else publish(st, next, st.manifest(next - 1).entries, fresh, meta,
+      dv = st.manifest(next - 1).dv)
 
   /** Commit with the optimistic-concurrency RETRY loop (the commit protocol
     * the public Delta/Iceberg formats run): data files are written ONCE
@@ -564,29 +675,26 @@ object Snapshots {
   def commitRetry(spark: SparkSession, dir: String, df: DataFrame,
       replace: Boolean = false, expectedVersion: Option[Int] = None,
       evolve: Boolean = false, meta: Map[String, String] = Map.empty): Int = {
-    val planned = currentVersion(spark, dir).getOrElse(0)
+    val planState = new TableState(spark, dir)
+    val planned = planState.current.getOrElse(0)
     expectedVersion.foreach { ev =>
       if (planned != ev) throw new java.util.ConcurrentModificationException(
         s"$dir: commit planned against v$ev but table is at v$planned — " +
           "rebase the commit on the current snapshot and retry")
     }
-    if (!replace && planned > 0) enforceSchema(spark, dir, df, evolve)
-    enforceConstraints(spark, dir, df)
-    val fresh = writeData(spark, dir, planned + 1, df)
+    if (!replace && planned > 0) enforceSchema(planState, df, evolve)
+    enforceConstraints(planState, df)
+    val fresh = writeData(planState, planned + 1, df)
     // Left(cur): a derived replace met a foreign commit — no retry can
     // resolve that, so it leaves the loop and fails once
     withCommitRetry(MetadataRetries) {
-      val cur = currentVersion(spark, dir).getOrElse(0)
+      val st = new TableState(spark, dir)
+      val cur = st.current.getOrElse(0)
       if (replace && expectedVersion.exists(_ != cur)) Left(cur)
       else {
-        if (!replace && cur > planned) enforceSchema(spark, dir, df, evolve)
-        val next = cur + 1
-        val carried =
-          if (replace || next == 1) Seq.empty else files(spark, dir, cur)
-        val dvCarry =
-          if (replace || next == 1) None else dvRel(spark, dir, cur)
-        publish(spark, dir, next, carried, fresh, meta, dv = dvCarry)
-        Right(next)
+        if (!replace && cur > planned) enforceSchema(st, df, evolve)
+        publishOnto(st, cur + 1, fresh, replace, meta)
+        Right(cur + 1)
       }
     }.fold(cur => throw new java.util.ConcurrentModificationException(
       s"$dir: replace derived from v${expectedVersion.get} conflicts " +
@@ -626,8 +734,9 @@ object Snapshots {
     * just-published manifest references (Delta's unique-file-name rule).
     * Loser directories become orphan debris that [[vacuumOrphans]] sweeps.
     */
-  private def writeData(spark: SparkSession, dir: String, next: Int,
+  private def writeData(st: TableState, next: Int,
       df: DataFrame): Seq[String] = {
+    val (spark, dir, fs) = (st.spark, st.dir, st.fs)
     // the masked-read machinery attaches internal `__`-prefixed columns and
     // maskedParquet strips the WHOLE prefix on merge-on-read reads — a user
     // column like `__tag` would write fine and then silently vanish from
@@ -637,15 +746,14 @@ object Snapshots {
     require(reserved.isEmpty,
       s"$dir: column name(s) ${reserved.mkString(", ")} use the '__' prefix, " +
         "which is reserved by the snapshots format")
-    val (fs, _) = hfs(spark, dir)
     val dataRel = s"data/c$next-${java.util.UUID.randomUUID.toString.take(8)}"
     // the single write choke point: logical frames land under their
     // PHYSICAL column names, so renamed columns stay one column on disk
-    val physical = toPhysicalFrame(spark, dir, df)
-    partitionSpecs(spark, dir) match {
+    val physical = toPhysicalFrame(st, df)
+    st.partitionSpecs match {
       case Seq() =>
         withStatFriendlyWrites(spark) {
-          physical.write.options(bloomWriteOptions(spark, dir))
+          physical.write.options(bloomWriteOptions(st))
             .mode("overwrite").parquet(s"$dir/$dataRel")
         }
       case specs =>
@@ -671,7 +779,7 @@ object Snapshots {
         // no constant tuned for either local mode or the cluster. Without
         // AQE the hint degrades to exactly the old hash distribution.
         val shadowCols = specs.zipWithIndex.map { case (ps, i) =>
-          val pc = toPhysical(spark, dir, ps.column)
+          val pc = st.toPhysical(ps.column)
           require(physical.columns.contains(pc),
             s"$dir: partition column '${ps.column}' missing from the write")
           partDirColAt(i) ->
@@ -681,7 +789,7 @@ object Snapshots {
           df.withColumn(n, e.cast("string"))
         }.hint("rebalance", shadowCols.map(c => col(c._1)): _*)
         withStatFriendlyWrites(spark) {
-          routed.write.options(bloomWriteOptions(spark, dir))
+          routed.write.options(bloomWriteOptions(st))
             .mode("overwrite").partitionBy(shadowCols.map(_._1): _*)
             .parquet(s"$dir/$dataRel")
         }
@@ -734,22 +842,8 @@ object Snapshots {
 
   /** The `meta` map committed with `version` (empty if none was passed). */
   def commitMeta(spark: SparkSession, dir: String,
-      version: Int): Map[String, String] = {
-    val (fs, _) = hfs(spark, dir)
-    val mf = sidecarName(spark, dir, version, "meta")
-      .map(n => new org.apache.hadoop.fs.Path(manifestDir(dir), n))
-    if (mf.isEmpty || !fs.exists(mf.get)) Map.empty
-    else {
-      val in = fs.open(mf.get)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.linesIterator.filter(_.nonEmpty).map { line =>
-        val Array(k, v) = line.split("\t", -1)
-        dec(k) -> dec(v)
-      }.toMap
-    }
-  }
+      version: Int): Map[String, String] =
+    new TableState(spark, dir).manifest(version).meta
 
   /** Append-commit schema gate (Delta's enforcement): the incoming frame
     * must carry exactly the table's columns with exactly their types —
@@ -757,11 +851,13 @@ object Snapshots {
     * reader-dependent results. `evolve = true` relaxes ONE direction:
     * brand-new columns may be ADDED (prior files surface NULLs for them
     * via the merged-footer read); dropped columns and type changes stay
-    * hard errors either way.
+    * hard errors either way. The table schema is the head's unless
+    * `against` names another (a branch head's).
     */
-  private def enforceSchema(spark: SparkSession, dir: String, df: DataFrame,
-      evolve: Boolean): Unit = {
-    val table = read(spark, dir).schema.map(f => f.name -> f.dataType).toMap
+  private def enforceSchema(st: TableState, df: DataFrame, evolve: Boolean,
+      against: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+    val dir = st.dir
+    val table = against.getOrElse(st.schema).map(f => f.name -> f.dataType).toMap
     val incoming = df.schema.map(f => f.name -> f.dataType).toMap
     val missing = table.keySet -- incoming.keySet
     val added = incoming.keySet -- table.keySet
@@ -781,8 +877,7 @@ object Snapshots {
       // a new logical column becomes a physical parquet column of the same
       // name — it must not collide with a HIDDEN physical (dropped, or
       // renamed away), or old bytes would resurrect under the new column
-      val hidden = droppedCols(spark, dir) ++
-        colMapping(spark, dir).collect { case (p, l) if p != l => p }
+      val hidden = st.dropped ++ st.renames.collect { case (p, l) if p != l => p }
       val bad = added.intersect(hidden)
       if (bad.nonEmpty) throw new IllegalArgumentException(
         s"$dir: column name(s) ${bad.toSeq.sorted.mkString(", ")} collide " +
@@ -798,63 +893,29 @@ object Snapshots {
     * sidecar lands before the `.list`: the list rename is the commit point,
     * so a reader never sees a version whose stats are still in flight.
     */
-  private def publish(spark: SparkSession, dir: String, next: Int,
+  private def publish(st: TableState, next: Int,
       carried: Seq[String], fresh: Seq[String],
       meta: Map[String, String] = Map.empty,
       cdc: Option[String] = None,
       dv: Option[String] = None,
       noRowChange: Boolean = false,
       statsFrom: Option[Int] = None): Unit = {
-    val (fs, _) = hfs(spark, dir)
-    val md = new org.apache.hadoop.fs.Path(manifestDir(dir))
-    fs.mkdirs(md)
-    // carried stats come from the version that LISTED the carried files —
-    // the previous one for ordinary commits, the restored one for RESTORE
-    val prevStats: Map[String, Map[String, ColStat]] =
-      if (carried.isEmpty) Map.empty
-      else stats(spark, dir, statsFrom.getOrElse(next - 1))
+    val (spark, dir) = (st.spark, st.dir)
+    st.fs.mkdirs(st.md)
+    // carried stats and schema come from the version that LISTED the
+    // carried files — the previous one for ordinary commits, the restored
+    // one for RESTORE
+    val from = if (carried.isEmpty) None else Some(st.manifest(statsFrom.getOrElse(next - 1)))
+    val prevStats = from.fold(Map.empty[String, Map[String, ColStat]])(_.stats)
     // one footer open per fresh file: stats AND the writer-recorded Spark
     // schema come out of the same read (the schema sidecar below then needs
     // no second pass over the footers)
     val freshInfo = fresh.map(f => f -> footerInfo(spark, dataPath(dir, f)))
     val statRows = carried.flatMap(f => prevStats.get(f).map(f -> _)) ++
-      freshInfo.map { case (f, (st, _)) => f -> st }
-    def writeAtomic(name: String, body: Array[Byte],
-        contended: Boolean): Unit = {
-      // write-temp + atomic rename: a concurrent reader either sees the
-      // fully written file or none at all (hidden names are never listed).
-      // Sidecars carry a per-writer-unique token in their name, so the
-      // `.list` is the ONLY contended rename — an already-present list
-      // means another writer won this version slot (the loser's sidecars
-      // become unique-named debris that [[vacuumOrphans]] sweeps; they can
-      // never shadow the winner's, unlike a fixed `vN.stats` name).
-      // The TEMP name must be per-writer unique too: same-slot racers
-      // sharing one `.vN.list.tmp` would overwrite / rename-steal each
-      // other's in-flight bytes before ever reaching the guarded rename.
-      val tmp = new org.apache.hadoop.fs.Path(md,
-        s".$name.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(body) finally out.close()
-      val fin = new org.apache.hadoop.fs.Path(md, name)
-      def renameGuarded(): Unit = {
-        if (contended && fs.exists(fin)) {
-          fs.delete(tmp, false)
-          throw new java.util.ConcurrentModificationException(
-            s"$dir: $name was published concurrently — rebase and retry")
-        }
-        require(fs.rename(tmp, fin), s"$dir: manifest publish rename failed for $name")
-      }
-      // HDFS/object-store rename is no-overwrite (the loser's rename FAILS),
-      // but POSIX local rename overwrites — serialize same-JVM committers
-      // through a per-table lock so the exists-check + rename is atomic
-      // here too. Cross-JVM local racers keep the documented microsecond
-      // window (the Delta-on-S3 external-lock caveat).
-      if (contended) publishLock(md.toString).synchronized(renameGuarded())
-      else renameGuarded()
-    }
+      freshInfo.map { case (f, (s, _)) => f -> s }
     val token = java.util.UUID.randomUUID.toString.take(8)
     val statsName = s"v$next-$token.stats"
-    writeAtomic(statsName, encodeStats(statRows).getBytes("UTF-8"),
+    writeAtomic(st, statsName, encodeStats(statRows).getBytes("UTF-8"),
       contended = false)
     // PHYSICAL schema sidecar (Delta/Iceberg record schema in the log):
     // carried fields keep the prior version's order, brand-new fresh
@@ -867,10 +928,7 @@ object Snapshots {
       def footerSchema(fs0: Seq[String]) = spark.read
         .option("mergeSchema", "true").parquet(fs0.map(f => dataPath(dir, f)): _*)
         .schema
-      val carriedSchema =
-        if (carried.isEmpty) None
-        else physicalSchemaOf(spark, dir, statsFrom.getOrElse(next - 1))
-          .orElse(Some(footerSchema(carried)))
+      val carriedSchema = from.map(_.schema.getOrElse(footerSchema(carried)))
       // the fresh files' schemas were already read footer-by-footer above
       // (footerInfo); the mergeSchema Spark JOB runs only as the fallback —
       // a file missing the Spark schema key (non-Spark writer) or a
@@ -892,11 +950,11 @@ object Snapshots {
             c.fields ++ f.fields.filterNot(x => byName.contains(x.name))))
         case (c, f) => c.orElse(f)
       }
-      merged.map { st =>
+      merged.map { s =>
         val nullable = org.apache.spark.sql.types.StructType(
-          st.fields.map(_.copy(nullable = true)))
+          s.fields.map(_.copy(nullable = true)))
         val name = s"v$next-$token.schema"
-        writeAtomic(name, nullable.json.getBytes("UTF-8"), contended = false)
+        writeAtomic(st, name, nullable.json.getBytes("UTF-8"), contended = false)
         name
       }
     }
@@ -904,27 +962,51 @@ object Snapshots {
       if (meta.isEmpty) None
       else {
         val name = s"v$next-$token.meta"
-        writeAtomic(name, meta.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${enc(k)}\t${enc(v)}" }
-          .mkString("", "\n", "\n").getBytes("UTF-8"), contended = false)
+        writeAtomic(st, name, encodeKv(meta), contended = false)
         Some(name)
       }
-    val headers = Seq(s"#stats=$statsName") ++ metaName.map(n => s"#meta=$n") ++
-      schemaName.map(n => s"#schema=$n") ++
-      cdc.map(rel => s"#cdc=$rel") ++ dv.map(rel => s"#dv=$rel") ++
-      (if (noRowChange) Seq("#norowchange=1") else Seq.empty)
-    val body = (headers ++ carried ++ fresh).mkString("", "\n", "\n")
-      .getBytes("UTF-8")
-    writeAtomic(s"v$next.list", body, contended = true)
+    val headers = Seq("stats" -> statsName) ++ metaName.map("meta" -> _) ++
+      schemaName.map("schema" -> _) ++ cdc.map("cdc" -> _) ++ dv.map("dv" -> _) ++
+      (if (noRowChange) Seq("norowchange" -> "1") else Seq.empty)
+    writeAtomic(st, s"v$next.list",
+      Manifest.encode(headers, Map.empty, carried ++ fresh), contended = true)
   }
 
-  /** Table-relative change-feed directory recorded for `version`, if the
-    * commit produced one (merge/delete do; plain appends derive their feed
-    * from the manifest diff instead). */
-  private def cdcRel(spark: SparkSession, dir: String,
-      version: Int): Option[String] =
-    listLines(spark, dir, version)
-      .collectFirst { case l if l.startsWith("#cdc=") => l.substring(5) }
+  /** Write `body` to the manifest dir as `name` with write-temp + atomic
+    * rename: a concurrent reader either sees the fully written file or none
+    * at all (hidden names are never listed). Sidecars carry a
+    * per-writer-unique token in their name, so a `.list` is the ONLY
+    * contended rename — an already-present list means another writer won
+    * the slot (the loser's sidecars become unique-named debris that
+    * [[vacuumOrphans]] sweeps; they can never shadow the winner's). The
+    * TEMP name must be per-writer unique too: same-slot racers sharing one
+    * temp would overwrite / rename-steal each other's in-flight bytes
+    * before ever reaching the guarded rename.
+    */
+  private def writeAtomic(st: TableState, name: String, body: Array[Byte],
+      contended: Boolean): Unit = {
+    val fs = st.fs
+    val tmp = new org.apache.hadoop.fs.Path(st.md,
+      s".$name.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(body) finally out.close()
+    val fin = new org.apache.hadoop.fs.Path(st.md, name)
+    def renameGuarded(): Unit = {
+      if (contended && fs.exists(fin)) {
+        fs.delete(tmp, false)
+        throw new java.util.ConcurrentModificationException(
+          s"${st.dir}: $name was published concurrently — rebase and retry")
+      }
+      require(fs.rename(tmp, fin), s"${st.dir}: manifest publish rename failed for $name")
+    }
+    // HDFS/object-store rename is no-overwrite (the loser's rename FAILS),
+    // but POSIX local rename overwrites — serialize same-JVM committers
+    // through a per-table lock so the exists-check + rename is atomic
+    // here too. Cross-JVM local racers keep the documented microsecond
+    // window (the Delta-on-S3 external-lock caveat).
+    if (contended) publishLock(st.md.toString).synchronized(renameGuarded())
+    else renameGuarded()
+  }
 
   /** Table-relative DELETION-VECTOR directory of one version, if the
     * version carries merge-on-read deletes ([[deleteRangeMor]] /
@@ -935,8 +1017,7 @@ object Snapshots {
     */
   private[graft] def dvRel(spark: SparkSession, dir: String,
       version: Int): Option[String] =
-    listLines(spark, dir, version)
-      .collectFirst { case l if l.startsWith("#dv=") => l.substring(4) }
+    new TableState(spark, dir).manifest(version).dv
 
   /** True when `version` is a DATA-PRESERVING rewrite (compaction, Z-order
     * maintenance): files changed, visible rows did not — Delta's
@@ -945,7 +1026,7 @@ object Snapshots {
     * CDF tail.
     */
   def isRowPreserving(spark: SparkSession, dir: String, version: Int): Boolean =
-    listLines(spark, dir, version).exists(_.startsWith("#norowchange="))
+    new TableState(spark, dir).manifest(version).rowPreserving
 
   /** Row-level CHANGE DATA FEED over `(fromVersion, toVersion]` (the public
     * Delta CDF contract): every row change with `_change_type` ∈
@@ -964,11 +1045,12 @@ object Snapshots {
     import org.apache.spark.sql.functions.lit
     require(fromVersion < toVersion,
       s"$dir: fromVersion $fromVersion must precede toVersion $toVersion")
-    val vs = rangeVersions(spark, dir, fromVersion, toVersion)
+    val st = new TableState(spark, dir)
+    val vs = rangeVersions(st, fromVersion, toVersion)
     // canonical column order = the table's (a using-key join in a commit
     // path may have moved columns; the STREAMING source binds the batch to
     // its declared schema positionally, so order is part of the contract)
-    val head = read(spark, dir, Some(toVersion))
+    val head = readAt(st, Some(toVersion))
     val tableCols = head.columns.toSeq
     // one planned relation serves every zero-row part: planning a fresh
     // mergeSchema read per empty version would re-read all of its footers
@@ -978,36 +1060,36 @@ object Snapshots {
         .withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version", lit(v))
     val parts = vs.map { v =>
-      cdcRel(spark, dir, v) match {
+      val m = st.manifest(v)
+      m.cdc match {
         // a data-preserving rewrite (compact / Z-order maintenance) changed
         // no visible rows: the feed is empty for it by definition — Delta's
         // dataChange = false commits, which CDF skips the same way
-        case _ if isRowPreserving(spark, dir, v) => emptyAt(v)
+        case _ if m.rowPreserving => emptyAt(v)
         case Some(rel) =>
           // applyMapping: recorded feed rows land under PHYSICAL column
           // names (writeCdc's rule), so the current table-level mapping
           // translates every feed generation uniformly — a feed recorded
           // between two renames of the same column reads back under the
           // column's CURRENT logical name, same as the data files do.
-          applyMapping(spark, dir,
+          applyMapping(st,
             spark.read.option("mergeSchema", "true").parquet(s"$dir/$rel"))
             .withColumn("_commit_version", lit(v))
         case None =>
           val prev: Set[String] =
-            if (v == 1) Set.empty else files(spark, dir, v - 1).toSet
-          val cur = files(spark, dir, v)
+            if (v == 1) Set.empty else st.manifest(v - 1).entries.toSet
+          val cur = m.entries
           require(prev.subsetOf(cur.toSet),
             s"$dir: v$v is a replace commit with no recorded change feed — " +
               "incremental read is undefined, resync from a snapshot")
           // defensive: every DV writer records a feed, so an un-fed DV delta
           // here means a foreign/corrupt commit — refuse, don't misreport
-          require(dvRel(spark, dir, v) ==
-            (if (v == 1) None else dvRel(spark, dir, v - 1)),
+          require(m.dv == (if (v == 1) None else st.manifest(v - 1).dv),
             s"$dir: v$v changed deletion vectors without a recorded change " +
               "feed — incremental read is undefined")
           val fresh = cur.filterNot(prev)
           if (fresh.isEmpty) emptyAt(v)
-          else applyMapping(spark, dir, spark.read.option("mergeSchema", "true")
+          else applyMapping(st, spark.read.option("mergeSchema", "true")
             .parquet(fresh.map(f => dataPath(dir, f)): _*))
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_version", lit(v))
@@ -1030,13 +1112,12 @@ object Snapshots {
     * later reads — physical names make [[applyMapping]] translate every
     * feed generation uniformly. `_change_type` has no mapping entry and
     * passes through unchanged. */
-  private def writeCdc(spark: SparkSession, dir: String, next: Int,
-      df: DataFrame): String = {
+  private def writeCdc(st: TableState, next: Int, df: DataFrame): String = {
     val rel = s"_changes/c$next-${java.util.UUID.randomUUID.toString.take(8)}"
     // change-feed files bin-pack adaptively too (same §6 rationale as the
     // DML rewrites; CDF readers scan every commit's _changes dir)
-    toPhysicalFrame(spark, dir, df.hint("rebalance"))
-      .write.mode("overwrite").parquet(s"$dir/$rel")
+    toPhysicalFrame(st, df.hint("rebalance"))
+      .write.mode("overwrite").parquet(s"${st.dir}/$rel")
     rel
   }
 
@@ -1046,12 +1127,11 @@ object Snapshots {
     * (prior masks are unioned in by the writer), so a reader resolves
     * exactly one DV join side per snapshot.
     */
-  private def writeDv(spark: SparkSession, dir: String, next: Int,
-      df: DataFrame): String = {
+  private def writeDv(st: TableState, next: Int, df: DataFrame): String = {
     val rel = s"_dv/c$next-${java.util.UUID.randomUUID.toString.take(8)}"
     df.select(org.apache.spark.sql.functions.col("file_name"),
         org.apache.spark.sql.functions.col("pos"))
-      .write.mode("overwrite").parquet(s"$dir/$rel")
+      .write.mode("overwrite").parquet(s"${st.dir}/$rel")
     rel
   }
 
@@ -1063,7 +1143,8 @@ object Snapshots {
     */
   def deletionVectors(spark: SparkSession, dir: String,
       version: Int): Option[DataFrame] =
-    dvRel(spark, dir, version).map(rel => spark.read.parquet(s"$dir/$rel"))
+    new TableState(spark, dir).manifest(version).dv
+      .map(rel => spark.read.parquet(s"$dir/$rel"))
 
   /** PHYSICAL schema of one version from its `.schema` sidecar, if the
     * version recorded one — the metadata answer to "what columns do these
@@ -1072,20 +1153,8 @@ object Snapshots {
     * difference between instant analysis and a cluster-wide metadata job).
     */
   private[graft] def physicalSchemaOf(spark: SparkSession, dir: String,
-      version: Int): Option[org.apache.spark.sql.types.StructType] = {
-    val (fs, _) = hfs(spark, dir)
-    sidecarName(spark, dir, version, "schema")
-      .map(n => new org.apache.hadoop.fs.Path(manifestDir(dir), n))
-      .filter(fs.exists)
-      .map { p =>
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        org.apache.spark.sql.types.DataType.fromJson(text)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
-  }
+      version: Int): Option[org.apache.spark.sql.types.StructType] =
+    new TableState(spark, dir).manifest(version).schema
 
   /** JVM-wide (path → FileStatus) cache for MANIFEST-LISTED data files.
     * Safe because data files are write-once under unique names (the same
@@ -1146,22 +1215,24 @@ object Snapshots {
     * plans through [[ManifestFileIndex]] — no listing job, no footer IO;
     * the fallback keeps `spark.read` (it must infer from footers anyway).
     */
-  private def planRaw(spark: SparkSession, dir: String, version: Int,
-      paths: Seq[String], mergeAll: Boolean): DataFrame =
-    (if (mergeAll) None else physicalSchemaOf(spark, dir, version)) match {
-      case Some(st) if paths.nonEmpty =>
+  private def planRaw(st: TableState, version: Int,
+      paths: Seq[String], mergeAll: Boolean): DataFrame = {
+    val spark = st.spark
+    (if (mergeAll) None else st.manifest(version).schema) match {
+      case Some(schema) if paths.nonEmpty =>
         val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
           location = new ManifestFileIndex(manifestStatuses(spark, paths)),
           partitionSchema = org.apache.spark.sql.types.StructType(Nil),
-          dataSchema = st,
+          dataSchema = schema,
           bucketSpec = None,
           fileFormat =
             new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
           options = Map.empty)(spark)
         spark.baseRelationToDataFrame(rel)
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
       case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
+  }
 
   /** Open `paths` with the row's identity attached (`__fname`, `__pos`)
     * and any existing deletion-vector rows ALREADY masked out — the
@@ -1169,19 +1240,19 @@ object Snapshots {
     * on (file name, file-absolute row index): the DV side is deleted-rows
     * sized, so Spark broadcast it and the scan stays one pass.
     */
-  private def openWithPos(spark: SparkSession, dir: String, version: Int,
+  private def openWithPos(st: TableState, version: Int,
       paths: Seq[String], dv: Option[String],
       mergeAll: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, split}
-    val base = applyMapping(spark, dir,
-      planRaw(spark, dir, version, paths, mergeAll)
+    val base = applyMapping(st,
+      planRaw(st, version, paths, mergeAll)
         .withColumn("__path", col("_metadata.file_path"))
         .withColumn("__fname", element_at(split(col("_metadata.file_path"), "/"), -1))
         .withColumn("__pos", col("_metadata.row_index")))
     dv match {
       case None => base
       case Some(rel) =>
-        base.join(spark.read.parquet(s"$dir/$rel")
+        base.join(st.spark.read.parquet(s"${st.dir}/$rel")
             .select(col("file_name").as("__fname"), col("pos").as("__pos")),
           Seq("__fname", "__pos"), "left_anti")
     }
@@ -1194,18 +1265,21 @@ object Snapshots {
     * so a DV is invisible everywhere except the write amplification it
     * saved.
     */
-  private[graft] def maskedParquet(spark: SparkSession, dir: String,
-      version: Int, paths: Seq[String],
+  private def maskedScan(st: TableState, version: Int, paths: Seq[String],
       mergeAll: Boolean = false): DataFrame =
-    dvRel(spark, dir, version) match {
-      case None => applyMapping(spark, dir,
-        planRaw(spark, dir, version, paths, mergeAll))
+    st.manifest(version).dv match {
+      case None => applyMapping(st, planRaw(st, version, paths, mergeAll))
       case Some(rel) =>
         import org.apache.spark.sql.functions.col
-        val withPos = openWithPos(spark, dir, version, paths, Some(rel), mergeAll)
+        val withPos = openWithPos(st, version, paths, Some(rel), mergeAll)
         val dataCols = withPos.columns.filterNot(_.startsWith("__"))
         withPos.select(dataCols.toSeq.map(col): _*)
     }
+
+  /** [[maskedScan]] for the SQL relation, which plans its own file list. */
+  private[graft] def maskedParquet(spark: SparkSession, dir: String,
+      version: Int, paths: Seq[String]): DataFrame =
+    maskedScan(new TableState(spark, dir), version, paths)
 
   /** DESCRIBE HISTORY: one row per published version — commit time, file
     * count, whether it carried a recorded change feed / deletion vectors /
@@ -1217,50 +1291,49 @@ object Snapshots {
     */
   def history(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    versions(spark, dir).map { v =>
-      val meta = commitMeta(spark, dir, v).toSeq.sortBy(_._1)
-        .map { case (k, x) => s"$k=$x" }.mkString(";")
-      (v, commitTime(spark, dir, v), files(spark, dir, v).length,
-        cdcRel(spark, dir, v).isDefined, dvRel(spark, dir, v).isDefined,
-        isRowPreserving(spark, dir, v), meta)
+    val st = new TableState(spark, dir)
+    st.versions.map { v =>
+      val m = st.manifest(v)
+      val meta = m.meta.toSeq.sortBy(_._1).map { case (k, x) => s"$k=$x" }.mkString(";")
+      (v, st.commitTime(v), m.entries.length, m.cdc.isDefined, m.dv.isDefined,
+        m.rowPreserving, meta)
     }.toDF("version", "commit_ms", "n_files", "has_change_feed",
       "has_deletion_vectors", "row_preserving", "meta")
   }
 
   /** Wall-clock publish time of one version (the manifest's modification
     * time — set by the atomic rename, i.e. the commit point). */
-  def commitTime(spark: SparkSession, dir: String, version: Int): Long = {
-    val (fs, _) = hfs(spark, dir)
-    val mf = new org.apache.hadoop.fs.Path(s"${manifestDir(dir)}/v$version.list")
-    require(fs.exists(mf), s"$dir: snapshot version $version does not exist")
-    fs.getFileStatus(mf).getModificationTime
-  }
+  def commitTime(spark: SparkSession, dir: String, version: Int): Long =
+    new TableState(spark, dir).commitTime(version)
 
   /** TIMESTAMP AS OF: read the newest snapshot published at or before
     * `tsMillis`. Fails loudly for a timestamp older than the first commit
     * (there was no table then) — the Delta/Iceberg contract.
     */
   def readAsOf(spark: SparkSession, dir: String, tsMillis: Long): DataFrame = {
-    val vs = versions(spark, dir)
-    val at = vs.filter(v => commitTime(spark, dir, v) <= tsMillis)
+    val st = new TableState(spark, dir)
+    val at = st.versions.filter(v => st.commitTime(v) <= tsMillis)
     require(at.nonEmpty,
       s"$dir: no snapshot existed at $tsMillis (first commit is later)")
-    read(spark, dir, Some(at.max))
+    readAt(st, Some(at.max))
   }
 
   /** Read one snapshot (default: latest). Plans exactly the manifest's
     * files, so the scan count — and therefore the result — is pinned no
     * matter what lands in the table afterwards.
     */
-  def read(spark: SparkSession, dir: String, version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(headVersion(spark, dir))
-    val fs = files(spark, dir, v)
-    require(fs.nonEmpty, s"$dir: snapshot v$v lists no files")
-    // mergeSchema (inside maskedParquet): evolved tables (evolve = true
+  def read(spark: SparkSession, dir: String, version: Option[Int] = None): DataFrame =
+    readAt(new TableState(spark, dir), version)
+
+  private def readAt(st: TableState, version: Option[Int]): DataFrame = {
+    val v = version.getOrElse(st.version)
+    val fs = st.manifest(v).entries
+    require(fs.nonEmpty, s"${st.dir}: snapshot v$v lists no files")
+    // mergeSchema (inside maskedScan): evolved tables (evolve = true
     // appends) surface added columns with NULLs in pre-evolution files
     // instead of whichever single footer the planner happened to sample;
     // deletion vectors of merge-on-read commits mask out deleted rows
-    maskedParquet(spark, dir, v, fs.map(f => dataPath(dir, f)))
+    maskedScan(st, v, fs.map(f => dataPath(st.dir, f)))
   }
 
   /** Incremental read: the rows appended between `fromVersion` (exclusive)
@@ -1275,44 +1348,44 @@ object Snapshots {
       toVersion: Int): DataFrame = {
     require(fromVersion < toVersion,
       s"$dir: fromVersion $fromVersion must precede toVersion $toVersion")
-    val vs = rangeVersions(spark, dir, fromVersion, toVersion)
+    val st = new TableState(spark, dir)
+    val vs = rangeVersions(st, fromVersion, toVersion)
     // per-version walk (not endpoint set-difference): a DATA-PRESERVING
     // rewrite in the range (compaction / Z-order maintenance, marked
     // #norowchange) contributes zero rows and later diffs anchor on its
     // post-rewrite manifest, so maintenance never breaks a live tail; a
     // genuine replace or a row-level change still refuses loudly.
-    var prev = files(spark, dir, fromVersion).toSet
-    var prevDv = dvRel(spark, dir, fromVersion)
+    var prev = st.manifest(fromVersion).entries.toSet
+    var prevDv = st.manifest(fromVersion).dv
     var sawPreserving = false
     val freshAll = Seq.newBuilder[String]
     for (v <- vs) {
-      val cur = files(spark, dir, v)
-      if (isRowPreserving(spark, dir, v)) sawPreserving = true
+      val m = st.manifest(v)
+      if (m.rowPreserving) sawPreserving = true
       else {
-        require(prev.subsetOf(cur.toSet),
+        require(prev.subsetOf(m.entries.toSet),
           s"$dir: v$v is a replace commit — incremental read is undefined " +
             "across it, resync from a snapshot")
-        val dv = dvRel(spark, dir, v)
-        require(dv == prevDv,
+        require(m.dv == prevDv,
           s"$dir: v$v carries row-level deletes (deletion vectors) — " +
             "append-only incremental read is undefined, use readChangeFeed")
-        freshAll ++= cur.filterNot(prev)
+        freshAll ++= m.entries.filterNot(prev)
       }
-      prev = cur.toSet
-      prevDv = dvRel(spark, dir, v)
+      prev = m.entries.toSet
+      prevDv = m.dv
     }
     val fresh = freshAll.result()
     if (fresh.isEmpty) {
       require(sawPreserving,
         s"$dir: no files appended in (v$fromVersion, v$toVersion]")
       // only maintenance landed: the delta is exactly zero rows
-      read(spark, dir, Some(toVersion))
+      readAt(st, Some(toVersion))
         .filter(org.apache.spark.sql.functions.lit(false))
     } else
-      // maskedParquet: the walk proved the DV is constant across the range
+      // maskedScan: the walk proved the DV is constant across the range
       // (no entry can reference range-fresh files), so the mask is a
       // harmless no-op here — this is for the column MAPPING
-      maskedParquet(spark, dir, toVersion, fresh.map(f => dataPath(dir, f)))
+      maskedScan(st, toVersion, fresh.map(f => dataPath(dir, f)))
   }
 
   /** Versions in `(fromVersion, toVersion]`, verified CONTIGUOUS from
@@ -1321,9 +1394,10 @@ object Snapshots {
     * that case fails loudly instead (the consumer must resync from a full
     * snapshot).
     */
-  private def rangeVersions(spark: SparkSession, dir: String,
+  private def rangeVersions(st: TableState,
       fromVersion: Int, toVersion: Int): Seq[Int] = {
-    val vs = versions(spark, dir).filter(v => v > fromVersion && v <= toVersion)
+    val dir = st.dir
+    val vs = st.versions.filter(v => v > fromVersion && v <= toVersion)
     require(vs.nonEmpty, s"$dir: no versions in ($fromVersion, $toVersion]")
     require(vs.head == fromVersion + 1 && vs == (vs.head to vs.last),
       s"$dir: versions in (v$fromVersion, v$toVersion] were expired " +
@@ -1346,20 +1420,23 @@ object Snapshots {
     * min-snapshots-to-keep posture). Abandoned pins age out after
     * [[defaultPinTtlMillis]].
     */
-  def expire(spark: SparkSession, dir: String, keepFrom: Int): Int = {
-    val (fs, _) = hfs(spark, dir)
-    val all = versions(spark, dir)
+  def expire(spark: SparkSession, dir: String, keepFrom: Int): Int =
+    expireTo(new TableState(spark, dir), keepFrom)
+
+  private def expireTo(st: TableState, keepFrom: Int): Int = {
+    val (spark, dir, fs) = (st.spark, st.dir, st.fs)
+    val all = st.versions
     require(all.contains(keepFrom), s"$dir: keepFrom v$keepFrom does not exist")
     // reader pins, tags AND branch bases protect their versions: a tagged
     // snapshot ("golden") or a live branch's fork point survives any sweep
     // until the tag/branch is deleted
     val clamped = (readerPins(spark, dir).values.toSeq ++
-      tags(spark, dir).values ++ branches(spark, dir).values :+ keepFrom).min
+      st.tags.values ++ st.branches.values :+ keepFrom).min
     val keepEff = if (clamped >= keepFrom) keepFrom
       else all.find(_ >= clamped).getOrElse(keepFrom)
     val (drop, keep) = all.partition(_ < keepEff)
-    val keepFiles = keep.flatMap(v => files(spark, dir, v)).toSet
-    val orphans = drop.flatMap(v => files(spark, dir, v)).distinct
+    val keepFiles = keep.flatMap(st.manifest(_).entries).toSet
+    val orphans = drop.flatMap(st.manifest(_).entries).distinct
       .filterNot(keepFiles)
       .filterNot(isExternal) // a clone never deletes its source's files
     orphans.foreach { f =>
@@ -1367,18 +1444,14 @@ object Snapshots {
     }
     // a DV dir is SHARED by every append that carried it forward — only
     // sweep one no surviving manifest references
-    val liveDv = keep.flatMap(v => dvRel(spark, dir, v)).toSet
+    val liveDv = keep.flatMap(st.manifest(_).dv).toSet
     drop.foreach { v =>
       // resolve sidecar/change-dir names BEFORE deleting the list that
       // references them
-      val sidecars = Seq("stats", "meta", "schema")
-        .flatMap(sidecarName(spark, dir, v, _))
-      val changes = cdcRel(spark, dir, v)
-      val dv = dvRel(spark, dir, v).filterNot(liveDv)
-      fs.delete(new org.apache.hadoop.fs.Path(s"${manifestDir(dir)}/v$v.list"), false)
-      sidecars.foreach(n =>
-        fs.delete(new org.apache.hadoop.fs.Path(manifestDir(dir), n), false))
-      (changes.toSeq ++ dv).foreach(rel =>
+      val m = st.manifest(v)
+      fs.delete(new org.apache.hadoop.fs.Path(st.md, s"v$v.list"), false)
+      m.sidecars.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(st.md, n), false))
+      (m.cdc.toSeq ++ m.dv.filterNot(liveDv)).foreach(rel =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$rel"), true))
     }
     orphans.length
@@ -1392,10 +1465,9 @@ object Snapshots {
     * and blooms regenerate with the rewrite (commit-path property).
     */
   def compact(spark: SparkSession, dir: String, targetBytes: Long): Int = {
-    val (fs, _) = hfs(spark, dir)
-    val head = new Head(spark, dir)
-    val total = head.files
-      .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(dataPath(dir, f))).getLen)
+    val st = new TableState(spark, dir)
+    val total = st.files
+      .map(f => st.fs.getFileStatus(new org.apache.hadoop.fs.Path(dataPath(dir, f))).getLen)
       .sum
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
     // a row-preserving replace of every file: an append landing between
@@ -1403,7 +1475,7 @@ object Snapshots {
     // as a conflict, never silently vanishing from the new head. read()
     // masks deletion vectors, so compaction MATERIALIZES pending
     // merge-on-read deletes (the rewritten files carry no DV).
-    def land(df: DataFrame, msg: String) = landCow(spark, head, head.files, None,
+    def land(df: DataFrame, msg: String) = landCow(st, st.files, None,
       Seq(df), Map("compaction" -> s"$total bytes$msg"), noRowChange = true)
     // Partitioned tables skip the global repartition(n): the routed commit
     // write re-shuffles by partition tuple anyway, so the sizing shuffle
@@ -1411,11 +1483,11 @@ object Snapshots {
     // (one file per tuple regardless of the knob). Instead the rebalance
     // in writeData bin-packs WITHIN partitions, with targetBytes mapped
     // onto AQE's advisory partition size for the duration of the write.
-    if (partitionSpecs(spark, dir).nonEmpty)
+    if (st.partitionSpecs.nonEmpty)
       withAdvisorySize(spark, targetBytes) {
-        land(read(spark, dir, Some(head.version)), ", partition-binned")
+        land(readAt(st, Some(st.version)), ", partition-binned")
       }
-    else land(read(spark, dir, Some(head.version)).repartition(n), s" -> $n files")
+    else land(readAt(st, Some(st.version)).repartition(n), s" -> $n files")
   }
 
   /** Pin AQE's advisory partition size (the rebalance bin-packing target)
@@ -1479,23 +1551,22 @@ object Snapshots {
     */
   def compactRange(spark: SparkSession, dir: String, column: String,
       lower: Option[Any], upper: Option[Any], targetBytes: Long): Int = {
-    val (fs, _) = hfs(spark, dir)
-    val head = new Head(spark, dir)
-    val (hot, _) = pruneFilesAll(spark, dir, head.version, Seq((column, lower, upper)))
-    if (hot.length <= 1) return head.version // nothing to fold
+    val st = new TableState(spark, dir)
+    val (hot, _) = pruneAt(st, st.version, Seq((column, lower, upper)))
+    if (hot.length <= 1) return st.version // nothing to fold
     val total = hot
-      .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(dataPath(dir, f))).getLen)
+      .map(f => st.fs.getFileStatus(new org.apache.hadoop.fs.Path(dataPath(dir, f))).getLen)
       .sum
     val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    def land(df: DataFrame, msg: String) = landCow(spark, head, hot, None, Seq(df),
+    def land(df: DataFrame, msg: String) = landCow(st, hot, None, Seq(df),
       Map("compaction" -> s"$column-scoped: ${hot.length} files$msg"), noRowChange = true)
     // partitioned tables: same treatment as compact() — no pre-repartition
     // (the routed write's rebalance bins within partitions at targetBytes),
     // and n is not honored (the rebalance/advisory sizing decides the file
     // count), so the message records what actually happened
-    if (partitionSpecs(spark, dir).nonEmpty)
-      withAdvisorySize(spark, targetBytes)(land(head.rows(hot), ", partition-binned"))
-    else land(head.rows(hot).repartition(n), s" -> $n")
+    if (st.partitionSpecs.nonEmpty)
+      withAdvisorySize(spark, targetBytes)(land(st.rows(hot), ", partition-binned"))
+    else land(st.rows(hot).repartition(n), s" -> $n")
   }
 
   /** [[expire]] by age: drop every version whose commit time is older than
@@ -1503,11 +1574,11 @@ object Snapshots {
     * Returns the number of data files deleted (0 when nothing qualifies).
     */
   def expireOlderThan(spark: SparkSession, dir: String, tsMillis: Long): Int = {
-    val all = versions(spark, dir)
+    val st = new TableState(spark, dir)
+    val all = st.versions
     if (all.isEmpty) return 0
-    val keepFrom = all.find(v =>
-      v == all.last || commitTime(spark, dir, v) >= tsMillis).get
-    if (keepFrom == all.head) 0 else expire(spark, dir, keepFrom)
+    val keepFrom = all.find(v => v == all.last || st.commitTime(v) >= tsMillis).get
+    if (keepFrom == all.head) 0 else expireTo(st, keepFrom)
   }
 
   /** Default reader-pin heartbeat TTL: a pin whose file has not been
@@ -1588,7 +1659,8 @@ object Snapshots {
     */
   def vacuumOrphans(spark: SparkSession, dir: String,
       graceMillis: Long = 24L * 3600 * 1000): Int = {
-    val (fs, _) = hfs(spark, dir)
+    val st = new TableState(spark, dir)
+    val fs = st.fs
     val dataRoot = new org.apache.hadoop.fs.Path(s"$dir/data")
     if (!fs.exists(dataRoot)) return 0
     // staged-commit data is live-but-unpublished: referenced by a
@@ -1597,9 +1669,9 @@ object Snapshots {
     // and the manifest read — skip ONLY that case; any other read failure
     // aborts the sweep (treating it as "unreferenced" would delete live
     // staged data)
-    val referenced = (versions(spark, dir).flatMap(v => files(spark, dir, v)) ++
-      stagedTokens(spark, dir).flatMap { t =>
-        try stagedEntry(spark, dir, t)._3
+    val referenced = (st.versions.flatMap(st.manifest(_).entries) ++
+      st.stagedTokens.flatMap { t =>
+        try st.staged(t).entries
         catch { case e: Exception =>
           if (fs.exists(stagedManifest(dir, t))) throw e
           Seq.empty
@@ -1608,8 +1680,8 @@ object Snapshots {
       // branch heads are live-but-unlanded, same posture as staged commits:
       // a branch deleted between the listing and the read is simply gone;
       // any other failure aborts the sweep rather than orphaning live data
-      branches(spark, dir).keys.flatMap { b =>
-        try branchHeadFiles(spark, dir, b)._2
+      st.branches.keys.flatMap { b =>
+        try branchHead(st, b)._2
         catch { case e: Exception =>
           if (branches(spark, dir).contains(b)) throw e
           Seq.empty[String]
@@ -1627,13 +1699,12 @@ object Snapshots {
     }
     // change-feed and deletion-vector debris: `_changes/` / `_dv/` dirs of
     // crashed or losing writers that no live manifest references
-    for ((sub, liveOf) <- Seq(
-        "_changes" -> ((v: Int) => cdcRel(spark, dir, v)),
-        "_dv" -> ((v: Int) => dvRel(spark, dir, v)))) {
+    for ((sub, liveOf) <- Seq[(String, Manifest => Option[String])](
+        "_changes" -> (_.cdc), "_dv" -> (_.dv))) {
       val root = new org.apache.hadoop.fs.Path(s"$dir/$sub")
       if (fs.exists(root)) {
-        val live = versions(spark, dir)
-          .flatMap(liveOf).map(_.stripPrefix(s"$sub/")).toSet
+        val live = st.versions
+          .flatMap(v => liveOf(st.manifest(v))).map(_.stripPrefix(s"$sub/")).toSet
         fs.listStatus(root).foreach { st =>
           if (st.isDirectory && st.getModificationTime < cutoff &&
               !live.contains(st.getPath.getName)) {
@@ -1644,23 +1715,17 @@ object Snapshots {
       }
     }
     // sidecar debris: a same-slot loser (or crashed writer) leaves behind a
-    // unique-named v{N}-{token}.{stats,meta} no manifest references
-    val md = new org.apache.hadoop.fs.Path(manifestDir(dir))
-    if (fs.exists(md)) {
-      val liveSidecars = versions(spark, dir).flatMap(v =>
-        Seq("stats", "meta", "schema")
-          .flatMap(sidecarName(spark, dir, v, _))).toSet
-      fs.listStatus(md).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isFile && st.getModificationTime < cutoff &&
-            (n.endsWith(".stats") || n.endsWith(".meta") ||
-              n.endsWith(".schema")) &&
-            !liveSidecars.contains(n)) orphans += st.getPath
-        // crashed writers' per-writer-unique publish temps (`.{name}.{uuid}
-        // .tmp`) are never self-overwritten — age them out here
-        if (st.isFile && st.getModificationTime < cutoff &&
-            n.startsWith(".") && n.endsWith(".tmp")) orphans += st.getPath
-      }
+    // v{N}-{token}.{stats,meta,schema} no manifest references
+    val liveSidecars = st.versions.flatMap(st.manifest(_).sidecars).toSet
+    st.listing.foreach { case (n, s) =>
+      if (s.isFile && s.getModificationTime < cutoff &&
+          (n.endsWith(".stats") || n.endsWith(".meta") ||
+            n.endsWith(".schema")) &&
+          !liveSidecars.contains(n)) orphans += s.getPath
+      // crashed writers' per-writer-unique publish temps (`.{name}.{uuid}
+      // .tmp`) are never self-overwritten — age them out here
+      if (s.isFile && s.getModificationTime < cutoff &&
+          n.startsWith(".") && n.endsWith(".tmp")) orphans += s.getPath
     }
     orphans.foreach(fs.delete(_, false))
     orphans.length
@@ -1686,19 +1751,8 @@ object Snapshots {
     * simply prune nothing. Driver-side manifest read, no data IO.
     */
   def stats(spark: SparkSession, dir: String,
-      version: Int): Map[String, Map[String, ColStat]] = {
-    val (fs, _) = hfs(spark, dir)
-    val sf = sidecarName(spark, dir, version, "stats")
-      .map(n => new org.apache.hadoop.fs.Path(manifestDir(dir), n))
-    if (sf.isEmpty || !fs.exists(sf.get)) Map.empty
-    else {
-      val in = fs.open(sf.get)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      decodeStats(text)
-    }
-  }
+      version: Int): Map[String, Map[String, ColStat]] =
+    new TableState(spark, dir).manifest(version).stats
 
   private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
@@ -1889,12 +1943,15 @@ object Snapshots {
     * laid out for, where every dimension's per-file [min, max] is tight.
     */
   def pruneFilesAll(spark: SparkSession, dir: String, version: Int,
+      ranges: Seq[(String, Option[Any], Option[Any])]): (Seq[String], Seq[String]) =
+    pruneAt(new TableState(spark, dir), version, ranges)
+
+  private def pruneAt(st: TableState, version: Int,
       ranges: Seq[(String, Option[Any], Option[Any])]): (Seq[String], Seq[String]) = {
-    val all = files(spark, dir, version)
-    val idx = stats(spark, dir, version)
+    val all = st.manifest(version).entries
+    val idx = st.manifest(version).stats
     // callers pass LOGICAL names; stats are keyed by the physical ones
-    val physRanges = ranges.map { case (c, lo, hi) =>
-      (toPhysical(spark, dir, c), lo, hi) }
+    val physRanges = ranges.map { case (c, lo, hi) => (st.toPhysical(c), lo, hi) }
     val kept = all.filter { f =>
       physRanges.forall { case (column, lower, upper) =>
         idx.get(f).flatMap(_.get(column)) match {
@@ -1921,12 +1978,12 @@ object Snapshots {
     // to min/max stats: an equality probe on the bucket source column
     // hashes the probe value and drops every file routed to a different
     // bucket — zero footer reads, the Iceberg bucket-pruning move.
-    val bucketSpecs = partitionSpecs(spark, dir).zipWithIndex.collect {
+    val bucketSpecs = st.partitionSpecs.zipWithIndex.collect {
       case (b: BucketPart, i) => (b, i)
     }
+    lazy val schema = st.schemaAt(version)
     val keptP = bucketSpecs.foldLeft(kept) { case (ks, (BucketPart(n, c), i)) =>
-      val dt = read(spark, dir, Some(version)).schema.fields
-        .find(_.name == c).map(_.dataType)
+      val dt = schema.fields.find(_.name == c).map(_.dataType)
       val eqBuckets = ranges.collect {
         case (`c`, Some(lo), Some(hi)) if lo == hi && dt.nonEmpty =>
           bucketOf(lo, dt.get, n).map(_.toString)
@@ -2014,10 +2071,11 @@ object Snapshots {
       ranges: Seq[(String, Option[Any], Option[Any])],
       version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = version.getOrElse(headVersion(spark, dir))
-    val (kept, all) = pruneFilesAll(spark, dir, v, ranges)
-    val base = if (kept.nonEmpty) maskedParquet(spark, dir, v, kept.map(f => dataPath(dir, f)))
-      else read(spark, dir, Some(v)).filter(lit(false))
+    val st = new TableState(spark, dir)
+    val v = version.getOrElse(st.version)
+    val (kept, _) = pruneAt(st, v, ranges)
+    val base = if (kept.nonEmpty) maskedScan(st, v, kept.map(f => dataPath(dir, f)))
+      else readAt(st, Some(v)).filter(lit(false))
     val pred = ranges.flatMap { case (column, lower, upper) =>
       lower.map(col(column) >= lit(_)) ++ upper.map(col(column) <= lit(_))
     }.reduceOption(_ && _)
@@ -2080,20 +2138,21 @@ object Snapshots {
     require(cols.size * RankBits <= 63,
       s"$dir: a ${curve.name} key over ${cols.size} columns x $RankBits bits " +
         s"exceeds a signed long — cluster on at most ${63 / RankBits} columns")
-    val cur = headVersion(spark, dir)
-    val curFiles = files(spark, dir, cur)
+    val st = new TableState(spark, dir)
+    val cur = st.version
+    val curFiles = st.files
     val clustered: Set[String] =
-      properties(spark, dir).get("zorder.clustered_through") match {
-        case Some(v) if incremental && versions(spark, dir).contains(v.toInt) =>
+      st.props.get("zorder.clustered_through") match {
+        case Some(v) if incremental && st.versions.contains(v.toInt) =>
           // files clustered then AND still alive now (a delete/merge may
           // have rewritten some — those rewritten ones count as tail)
-          files(spark, dir, v.toInt).toSet.intersect(curFiles.toSet)
+          st.manifest(v.toInt).entries.toSet.intersect(curFiles.toSet)
         case _ => Set.empty
       }
     val tail = curFiles.filterNot(clustered)
     if (tail.isEmpty) return cur
     val next = cur + 1
-    val tailDf = maskedParquet(spark, dir, cur, tail.map(f => dataPath(dir, f)))
+    val tailDf = st.rows(tail)
     val ranks = bucketRanks(tailDf, cols)
     val key = curve match {
       case Curve.ZOrder => // bit i of rank j lands at key bit i·N + j
@@ -2104,13 +2163,13 @@ object Snapshots {
       case Curve.Hilbert =>
         graft.functions.HilbertNFunctions.hilbertN(RankBits, ranks: _*)
     }
-    val fresh = writeData(spark, dir, next,
+    val fresh = writeData(st, next,
       tailDf.withColumn("__z", key)
         .repartitionByRange(targetFiles, col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z"))
-    val dvCarry = carryDvFor(spark, dir, cur, next, clustered.toSeq)
-    publish(spark, dir, next, clustered.toSeq.sorted, fresh,
+    val dvCarry = carryDvFor(st, cur, next, clustered.toSeq)
+    publish(st, next, clustered.toSeq.sorted, fresh,
       meta = Map(curve.name -> cols.mkString(",")),
       dv = dvCarry, noRowChange = true)
     setProperties(spark, dir, Map("zorder.clustered_through" -> next.toString,
@@ -2166,9 +2225,10 @@ object Snapshots {
     * through the masked read). None when the prior version had no DV or no
     * carried file keeps a mask.
     */
-  private def carryDvFor(spark: SparkSession, dir: String, prevVersion: Int,
+  private def carryDvFor(st: TableState, prevVersion: Int,
       next: Int, carriedFiles: Seq[String]): Option[String] =
-    dvRel(spark, dir, prevVersion).flatMap { rel =>
+    st.manifest(prevVersion).dv.flatMap { rel =>
+      val spark = st.spark
       import org.apache.spark.sql.functions.broadcast
       val names = carriedFiles.map(f =>
         new org.apache.hadoop.fs.Path(f).getName).distinct
@@ -2178,38 +2238,23 @@ object Snapshots {
         // can be 100k files and a 100k-literal predicate won't plan
         import spark.implicits._
         val nameDf = names.toDF("file_name")
-        withPersisted(spark.read.parquet(s"$dir/$rel")
+        withPersisted(spark.read.parquet(s"${st.dir}/$rel")
             .join(broadcast(nameDf), Seq("file_name"), "left_semi")) { kept =>
-          if (kept.isEmpty) None else Some(writeDv(spark, dir, next, kept))
+          if (kept.isEmpty) None else Some(writeDv(st, next, kept))
         }
       }
     }
 
   // -------------------------------------------------- row-level DML
-  // Every row-level verb is a spec over one engine: the [[Head]] it plans
-  // against, [[locate]] (one masked scan of the stats candidates returning
+  // Every row-level verb is a spec over one engine: the [[TableState]] it
+  // plans against (its head version, files and deletion vector),
+  // [[locate]] (one masked scan of the stats candidates returning
   // matching rows with their identity), and one of two landings —
   // [[landCow]] rewrites the touched files, [[landMor]] masks positions
   // through the deletion vector. Each verb fixes its write layout
   // (rebalanced or not), its no-op rule and its Spark jobs at its own call
   // site: the layout is part of the float-summing oracles' contract, and
   // the streaming CDC apply relies on a missed delete publishing nothing.
-
-  /** The table state one DML call plans against: the head version, its
-    * files and deletion vector, and (lazily) its logical schema. Loaded
-    * once per call and never cached across calls, so every
-    * [[withCommitRetry]] attempt plans against the version it races for.
-    */
-  private final class Head(spark: SparkSession, val dir: String) {
-    val version: Int = headVersion(spark, dir)
-    val files: Seq[String] = Snapshots.files(spark, dir, version)
-    val dv: Option[String] = dvRel(spark, dir, version)
-    lazy val schema: org.apache.spark.sql.types.StructType =
-      read(spark, dir, Some(version)).schema
-    /** The live rows of `fs` (entries of [[files]]), masks applied. */
-    def rows(fs: Seq[String]): DataFrame =
-      maskedParquet(spark, dir, version, fs.map(dataPath(dir, _)))
-  }
 
   /** `body` over `df` persisted (memory and disk), unpersisted after: one
     * materialization serves every consumer inside. */
@@ -2232,57 +2277,56 @@ object Snapshots {
     * keeps, each carrying its identity (`__path`, `__fname`, `__pos`). A
     * row a prior merge-on-read delete masked can neither match nor pin.
     */
-  private def locate(spark: SparkSession, head: Head, candidates: Seq[String])(
+  private def locate(st: TableState, candidates: Seq[String])(
       select: DataFrame => DataFrame): DataFrame =
-    select(openWithPos(spark, head.dir, head.version,
-      candidates.map(dataPath(head.dir, _)), head.dv))
+    select(openWithPos(st, st.version, candidates.map(dataPath(st.dir, _)), st.dv))
 
   /** The copy-on-write touched set: the files holding a row [[locate]]
     * finds (a metadata-sized collect), in manifest-entry form, sorted.
     * No scan when nothing is a candidate.
     */
-  private def touchedBy(spark: SparkSession, head: Head, candidates: Seq[String])(
+  private def touchedBy(st: TableState, candidates: Seq[String])(
       select: DataFrame => DataFrame): Seq[String] =
     if (candidates.isEmpty) Seq.empty
-    else locate(spark, head, candidates)(select)
+    else locate(st, candidates)(select)
       .select("__path").distinct().collect()
-      .map(r => relPathIn(head.dir, head.files.toSet, r.getString(0))).toSeq.sorted
+      .map(r => relPathIn(st.dir, st.files.toSet, r.getString(0))).toSeq.sorted
 
-  /** Copy-on-write landing of the version after `head`: `feed` becomes its
+  /** Copy-on-write landing of the version after `st`'s head: `feed` becomes its
     * recorded change feed, each frame of `data` lands as fresh files, and
     * every file but `rewritten` carries with its mask (the rewritten files
     * materialized theirs through the masked read).
     */
-  private def landCow(spark: SparkSession, head: Head, rewritten: Seq[String],
+  private def landCow(st: TableState, rewritten: Seq[String],
       feed: Option[DataFrame], data: Seq[DataFrame], meta: Map[String, String],
       noRowChange: Boolean = false): Int = {
-    val next = head.version + 1
-    val cdc = feed.map(writeCdc(spark, head.dir, next, _))
-    val fresh = data.flatMap(writeData(spark, head.dir, next, _))
-    val carried = head.files.filterNot(rewritten.toSet)
-    publish(spark, head.dir, next, carried, fresh, meta, cdc,
-      carryDvFor(spark, head.dir, head.version, next, carried), noRowChange)
+    val next = st.version + 1
+    val cdc = feed.map(writeCdc(st, next, _))
+    val fresh = data.flatMap(writeData(st, next, _))
+    val carried = st.files.filterNot(rewritten.toSet)
+    publish(st, next, carried, fresh, meta, cdc,
+      carryDvFor(st, st.version, next, carried), noRowChange)
     next
   }
 
-  /** Merge-on-read landing of the version after `head`: every data file
+  /** Merge-on-read landing of the version after `st`'s head: every data file
     * carries, the new mask is the prior one ∪ the positions of `masked` (a
     * [[locate]] result; None keeps the prior mask by reference), and
     * `appended` lands as fresh files. No data file is rewritten.
     */
-  private def landMor(spark: SparkSession, head: Head, masked: Option[DataFrame],
+  private def landMor(st: TableState, masked: Option[DataFrame],
       feed: Option[DataFrame], appended: Option[DataFrame],
       meta: Map[String, String], noRowChange: Boolean = false): Int = {
     import org.apache.spark.sql.functions.col
-    val next = head.version + 1
-    val cdc = feed.map(writeCdc(spark, head.dir, next, _))
-    val dv = masked.fold(head.dv) { m =>
+    val next = st.version + 1
+    val cdc = feed.map(writeCdc(st, next, _))
+    val dv = masked.fold(st.dv) { m =>
       val rows = m.select(col("__fname").as("file_name"), col("__pos").as("pos"))
-      Some(writeDv(spark, head.dir, next, head.dv.fold(rows)(rel =>
-        spark.read.parquet(s"${head.dir}/$rel").unionByName(rows))))
+      Some(writeDv(st, next, st.dv.fold(rows)(rel =>
+        st.spark.read.parquet(s"${st.dir}/$rel").unionByName(rows))))
     }
-    val fresh = appended.toSeq.flatMap(writeData(spark, head.dir, next, _))
-    publish(spark, head.dir, next, head.files, fresh, meta, cdc, dv, noRowChange)
+    val fresh = appended.toSeq.flatMap(writeData(st, next, _))
+    publish(st, next, st.files, fresh, meta, cdc, dv, noRowChange)
     next
   }
 
@@ -2292,18 +2336,18 @@ object Snapshots {
     * table schema — columns a pre-evolution file lacks surface as typed
     * NULLs.
     */
-  private def maskDelete(spark: SparkSession, head: Head, candidates: Seq[String],
+  private def maskDelete(st: TableState, candidates: Seq[String],
       meta: Map[String, String])(select: DataFrame => DataFrame): Int = {
     import org.apache.spark.sql.functions.{col, lit}
-    if (candidates.isEmpty) head.version
-    else withPersisted(locate(spark, head, candidates)(select)) { m =>
-      if (m.isEmpty) head.version
+    if (candidates.isEmpty) st.version
+    else withPersisted(locate(st, candidates)(select)) { m =>
+      if (m.isEmpty) st.version
       else {
         val avail = m.columns.toSet
-        val feed = m.select(head.schema.map(f =>
+        val feed = m.select(st.schema.map(f =>
             if (avail(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)): _*)
           .withColumn("_change_type", lit("delete"))
-        landMor(spark, head, Some(m), Some(feed), None, meta)
+        landMor(st, Some(m), Some(feed), None, meta)
       }
     }
   }
@@ -2318,19 +2362,19 @@ object Snapshots {
       key: String, meta: Map[String, String], evolve: Boolean,
       mor: Boolean): Int = {
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit, min, max}
-    val head = new Head(spark, dir)
-    enforceSchema(spark, dir, updates, evolve)
+    val st = new TableState(spark, dir)
+    enforceSchema(st, updates, evolve)
     withPersisted(updates) { up =>
-      enforceConstraints(spark, dir, up)
+      enforceConstraints(st, up)
       val Array(h) = up.agg(count(lit(1)), count(col(key)),
         countDistinct(col(key)), min(col(key)), max(col(key))).collect()
       val (total, nonNull, distinct) = (h.getLong(0), h.getLong(1), h.getLong(2))
-      if (total == 0) head.version
+      if (total == 0) st.version
       else {
         require(nonNull == total, s"$dir: merge key $key has null(s) in updates")
         require(distinct == total, s"$dir: merge updates carry duplicate $key values")
-        val (candidates, _) = pruneFiles(spark, dir, head.version, key,
-          Option(h.get(3)), Option(h.get(4)))
+        val (candidates, _) =
+          pruneAt(st, st.version, Seq((key, Option(h.get(3)), Option(h.get(4)))))
         val keys = up.select(col(key))
         // change feed: the replaced rows `pre` (update_pre), their
         // replacements (update_post), and updates matching nothing (insert),
@@ -2343,7 +2387,7 @@ object Snapshots {
             .withColumn("_change_type", lit("update_post")))
           val ins = matchedKeys.map(mk => up.join(mk, Seq(key), "left_anti"))
             .getOrElse(up).withColumn("_change_type", lit("insert"))
-          val tableCols = head.schema.fieldNames.toSeq
+          val tableCols = st.schema.fieldNames.toSeq
           (pre.map(_.withColumn("_change_type", lit("update_pre"))).toSeq ++
             post.toSeq :+ ins).reduce(_.unionByName(_, allowMissingColumns = true))
             .select((tableCols ++ up.columns.filterNot(tableCols.contains) :+
@@ -2360,21 +2404,21 @@ object Snapshots {
           // their (file, pos) identity — these positions join the DV
           val matched =
             if (candidates.isEmpty) None
-            else Some(locate(spark, head, candidates)(_.join(keys, Seq(key), "left_semi"))
+            else Some(locate(st, candidates)(_.join(keys, Seq(key), "left_semi"))
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           try {
             val pre = matched.filter(!_.isEmpty)
-            landMor(spark, head, pre, Some(feed(pre)), Some(up.hint("rebalance")), meta)
+            landMor(st, pre, Some(feed(pre)), Some(up.hint("rebalance")), meta)
           } finally { matched.foreach(_.unpersist()); () }
         } else {
           // a DV-deleted ghost row must neither pin a file nor feed the
           // pre-image: the pin scan and the rewrite both read masked
-          val touched = touchedBy(spark, head, candidates)(
+          val touched = touchedBy(st, candidates)(
             _.select(col(key), col("__path")).join(keys, Seq(key)))
-          val rows = if (touched.isEmpty) None else Some(head.rows(touched))
+          val rows = if (touched.isEmpty) None else Some(st.rows(touched))
           val survivors = rows.fold(up)(_.join(keys, Seq(key), "left_anti")
             .unionByName(up, allowMissingColumns = true))
-          landCow(spark, head, touched,
+          landCow(st, touched,
             Some(feed(rows.map(_.join(keys, Seq(key), "left_semi")))),
             Seq(survivors.hint("rebalance")), meta)
         }
@@ -2430,9 +2474,9 @@ object Snapshots {
   def deleteRangeMor(spark: SparkSession, dir: String, column: String,
       lower: Option[Any], upper: Option[Any],
       meta: Map[String, String] = Map.empty): Int = {
-    val head = new Head(spark, dir)
-    maskDelete(spark, head,
-      pruneFiles(spark, dir, head.version, column, lower, upper)._1, meta)(
+    val st = new TableState(spark, dir)
+    maskDelete(st,
+      pruneAt(st, st.version, Seq((column, lower, upper)))._1, meta)(
       _.filter(inRange(column, lower, upper)))
   }
 
@@ -2447,7 +2491,7 @@ object Snapshots {
   def commitMarker(spark: SparkSession, dir: String,
       meta: Map[String, String]): Int = {
     require(meta.nonEmpty, s"$dir: a marker commit needs metadata to carry")
-    landMor(spark, new Head(spark, dir), None, None, None, meta, noRowChange = true)
+    landMor(new TableState(spark, dir), None, None, None, meta, noRowChange = true)
   }
 
   /** COUNT(*) answered from METADATA — the stats sidecar's per-file row
@@ -2459,12 +2503,12 @@ object Snapshots {
     */
   def countRows(spark: SparkSession, dir: String,
       version: Option[Int] = None): Long = {
-    val v = version.getOrElse(headVersion(spark, dir))
-    val idx = stats(spark, dir, v)
-    val fs = files(spark, dir, v)
-    val perFile = fs.map(f => idx.get(f).flatMap(_.values.headOption).map(_.rows))
-    if (perFile.exists(_.isEmpty)) return read(spark, dir, Some(v)).count()
-    val masked = dvRel(spark, dir, v)
+    val st = new TableState(spark, dir)
+    val v = version.getOrElse(st.version)
+    val m = st.manifest(v)
+    val perFile = m.entries.map(f => m.stats.get(f).flatMap(_.values.headOption).map(_.rows))
+    if (perFile.exists(_.isEmpty)) return readAt(st, Some(v)).count()
+    val masked = m.dv
       .map(rel => spark.read.parquet(s"$dir/$rel").count()).getOrElse(0L)
     perFile.flatten.sum - masked
   }
@@ -2479,17 +2523,14 @@ object Snapshots {
   def setTag(spark: SparkSession, dir: String, name: String,
       version: Int): Unit = {
     require(name.matches("[A-Za-z0-9_.-]+"), s"$dir: invalid tag name '$name'")
-    require(versions(spark, dir).contains(version),
+    require(new TableState(spark, dir).versions.contains(version),
       s"$dir: cannot tag v$version — it does not exist")
     setProperties(spark, dir, Map(s"ref.tag.$name" -> version.toString))
   }
 
   /** All tags: name → version. */
   def tags(spark: SparkSession, dir: String): Map[String, Int] =
-    properties(spark, dir).collect {
-      case (k, v) if k.startsWith("ref.tag.") =>
-        k.stripPrefix("ref.tag.") -> v.toInt
-    }
+    new TableState(spark, dir).tags
 
   /** Tags as a relation (the `snapshot_tags` TVF's body). */
   def tagsDf(spark: SparkSession, dir: String): DataFrame = {
@@ -2498,9 +2539,11 @@ object Snapshots {
   }
 
   /** Read the snapshot a tag points at. */
-  def readTag(spark: SparkSession, dir: String, name: String): DataFrame =
-    read(spark, dir, Some(tags(spark, dir).getOrElse(name,
+  def readTag(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val st = new TableState(spark, dir)
+    readAt(st, Some(st.tags.getOrElse(name,
       throw new IllegalArgumentException(s"$dir: no tag '$name'"))))
+  }
 
   def deleteTag(spark: SparkSession, dir: String, name: String): Unit =
     removeProperties(spark, dir, Seq(s"ref.tag.$name"))
@@ -2517,60 +2560,42 @@ object Snapshots {
   // the branch lands on main.
 
   private def branchKey(name: String) = s"branch.${enc(name)}"
-  private def branchManifest(dir: String, name: String, k: Int) =
-    new org.apache.hadoop.fs.Path(manifestDir(dir), s"branch-${enc(name)}-v$k.list")
+  private def branchFile(name: String, k: Int) = s"branch-${enc(name)}-v$k.list"
 
   /** All live branches: name → the main version they forked from. */
   def branches(spark: SparkSession, dir: String): Map[String, Int] =
-    properties(spark, dir).collect {
-      case (k, v) if k.startsWith("branch.") =>
-        dec(k.stripPrefix("branch.")) -> v.toInt
-    }
+    new TableState(spark, dir).branches
 
   /** Fork a branch from `at` (default: the current main version). */
   def createBranch(spark: SparkSession, dir: String, name: String,
       at: Option[Int] = None): Int = {
     require(name.nonEmpty && !name.contains("/"),
       s"$dir: invalid branch name '$name'")
-    require(!branches(spark, dir).contains(name),
+    val st = new TableState(spark, dir)
+    require(!st.branches.contains(name),
       s"$dir: branch '$name' already exists")
-    val base = at.getOrElse(headVersion(spark, dir))
-    require(versions(spark, dir).contains(base),
+    val base = at.getOrElse(st.version)
+    require(st.versions.contains(base),
       s"$dir: cannot branch from v$base — it does not exist (expired?)")
     setProperties(spark, dir, Map(branchKey(name) -> base.toString))
     base
   }
 
   /** Committed branch versions (1-based; empty until the first commit). */
-  def branchVersions(spark: SparkSession, dir: String, name: String): Seq[Int] = {
-    val (fs, _) = hfs(spark, dir)
-    Iterator.from(1).takeWhile(k => fs.exists(branchManifest(dir, name, k))).toSeq
-  }
+  def branchVersions(spark: SparkSession, dir: String, name: String): Seq[Int] =
+    new TableState(spark, dir).branchVersions(name)
 
-  private def branchEntry(spark: SparkSession, dir: String, name: String,
-      k: Int): (Map[String, String], Boolean, Seq[String]) = {
-    val (fs, _) = hfs(spark, dir)
-    val in = fs.open(branchManifest(dir, name, k))
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        .filter(_.nonEmpty)
-      finally in.close()
-    val meta = lines.collect { case l if l.startsWith("#m=") =>
-      val Array(kk, v) = l.stripPrefix("#m=").split("\t", -1)
-      dec(kk) -> dec(v)
-    }.toMap
-    (meta, lines.contains("#evolve=1"), lines.filterNot(_.startsWith("#")))
-  }
-
-  /** The branch head's table-relative file list (base files + every branch
-    * commit's additions). */
-  private def branchHeadFiles(spark: SparkSession, dir: String,
-      name: String): (Int, Seq[String]) = {
-    val base = branches(spark, dir).getOrElse(name,
-      throw new IllegalArgumentException(s"$dir: no branch '$name'"))
-    val ks = branchVersions(spark, dir, name)
-    if (ks.isEmpty) (base, files(spark, dir, base))
-    else (base, branchEntry(spark, dir, name, ks.max)._3)
+  /** The branch's base version and its head's table-relative file list
+    * (base files + every branch commit's additions), with the head's
+    * manifest when the branch has commits. */
+  private def branchHead(st: TableState,
+      name: String): (Int, Seq[String], Option[Manifest]) = {
+    val base = st.branches.getOrElse(name,
+      throw new IllegalArgumentException(s"${st.dir}: no branch '$name'"))
+    st.branchVersions(name).lastOption.map(st.branchManifest(name, _)) match {
+      case None => (base, st.manifest(base).entries, None)
+      case Some(m) => (base, m.entries, Some(m))
+    }
   }
 
   /** Append `df` to the branch — invisible to main readers until
@@ -2582,58 +2607,28 @@ object Snapshots {
   def commitToBranch(spark: SparkSession, dir: String, name: String,
       df: DataFrame, evolve: Boolean = false,
       meta: Map[String, String] = Map.empty): Int = {
-    val (fs, _) = hfs(spark, dir)
-    val (base, headFiles) = branchHeadFiles(spark, dir, name)
-    // schema gate vs the BRANCH head, mirroring enforceSchema's rules
-    val headSchema = applyMapping(spark, dir,
+    val st = new TableState(spark, dir)
+    val (base, headFiles, headManifest) = branchHead(st, name)
+    // schema gate vs the BRANCH head (branch manifests record no schema)
+    enforceSchema(st, df, evolve, Some(applyMapping(st,
       spark.read.option("mergeSchema", "true")
-        .parquet(headFiles.map(f => dataPath(dir, f)): _*)).schema
-    val table = headSchema.map(f => f.name -> f.dataType).toMap
-    val incoming = df.schema.map(f => f.name -> f.dataType).toMap
-    val retyped = table.keySet.intersect(incoming.keySet)
-      .filter(c => table(c) != incoming(c))
-    require(retyped.isEmpty,
-      s"$dir: branch '$name' append changes column type(s) " +
-        s"${retyped.toSeq.sorted.mkString(", ")} — types are fixed")
-    val missing = table.keySet -- incoming.keySet
-    require(missing.isEmpty,
-      s"$dir: branch '$name' append drops column(s) " +
-        s"${missing.toSeq.sorted.mkString(", ")}")
-    val added = incoming.keySet -- table.keySet
-    require(added.isEmpty || evolve,
-      s"$dir: branch '$name' append adds column(s) " +
-        s"${added.toSeq.sorted.mkString(", ")} — pass evolve = true")
-    enforceConstraints(spark, dir, df)
-    val next = branchVersions(spark, dir, name).lastOption.getOrElse(0) + 1
-    val fresh = writeData(spark, dir, base + next, df)
-    val wasEvolve = next > 1 && branchEntry(spark, dir, name, next - 1)._2
-    val headers =
-      (if (evolve || wasEvolve) Seq("#evolve=1") else Seq.empty) ++
-        meta.toSeq.sortBy(_._1).map { case (k, v) => s"#m=${enc(k)}\t${enc(v)}" }
-    val body = (headers ++ headFiles ++ fresh).mkString("", "\n", "\n")
-      .getBytes("UTF-8")
-    val tmp = new org.apache.hadoop.fs.Path(manifestDir(dir),
-      s".branch-${enc(name)}-v$next.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body) finally out.close()
-    val fin = branchManifest(dir, name, next)
-    publishLock(manifestDir(dir)).synchronized {
-      if (fs.exists(fin)) {
-        fs.delete(tmp, false)
-        throw new java.util.ConcurrentModificationException(
-          s"$dir: branch '$name' v$next was committed concurrently — retry")
-      }
-      require(fs.rename(tmp, fin), s"$dir: branch manifest publish failed")
-    }
+        .parquet(headFiles.map(f => dataPath(dir, f)): _*)).schema))
+    enforceConstraints(st, df)
+    val next = st.branchVersions(name).lastOption.getOrElse(0) + 1
+    val fresh = writeData(st, base + next, df)
+    val wasEvolve = headManifest.exists(_.evolve)
+    writeAtomic(st, branchFile(name, next),
+      Manifest.encode(if (evolve || wasEvolve) Seq("evolve" -> "1") else Seq.empty,
+        meta, headFiles ++ fresh), contended = true)
     next
   }
 
   /** Read the branch head (base DV still masked; branch files are fresh
     * appends, so the base mask covers everything it should). */
   def readBranch(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val (base, headFiles) = branchHeadFiles(spark, dir, name)
-    maskedParquet(spark, dir, base, headFiles.map(f => dataPath(dir, f)),
-      mergeAll = true)
+    val st = new TableState(spark, dir)
+    val (base, headFiles, _) = branchHead(st, name)
+    maskedScan(st, base, headFiles.map(f => dataPath(dir, f)), mergeAll = true)
   }
 
   /** Land the branch on main as ONE atomic commit (Iceberg's fast-forward):
@@ -2647,53 +2642,48 @@ object Snapshots {
     * the data now belongs to main.
     */
   def fastForward(spark: SparkSession, dir: String, name: String): Int = {
-    val (fs, _) = hfs(spark, dir)
-    val (base, headFiles) = branchHeadFiles(spark, dir, name)
-    val ks = branchVersions(spark, dir, name)
-    val cur = headVersion(spark, dir)
-    if (ks.isEmpty) { deleteBranch(spark, dir, name); return cur }
+    val st = new TableState(spark, dir)
+    val (base, headFiles, headManifest) = branchHead(st, name)
+    val cur = st.version
+    if (headManifest.isEmpty) { dropBranch(st, name); return cur }
     if (cur != base)
       throw new java.util.ConcurrentModificationException(
         s"$dir: cannot fast-forward branch '$name' — main moved v$base -> " +
           s"v$cur since the fork; re-branch and replay")
-    val baseFiles = files(spark, dir, base)
+    val baseFiles = st.manifest(base).entries
     val addedFiles = headFiles.filterNot(baseFiles.toSet)
-    val addedRows = maskedParquet(spark, dir, base,
+    val addedRows = maskedScan(st, base,
       addedFiles.map(f => dataPath(dir, f)), mergeAll = true)
-    enforceConstraints(spark, dir, addedRows)
-    val evolve = branchEntry(spark, dir, name, ks.max)._2
-    if (!evolve) {
-      // a non-evolving branch must still match the CURRENT table schema
-      enforceSchema(spark, dir, addedRows, evolve = false)
-    }
-    val meta = branchEntry(spark, dir, name, ks.max)._1 +
-      ("branch.ff" -> name)
+    enforceConstraints(st, addedRows)
+    // a non-evolving branch must still match the CURRENT table schema
+    if (!headManifest.get.evolve) enforceSchema(st, addedRows, evolve = false)
     val next = base + 1
-    publish(spark, dir, next, baseFiles, addedFiles, meta,
-      dv = dvRel(spark, dir, base))
-    deleteBranch(spark, dir, name, keepData = true)
+    publish(st, next, baseFiles, addedFiles, headManifest.get.meta + ("branch.ff" -> name),
+      dv = st.manifest(base).dv)
+    dropBranch(st, name, keepData = true)
     next
   }
 
   /** Drop a branch: the ref, its manifests, and (unless the data now
     * belongs to main via [[fastForward]]) its data dirs. */
   def deleteBranch(spark: SparkSession, dir: String, name: String,
+      keepData: Boolean = false): Unit =
+    dropBranch(new TableState(spark, dir), name, keepData)
+
+  private def dropBranch(st: TableState, name: String,
       keepData: Boolean = false): Unit = {
-    val (fs, _) = hfs(spark, dir)
-    val ks = branchVersions(spark, dir, name)
+    val ks = st.branchVersions(name)
     if (!keepData && ks.nonEmpty) {
-      val base = branches(spark, dir).getOrElse(name,
-        throw new IllegalArgumentException(s"$dir: no branch '$name'"))
-      val baseFiles = files(spark, dir, base).toSet
-      val mainFiles = versions(spark, dir)
-        .flatMap(v => files(spark, dir, v)).toSet
-      branchEntry(spark, dir, name, ks.max)._3
+      val (base, headFiles, _) = branchHead(st, name)
+      val baseFiles = st.manifest(base).entries.toSet
+      val mainFiles = st.versions.flatMap(st.manifest(_).entries).toSet
+      headFiles
         .filterNot(baseFiles).filterNot(mainFiles).filterNot(isExternal)
-        .map(f => new org.apache.hadoop.fs.Path(dataPath(dir, f)).getParent)
-        .distinct.foreach(p => fs.delete(p, true))
+        .map(f => new org.apache.hadoop.fs.Path(dataPath(st.dir, f)).getParent)
+        .distinct.foreach(p => st.fs.delete(p, true))
     }
-    ks.foreach(k => fs.delete(branchManifest(dir, name, k), false))
-    removeProperties(spark, dir, Seq(branchKey(name)))
+    ks.foreach(k => st.fs.delete(new org.apache.hadoop.fs.Path(st.md, branchFile(name, k)), false))
+    removeProperties(st.spark, st.dir, Seq(branchKey(name)))
   }
 
   /** The `.partitions` metadata table (Iceberg's answer to SHOW
@@ -2708,10 +2698,10 @@ object Snapshots {
   def partitionsDf(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val specs = partitionSpecs(spark, dir)
+    val st = new TableState(spark, dir)
+    val specs = st.partitionSpecs
     require(specs.nonEmpty, s"$dir: table declares no partition spec")
-    val v = headVersion(spark, dir)
-    val idx = stats(spark, dir, v)
+    val idx = st.head.stats
     def rowsOf(f: String): Long =
       idx.get(f).flatMap(_.values.headOption).map(_.rows).getOrElse(-1L)
     val names = specs.map {
@@ -2723,7 +2713,7 @@ object Snapshots {
       case BucketPart(_, c) => s"${c}_bucket"
       case TruncatePart(_, c) => s"${c}_trunc"
     }
-    val grouped = files(spark, dir, v)
+    val grouped = st.files
       .groupBy(f => specs.indices.map(i =>
         partValueRawAt(f, i).filter(_ != HiveDefaultPart)))
       .toSeq
@@ -2744,8 +2734,9 @@ object Snapshots {
   /** Branches as a relation (the `snapshot_branches` TVF's body). */
   def branchesDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    branches(spark, dir).toSeq.sortBy(_._1).map { case (n, base) =>
-      (n, base, branchVersions(spark, dir, n).size)
+    val st = new TableState(spark, dir)
+    st.branches.toSeq.sortBy(_._1).map { case (n, base) =>
+      (n, base, st.branchVersions(n).size)
     }.toDF("branch", "base_version", "n_commits")
   }
 
@@ -2760,10 +2751,7 @@ object Snapshots {
 
   /** All CHECK constraints: name → SQL predicate. */
   def checkConstraints(spark: SparkSession, dir: String): Map[String, String] =
-    properties(spark, dir).collect {
-      case (k, v) if k.startsWith("constraint.check.") =>
-        k.stripPrefix("constraint.check.") -> v
-    }
+    new TableState(spark, dir).constraints
 
   /** ADD CONSTRAINT name CHECK (sqlExpr). Existing rows are validated
     * first (one scan), like Delta — a constraint can never be born
@@ -2772,11 +2760,12 @@ object Snapshots {
       sqlExpr: String): Unit = {
     import org.apache.spark.sql.functions.{expr, lit}
     require(name.matches("[A-Za-z0-9_]+"), s"$dir: invalid constraint name '$name'")
-    require(!checkConstraints(spark, dir).contains(name),
+    val st = new TableState(spark, dir)
+    require(!st.constraints.contains(name),
       s"$dir: constraint '$name' already exists")
     spark.sessionState.sqlParser.parseExpression(sqlExpr) // parse gate
-    if (currentVersion(spark, dir).nonEmpty) {
-      val bad = read(spark, dir).where(expr(sqlExpr) <=> lit(false))
+    if (st.current.nonEmpty) {
+      val bad = readAt(st, None).where(expr(sqlExpr) <=> lit(false))
         .limit(1).collect()
       require(bad.isEmpty,
         s"$dir: cannot add CHECK '$name' ($sqlExpr) — existing row violates " +
@@ -2793,15 +2782,15 @@ object Snapshots {
     * renaming or dropping a referenced column would make every later
     * commit fail on an unresolvable constraint. Refuse the metadata op
     * instead (Delta's rule); the user drops the constraint first. */
-  private def requireUnconstrained(spark: SparkSession, dir: String,
+  private def requireUnconstrained(st: TableState,
       colName: String, op: String): Unit = {
     val pat = ("(?<![A-Za-z0-9_])" +
       java.util.regex.Pattern.quote(colName) + "(?![A-Za-z0-9_])").r
-    val used = checkConstraints(spark, dir).filter {
+    val used = st.constraints.filter {
       case (_, ex) => pat.findFirstIn(ex).isDefined
     }
     require(used.isEmpty,
-      s"$dir: cannot $op column '$colName' — referenced by CHECK " +
+      s"${st.dir}: cannot $op column '$colName' — referenced by CHECK " +
         s"constraint(s) ${used.keys.toSeq.sorted.mkString(", ")}; drop them first")
   }
 
@@ -2819,10 +2808,9 @@ object Snapshots {
     * evaluates one materialization of `df` — callers passing
     * non-deterministic frames should materialize them first (the same
     * caveat every write path of the format carries). */
-  private def enforceConstraints(spark: SparkSession, dir: String,
-      df: DataFrame): Unit = {
+  private def enforceConstraints(st: TableState, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions.{col, expr, lit, struct}
-    val cons = checkConstraints(spark, dir).toSeq.sortBy(_._1)
+    val cons = st.constraints.toSeq.sortBy(_._1)
     if (cons.isEmpty) return
     val flags = cons.zipWithIndex.map { case ((_, ex), i) =>
       (expr(ex) <=> lit(false)).as(s"viol_$i")
@@ -2837,7 +2825,7 @@ object Snapshots {
         case ((name, ex), i) if r.getBoolean(1 + i) => s"'$name' ($ex)"
       }
       throw new IllegalArgumentException(
-        s"$dir: CHECK constraint(s) ${broken.mkString(", ")} violated by " +
+        s"${st.dir}: CHECK constraint(s) ${broken.mkString(", ")} violated by " +
           s"row ${r.get(0)} — commit refused")
     }
   }
@@ -2861,65 +2849,35 @@ object Snapshots {
   def stageCommit(spark: SparkSession, dir: String, df: DataFrame,
       meta: Map[String, String] = Map.empty,
       evolve: Boolean = false): String = {
-    val (fs, _) = hfs(spark, dir)
-    if (currentVersion(spark, dir).nonEmpty) enforceSchema(spark, dir, df, evolve)
-    enforceConstraints(spark, dir, df)
+    val st = new TableState(spark, dir)
+    if (st.current.nonEmpty) enforceSchema(st, df, evolve)
+    enforceConstraints(st, df)
     val token = java.util.UUID.randomUUID.toString.take(12)
-    val fresh = writeData(spark, dir, currentVersion(spark, dir).getOrElse(0) + 1, df)
-    val headers = (if (evolve) Seq("#evolve=1") else Seq.empty) ++
-      meta.toSeq.sortBy(_._1).map { case (k, v) => s"#m=${enc(k)}\t${enc(v)}" }
-    val body = (headers ++ fresh).mkString("", "\n", "\n").getBytes("UTF-8")
-    val tmp = new org.apache.hadoop.fs.Path(manifestDir(dir), s".staged-$token.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body) finally out.close()
-    require(fs.rename(tmp, stagedManifest(dir, token)),
-      s"$dir: staged manifest publish failed")
+    val fresh = writeData(st, st.current.getOrElse(0) + 1, df)
+    writeAtomic(st, s"staged-$token.list", Manifest.encode(
+      if (evolve) Seq("evolve" -> "1") else Seq.empty, meta, fresh), contended = false)
     token
   }
 
   /** Tokens of all live staged commits. */
-  def stagedTokens(spark: SparkSession, dir: String): Seq[String] = {
-    val (fs, _) = hfs(spark, dir)
-    val md = new org.apache.hadoop.fs.Path(manifestDir(dir))
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("staged-") && n.endsWith(".list") =>
-        n.stripPrefix("staged-").stripSuffix(".list") }.sorted
-  }
-
-  /** (meta, evolve, table-relative data files) of one staged commit. */
-  private def stagedEntry(spark: SparkSession, dir: String,
-      token: String): (Map[String, String], Boolean, Seq[String]) = {
-    val (fs, _) = hfs(spark, dir)
-    val mf = stagedManifest(dir, token)
-    require(fs.exists(mf), s"$dir: no staged commit '$token'")
-    val in = fs.open(mf)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        .filter(_.nonEmpty)
-      finally in.close()
-    val meta = lines.collect { case l if l.startsWith("#m=") =>
-      val Array(k, v) = l.stripPrefix("#m=").split("\t", -1)
-      dec(k) -> dec(v)
-    }.toMap
-    (meta, lines.contains("#evolve=1"), lines.filterNot(_.startsWith("#")))
-  }
+  def stagedTokens(spark: SparkSession, dir: String): Seq[String] =
+    new TableState(spark, dir).stagedTokens
 
   /** Staged commits as a relation (the `snapshot_staged` TVF's body):
     * token, file count, and the staged metadata — what a WAP operator
     * lists before auditing or sweeping candidates. */
   def stagedDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (hfs0, _) = hfs(spark, dir)
-    stagedTokens(spark, dir).flatMap { t =>
+    val st = new TableState(spark, dir)
+    st.stagedTokens.flatMap { t =>
       // a concurrent publish/discard may have removed the token — skip
       // only that; a still-present-but-unreadable manifest must surface
       try {
-        val (meta, _, fls) = stagedEntry(spark, dir, t)
-        Seq((t, fls.length, meta.toSeq.sorted
+        val m = st.staged(t)
+        Seq((t, m.entries.length, m.meta.toSeq.sorted
           .map { case (k, v) => s"$k=$v" }.mkString(";")))
       } catch { case e: Exception =>
-        if (hfs0.exists(stagedManifest(dir, t))) throw e
+        if (st.fs.exists(stagedManifest(dir, t))) throw e
         Seq.empty
       }
     }.toDF("token", "n_files", "meta")
@@ -2929,28 +2887,28 @@ object Snapshots {
     * current version — current files plus the staged files, current
     * deletion vectors still masked. What the WAP audit queries run on. */
   def readStaged(spark: SparkSession, dir: String, token: String): DataFrame = {
-    val (_, _, staged) = stagedEntry(spark, dir, token)
-    currentVersion(spark, dir) match {
+    val st = new TableState(spark, dir)
+    val staged = st.staged(token).entries
+    st.current match {
       // mergeAll: the staged files are OUTSIDE cur's schema sidecar — an
       // evolve-staged column must surface in the audit view
-      case Some(cur) => maskedParquet(spark, dir, cur,
-        (files(spark, dir, cur) ++ staged).map(f => dataPath(dir, f)), mergeAll = true)
-      case None => applyMapping(spark, dir,
+      case Some(cur) => maskedScan(st, cur,
+        (st.manifest(cur).entries ++ staged).map(f => dataPath(dir, f)), mergeAll = true)
+      case None => applyMapping(st,
         spark.read.option("mergeSchema", "true")
           .parquet(staged.map(f => dataPath(dir, f)): _*))
     }
   }
 
-  /** Version that already published staged commit `token`, if any — the
-    * `wap.token` commit-meta entry rides every staged publish atomically,
-    * so a crash between the publish and the staged-manifest delete is
-    * detectable (the newest-first scan stops at the first hit). */
-  private def publishedStagedVersion(spark: SparkSession, dir: String,
-      token: String): Option[Int] =
-    versions(spark, dir).reverseIterator.find { v =>
+  /** Version of `st` that already published staged commit `token`, if any
+    * — the `wap.token` commit-meta entry rides every staged publish
+    * atomically, so a crash between the publish and the staged-manifest
+    * delete is detectable (the newest-first scan stops at the first hit). */
+  private def publishedStagedVersion(st: TableState, token: String): Option[Int] =
+    st.versions.reverseIterator.find { v =>
       // a version expiring between the listing and the meta read is not
       // the carrier we are looking for — skip it, don't abort the publish
-      scala.util.Try(commitMeta(spark, dir, v)).toOption
+      scala.util.Try(st.manifest(v).meta).toOption
         .exists(_.get("wap.token").contains(token))
     }
 
@@ -2960,48 +2918,47 @@ object Snapshots {
     * CURRENT table first, so a conflicting evolution that landed since the
     * stage refuses loudly instead of publishing a mixed table. */
   def publishStaged(spark: SparkSession, dir: String, token: String): Int = {
-    val (fs, _) = hfs(spark, dir)
-    val (meta, evolve, staged) = stagedEntry(spark, dir, token)
+    val stagedManifest0 = new TableState(spark, dir).staged(token)
+    val staged = stagedManifest0.entries
     // one planned relation for both gates and every retry: the footer read
     // happens once, not per attempt
     val stagedRaw = spark.read.option("mergeSchema", "true")
       .parquet(staged.map(f => dataPath(dir, f)): _*)
     withCommitRetry(MetadataRetries) {
+      val st = new TableState(spark, dir)
       // IDEMPOTENCE: a crash (or a racing same-token caller) between the
       // publish and the staged-manifest delete leaves a live token whose
       // files are already in the table — re-listing them would duplicate
       // every staged row. The `wap.token` commit marker makes the replay
       // detectable: finish the cleanup and return the published version.
-      val landed = publishedStagedVersion(spark, dir, token).getOrElse {
-        val cur = currentVersion(spark, dir).getOrElse(0)
+      val landed = publishedStagedVersion(st, token).getOrElse {
+        val cur = st.current.getOrElse(0)
         // constraints re-check INSIDE the loop: stage validated against the
         // constraints of ITS time; one ADDED since (even mid-retry) must not
         // slip violating rows in. applyMapping: staged files carry PHYSICAL
         // names (writeData's rule) — both gates compare LOGICAL schemas.
-        enforceConstraints(spark, dir, applyMapping(spark, dir, stagedRaw))
+        enforceConstraints(st, applyMapping(st, stagedRaw))
         if (cur > 0)
-          enforceSchema(spark, dir, applyMapping(spark, dir, stagedRaw), evolve)
+          enforceSchema(st, applyMapping(st, stagedRaw), stagedManifest0.evolve)
         val next = cur + 1
-        val carried = if (next == 1) Seq.empty else files(spark, dir, cur)
-        val dvCarry = if (next == 1) None else dvRel(spark, dir, cur)
         // SAME-TOKEN race: two callers can both pass the replay check above
         // while neither has published yet; without atomicity the slower one
         // would re-list the staged files on top of the winner's version.
         // Serialize the recheck+publish through the per-table publish lock
         // (the same same-JVM guarantee the manifest CAS itself relies on;
-        // the rename inside publish() re-acquires it reentrantly).
-        val lockKey = new org.apache.hadoop.fs.Path(manifestDir(dir)).toString
-        publishLock(lockKey).synchronized {
-          if (publishedStagedVersion(spark, dir, token).isEmpty) {
+        // the rename inside publish() re-acquires it reentrantly). The
+        // recheck reads the table as it is now, not `st`.
+        publishLock(st.md.toString).synchronized {
+          if (publishedStagedVersion(new TableState(spark, dir), token).isEmpty) {
             // a foreign commit since `cur` surfaces as the usual CME below
-            publish(spark, dir, next, carried, staged,
-              meta + ("wap.token" -> token), dv = dvCarry)
+            publishOnto(st, next, staged, replace = false,
+              stagedManifest0.meta + ("wap.token" -> token))
           }
         }
-        publishedStagedVersion(spark, dir, token)
+        publishedStagedVersion(new TableState(spark, dir), token)
           .getOrElse(next) // ours just published at `next`
       }
-      fs.delete(stagedManifest(dir, token), false)
+      st.fs.delete(stagedManifest(dir, token), false)
       landed
     }
   }
@@ -3012,26 +2969,28 @@ object Snapshots {
     * manifest delete leaves exactly this state), only the stale manifest
     * is removed — the data now belongs to the table and deleting it would
     * destroy committed versions. */
-  def discardStaged(spark: SparkSession, dir: String, token: String): Unit = {
-    val (fs, _) = hfs(spark, dir)
-    val (_, _, staged) = stagedEntry(spark, dir, token)
+  def discardStaged(spark: SparkSession, dir: String, token: String): Unit =
+    discard(new TableState(spark, dir), token)
+
+  private def discard(st: TableState, token: String): Unit = {
+    val staged = st.staged(token).entries
     // the published-check + data delete must be one atomic unit against a
     // same-token publishStaged racer: without the lock, publish can land
     // between the check and the delete and this would remove data files a
-    // committed version now references
-    publishLock(manifestDir(dir)).synchronized {
-      val published = publishedStagedVersion(spark, dir, token).nonEmpty ||
-        versions(spark, dir).exists(v =>
-          files(spark, dir, v).exists(staged.toSet))
+    // committed version now references — so the check reads the table as
+    // it is under the lock, not `st`
+    publishLock(st.md.toString).synchronized {
+      val now = new TableState(st.spark, st.dir)
+      val published = publishedStagedVersion(now, token).nonEmpty ||
+        now.versions.exists(v => now.manifest(v).entries.exists(staged.toSet))
       if (!published)
         // each stage writes into its own per-writer-unique data dir, so the
         // parents hold nothing but this stage's files — drop them whole
         staged.filterNot(isExternal)
-          .map(f => new org.apache.hadoop.fs.Path(dataPath(dir, f)).getParent)
-          .distinct.foreach(p => fs.delete(p, true))
-      fs.delete(stagedManifest(dir, token), false)
+          .map(f => new org.apache.hadoop.fs.Path(dataPath(st.dir, f)).getParent)
+          .distinct.foreach(p => st.fs.delete(p, true))
+      st.fs.delete(stagedManifest(st.dir, token), false)
     }
-    ()
   }
 
   /** Sweep ABANDONED staged commits: every stage whose manifest mtime is
@@ -3047,15 +3006,10 @@ object Snapshots {
     */
   def expireStagedOlderThan(spark: SparkSession, dir: String,
       tsMillis: Long): Seq[String] = {
-    val (fs, _) = hfs(spark, dir)
-    val stale = stagedTokens(spark, dir).filter { t =>
-      val mf = stagedManifest(dir, t)
-      // a token published/discarded between the listing and the stat is
-      // simply no longer ours to sweep
-      try fs.getFileStatus(mf).getModificationTime < tsMillis
-      catch { case _: java.io.FileNotFoundException => false }
-    }
-    stale.foreach(discardStaged(spark, dir, _))
+    val st = new TableState(spark, dir)
+    val stale = st.stagedTokens.filter(t =>
+      st.listing(s"staged-$t.list").getModificationTime < tsMillis)
+    stale.foreach(discard(st, _))
     stale
   }
 
@@ -3069,14 +3023,15 @@ object Snapshots {
     * Requires `toVersion` to still exist (not expired).
     */
   def restore(spark: SparkSession, dir: String, toVersion: Int): Int = {
-    val cur = headVersion(spark, dir)
-    require(versions(spark, dir).contains(toVersion),
+    val st = new TableState(spark, dir)
+    val cur = st.version
+    require(st.versions.contains(toVersion),
       s"$dir: cannot restore to v$toVersion — it does not exist (expired?)")
     if (toVersion == cur) return cur
     val next = cur + 1
-    publish(spark, dir, next, files(spark, dir, toVersion), Seq.empty,
+    publish(st, next, st.manifest(toVersion).entries, Seq.empty,
       meta = Map("restore" -> s"v$toVersion"),
-      dv = dvRel(spark, dir, toVersion), statsFrom = Some(toVersion))
+      dv = st.manifest(toVersion).dv, statsFrom = Some(toVersion))
     next
   }
 
@@ -3098,8 +3053,9 @@ object Snapshots {
   def diffVersions(spark: SparkSession, dir: String, fromVersion: Int,
       toVersion: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val a0 = read(spark, dir, Some(fromVersion))
-    val b = read(spark, dir, Some(toVersion))
+    val st = new TableState(spark, dir)
+    val a0 = readAt(st, Some(fromVersion))
+    val b = readAt(st, Some(toVersion))
     // alignment is in the TO version's frame: columns the from-version
     // lacks surface as typed NULLs, and SHARED columns CAST to the
     // to-version's type — a column retyped between versions would
@@ -3144,24 +3100,26 @@ object Snapshots {
     val srcAbs = qualify(srcDir)
     val dstAbs = qualify(dstDir)
     require(srcAbs != dstAbs, "clone target must differ from the source")
-    val sv = version.getOrElse(headVersion(spark, srcDir))
-    require(versions(spark, srcDir).contains(sv),
+    val src = new TableState(spark, srcDir)
+    val dst = new TableState(spark, dstDir)
+    val sv = version.getOrElse(src.version)
+    require(src.versions.contains(sv),
       s"$srcDir: cannot clone v$sv — it does not exist (expired?)")
-    require(dvRel(spark, srcDir, sv).isEmpty,
+    require(src.manifest(sv).dv.isEmpty,
       s"$srcDir: v$sv carries merge-on-read deletes — purgeDeletes before cloning")
-    require(currentVersion(spark, dstDir).isEmpty,
+    require(dst.current.isEmpty,
       s"$dstDir: clone target already holds a table")
     // resolve through the source's entries: a clone OF a clone keeps
     // pointing at the original bytes, never at an intermediary
-    val refs = files(spark, srcDir, sv).map(f => dataPath(srcAbs, f))
-    publish(spark, dstDir, 1, Seq.empty, refs,
+    val refs = src.manifest(sv).entries.map(f => dataPath(srcAbs, f))
+    publish(dst, 1, Seq.empty, refs,
       meta = Map("clone.src" -> srcAbs, "clone.src_version" -> sv.toString))
     // schema-bearing table properties MUST travel (column mapping decides
     // what the physical parquet names MEAN; constraints and bloom targets
     // are table contracts Delta's clone carries too). Version-referencing
     // props (tags, branches, pins, clustering watermarks, staged tokens)
     // stay behind — they name source versions the clone does not have.
-    val carryProps = properties(spark, srcDir).filter { case (k, _) =>
+    val carryProps = src.props.filter { case (k, _) =>
       k.startsWith("colmap.") || k.startsWith("constraint.check.") ||
         k == "bloom.columns"
     }
@@ -3180,13 +3138,13 @@ object Snapshots {
   def deleteByKeysMor(spark: SparkSession, dir: String, keys: DataFrame,
       key: String, meta: Map[String, String] = Map.empty): Int = {
     import org.apache.spark.sql.functions.{col, count, min, max}
-    val head = new Head(spark, dir)
+    val st = new TableState(spark, dir)
     withPersisted(keys.select(col(key)).distinct()) { kp =>
       val Array(h) = kp.agg(count(col(key)), min(col(key)), max(col(key))).collect()
       val candidates =
         if (h.getLong(0) == 0) Seq.empty
-        else pruneFiles(spark, dir, head.version, key, Option(h.get(1)), Option(h.get(2)))._1
-      maskDelete(spark, head, candidates, meta)(_.join(kp, Seq(key), "left_semi"))
+        else pruneAt(st, st.version, Seq((key, Option(h.get(1)), Option(h.get(2)))))._1
+      maskDelete(st, candidates, meta)(_.join(kp, Seq(key), "left_semi"))
     }
   }
 
@@ -3207,16 +3165,16 @@ object Snapshots {
       maxMaskedFraction: Double = 0.1): Int = {
     require(maxMaskedFraction >= 0 && maxMaskedFraction < 1,
       s"maxMaskedFraction $maxMaskedFraction out of [0, 1)")
-    val head = new Head(spark, dir)
-    val rel = head.dv match {
-      case None => return head.version // no mask, nothing to purge
+    val st = new TableState(spark, dir)
+    val rel = st.dv match {
+      case None => return st.version // no mask, nothing to purge
       case Some(r) => r
     }
     val masked: Map[String, Long] = spark.read.parquet(s"$dir/$rel")
       .groupBy("file_name").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val idx = stats(spark, dir, head.version)
-    val hot = head.files.filter { f =>
+    val idx = st.head.stats
+    val hot = st.files.filter { f =>
       val name = new org.apache.hadoop.fs.Path(f).getName
       masked.get(name).exists { m =>
         idx.get(f).flatMap(_.values.headOption).map(_.rows) match {
@@ -3225,9 +3183,9 @@ object Snapshots {
         }
       }
     }
-    if (hot.isEmpty) head.version
-    else landCow(spark, head, hot, None, Seq(head.rows(hot)),
-      Map("purge" -> s"${hot.length} of ${head.files.length} files"),
+    if (hot.isEmpty) st.version
+    else landCow(st, hot, None, Seq(st.rows(hot)),
+      Map("purge" -> s"${hot.length} of ${st.files.length} files"),
       noRowChange = true)
   }
 
@@ -3246,25 +3204,25 @@ object Snapshots {
   def replaceWhere(spark: SparkSession, dir: String, df: DataFrame,
       column: String, lower: Option[Any], upper: Option[Any]): Int = {
     import org.apache.spark.sql.functions.lit
-    val head = new Head(spark, dir)
-    enforceSchema(spark, dir, df, evolve = false)
+    val st = new TableState(spark, dir)
+    enforceSchema(st, df, evolve = false)
     // the incoming frame is consumed repeatedly (constraint probe, region
     // probe, CDC record, data write) — persist it like the sibling
     // merge/delete ops, so an expensive recompute runs once and every
     // consumer sees ONE materialization
     withPersisted(df) { up =>
-      enforceConstraints(spark, dir, up)
+      enforceConstraints(st, up)
       val inRegion = inRange(column, lower, upper)
       val escapee = up.filter(!inRegion).limit(1).collect()
       require(escapee.isEmpty,
         s"$dir: replaceWhere row outside the replaced region on '$column': " +
           s"${escapee.headOption.getOrElse("")} — refusing to leak writes")
-      val (affected, _) = pruneFiles(spark, dir, head.version, column, lower, upper)
+      val (affected, _) = pruneAt(st, st.version, Seq((column, lower, upper)))
       val inserts = up.withColumn("_change_type", lit("insert"))
       if (affected.isEmpty)
-        landCow(spark, head, affected, Some(inserts), Seq(up), Map.empty)
-      else withPersisted(head.rows(affected)) { rows =>
-        landCow(spark, head, affected,
+        landCow(st, affected, Some(inserts), Seq(up), Map.empty)
+      else withPersisted(st.rows(affected)) { rows =>
+        landCow(st, affected,
           Some(rows.filter(inRegion).withColumn("_change_type", lit("delete"))
             .unionByName(inserts, allowMissingColumns = true)),
           Seq(rows.filter(!inRegion), up), Map.empty)
@@ -3291,14 +3249,14 @@ object Snapshots {
   def insertOverwritePartitions(spark: SparkSession, dir: String,
       df: DataFrame, meta: Map[String, String] = Map.empty): Int = {
     import org.apache.spark.sql.functions.lit
-    val specs = partitionSpecs(spark, dir)
+    val st = new TableState(spark, dir)
+    val specs = st.partitionSpecs
     require(specs.nonEmpty,
       s"$dir: dynamic INSERT OVERWRITE needs a partitioned table — " +
         "an unpartitioned table takes the full replace (static mode)")
-    val head = new Head(spark, dir)
-    enforceSchema(spark, dir, df, evolve = false)
+    enforceSchema(st, df, evolve = false)
     withPersisted(df) { up =>
-      enforceConstraints(spark, dir, up)
+      enforceConstraints(st, up)
       // the touched set is the distinct TUPLE of transform values —
       // partition-count-sized, never row-sized
       val pvs = specs.map { ps =>
@@ -3310,8 +3268,8 @@ object Snapshots {
       val touched: Set[Seq[String]] = up.select(pvs: _*).distinct().collect()
         .map(r => specs.indices.map(i =>
           Option(r.getString(i)).getOrElse(HiveDefaultPart))).toSet
-      val statsIdx = stats(spark, dir, head.version)
-      val replaced = head.files.filter { f =>
+      val statsIdx = st.head.stats
+      val replaced = st.files.filter { f =>
         val tuple = specs.indices.map(i => partValueRawAt(f, i))
         if (tuple.forall(_.nonEmpty)) touched.contains(tuple.map(_.get))
         else {
@@ -3326,9 +3284,9 @@ object Snapshots {
       val inserts = up.withColumn("_change_type", lit("insert"))
       val feed =
         if (replaced.isEmpty) inserts
-        else head.rows(replaced).withColumn("_change_type", lit("delete"))
+        else st.rows(replaced).withColumn("_change_type", lit("delete"))
           .unionByName(inserts, allowMissingColumns = true)
-      landCow(spark, head, replaced, Some(feed), Seq(up), meta)
+      landCow(st, replaced, Some(feed), Seq(up), meta)
     }
   }
 
@@ -3341,11 +3299,11 @@ object Snapshots {
     * to the full table. Prior versions keep reading their own files.
     */
   def rewritePartitioned(spark: SparkSession, dir: String): Int = {
-    require(partitionSpecs(spark, dir).nonEmpty,
+    val st = new TableState(spark, dir)
+    require(st.partitionSpecs.nonEmpty,
       s"$dir: no partition spec declared — set one before rewriting")
-    val head = new Head(spark, dir)
-    landCow(spark, head, head.files, None, Seq(read(spark, dir, Some(head.version))),
-      Map("repartitioned" -> partitionSpecs(spark, dir).map(_.encoded).mkString(";")),
+    landCow(st, st.files, None, Seq(readAt(st, Some(st.version))),
+      Map("repartitioned" -> st.partitionSpecs.map(_.encoded).mkString(";")),
       noRowChange = true)
   }
 
@@ -3391,8 +3349,8 @@ object Snapshots {
       meta: Map[String, String] = Map.empty): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, when}
     import org.apache.spark.sql.Column
-    val head = new Head(spark, dir)
-    val tableSchema = head.schema
+    val st = new TableState(spark, dir)
+    val tableSchema = st.schema
     val tableCols = tableSchema.fieldNames.toSeq
     // UPDATE sets may target nested struct fields (dot paths); INSERTs
     // assign whole columns only (a nested insert target is meaningless —
@@ -3410,14 +3368,13 @@ object Snapshots {
           // sExpr is expressed over the __s alias, so aggregate through it
           val Array(mm) = src.alias("__s").agg(min(sExpr), max(sExpr)).collect()
           if (mm.isNullAt(0)) Seq.empty
-          else pruneFiles(spark, dir, head.version, tCol,
-            Option(mm.get(0)), Option(mm.get(1)))._1
-        case _ => head.files
+          else pruneAt(st, st.version, Seq((tCol, Option(mm.get(0)), Option(mm.get(1)))))._1
+        case _ => st.files
       }
       val sAliased = src.alias("__s")
       val touched: Seq[String] =
-        if (notMatchedBySource.nonEmpty) head.files
-        else touchedBy(spark, head, candidates)(
+        if (notMatchedBySource.nonEmpty) st.files
+        else touchedBy(st, candidates)(
           _.alias("__t").join(sAliased, onCond, "left_semi"))
       def truthy(c: Option[Column]): Column =
         c.map(x => coalesce(x, lit(false))).getOrElse(lit(true))
@@ -3449,16 +3406,16 @@ object Snapshots {
       // oracles stay green).
       // nothing matched (or the table is all-carry): insert-only path
       if (touched.isEmpty) withPersisted(insertsOf(sAliased)) { inserts =>
-        if (inserts.isEmpty) head.version
+        if (inserts.isEmpty) st.version
         else {
-          enforceConstraints(spark, dir, inserts)
-          landCow(spark, head, Seq.empty,
+          enforceConstraints(st, inserts)
+          landCow(st, Seq.empty,
             Some(inserts.withColumn("_change_type", lit("insert"))), Seq(inserts), meta)
         }
       }
       // full outer: matched pairs + target-only (carry / BY SOURCE) +
       // source-only (insert candidates)
-      else withPersisted(locate(spark, head, touched)(
+      else withPersisted(locate(st, touched)(
           _.withColumn("__t_present", lit(true)).alias("__t")
             .join(sAliased, onCond, "full_outer"))) { joined =>
         val tPresent = col("__t_present") === lit(true)
@@ -3504,7 +3461,7 @@ object Snapshots {
         // the post-image gate: exactly the rows this merge creates/changes
         val changedT = when(sPresent, mIdx >= 0 && !isDelete(mIdx, matchedSets))
           .otherwise(nmsIdx >= 0 && !isDelete(nmsIdx, nmsSets))
-        enforceConstraints(spark, dir,
+        enforceConstraints(st,
           tSide.filter(changedT).select(outCols: _*).unionByName(inserts))
         // change feed: update pre/post pairs, deletes, inserts — rows no
         // clause claimed emit nothing
@@ -3514,7 +3471,7 @@ object Snapshots {
         val postRows = tSide.filter(changedT).select(outCols: _*)
           .withColumn("_change_type", lit("update_post"))
         val insRows = inserts.withColumn("_change_type", lit("insert"))
-        landCow(spark, head, touched,
+        landCow(st, touched,
           Some(Seq(priorOf(changedT, "update_pre"), postRows, priorOf(dropped, "delete"),
             insRows).reduce(_.unionByName(_))),
           Seq(survivors), meta)
@@ -3538,14 +3495,14 @@ object Snapshots {
       prune: Seq[(String, Option[Any], Option[Any])] = Seq.empty,
       meta: Map[String, String] = Map.empty): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    val head = new Head(spark, dir)
+    val st = new TableState(spark, dir)
     val hit = coalesce(cond, lit(false))
-    val touched = touchedBy(spark, head,
-      pruneFilesAll(spark, dir, head.version, prune)._1)(_.filter(hit))
-    if (touched.isEmpty) head.version
+    val touched = touchedBy(st,
+      pruneAt(st, st.version, prune)._1)(_.filter(hit))
+    if (touched.isEmpty) st.version
     else {
-      val rows = head.rows(touched)
-      landCow(spark, head, touched,
+      val rows = st.rows(touched)
+      landCow(st, touched,
         Some(rows.filter(hit).withColumn("_change_type", lit("delete"))),
         Seq(rows.filter(!hit).hint("rebalance")), meta)
     }
@@ -3614,15 +3571,15 @@ object Snapshots {
       prune: Seq[(String, Option[Any], Option[Any])] = Seq.empty,
       meta: Map[String, String] = Map.empty): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    val head = new Head(spark, dir)
-    val schema = head.schema
+    val st = new TableState(spark, dir)
+    val schema = st.schema
     require(sets.nonEmpty, s"$dir: UPDATE needs at least one assignment")
     sets.foreach { case (c, _) => fieldTypeAt(dir, schema, c) } // loud validate
     val hit = coalesce(cond, lit(false))
-    val touched = touchedBy(spark, head,
-      pruneFilesAll(spark, dir, head.version, prune)._1)(_.filter(hit))
-    if (touched.isEmpty) return head.version
-    val rows = head.rows(touched)
+    val touched = touchedBy(st,
+      pruneAt(st, st.version, prune)._1)(_.filter(hit))
+    if (touched.isEmpty) return st.version
+    val rows = st.rows(touched)
     val byTop = sets.groupBy(_._1.split('.').head)
     def applied(src: DataFrame, always: Boolean): DataFrame =
       src.select(schema.fieldNames.toSeq.map { c =>
@@ -3635,8 +3592,8 @@ object Snapshots {
       }: _*)
     // the post-image must satisfy the table's CHECK constraints — gate on
     // exactly the rows the update produces, not the carried ones
-    enforceConstraints(spark, dir, applied(rows.filter(hit), always = true))
-    landCow(spark, head, touched,
+    enforceConstraints(st, applied(rows.filter(hit), always = true))
+    landCow(st, touched,
       Some(rows.filter(hit).withColumn("_change_type", lit("update_pre"))
         .unionByName(applied(rows.filter(hit), always = true)
           .withColumn("_change_type", lit("update_post")))),
@@ -3656,18 +3613,18 @@ object Snapshots {
   def deleteRange(spark: SparkSession, dir: String, column: String,
       lower: Option[Any], upper: Option[Any]): Int = {
     import org.apache.spark.sql.functions.lit
-    val head = new Head(spark, dir)
-    val (affected, _) = pruneFiles(spark, dir, head.version, column, lower, upper)
-    if (affected.isEmpty) return head.version
+    val st = new TableState(spark, dir)
+    val (affected, _) = pruneAt(st, st.version, Seq((column, lower, upper)))
+    if (affected.isEmpty) return st.version
     val hit = inRange(column, lower, upper)
     // masked read: a row a prior merge-on-read delete already masked must
     // neither resurrect in the rewrite nor re-surface in the change feed
-    val rows = head.rows(affected)
+    val rows = st.rows(affected)
     // no rebalance here: coalescing a range-delete's rewritten files to one
     // defeats per-file bloom/stat skipping on the surviving rows at small
     // scale (SnapshotSpec's rewrites-preserve-bloom lock); the rewrite
     // keeps the incoming partitioning instead
-    landCow(spark, head, affected,
+    landCow(st, affected,
       Some(rows.filter(hit).withColumn("_change_type", lit("delete"))),
       Seq(rows.filter(!hit)), Map.empty)
   }

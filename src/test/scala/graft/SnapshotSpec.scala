@@ -1139,6 +1139,35 @@ class SnapshotSpec extends AnyFunSuite {
       Seq((5L, java.lang.Long.valueOf(55L))).toDF("k", "w"), "k")
     val r5 = Snapshots.read(spark, dir).filter(col("k") === 5).collect()
     assert(r5.length == 1 && r5.head.getLong(1) == 55L)
+    // the same evolved table written before sidecars (no #schema= or
+    // #stats= header), next to a crashed writer's fixed-name v2.stats
+    // debris: the debris is no sidecar of v2, so pruning keeps every file
+    // and countRows falls back to a scan count
+    val pre = tmp()
+    Snapshots.commit(spark, pre,
+      spark.range(100).toDF("k").repartitionByRange(2, col("k")))
+    Snapshots.commit(spark, pre,
+      spark.range(100, 200).toDF("k").withColumn("w", col("k") * 2)
+        .repartitionByRange(2, col("k")), evolve = true)
+    val md = java.nio.file.Paths.get(pre, "_manifests")
+    java.nio.file.Files.list(md).forEach { p =>
+      val name = p.getFileName.toString
+      if (name.endsWith(".schema") || name.endsWith(".stats")) java.nio.file.Files.delete(p)
+      else if (name.endsWith(".list")) {
+        val body = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .linesIterator.filterNot(l => l.startsWith("#schema=") || l.startsWith("#stats="))
+          .mkString("", "\n", "\n")
+        java.nio.file.Files.write(p, body.getBytes("UTF-8"))
+        java.nio.file.Files.deleteIfExists(p.resolveSibling(s".$name.crc"))
+      }
+    }
+    java.nio.file.Files.write(md.resolve("v2.stats"), "stale debris\n".getBytes("UTF-8"))
+    assert(Snapshots.read(spark, pre).columns.toSeq == Seq("k", "w"))
+    assert(Snapshots.read(spark, pre).count() == 200)
+    assert(Snapshots.countRows(spark, pre) == 200)
+    val rrPre = Snapshots.readRanges(spark, pre, Seq(("k", Some(50L), Some(150L))))
+    assert(rrPre.count() == 101)
+    assert(rrPre.filter(col("w").isNull).count() == 50, "old files must surface NULL w")
   }
 
   test("timestampAsOf accepts variable-length fractional seconds") {
@@ -2239,20 +2268,23 @@ class SnapshotSpec extends AnyFunSuite {
       ("commitMarker", false, d => Snapshots.commitMarker(spark, d, Map("mark" -> "1"))))
     // (jobs, data files added, versions published) without / with a prior
     // deletion vector: the counts each verb had while it carried its own
-    // copy of the DML recipe, before they shared one engine
+    // copy of the DML recipe, before they shared one engine — less, on a
+    // masked table, one job per table-schema read: the schema comes from
+    // the version's schema sidecar, not from planning the masked read,
+    // whose deletion-vector dir costs a schema-inference job
     val expected = Map(
-      "mergeInto" -> ((18, 1, 1), (30, 1, 1)),
-      "mergeIntoMor" -> ((15, 1, 1), (20, 1, 1)),
+      "mergeInto" -> ((18, 1, 1), (28, 1, 1)),
+      "mergeIntoMor" -> ((15, 1, 1), (18, 1, 1)),
       "deleteRange" -> ((3, 1, 1), (11, 1, 1)),
-      "deleteRangeMor" -> ((4, 0, 1), (9, 0, 1)),
-      "deleteByKeysMor" -> ((9, 0, 1), (13, 0, 1)),
+      "deleteRangeMor" -> ((4, 0, 1), (8, 0, 1)),
+      "deleteByKeysMor" -> ((9, 0, 1), (12, 0, 1)),
       "deleteByKeysMor miss" -> ((3, 0, 0), (3, 0, 0)),
       "deleteWhere" -> ((6, 1, 1), (16, 1, 1)),
-      "updateWhere" -> ((6, 1, 1), (15, 1, 1)),
-      "replaceWhere" -> ((8, 3, 1), (16, 3, 1)),
-      "mergeApply" -> ((14, 8, 1), (24, 8, 1)),
-      "mergeApply insert-only" -> ((7, 2, 1), (13, 2, 1)),
-      "insertOverwritePartitions" -> ((7, 1, 1), (15, 1, 1)),
+      "updateWhere" -> ((6, 1, 1), (14, 1, 1)),
+      "replaceWhere" -> ((8, 3, 1), (15, 3, 1)),
+      "mergeApply" -> ((14, 8, 1), (23, 8, 1)),
+      "mergeApply insert-only" -> ((7, 2, 1), (12, 2, 1)),
+      "insertOverwritePartitions" -> ((7, 1, 1), (14, 1, 1)),
       "purgeDeletes" -> ((0, 0, 0), (9, 1, 1)),
       "commitMarker" -> ((0, 0, 1), (0, 0, 1)))
     sc.addSparkListener(listener)
@@ -2274,9 +2306,110 @@ class SnapshotSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
     for ((name, counts) <- got) assert(counts == expected(name), s"$name: $counts")
   }
+
+  test("each operation reads a table's metadata once: manifests, sidecars, props, listing") {
+    def table(): String = {
+      val dir = tmp()
+      Snapshots.commit(spark, dir, spark.range(0, 40, 1, 2).select(col("id").as("k"),
+        (col("id") * 0.5).as("v")))
+      Snapshots.commit(spark, dir, spark.range(40, 60, 1, 1).select(col("id").as("k"),
+        (col("id") * 0.5).as("v")), meta = Map("batch" -> "2"))
+      dir
+    }
+    def rows(lo: Long, hi: Long) =
+      spark.range(lo, hi, 1, 1).select(col("id").as("k"), (col("id") * 2.0).as("v"))
+    val ops: Seq[(String, String => Any)] = Seq(
+      "read" -> (d => Snapshots.read(spark, d).count()),
+      "readRanges" ->
+        (d => Snapshots.readRanges(spark, d, Seq(("k", Some(5L), Some(45L)))).count()),
+      "readChanges(1, 2)" -> (d => Snapshots.readChanges(spark, d, 1, 2).count()),
+      "readChangeFeed(1, 2)" -> (d => Snapshots.readChangeFeed(spark, d, 1, 2).count()),
+      "history" -> (d => Snapshots.history(spark, d).collect()),
+      "countRows" -> (d => Snapshots.countRows(spark, d)),
+      "commit" -> (d => Snapshots.commit(spark, d, rows(60, 70))),
+      "mergeInto" -> (d => Snapshots.mergeInto(spark, d, rows(30, 50), "k")),
+      "deleteRange" -> (d => Snapshots.deleteRange(spark, d, "k", Some(10L), Some(19L))),
+      "deleteRangeMor" -> (d => Snapshots.deleteRangeMor(spark, d, "k", Some(10L), Some(19L))),
+      "fastForward" -> (d => Snapshots.fastForward(spark, d, "b")))
+    val conf = spark.conf
+    val keys = Seq("fs.file.impl" -> classOf[CountingLocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    val saved = keys.map { case (k, _) => k -> conf.getOption(k) }
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    try {
+      assert(org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+        .isInstanceOf[CountingLocalFs], "counting FileSystem not installed")
+      for ((name, op) <- ops) {
+        val dir = table()
+        if (name == "fastForward") {
+          Snapshots.createBranch(spark, dir, "b")
+          Snapshots.commitToBranch(spark, dir, "b", rows(100, 110))
+        }
+        val (_, calls) = SnapshotSpec.countFsCalls(dir)(op(dir))
+        info(s"$name: " + calls.toSeq.sorted.map { case ((c, f), n) => s"$c $f=$n" }.mkString(", "))
+        def count(call: String, file: String) = calls.getOrElse((call, file), 0L)
+        assert(count("list", "_manifests") <= 1, s"$name lists _manifests more than once: $calls")
+        val opened = calls.collect { case (("open", f), n) => f -> n }
+        // one read of table.props, plus the read inside the branch ref's
+        // read-modify-write removal
+        val propsBound = if (name == "fastForward") 2 else 1
+        assert(count("open", "table.props") <= propsBound, s"$name: $calls")
+        for ((f, n) <- opened if f != "table.props")
+          assert(n <= 1, s"$name opens $f $n times: $calls")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }
 
 object SnapshotSpec {
   /** Update rows evaluated by the counting UDF (executors share the JVM). */
   val computed = new java.util.concurrent.atomic.LongAdder
+
+  /** Filesystem calls on snapshot metadata, keyed (call, file name): opens
+    * and stats of the files in a `_manifests` dir, and listings of the dir
+    * itself. Only paths under `root` count. */
+  private val fsCalls = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), java.util.concurrent.atomic.LongAdder]()
+  @volatile private var root: String = "\u0000"
+
+  def countFsCalls[T](dir: String)(body: => T): (T, Map[(String, String), Long]) = {
+    import scala.jdk.CollectionConverters._
+    fsCalls.clear(); root = dir
+    try {
+      val out = body
+      (out, fsCalls.asScala.map { case (k, n) => k -> n.sum }.toMap)
+    } finally root = "\u0000"
+  }
+
+  private[graft] def record(call: String, p: org.apache.hadoop.fs.Path): Unit = {
+    val path = p.toUri.getPath
+    if (path.startsWith(root + "/")) {
+      val key =
+        if (p.getName == "_manifests") Some(call -> "_manifests")
+        else if (p.getParent != null && p.getParent.getName == "_manifests") Some(call -> p.getName)
+        else None
+      key.foreach(k =>
+        fsCalls.computeIfAbsent(k, _ => new java.util.concurrent.atomic.LongAdder).increment())
+    }
+  }
+}
+
+/** A local `FileSystem` that reports its opens, stats and listings to
+  * [[SnapshotSpec.record]]. Tests install it through the session conf
+  * (`fs.file.impl`, with the FileSystem cache off) and restore the conf
+  * after. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path}
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    SnapshotSpec.record("open", f); super.open(f, bufferSize)
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    SnapshotSpec.record("stat", f); super.getFileStatus(f)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    SnapshotSpec.record("list", f); super.listStatus(f)
+  }
 }
